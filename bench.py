@@ -278,7 +278,7 @@ def main() -> None:
         def run_delete():
             ids = spark.createDataFrame([(d,) for d in next(batch_iter)],
                                         "doc_id string")
-            pipe.delete(ids, snap, strategy="tombstone")
+            pipe.delete(ids, snap)
             return 0
 
         timed("q9_tombstone_delete", run_delete)

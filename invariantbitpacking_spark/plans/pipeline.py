@@ -14,15 +14,19 @@ North-rule scale machinery:
   checksum, wall seconds).  The lineage append is the commit point.
 - **Resume**: a rerun anti-joins pending buckets against committed
   lineage rows for the same snapshot and only processes the remainder.
-- **Incremental ingest** (:meth:`CompressionPipeline.append`): a delta
-  upserts into a committed snapshot as O(delta) merge-on-read delta
-  files (or, with ``strategy="rewrite"``, by rewriting only the
-  buckets its doc_ids salt into); superseding lineage rows keep the
-  checksum audit exact (latest commit per bucket wins).
-- **Deletion + time travel** (:meth:`delete`, ``as_of_seq``): deletes
-  default to O(delta) tombstone markers resolved latest-wins
-  (physical erasure at :meth:`compact`); reads can rewind to any
+- **One mutation protocol**: every mutation lands as a delta.
+  :meth:`CompressionPipeline.append` upserts O(delta) merge-on-read
+  delta files, :meth:`delete` writes O(delta) tombstone markers, and
+  superseding lineage rows keep the checksum audit exact (latest
+  commit per bucket wins).  :meth:`compact` is the only code that
+  rewrites a base bucket; physical erasure is ``delete`` followed by
+  ``compact``.
+- **Time travel** (``as_of_seq``): reads can rewind to any
   still-uncompacted lineage commit.
+- **One metadata transport**: lineage, tombstone markers, params and
+  FSST tables move as bytes through :class:`fsio.HadoopFS`, which picks
+  its route once from the resolved FileSystem.  Lineage is parquet
+  read and written by pyarrow on the driver; no Spark job touches it.
 
 On a real cluster this is launched via ``spark-submit --py-files
 invariantbitpacking_spark.zip run_pipeline.py`` (see scripts/); the
@@ -36,8 +40,11 @@ from __future__ import annotations
 
 import json
 import time
+import uuid
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import strings as fstr
@@ -90,12 +97,16 @@ def _float_bits_view(df: DataFrame, itemsize: int) -> DataFrame:
             .mapInArrow(view, schema=("doc_id string, tokens "
                                       f"array<{elem}>, n_tok int")))
 
-LINEAGE_SCHEMA = (
-    "snapshot_id string, bucket int, status string, docs long, "
-    "tokens long, raw_bytes long, comp_bytes long, codec_mix string, "
-    "payload_xxh long, wall_sec double, committed_at double, "
-    "commit_seq long"
-)
+# one row per (snapshot, bucket) commit; the arrow schema of every
+# lineage parquet file and of the lineage() / latest_lineage() views
+LINEAGE_SCHEMA = pa.schema([
+    ("snapshot_id", pa.string()), ("bucket", pa.int32()),
+    ("status", pa.string()), ("docs", pa.int64()),
+    ("tokens", pa.int64()), ("raw_bytes", pa.int64()),
+    ("comp_bytes", pa.int64()), ("codec_mix", pa.string()),
+    ("payload_xxh", pa.int64()), ("wall_sec", pa.float64()),
+    ("committed_at", pa.float64()), ("commit_seq", pa.int64()),
+])
 
 # Decoded-shape schema of an encoded table with ZERO stored rows (a
 # fully-deleted-then-compacted snapshot): read_encoded returns this
@@ -201,54 +212,53 @@ class CompressionPipeline:
         elif self.fs.exists(old):
             self.fs.rename(old, self.lineage_dir)
 
+    def _lineage_records(self) -> list[dict]:
+        """THE lineage reader: every row of every lineage parquet file,
+        read with pyarrow from bytes moved through ``self.fs``, oldest
+        commit first (commit_seq, then committed_at) so a later row
+        overwrites an earlier one when callers fold to latest-wins.
+        The table is tiny metadata (<= one row per bucket per commit),
+        and reading it driver-side costs milliseconds where a Spark job
+        cost 0.2-0.9 s."""
+        self._heal_lineage()
+        parts = [
+            pq.read_table(pa.BufferReader(self.fs.read_bytes(
+                _join(self.lineage_dir, name))))
+            .select(LINEAGE_SCHEMA.names).cast(LINEAGE_SCHEMA)
+            for name in sorted(self.fs.listdir(self.lineage_dir))
+            if name.endswith(".parquet") and not name.startswith((".", "_"))]
+        if not parts:
+            return []
+        recs = pa.concat_tables(parts).to_pylist()
+        recs.sort(key=lambda r: (r["commit_seq"], r["committed_at"]))
+        return recs
+
+    def _write_lineage(self, path: str, recs: list[dict]) -> None:
+        """THE lineage writer: one parquet file of ``recs``."""
+        self._write_parquet(path, pa.Table.from_pylist(
+            recs, schema=LINEAGE_SCHEMA))
+
+    def _write_parquet(self, path: str, table) -> None:
+        """One pyarrow table as one parquet file at ``path``, written
+        through ``self.fs`` (hidden tmp file, then rename)."""
+        buf = pa.BufferOutputStream()
+        pq.write_table(table, buf, compression="snappy")
+        self.fs.write_bytes_atomic(path, buf.getvalue().to_pybytes())
+
+    def _committed(self, snapshot_id: str) -> list[dict]:
+        return [r for r in self._lineage_records()
+                if r["snapshot_id"] == snapshot_id
+                and r["status"] == "committed"]
+
+    def _lineage_df(self, recs: list[dict]) -> DataFrame:
+        # from an arrow table, the rows go straight to the JVM; a list
+        # of tuples would be unpickled by Python workers in a Spark job
+        return self.spark.createDataFrame(
+            pa.Table.from_pylist(recs, schema=LINEAGE_SCHEMA))
+
     def lineage(self) -> DataFrame:
-        self._heal_lineage()
-        try:
-            df = (self.spark.read.option("mergeSchema", "true")
-                  .parquet(self.lineage_dir))
-        except Exception:
-            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
-        # pre-commit_seq lineage files read as seq 0 (back-compat)
-        if "commit_seq" not in df.columns:
-            df = df.withColumn("commit_seq", F.lit(0).cast("long"))
-        return df
-
-    def _lineage_pdf(self):
-        """Lineage as a driver-side pandas frame when the store lives
-        on the LOCAL filesystem, else None (caller uses the Spark
-        path).  The lineage table is tiny metadata (<= one row per
-        bucket per commit), but every mutation verb used to read it
-        through 2-4 separate Spark jobs — ~0.2-0.6 s of fixed
-        scheduler+worker cost EACH on this box, the dominant wall of
-        the 100-doc tombstone delete.  Reading the same parquet files
-        with pyarrow costs ~2 ms and returns identical rows; hdfs:/
-        s3a: stores keep the distributed read."""
-        from .fsio import local_root
-
-        root = local_root(self.lineage_dir)
-        if root is None:
-            return None
-        self._heal_lineage()
-        import os
-
-        import pandas as pd
-
-        cols = [f.split(" ")[0] for f in LINEAGE_SCHEMA.split(", ")]
-        if not os.path.isdir(root):
-            return pd.DataFrame(columns=cols)
-        import pyarrow.parquet as pq
-
-        frames = []
-        for name in sorted(os.listdir(root)):
-            if not name.endswith(".parquet"):
-                continue
-            pdf = pq.read_table(os.path.join(root, name)).to_pandas()
-            if "commit_seq" not in pdf.columns:
-                pdf["commit_seq"] = 0  # pre-commit_seq back-compat
-            frames.append(pdf)
-        if not frames:
-            return pd.DataFrame(columns=cols)
-        return pd.concat(frames, ignore_index=True)
+        """Every lineage row, as a DataFrame view."""
+        return self._lineage_df(self._lineage_records())
 
     def _next_commit_seq(self) -> int:
         """Monotonic per-pipeline commit sequence number: the
@@ -257,68 +267,28 @@ class CompressionPipeline:
         tie would let latest_lineage surface a superseded checksum.
         Derived from stored state (max over the tiny lineage table)
         so it survives across pipeline object instances."""
-        pdf = self._lineage_pdf()
-        if pdf is not None:
-            return (0 if len(pdf) == 0
-                    else int(pdf["commit_seq"].max())) + 1
-        row = self.lineage().agg(
-            F.max("commit_seq").alias("m")).collect()[0]
-        return int(row["m"] or 0) + 1
+        recs = self._lineage_records()
+        return (recs[-1]["commit_seq"] if recs else 0) + 1
 
     def committed_buckets(self, snapshot_id: str) -> set[int]:
-        pdf = self._lineage_pdf()
-        if pdf is not None:
-            sel = pdf[(pdf["snapshot_id"] == snapshot_id)
-                      & (pdf["status"] == "committed")]
-            return {int(b) for b in sel["bucket"]}
-        rows = (self.lineage()
-                .filter((F.col("snapshot_id") == snapshot_id)
-                        & (F.col("status") == "committed"))
-                .select("bucket").distinct().collect())
-        return {r["bucket"] for r in rows}
+        return {r["bucket"] for r in self._committed(snapshot_id)}
 
     def latest_lineage(self, snapshot_id: str) -> DataFrame:
         """One committed row per bucket, LATEST commit wins — appends
         (:meth:`append`) re-commit a bucket with fresh totals and a
         fresh checksum, so consumers must read the newest row, never a
-        superseded one.  The window is over <= num_buckets rows."""
-        from pyspark.sql import Window
-
-        lin = (self.lineage()
-               .filter((F.col("snapshot_id") == snapshot_id)
-                       & (F.col("status") == "committed")))
-        # commit_seq is the strict tiebreaker (committed_at floats can
-        # tie under rapid streaming upserts); legacy rows all carry 0
-        # and fall back to committed_at
-        w = Window.partitionBy("bucket").orderBy(
-            F.desc("commit_seq"), F.desc("committed_at"))
-        return (lin.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1).drop("rn"))
+        superseded one.  A DataFrame view of :meth:`_latest_lineage_map`."""
+        return self._lineage_df(
+            list(self._latest_lineage_map(snapshot_id).values()))
 
     def _latest_lineage_map(self, snapshot_id: str,
                             buckets=None) -> dict[int, dict]:
-        """Driver-side twin of :meth:`latest_lineage` for consumers
-        that COLLECT the result anyway: {bucket: latest committed row
-        as a plain dict}.  Same latest-wins order (commit_seq desc,
-        committed_at desc)."""
-        pdf = self._lineage_pdf()
-        if pdf is None:
-            df = self.latest_lineage(snapshot_id)
-            if buckets is not None:
-                df = df.filter(F.col("bucket").isin(list(buckets)))
-            return {int(r["bucket"]): r.asDict() for r in df.collect()}
-        sel = pdf[(pdf["snapshot_id"] == snapshot_id)
-                  & (pdf["status"] == "committed")]
-        if buckets is not None:
-            sel = sel[sel["bucket"].isin(set(int(b) for b in buckets))]
-        out: dict[int, dict] = {}
-        if len(sel) == 0:
-            return out
-        sel = sel.sort_values(["commit_seq", "committed_at"],
-                              kind="stable")
-        for rec in sel.to_dict("records"):  # later rows overwrite
-            out[int(rec["bucket"])] = rec
-        return out
+        """{bucket: latest committed row as a plain dict}, commit_seq
+        the strict tiebreaker (committed_at floats can tie under rapid
+        streaming upserts)."""
+        keep = None if buckets is None else {int(b) for b in buckets}
+        return {r["bucket"]: r for r in self._committed(snapshot_id)
+                if keep is None or r["bucket"] in keep}
 
     # -- params ------------------------------------------------------------
 
@@ -445,16 +415,8 @@ class CompressionPipeline:
         (the delta commit appends lineage rows carrying the delta's own
         seq), so any delta dir above it is an orphan from a crashed
         append."""
-        pdf = self._lineage_pdf()
-        if pdf is not None:
-            sel = pdf[(pdf["snapshot_id"] == snapshot_id)
-                      & (pdf["status"] == "committed")]
-            return 0 if len(sel) == 0 else int(sel["commit_seq"].max())
-        row = (self.lineage()
-               .filter((F.col("snapshot_id") == snapshot_id)
-                       & (F.col("status") == "committed"))
-               .agg(F.max("commit_seq").alias("m")).collect()[0])
-        return int(row["m"] or 0)
+        recs = self._committed(snapshot_id)
+        return recs[-1]["commit_seq"] if recs else 0
 
     def _purge_orphan_deltas(self, snapshot_id: str) -> int:
         """Delete every delta_seq dir STRICTLY greater than the
@@ -538,47 +500,34 @@ class CompressionPipeline:
                       f"bucket={b}") for b in have]
 
     def _dir_schema(self, path: str, partition_fields):
-        """Read schema of a LOCAL parquet directory (walking into
-        partition subdirs for the first data file) and append the given
-        partition fields — sparing every bucket-pruned read its
-        driver-side schema-inference footer pass.  Field order mirrors
-        what discovery produces (data columns, then partition columns),
-        so supplied-schema and inferred reads are interchangeable.
-        Returns None when the path is not local or holds no parquet
-        file yet (caller falls back to inference)."""
-        from .fsio import local_root
-
-        root = local_root(path)
-        if root is None:
-            return None
-        import os
-
-        def first_parquet(d: str, depth: int):
-            try:
-                names = sorted(os.listdir(d))
-            except OSError:
-                return None
-            for n in names:
-                if n.endswith(".parquet") and not n.startswith((".", "_")):
-                    return os.path.join(d, n)
-            if depth > 0:
-                for n in names:
-                    sub = os.path.join(d, n)
-                    if os.path.isdir(sub):
-                        f = first_parquet(sub, depth - 1)
-                        if f is not None:
-                            return f
-            return None
-
-        f = first_parquet(root, 3)
-        if f is None:
-            return None
-        import pyarrow.parquet as pq
+        """Read schema of a parquet directory (walking into partition
+        subdirs for the first data file) and append the given partition
+        fields — sparing every bucket-pruned read its driver-side
+        schema-inference footer pass.  Field order mirrors what
+        discovery produces (data columns, then partition columns), so
+        supplied-schema and inferred reads are interchangeable.
+        Returns None when the path holds no parquet file yet (caller
+        falls back to inference)."""
         from pyspark.sql.pandas.types import from_arrow_schema
         from pyspark.sql.types import _parse_datatype_string, StructField
 
+        def first_parquet(d: str, depth: int):
+            names = sorted(self.fs.listdir(d))
+            for n in names:
+                if n.endswith(".parquet") and not n.startswith((".", "_")):
+                    return _join(d, n)
+            for n in names if depth > 0 else ():
+                if "=" in n and not n.startswith((".", "_")):
+                    f = first_parquet(_join(d, n), depth - 1)
+                    if f is not None:
+                        return f
+            return None
+
+        f = first_parquet(path, 3)
+        if f is None:
+            return None
         try:
-            sch = from_arrow_schema(pq.read_schema(f))
+            sch = from_arrow_schema(self.fs.parquet_schema(f))
         except Exception:
             return None
         have = {fl.name for fl in sch.fields}
@@ -812,117 +761,51 @@ class CompressionPipeline:
         return stats
 
     def _append_lineage_rows(self, rows: list) -> None:
-        """One lineage commit = ONE parquet file.  On a local store the
-        file is written DRIVER-side with pyarrow — no Spark job at all
-        (round 7 already cut this from 3.85 s [coalesce(1) python-slice
-        tax] to 0.29 s [1-slice parallelize]; the remaining 0.29 s was
-        still one full scheduler+python-worker round trip for a <=
-        num_buckets-row metadata write).  Types mirror LINEAGE_SCHEMA
-        exactly so Spark and pyarrow readers see one schema.  Remote
-        stores keep the Spark write."""
-        from .fsio import local_root
-
-        root = local_root(self.lineage_dir)
-        if root is not None:
-            import os
-            import uuid
-
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            schema = pa.schema([
-                ("snapshot_id", pa.string()), ("bucket", pa.int32()),
-                ("status", pa.string()), ("docs", pa.int64()),
-                ("tokens", pa.int64()), ("raw_bytes", pa.int64()),
-                ("comp_bytes", pa.int64()), ("codec_mix", pa.string()),
-                ("payload_xxh", pa.int64()), ("wall_sec", pa.float64()),
-                ("committed_at", pa.float64()),
-                ("commit_seq", pa.int64()),
-            ])
-            cols = list(zip(*rows)) if rows else [[] for _ in schema]
-            table = pa.table(
-                {f.name: pa.array(list(c), f.type)
-                 for f, c in zip(schema, cols)}, schema=schema)
-            os.makedirs(root, exist_ok=True)
-            name = f"part-{uuid.uuid4().hex}.parquet"
-            tmp = os.path.join(root, f".{name}.tmp")  # dotfile: readers skip
-            pq.write_table(table, tmp, compression="snappy")
-            os.replace(tmp, os.path.join(root, name))
-            return
-        (self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize(rows, 1), LINEAGE_SCHEMA)
-         .write.mode("append").parquet(self.lineage_dir))
+        """One lineage commit = ONE new parquet file, written
+        driver-side (no Spark job: a Spark write of these <=
+        num_buckets rows cost one full scheduler + Python-worker round
+        trip).  ``rows`` are tuples in LINEAGE_SCHEMA column order."""
+        self._write_lineage(
+            _join(self.lineage_dir, f"part-{uuid.uuid4().hex}.parquet"),
+            [dict(zip(LINEAGE_SCHEMA.names, r)) for r in rows])
 
     # -- incremental ingest --------------------------------------------------
 
     def append(self, toks_delta: DataFrame, snapshot_id: str,
-               mode: str = "upsert",
-               order_col: str | None = None,
-               strategy: str = "delta") -> PipelineResult:
-        """Incremental ingest into a COMMITTED snapshot: the delta's
-        documents salt into their buckets, and ONLY those bucket
-        directories are rewritten (surviving existing rows plus the
-        newly encoded delta) — at 100 TB this touches
-        ``len(affected)/num_buckets`` of the table instead of
-        re-encoding the corpus, which is what makes the layout viable
-        for a living dataset.
+               order_col: str | None = None) -> PipelineResult:
+        """Incremental UPSERT into a COMMITTED snapshot, O(delta): the
+        delta's documents salt into their buckets and land as
+        per-bucket DELTA files (merge-on-read, see the delta section
+        above), and existing documents whose doc_id appears in the
+        delta are superseded at read time (latest wins).  Matching
+        happens on the FSST-encoded doc_id bytes — the encoding is
+        deterministic given the persisted table, so equality on encoded
+        bytes IS equality on ids, with no decode pass.
 
-        - ``mode="upsert"`` (default): existing documents whose doc_id
-          appears in the delta are REPLACED.  Matching happens on the
-          FSST-encoded doc_id bytes — the encoding is deterministic
-          given the persisted global table, so equality on encoded
-          bytes IS equality on ids, with no decode pass.
-        - ``mode="append"``: the caller guarantees delta doc_ids are
-          new; existing rows are kept as-is.  Only meaningful with
-          ``strategy="rewrite"`` — delta files resolve latest-wins at
-          read time, so the delta strategy ALWAYS has upsert semantics
-          and ``mode="append"`` with it raises rather than silently
-          upserting.
-
-        Commit protocol per wave of affected buckets: the combined
-        frame is staged to its own directory first (Spark refuses to
-        overwrite a path it is reading, and staging keeps the rewrite
-        crash-safe), then dynamic-partition-overwritten into the data
-        dir, read back, and committed as a FRESH lineage row per bucket
-        — superseding, not mutating, the old row; consumers read
-        through :meth:`latest_lineage`.  Re-running the same upsert
-        delta converges to identical bytes and checksums (idempotent);
-        codec params and the FSST table are the snapshot's persisted
-        ones, so every appended document is encoded exactly as the
-        original run would have.
-
-        ``strategy="delta"`` (default) is O(delta): the encoded delta
-        lands as per-bucket DELTA files (merge-on-read, see the delta
-        section above) and the lineage commit recomputes bucket stats
-        incrementally from thin columns — no existing row is re-read
-        in bulk or rewritten.  ``strategy="rewrite"`` is the original
-        bucket rewrite (what :meth:`compact` uses internally) — the
-        right call for bulk deltas comparable to the bucket size.
+        No existing row is re-read in bulk or rewritten: the lineage
+        commit supersedes each affected bucket's row with stats updated
+        INCREMENTALLY — ``new_xxh = old_xxh ^ xor(replaced row hashes)
+        ^ xor(added row hashes)`` — from thin columns (doc_id, codec,
+        counts, row_xxh), so a 20-doc upsert stays out of the O(bucket)
+        cost class.  Codec params and the FSST table are the snapshot's
+        persisted ones, so every appended document is encoded exactly
+        as the original run would have; re-running the same delta
+        converges to identical resolved rows and checksums.
 
         Delta pressure is self-bounding: once an affected bucket holds
         ``delta_compact_threshold`` delta_seq dirs, this call folds it
         into the base before returning (see
-        :meth:`_maybe_compact_deltas`), so repeated small appends never
-        degrade the read path unboundedly."""
-        if mode not in ("upsert", "append"):
-            raise ValueError(f"append: unknown mode {mode!r}")
-        if strategy not in ("delta", "rewrite"):
-            raise ValueError(f"append: unknown strategy {strategy!r}")
-        if mode == "append" and strategy == "delta":
-            # read-side delta resolution is unconditionally latest-wins,
-            # so keep-existing semantics cannot be honored on this path
-            raise ValueError(
-                'append: mode="append" (keep existing rows) requires '
-                'strategy="rewrite" — delta files always resolve as '
-                "latest-wins upserts at read time")
-        # Dedupe the delta ITSELF on doc_id: the upsert anti-join only
-        # removes pre-existing rows, so a doc_id appearing twice within
-        # one delta (two inbox files carrying the same revised doc in a
-        # single availableNow micro-batch) would be written twice,
-        # corrupting counts.  ``order_col`` names a column whose
-        # largest value wins (e.g. a revision timestamp); without one
-        # the winner is picked by a deterministic content hash so that
-        # re-running the same delta converges to identical bytes.
+        :meth:`_maybe_compact_deltas`).  A bulk delta comparable to the
+        bucket size is best followed by :meth:`compact`."""
+        # Dedupe the delta ITSELF on doc_id: latest-wins resolution
+        # only orders rows across delta_seq dirs, so a doc_id appearing
+        # twice within one delta (two inbox files carrying the same
+        # revised doc in a single availableNow micro-batch) would be
+        # written twice, corrupting counts.  ``order_col`` names a
+        # column whose largest value wins (e.g. a revision timestamp);
+        # without one the winner is picked by a deterministic content
+        # hash so that re-running the same delta converges to identical
+        # bytes.
         from pyspark.sql import Window
         tie = (F.col(order_col) if order_col is not None
                else F.xxhash64("tokens", "n_tok", "source"))
@@ -952,92 +835,6 @@ class CompressionPipeline:
             .withColumn("snapshot_id", F.lit(snapshot_id)))
         affected = sorted(r["bucket"] for r in
                           salted.select("bucket").distinct().collect())
-        if strategy == "delta":
-            return self._append_delta(salted, snapshot_id, params,
-                                      fsst_table, affected)
-        # -- rewrite strategy: purge crash orphans FIRST — this path's
-        # _commit_wave advances the snapshot's lineage max commit_seq,
-        # so an orphan delta from an append that died before its
-        # lineage commit would otherwise end up at seq <= max forever
-        # (readable as phantom committed rows, invisible to every later
-        # purge).  Then fold pending deltas into the base so the bucket
-        # rewrite sees ONE physical copy (a rewrite that ignored live
-        # delta files would be silently superseded by them at read
-        # time).
-        self._purge_orphan_deltas(snapshot_id)
-        delta_b = sorted(set(self._delta_buckets(snapshot_id))
-                         & set(affected))
-        if delta_b:
-            self.compact(snapshot_id, delta_b)
-        totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
-        waves = [affected[i:i + self.wave_buckets]
-                 for i in range(0, len(affected), self.wave_buckets)]
-        stage_root = _join(self.output_dir, "append_staging", snapshot_id)
-        for wi, wave in enumerate(waves):
-            t0 = time.perf_counter()
-            part = salted.filter(F.col("bucket").isin(wave))
-            enc = selector.encode_auto(part, params, allowed=self.allowed,
-                                       passthrough=("bucket", "snapshot_id"))
-            if fsst_table is not None:
-                enc = fstr.encode_string_cols(enc, fsst_table,
-                                              ("doc_id", "source"))
-            paths = self._wave_paths(snapshot_id, wave)
-            if paths:
-                existing = (self.spark.read
-                            .option("basePath", self.data_dir)
-                            .parquet(*paths))
-                if "row_xxh" in existing.columns:
-                    existing = existing.drop("row_xxh")
-                if mode == "upsert":
-                    keys = enc.select(F.col("doc_id").alias("_k")).distinct()
-                    existing = (existing.join(
-                        keys, existing["doc_id"] == keys["_k"], "left_anti"))
-                combined = existing.select(*enc.columns).unionByName(enc)
-            else:
-                combined = enc
-            combined = (combined.withColumn("row_xxh",
-                                            F.xxhash64("payload"))
-                        .sortWithinPartitions("bucket", "doc_id"))
-            stage = _join(stage_root, f"wave{wi}")
-            (combined.write.mode("overwrite")
-             .partitionBy("snapshot_id", "bucket").parquet(stage))
-            (self._base_writer(
-                self.spark.read.option("basePath", stage).parquet(
-                    *[_join(stage, f"snapshot_id={snapshot_id}",
-                            f"bucket={b}")
-                      for b in wave
-                      if self.fs.exists(_join(stage,
-                                              f"snapshot_id={snapshot_id}",
-                                              f"bucket={b}"))]))
-             .mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("snapshot_id", "bucket")
-             .parquet(self.data_dir))
-            wall = time.perf_counter() - t0
-            for r in self._commit_wave(snapshot_id, wave, wall):
-                for k in totals:
-                    totals[k] += int(r[k])
-        if self.fs.exists(stage_root):
-            self.fs.delete(stage_root, recursive=True)
-        return PipelineResult(snapshot_id, len(affected),
-                              nb - len(affected), totals["docs"],
-                              totals["tokens"], totals["raw_bytes"],
-                              totals["comp_bytes"])
-
-    def _append_delta(self, salted: DataFrame, snapshot_id: str,
-                      params: IbpParams, fsst_table,
-                      affected: list) -> PipelineResult:
-        """O(delta) upsert: encode ONLY the delta, land it as
-        per-bucket delta files, and commit superseding lineage rows
-        whose stats are updated INCREMENTALLY —
-        ``new_xxh = old_xxh ^ xor(replaced row hashes) ^ xor(added
-        row hashes)`` — from thin columns (doc_id, codec, counts,
-        row_xxh).  The bucket's payload bytes are neither read in bulk
-        nor rewritten, which is what moves a 20-doc upsert out of the
-        O(bucket) cost class.  Read-side semantics are always
-        latest-wins upsert (see ``_resolved``)."""
-        nb = self.num_buckets
-        totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
         # Crash-retry hygiene: an attempt that died between the delta
         # write and the lineage commit left orphan delta dirs whose seq
         # never made it into lineage.  They must go before the
@@ -1047,58 +844,57 @@ class CompressionPipeline:
         # delta_seq <= it), so it catches orphans even when other
         # snapshots advanced the global sequence since the crash.
         self._purge_orphan_deltas(snapshot_id)
-        # ONE wave: waves exist to bound the memory of bucket REWRITES,
-        # but a delta wave's work is O(delta) regardless of how many
-        # buckets it salts into — splitting it would only multiply the
-        # fixed per-wave job overhead (scan, commit, lineage append)
-        waves = [affected] if affected else []
-        for wave in waves:
-            t0 = time.perf_counter()
-            part = salted.filter(F.col("bucket").isin(wave))
-            enc = selector.encode_auto(part, params, allowed=self.allowed,
-                                       passthrough=("bucket", "snapshot_id"))
-            if fsst_table is not None:
-                enc = fstr.encode_string_cols(enc, fsst_table,
-                                              ("doc_id", "source"))
-            enc = enc.withColumn("row_xxh", F.xxhash64("payload"))
-            seq = self._next_commit_seq()
-            enc = enc.withColumn("delta_seq", F.lit(seq).cast("long"))
-            # Stats of the rows this delta SUPERSEDES, computed from
-            # the pre-delta resolved view restricted (broadcast
-            # semi-join) to the delta's keys.
-            keys = (part.select("snapshot_id", "doc_id").distinct())
-            if fsst_table is not None:
-                keys = fstr.encode_string_cols(keys, fsst_table,
-                                               ("doc_id",))
-            repl = self._replaced_stats(snapshot_id, wave, keys)
-            (enc.write.mode("append")
-             .partitionBy("snapshot_id", "bucket", "delta_seq")
-             .parquet(self.delta_dir))
-            # read BACK the written delta (thin columns) for the added
-            # stats — same read-back discipline as _commit_wave, and it
-            # avoids evaluating the encode twice
-            new_paths = [
-                _join(self.delta_dir, f"snapshot_id={snapshot_id}",
-                      f"bucket={b}", f"delta_seq={seq}")
-                for b in wave]
-            new_paths = [p for p in new_paths if self.fs.exists(p)]
-            added = []
-            if new_paths:
-                written = (self.spark.read
-                           .option("basePath", self.delta_dir)
-                           .parquet(*new_paths))
-                added = (written.groupBy("bucket", "codec").agg(
-                    F.count(F.lit(1)).alias("docs"),
-                    F.sum("n_tok").alias("tokens"),
-                    F.sum("raw_bytes").alias("raw_bytes"),
-                    F.sum("comp_bytes").alias("comp_bytes"),
-                    F.expr("bit_xor(row_xxh)").alias("xxh"))
-                    .collect())
-            wall = time.perf_counter() - t0
-            for r in self._commit_delta_wave(snapshot_id, wave, repl,
-                                             added, wall, seq):
-                for k in totals:
-                    totals[k] += int(r[k])
+        if not affected:
+            return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
+        # ONE wave over every affected bucket: a delta's work is
+        # O(delta) regardless of how many buckets it salts into, and
+        # splitting it would only multiply the fixed per-wave job
+        # overhead (scan, commit, lineage append)
+        t0 = time.perf_counter()
+        enc = selector.encode_auto(salted, params, allowed=self.allowed,
+                                   passthrough=("bucket", "snapshot_id"))
+        if fsst_table is not None:
+            enc = fstr.encode_string_cols(enc, fsst_table,
+                                          ("doc_id", "source"))
+        enc = enc.withColumn("row_xxh", F.xxhash64("payload"))
+        seq = self._next_commit_seq()
+        enc = enc.withColumn("delta_seq", F.lit(seq).cast("long"))
+        # Stats of the rows this delta SUPERSEDES, computed from the
+        # pre-delta resolved view restricted (broadcast semi-join) to
+        # the delta's keys.
+        keys = salted.select("snapshot_id", "doc_id").distinct()
+        if fsst_table is not None:
+            keys = fstr.encode_string_cols(keys, fsst_table, ("doc_id",))
+        repl = self._replaced_stats(snapshot_id, affected, keys)
+        (enc.write.mode("append")
+         .partitionBy("snapshot_id", "bucket", "delta_seq")
+         .parquet(self.delta_dir))
+        # read BACK the written delta (thin columns) for the added
+        # stats — same read-back discipline as _commit_wave, and it
+        # avoids evaluating the encode twice
+        new_paths = [
+            _join(self.delta_dir, f"snapshot_id={snapshot_id}",
+                  f"bucket={b}", f"delta_seq={seq}")
+            for b in affected]
+        new_paths = [p for p in new_paths if self.fs.exists(p)]
+        added = []
+        if new_paths:
+            written = (self.spark.read
+                       .option("basePath", self.delta_dir)
+                       .parquet(*new_paths))
+            added = (written.groupBy("bucket", "codec").agg(
+                F.count(F.lit(1)).alias("docs"),
+                F.sum("n_tok").alias("tokens"),
+                F.sum("raw_bytes").alias("raw_bytes"),
+                F.sum("comp_bytes").alias("comp_bytes"),
+                F.expr("bit_xor(row_xxh)").alias("xxh"))
+                .collect())
+        wall = time.perf_counter() - t0
+        totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
+        for r in self._commit_delta_wave(snapshot_id, affected, repl,
+                                         added, wall, seq):
+            for k in totals:
+                totals[k] += int(r[k])
         self._maybe_compact_deltas(snapshot_id, affected)
         return PipelineResult(snapshot_id, len(affected),
                               nb - len(affected), totals["docs"],
@@ -1209,43 +1005,38 @@ class CompressionPipeline:
         write-to-tmp-dir + two renames (the same non-atomic-rename
         window as every metadata write; run it as maintenance, not
         concurrently with commits).  Returns rows kept."""
-        from pyspark.sql import Window
-
-        lin = self.lineage()
-        rows = lin.count()
-        if rows == 0:
+        latest = {(r["snapshot_id"], r["bucket"]): r
+                  for r in self._lineage_records()}
+        if not latest:
             return 0
-        w = (Window.partitionBy("snapshot_id", "bucket")
-             .orderBy(F.desc("commit_seq"), F.desc("committed_at")))
-        latest = (lin.withColumn("_rn", F.row_number().over(w))
-                  .filter(F.col("_rn") == 1).drop("_rn"))
         tmp = self.lineage_dir + ".compact"
         old = self.lineage_dir + ".old"
         if self.fs.exists(tmp):
             self.fs.delete(tmp, recursive=True)
-        (latest.select(*[f.split(" ")[0] for f in
-                         LINEAGE_SCHEMA.split(", ")])
-         .coalesce(1).write.mode("overwrite").parquet(tmp))
-        kept = self.spark.read.parquet(tmp).count()
+        self._write_lineage(
+            _join(tmp, f"part-{uuid.uuid4().hex}.parquet"),
+            list(latest.values()))
         if self.fs.exists(old):
             self.fs.delete(old, recursive=True)
         self.fs.rename(self.lineage_dir, old)
         self.fs.rename(tmp, self.lineage_dir)
         self.fs.delete(old, recursive=True)
-        return int(kept)
+        return len(latest)
 
     def compact(self, snapshot_id: str, buckets=None) -> PipelineResult:
         """Fold delta files back into the base: rewrite each affected
         bucket from its RESOLVED view (the one-time O(bucket) cost
         delta appends deferred), drop the bucket's delta dirs, and
         re-commit lineage from a full read-back — which also resets any
-        accumulated incremental-stat drift to ground truth.  Same
-        staged dynamic-partition-overwrite commit as the rewrite path;
-        crash-safe at every step because base ⊕ deltas resolve to the
-        same logical rows before AND after each transition.  Orphan
-        delta dirs from a crashed append are purged first — folding
-        them into the base would promote uncommitted rows to committed
-        state."""
+        accumulated incremental-stat drift to ground truth.  This is
+        the ONLY code that rewrites a base bucket: the resolved rows
+        are staged to their own directory (Spark refuses to overwrite a
+        path it is reading), then dynamic-partition-overwritten into
+        the data dir.  Crash-safe at every step because base ⊕ deltas
+        resolve to the same logical rows before AND after each
+        transition.  Orphan delta dirs from a crashed append are purged
+        first — folding them into the base would promote uncommitted
+        rows to committed state."""
         self._purge_orphan_deltas(snapshot_id)
         have = self._delta_buckets(snapshot_id)
         if buckets is not None:
@@ -1284,7 +1075,8 @@ class CompressionPipeline:
             # ZERO rows — no staged dir, so dynamic overwrite leaves the
             # old base files untouched; dropping the delta dirs below
             # would then resurrect the deleted documents.  Drop the data
-            # dir outright (same rule as the erasure-delete path).
+            # dir outright — even when the same wave also carries
+            # partially-emptied buckets.
             staged_set = set(staged_dirs)
             for b in wave:
                 if (_join(stage, f"snapshot_id={snapshot_id}",
@@ -1314,35 +1106,26 @@ class CompressionPipeline:
                               totals["docs"], totals["tokens"],
                               totals["raw_bytes"], totals["comp_bytes"])
 
-    def delete(self, ids: DataFrame, snapshot_id: str,
-               strategy: str = "tombstone") -> PipelineResult:
-        """Delete documents from a committed snapshot.
+    def delete(self, ids: DataFrame, snapshot_id: str) -> PipelineResult:
+        """O(delta) LOGICAL delete from a committed snapshot: one marker
+        row per existing victim lands in the delta tree (codec
+        ``tombstone``, winning latest-wins resolution), a superseding
+        lineage commit subtracts the victims' stats from thin columns,
+        and every read path (``read_encoded``, ``fetch``,
+        ``verify_checksums``) sees the documents as gone — while the
+        base bucket files stay byte-identical.  Cost is independent of
+        bucket payload size: the only base read is the thin-column
+        stats pass.
 
-        - ``strategy="tombstone"`` (default): O(delta) LOGICAL delete —
-          one marker row per existing victim lands in the delta tree
-          (codec ``tombstone``, winning latest-wins resolution), a
-          superseding lineage commit subtracts the victims' stats from
-          thin columns, and every read path (``read_encoded``,
-          ``fetch``, ``verify_checksums``) sees the documents as gone
-          — while the base bucket files stay byte-identical.  Physical
-          erasure happens at the next :meth:`compact` of those
-          buckets, which rewrites the base from the resolved view
-          (markers excluded) and drops the delta files.  Cost is
-          independent of bucket payload size: the only base read is
-          the thin-column stats pass.
-        - ``strategy="erasure"``: immediate physical rewrite of the
-          buckets the ids salt into — the right-to-erasure operation,
-          same staged dynamic-partition-overwrite commit as
-          :meth:`append`'s rewrite path; pays O(bucket) per affected
-          bucket.  Equivalent to tombstone-then-compact.
+        Physical erasure (right to erasure) is this call followed by
+        :meth:`compact` of the snapshot: compaction rewrites the
+        affected buckets from the resolved view (markers excluded),
+        drops a bucket that was emptied, and deletes the delta files.
 
         ``ids`` is a DataFrame with a plain-string ``doc_id`` column;
         matching against the stored table happens on FSST-encoded
         bytes exactly like upsert.  Deleting ids that don't exist is a
-        no-op either way (tombstone writes no marker for them;
-        erasure rewrites the bucket byte-identical) — idempotent."""
-        if strategy not in ("tombstone", "erasure"):
-            raise ValueError(f"delete: unknown strategy {strategy!r}")
+        no-op (no marker is written for them) — idempotent."""
         done = self.committed_buckets(snapshot_id)
         if len(done) < self.num_buckets:
             raise ValueError(
@@ -1351,97 +1134,23 @@ class CompressionPipeline:
                 "finish run() before deleting")
         nb = self.num_buckets
         fsst_table = self._fsst_table(snapshot_id)
-        if strategy == "tombstone":
-            # Bounded victim sets take the driver fast path: the bucket
-            # salt and FSST key encoding are computed driver-side
-            # (exactly as fetch() does), so the whole verb costs ONE
-            # thin-column scan + one marker write instead of four-plus
-            # scheduler round trips.  An id set too large to collect
-            # falls back to the DataFrame path below.
-            id_list = self._collect_delete_ids(ids)
-            if id_list is not None:
-                return self._delete_tombstone_fast(id_list, snapshot_id,
-                                                   fsst_table)
+        # Bounded victim sets take the driver fast path: the bucket
+        # salt and FSST key encoding are computed driver-side (exactly
+        # as fetch() does), so the whole verb costs ONE thin-column
+        # scan + one marker write instead of four-plus scheduler round
+        # trips.  An id set too large to collect falls back to the
+        # DataFrame path below.
+        id_list = self._collect_delete_ids(ids)
+        if id_list is not None:
+            return self._delete_tombstone_fast(id_list, snapshot_id,
+                                               fsst_table)
         salted = ids.select(
             F.col("doc_id").cast("string").alias("doc_id")).withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"))
         affected = sorted(r["bucket"] for r in
                           salted.select("bucket").distinct().collect())
-        if strategy == "tombstone":
-            return self._delete_tombstone(salted, snapshot_id,
-                                          fsst_table, affected)
-        # Purge crash orphans unconditionally before the erasure
-        # rewrite: its _commit_wave advances the lineage max
-        # commit_seq, which would legitimize any orphan delta sitting
-        # above the old max (same hazard as append's rewrite path).
-        self._purge_orphan_deltas(snapshot_id)
-        # merge-on-read: fold affected buckets' deltas into the base
-        # first so erasure rewrites the ONE physical copy (delta rows
-        # left behind would resurrect deleted documents at read time)
-        delta_b = sorted(set(self._delta_buckets(snapshot_id))
-                         & set(affected))
-        if delta_b:
-            self.compact(snapshot_id, delta_b)
-        totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
-        waves = [affected[i:i + self.wave_buckets]
-                 for i in range(0, len(affected), self.wave_buckets)]
-        stage_root = _join(self.output_dir, "delete_staging", snapshot_id)
-        for wi, wave in enumerate(waves):
-            t0 = time.perf_counter()
-            paths = self._wave_paths(snapshot_id, wave)
-            if not paths:
-                continue
-            keys = salted.filter(F.col("bucket").isin(wave))
-            if fsst_table is not None:
-                keys = fstr.encode_string_cols(keys, fsst_table, ("doc_id",))
-            keys = keys.select(F.col("doc_id").alias("_k")).distinct()
-            existing = (self.spark.read
-                        .option("basePath", self.data_dir)
-                        .parquet(*paths))
-            kept = existing.join(keys, existing["doc_id"] == keys["_k"],
-                                 "left_anti")
-            stage = _join(stage_root, f"wave{wi}")
-            (kept.write.mode("overwrite")
-             .partitionBy("snapshot_id", "bucket").parquet(stage))
-            staged_dirs = [
-                _join(stage, f"snapshot_id={snapshot_id}", f"bucket={b}")
-                for b in wave
-                if self.fs.exists(_join(stage, f"snapshot_id={snapshot_id}",
-                                        f"bucket={b}"))]
-            if staged_dirs:
-                (self._base_writer(self.spark.read.option("basePath", stage)
-                                   .parquet(*staged_dirs))
-                 .mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("snapshot_id", "bucket")
-                 .parquet(self.data_dir))
-            # Per-bucket: dynamic partition overwrite rewrites ONLY the
-            # partitions present in the staged frame, so a bucket whose
-            # every document was deleted (no staged dir) must have its
-            # data dir dropped outright — even when the same wave also
-            # carries partially-emptied buckets.  Gating this on
-            # staged_dirs being entirely empty left fully-emptied
-            # buckets' old files in place (a right-to-erasure
-            # violation that verify_checksums couldn't see, because
-            # _commit_wave would re-commit the stale bucket's stats).
-            staged_set = set(staged_dirs)
-            for b in wave:
-                ddir = _join(self.data_dir, f"snapshot_id={snapshot_id}",
-                             f"bucket={b}")
-                sdir = _join(stage, f"snapshot_id={snapshot_id}",
-                             f"bucket={b}")
-                if sdir not in staged_set and self.fs.exists(ddir):
-                    self.fs.delete(ddir, recursive=True)
-            wall = time.perf_counter() - t0
-            for r in self._commit_wave(snapshot_id, wave, wall):
-                for k in totals:
-                    totals[k] += int(r[k])
-        if self.fs.exists(stage_root):
-            self.fs.delete(stage_root, recursive=True)
-        return PipelineResult(snapshot_id, len(affected),
-                              nb - len(affected), totals["docs"],
-                              totals["tokens"], totals["raw_bytes"],
-                              totals["comp_bytes"])
+        return self._delete_tombstone(salted, snapshot_id,
+                                      fsst_table, affected)
 
     # ids below this bound are deleted via the driver fast path (collect
     # the id strings, salt/encode them driver-side); larger sets keep the
@@ -1452,14 +1161,13 @@ class CompressionPipeline:
     def _collect_delete_ids(self, ids: DataFrame) -> list | None:
         """The distinct requested doc_ids as a driver-side sorted list,
         or None when the set exceeds MAX_DRIVER_DELETE_IDS (caller
-        falls back to the DataFrame path).  Plain collect, not
-        limit+collect: CollectLimit costs ~0.18 s extra per call
-        (measured) and offers no memory protection this path doesn't
-        already have — the DataFrame fallback materializes the same
-        key set driver-side when building its broadcast."""
+        falls back to the DataFrame path).  The collect is bounded at
+        cap + 1 rows, so an oversized id set never lands on the driver
+        just to be counted (``spark.sql.limit.initialNumPartitions``
+        lets the limit finish in one job)."""
         cap = self.MAX_DRIVER_DELETE_IDS
         rows = (ids.select(F.col("doc_id").cast("string").alias("doc_id"))
-                .collect())
+                .limit(cap + 1).collect())
         if len(rows) > cap:
             return None
         return sorted({r["doc_id"] for r in rows})
@@ -1485,8 +1193,8 @@ class CompressionPipeline:
         3. marker rows are BUILT driver-side from the collected
            victims (the old path re-ran the resolved-view semi-join a
            second time just to project three columns) and land as one
-           single-partition write;
-        4. lineage read/append ride the pyarrow metadata path —
+           driver-written parquet file per bucket;
+        4. markers and lineage ride the pyarrow metadata transport —
            zero Spark jobs.
 
         Measured (sf0.1 store, 100-doc batch, local[32]): 5.0 s -> the
@@ -1543,28 +1251,8 @@ class CompressionPipeline:
             a["xxh"] ^= int(r["row_xxh"])
         repl = list(repl_agg.values())
         seq = self._next_commit_seq()
-        if not self._write_tombstones_local(snapshot_id, seq, victims,
-                                            is_binary, fsst_table):
-            src_t = "binary" if fsst_table is not None else "string"
-            id_t = "binary" if is_binary else "string"
-            tomb_schema = (
-                f"snapshot_id string, doc_id {id_t}, bucket int, "
-                f"source {src_t}, n_tok int, n_blocks int, "
-                "block_sizes array<int>, block_flags binary, "
-                "payload binary, comp_bytes long, raw_bytes long, "
-                "codec string, row_xxh long, delta_seq long")
-            tomb_rows = [
-                (snapshot_id,
-                 bytes(r["doc_id"]) if is_binary else r["doc_id"],
-                 int(r["bucket"]), None, 0, 0, [], None, None, 0, 0,
-                 TOMBSTONE_CODEC, 0, seq)
-                for r in victims]
-            tomb = self.spark.createDataFrame(
-                self.spark.sparkContext.parallelize(tomb_rows, 1),
-                tomb_schema)
-            (tomb.write.mode("append")
-             .partitionBy("snapshot_id", "bucket", "delta_seq")
-             .parquet(self.delta_dir))
+        self._write_tombstones(snapshot_id, seq, victims, is_binary,
+                               fsst_table)
         wall = time.perf_counter() - t0
         totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
         for r in self._commit_delta_wave(snapshot_id, affected, repl, [],
@@ -1577,28 +1265,14 @@ class CompressionPipeline:
                               totals["tokens"], totals["raw_bytes"],
                               totals["comp_bytes"])
 
-    def _write_tombstones_local(self, snapshot_id: str, seq: int,
-                                victims, is_binary: bool,
-                                fsst_table) -> bool:
-        """Driver-side tombstone-marker write for LOCAL stores: the
-        markers are <= len(ids) rows spread over <= num_buckets delta
-        dirs, but the Spark dynamic-partition write paid ~1.0 s of
-        commit-protocol fixed cost (measured, 100 rows / 32 dirs /
-        local[32]).  One pyarrow file per bucket dir, tmp + rename,
-        column types matching the Spark-written delta files exactly.
-        Returns False when the store is not local (caller uses the
-        Spark write)."""
-        from .fsio import local_root
-
-        root = local_root(self.delta_dir)
-        if root is None:
-            return False
-        import os
-        import uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+    def _write_tombstones(self, snapshot_id: str, seq: int, victims,
+                          is_binary: bool, fsst_table) -> None:
+        """Driver-side tombstone-marker write: the markers are <=
+        len(ids) rows spread over <= num_buckets delta dirs, and a
+        Spark dynamic-partition write paid ~1.0 s of commit-protocol
+        fixed cost for them (measured, 100 rows / 32 dirs / local[32]).
+        One pyarrow file per bucket dir through ``self.fs``, column
+        types matching the Spark-written delta files exactly."""
         id_t = pa.binary() if is_binary else pa.string()
         src_t = pa.binary() if fsst_table is not None else pa.string()
         schema = pa.schema([
@@ -1628,14 +1302,10 @@ class CompressionPipeline:
                 "codec": pa.array([TOMBSTONE_CODEC] * n, pa.string()),
                 "row_xxh": pa.array([0] * n, pa.int64()),
             }, schema=schema)
-            d = os.path.join(root, f"snapshot_id={snapshot_id}",
-                             f"bucket={b}", f"delta_seq={seq}")
-            os.makedirs(d, exist_ok=True)
-            name = f"part-{uuid.uuid4().hex}.parquet"
-            tmp = os.path.join(d, f".{name}.tmp")
-            pq.write_table(table, tmp, compression="snappy")
-            os.replace(tmp, os.path.join(d, name))
-        return True
+            self._write_parquet(
+                _join(self.delta_dir, f"snapshot_id={snapshot_id}",
+                      f"bucket={b}", f"delta_seq={seq}",
+                      f"part-{uuid.uuid4().hex}.parquet"), table)
 
     def _delete_tombstone(self, salted: DataFrame, snapshot_id: str,
                           fsst_table, affected: list) -> PipelineResult:

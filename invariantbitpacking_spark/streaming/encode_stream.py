@@ -139,7 +139,7 @@ def start_ingest_stream(spark: SparkSession, input_path: str,
 
     def _sink(batch_df, _batch_id):
         if not batch_df.isEmpty():
-            pipe.append(batch_df, snapshot_id, mode="upsert")
+            pipe.append(batch_df, snapshot_id)
             seen["batches"] += 1
             if compact_every and seen["batches"] % compact_every == 0:
                 pipe.compact(snapshot_id)
@@ -195,7 +195,7 @@ def start_delete_stream(spark: SparkSession, input_path: str,
 
     def _sink(batch_df, _batch_id):
         if not batch_df.isEmpty():
-            pipe.delete(batch_df, snapshot_id)  # strategy="tombstone"
+            pipe.delete(batch_df, snapshot_id)
             seen["batches"] += 1
             if compact_every and seen["batches"] % compact_every == 0:
                 pipe.compact(snapshot_id)

@@ -232,7 +232,7 @@ def main() -> None:
         timed("q9  delete(tombstone) full verb", lambda: pipe.delete(
             spark.createDataFrame([(d,) for d in next(bi)],
                                   "doc_id string"),
-            snap, strategy="tombstone"), n=3)
+            snap), n=3)
 
         tt_ids = victims[:10]
         f_df = pipe.fetch(tt_ids, snap, as_of_seq=seq0)

@@ -39,13 +39,10 @@ def main() -> None:
     ap.add_argument("--max-waves", type=int, default=None)
     ap.add_argument("--local-cores", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    ap.add_argument("--append-strategy", default="delta",
-                    choices=("delta", "rewrite"),
-                    help="delta = O(delta) merge-on-read files; "
-                         "rewrite = fold into the bucket immediately")
     ap.add_argument("--compact", action="store_true",
                     help="fold any pending delta files into the base "
-                         "after the append")
+                         "after the append and delete (physically "
+                         "erases the deleted documents)")
     ap.add_argument("--append-rows", type=int, default=0,
                     help="after the run, upsert this many synthetic delta "
                          "docs into the snapshot (incremental-ingest drive)")
@@ -53,8 +50,6 @@ def main() -> None:
                     help="after the run (and any append), tombstone-"
                          "delete this many documents (first N by doc_id "
                          "order) — the O(delta) erasure drive")
-    ap.add_argument("--delete-strategy", default="tombstone",
-                    choices=("tombstone", "erasure"))
     ap.add_argument("--as-of", type=int, default=None,
                     help="also report the row count of the snapshot as "
                          "of this lineage commit_seq (time travel)")
@@ -98,10 +93,8 @@ def main() -> None:
                  .withColumn("doc_id", F.concat(F.lit("delta-"),
                                                 F.col("doc_id"))))
         t1 = time.perf_counter()
-        ares = pipe.append(delta, args.snapshot,
-                           strategy=args.append_strategy)
+        ares = pipe.append(delta, args.snapshot)
         out["append_docs"] = args.append_rows
-        out["append_strategy"] = args.append_strategy
         out["append_buckets_touched"] = ares.buckets_done
         out["append_wall_sec"] = round(time.perf_counter() - t1, 3)
         toks = toks.unionByName(delta)
@@ -112,10 +105,8 @@ def main() -> None:
         victims = (toks.select("doc_id").orderBy("doc_id")
                    .limit(args.delete_rows))
         t3 = time.perf_counter()
-        dres = pipe.delete(victims, args.snapshot,
-                           strategy=args.delete_strategy)
+        dres = pipe.delete(victims, args.snapshot)
         out["deleted_docs"] = dres.docs
-        out["delete_strategy"] = args.delete_strategy
         out["delete_wall_sec"] = round(time.perf_counter() - t3, 3)
         vlist = [r["doc_id"] for r in victims.collect()]
         toks = toks.filter(~F.col("doc_id").isin(vlist))

@@ -4,13 +4,14 @@
    must be purged on retry even when OTHER snapshots advanced the
    global commit_seq in between — the old scheme matched only the next
    seq and left the orphan behind as fake committed data.
-2. append(mode="append", strategy="delta") raises: delta resolution is
-   unconditionally latest-wins, so keep-existing semantics cannot be
-   honored on that path.
-3. compact_lineage's two-rename swap: a crash between the renames
+2. compact_lineage's two-rename swap: a crash between the renames
    leaves no lineage dir; the next lineage read must heal from the
    fully-written .compact dir (or .old) instead of forgetting every
    committed bucket.
+3. The store's one mutation protocol survives a crash at every step
+   boundary: delta data write, tombstone marker write, lineage append,
+   compact's data overwrite and delta drop, and each compact_lineage
+   rename.  Retrying the verb converges to the expected rows.
 4. The float32 matvec in _pred_saved/_gated_savings is exact only
    while sum(popcount(mask)) < 2^24; above that the int64 path must
    be taken (and agree with a direct int64 computation).
@@ -75,24 +76,6 @@ def test_orphan_delta_purged_after_foreign_commit(spark, tokens_df, outdir):
     assert lin.agg(F.sum("docs")).collect()[0][0] == n0 + 2
 
 
-def test_append_mode_append_with_delta_strategy_raises(
-        spark, tokens_df, outdir):
-    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
-                               sample_fraction=None)
-    sub = tokens_df.limit(30)
-    pipe.run(sub, "snapM")
-    existing = sub.select("doc_id").orderBy("doc_id").first()["doc_id"]
-    delta = spark.createDataFrame([(existing, [1, 2], 2, "web")], DELTA_DDL)
-    with pytest.raises(ValueError, match="latest-wins"):
-        pipe.append(delta, "snapM", mode="append")  # default strategy=delta
-    # the rewrite path honors keep-existing semantics
-    orig = pipe.fetch([existing], "snapM").first()["tokens"]
-    pipe.append(delta, "snapM", mode="append", strategy="rewrite")
-    assert list(pipe.fetch([existing], "snapM").first()["tokens"]) \
-        == list(orig)
-    assert pipe.verify_checksums("snapM") == 0
-
-
 def test_compact_lineage_crash_window_heals(spark, tokens_df, outdir):
     """Simulate the crash between compact_lineage's two renames: the
     lineage dir is gone, .compact (complete) and .old both exist.  The
@@ -136,6 +119,103 @@ def test_lineage_heals_from_old_when_compact_missing(
              pipe.latest_lineage("snapO").collect()}
     assert after == before
     assert pipe.verify_checksums("snapO") == 0
+
+
+# fault point -> (verb it fires in, patched call, pipeline dir the
+# call's path starts with, which matching call raises)
+FAULT_POINTS = {
+    "delta_write": ("append", "writer", "delta_dir", 1),
+    "marker_write": ("delete", "write_bytes_atomic", "delta_dir", 2),
+    "lineage_append": ("delete", "write_bytes_atomic", "lineage_dir", 1),
+    "compact_overwrite": ("compact", "writer", "data_dir", 1),
+    "compact_drop_delta": ("compact", "delete", "delta_dir", 1),
+    "lineage_rename_old": ("compact_lineage", "rename", "lineage_dir", 1),
+    "lineage_rename_swap": ("compact_lineage", "rename", "lineage_dir", 2),
+}
+
+
+@pytest.mark.parametrize("point", sorted(FAULT_POINTS))
+def test_fault_point_then_retry_converges(spark, tokens_df, outdir,
+                                          monkeypatch, point):
+    """Crash at one step boundary of append -> delete -> compact ->
+    compact_lineage (the step raises once instead of running), retry
+    the verb, and finish the sequence: the resolved rows equal the
+    expected rows and every checksum holds."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from invariantbitpacking_spark.operators import selector
+
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    sub = tokens_df.limit(60)
+    pipe.run(sub, "snapF")
+    params = pipe.load_or_learn_params(sub, "snapF")
+    base = {r["doc_id"]: list(r["tokens"]) for r in sub.collect()}
+    ids = sorted(base)
+    upd = ids[0]
+    delta = spark.createDataFrame(
+        [(upd, [5, 6, 7], 3, "web"), ("fault-new", [1, 2], 2, "web")],
+        DELTA_DDL)
+    appended = {**base, upd: [5, 6, 7], "fault-new": [1, 2]}
+    victims = ids[1:7]
+    deleted = {k: v for k, v in appended.items() if k not in victims}
+    victim_df = spark.createDataFrame([(v,) for v in victims],
+                                      "doc_id string")
+
+    def check(want):
+        got = {r["doc_id"]: list(r["tokens"]) for r in
+               selector.decode_auto(pipe.read_encoded("snapF"), params)
+               .collect()}
+        assert got == want
+        assert pipe.verify_checksums("snapF") == 0
+        lin = pipe.latest_lineage("snapF").collect()
+        assert len(lin) == 4
+        assert sum(r["docs"] for r in lin) == len(want)
+
+    verb, call, target, nth = FAULT_POINTS[point]
+    prefix = getattr(pipe, target)
+    state = {"armed": False, "seen": 0, "fired": False}
+
+    def hit(path) -> bool:
+        if not state["armed"] or state["fired"]:
+            return False
+        path = str(path)
+        if not (path == prefix if call == "writer"
+                else path.startswith(prefix)):
+            return False
+        state["seen"] += 1
+        state["fired"] = state["seen"] == nth
+        return state["fired"]
+
+    # DataFrameWriter.parquet is patched on the class (path is the
+    # second argument), an fs call on the instance (path comes first)
+    owner, attr = ((DataFrameWriter, "parquet") if call == "writer"
+                   else (pipe.fs, call))
+    real = getattr(owner, attr)
+
+    def step(*a, **k):
+        if hit(a[1] if call == "writer" else a[0]):
+            raise RuntimeError(f"injected fault: {point}")
+        return real(*a, **k)
+
+    monkeypatch.setattr(owner, attr, step)
+
+    verbs = [("append", lambda: pipe.append(delta, "snapF"), appended),
+             ("delete", lambda: pipe.delete(victim_df, "snapF"), deleted),
+             ("compact", lambda: pipe.compact("snapF"), deleted),
+             ("compact_lineage", pipe.compact_lineage, deleted)]
+    for name, run, want in verbs:
+        state["armed"] = name == verb
+        try:
+            run()
+        except RuntimeError as e:
+            assert "injected fault" in str(e)
+            state["armed"] = False
+            run()  # the retry
+            check(want)
+    assert state["fired"], f"fault {point} never fired"
+    check(deleted)
+    assert pipe._delta_buckets("snapF") == []
 
 
 def test_pred_saved_wide_vec_int64_fallback():

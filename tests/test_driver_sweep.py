@@ -1,74 +1,12 @@
-"""The driver's per-round oracle sweep must stay self-checking.
+"""The query registry and its DuckDB oracles must stay consistent.
 
-Round 6 silently recorded 50 of 51 registered queries
-(``fsst_roundtrip`` was absent from CORRECTNESS_r06.json while present
-in every prior round's file); nothing failed, so the gap was only
-caught by the judge re-running the query by hand.  These tests make
-that failure mode loud: the latest CORRECTNESS_r*.json in the repo
-root must cover every key in ``queries()`` that existed when it was
-recorded.
-
-Queries added AFTER the latest correctness file was written are
-exempted via NEW_SINCE_LAST_SWEEP — move them out of the set once the
-next round's file lands (the test nags if an exemption has become
-stale, so the set cannot rot).
+``tests/test_oracle_parity.py`` runs every registered query against its
+oracle on each test run, so pytest is the full-coverage gate; these
+tests check the registry bookkeeping that gate relies on.
 """
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
-
 import __spark_entry__ as entry
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-# Query keys registered in queries() but added after the most recent
-# driver sweep on record.  Empty: no new queries since the round-7
-# sweep (r07 recorded repetition_stats / pii_scrub /
-# ngram_jaccard_pairs / decontaminate; multimodal_jpeg moved to the
-# r07 adjudicated set below).
-NEW_SINCE_LAST_SWEEP: set[str] = set()
-
-# Round-8 registry rotation: the driver records only the FIRST 50
-# queries() entries, so six never/rarely-swept queries were moved to
-# the head and these six LONG-GREEN queries (driver rows in every
-# round through CORRECTNESS_r07.json) rotated to tail positions 51-56
-# — they will be absent from the r08 sweep BY DESIGN.
-ROTATED_TO_TAIL: set[str] = {
-    "ibp64_roundtrip_by_source", "ibp16_roundtrip_by_source",
-    "ibp8_roundtrip_by_source", "float32_roundtrip_by_source",
-    "float64_roundtrip_by_source", "kmeans_vs_global_shape",
-}
-
-# Historical sweep gaps already adjudicated by hand, listed per-file
-# so an exemption can never leak onto a future sweep.
-# - r06: the round-6 VERDICT records the judge re-running
-#   fsst_roundtrip against its DuckDB oracle at sf0.001 AND sf0.01
-#   (both exact).
-# - r07: the driver's 50-row cap dropped registry positions 51-56;
-#   the round-7 VERDICT ("Operator coverage" table + "What's wrong")
-#   records the judge running ALL SIX against their full DuckDB
-#   oracles at sf0.001 AND sf0.01 — every one exact.
-# - r08 (when it lands): the six rotated-to-tail queries above.
-KNOWN_ADJUDICATED_GAPS = {
-    "CORRECTNESS_r06.json": {"fsst_roundtrip"},
-    "CORRECTNESS_r07.json": {"fsst_roundtrip", "multimodal_featurize",
-                             "multimodal_frames", "multimodal_real",
-                             "multimodal_png", "multimodal_jpeg"},
-    "CORRECTNESS_r08.json": ROTATED_TO_TAIL,
-}
-
-
-def _latest_correctness():
-    files = sorted(
-        glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")),
-        key=lambda p: int(re.search(r"_r(\d+)", p).group(1)))
-    if not files:
-        return None, None
-    with open(files[-1]) as fh:
-        return files[-1], json.load(fh)
 
 
 def test_expected_query_count_matches_registry():
@@ -78,21 +16,3 @@ def test_expected_query_count_matches_registry():
 def test_oracle_keys_subset_of_queries():
     q, o = set(entry.queries()), set(entry.oracle_sql())
     assert o <= q, f"oracle_sql keys missing from queries(): {o - q}"
-
-
-def test_latest_sweep_covered_every_registered_query():
-    path, data = _latest_correctness()
-    if data is None:
-        return  # fresh checkout without driver artifacts
-    recorded = set(data)
-    adjudicated = KNOWN_ADJUDICATED_GAPS.get(os.path.basename(path), set())
-    missing = (set(entry.queries()) - recorded - NEW_SINCE_LAST_SWEEP
-               - adjudicated)
-    assert not missing, (
-        f"{os.path.basename(path)} is missing registered queries "
-        f"{sorted(missing)} — the driver sweep silently skipped them "
-        f"(round-6 fsst_roundtrip failure mode)")
-    stale = NEW_SINCE_LAST_SWEEP & recorded
-    assert not stale, (
-        f"NEW_SINCE_LAST_SWEEP exemptions already covered by "
-        f"{os.path.basename(path)}: {sorted(stale)} — prune them")

@@ -309,10 +309,11 @@ def test_delete_docs_bucket_local(spark, tokens_df, outdir):
 
 
 def test_delete_empties_bucket_in_mixed_wave(spark, tokens_df, outdir):
-    """Round-4 ADVICE (high): a wave containing BOTH a fully-emptied
-    bucket and a partially-emptied bucket must drop the emptied
-    bucket's partition dir — dynamic partition overwrite alone only
-    rewrites the staged (partially-emptied) partitions."""
+    """Round-4 ADVICE (high): physical erasure (delete, then compact)
+    of a wave containing BOTH a fully-emptied bucket and a
+    partially-emptied bucket must drop the emptied bucket's partition
+    dir — dynamic partition overwrite alone only rewrites the staged
+    (partially-emptied) partitions."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=8, wave_buckets=8,
                                sample_fraction=None)
     pipe.run(tokens_df, "snapDEL")
@@ -327,7 +328,8 @@ def test_delete_empties_bucket_in_mixed_wave(spark, tokens_df, outdir):
              .select("doc_id").orderBy("doc_id").first()["doc_id"])
     victims = full_victims + [other]
     ids = spark.createDataFrame([(v,) for v in victims], "doc_id string")
-    pipe.delete(ids, "snapDEL", strategy="erasure")
+    pipe.delete(ids, "snapDEL")
+    pipe.compact("snapDEL")
     enc = pipe.read_encoded("snapDEL")
     # right to erasure: every victim gone, including the whole bucket
     assert enc.filter(F.col("doc_id").isin(victims)).count() == 0
@@ -356,13 +358,13 @@ def test_append_upsert_dedupes_delta(spark, tokens_df, outdir):
         [("dup-doc", [1, 2, 3], 3, "web"),
          ("dup-doc", [9, 9, 9, 9], 4, "web")],
         "doc_id string, tokens array<int>, n_tok int, source string")
-    pipe.append(dup_delta, "snapDD", mode="upsert")
+    pipe.append(dup_delta, "snapDD")
     enc = pipe.read_encoded("snapDD")
     assert enc.count() == n0 + 1  # ONE row for dup-doc, not two
     assert enc.filter(F.col("doc_id") == "dup-doc").count() == 1
     assert pipe.verify_checksums("snapDD") == 0
     # re-running the same delta converges (idempotent even with dupes)
-    pipe.append(dup_delta, "snapDD", mode="upsert")
+    pipe.append(dup_delta, "snapDD")
     assert pipe.read_encoded("snapDD").count() == n0 + 1
     assert pipe.verify_checksums("snapDD") == 0
     # order_col: the row with the larger revision wins deterministically
@@ -371,7 +373,7 @@ def test_append_upsert_dedupes_delta(spark, tokens_df, outdir):
          ("rev-doc", [7, 7, 7], 3, "web", 2)],
         "doc_id string, tokens array<int>, n_tok int, source string, "
         "rev int")
-    pipe.append(rev_delta, "snapDD", mode="upsert", order_col="rev")
+    pipe.append(rev_delta, "snapDD", order_col="rev")
     params = pipe.load_or_learn_params(sub, "snapDD")
     from invariantbitpacking_spark.operators import selector
     dec = selector.decode_auto(pipe.read_encoded("snapDD"), params)
@@ -390,7 +392,7 @@ def test_lineage_commit_seq_supersedes_ties(spark, tokens_df, outdir):
     delta = spark.createDataFrame(
         [("seq-doc", [1, 2], 2, "web")],
         "doc_id string, tokens array<int>, n_tok int, source string")
-    pipe.append(delta, "snapSEQ", mode="upsert")
+    pipe.append(delta, "snapSEQ")
     lin = pipe.lineage().filter(F.col("snapshot_id") == "snapSEQ")
     seqs = sorted(r["commit_seq"] for r in
                   lin.select("commit_seq").distinct().collect())
@@ -464,7 +466,7 @@ def test_append_delta_is_o_delta_on_disk(spark, tokens_df, outdir):
     delta = spark.createDataFrame(
         [(upd_id, [11, 22, 33], 3, "web"), ("fresh-doc", [7] * 5, 5, "web")],
         "doc_id string, tokens array<int>, n_tok int, source string")
-    pipe.append(delta, "snapMD")  # default strategy="delta"
+    pipe.append(delta, "snapMD")
     # O(delta): the base is byte-for-byte untouched
     assert base_files() == before
     # delta dirs exist only for the two affected buckets
@@ -516,9 +518,8 @@ def test_compact_folds_deltas_into_base(spark, tokens_df, outdir):
 
 def test_delete_compacts_pending_deltas_first(spark, tokens_df, outdir):
     """delete() of a document that lives only in a DELTA file must
-    erase it (default tombstone strategy: a higher-seq marker
-    supersedes the delta row; the erasure strategy folds deltas into
-    the base before its rewrite)."""
+    erase it: a higher-seq tombstone marker supersedes the delta
+    row."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
                                sample_fraction=None)
     sub = tokens_df.limit(120)

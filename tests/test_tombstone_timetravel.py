@@ -50,7 +50,7 @@ def test_tombstone_delete_base_untouched_then_compact_erases(
                sub.select("doc_id").orderBy("doc_id").limit(4).collect()]
     before = _base_file_state(outdir, "snapT")
     ids = spark.createDataFrame([(v,) for v in victims], "doc_id string")
-    res = pipe.delete(ids, "snapT")  # default strategy="tombstone"
+    res = pipe.delete(ids, "snapT")
     assert res.docs == 4
     # logical delete: every read path sees them gone
     enc = pipe.read_encoded("snapT")
