@@ -18,10 +18,8 @@ the inherently serial greedy walk is TRANSPOSED — iterate over token
 STEPS, vectorized across all rows of the batch — so total work is
 O(tokens), with no per-row Python.
 
-The previous bigram-only variant ("FSST-lite") is retained at the
-bottom solely to decode tables persisted with format_version 2;
-``encode_strings``/``decode_strings`` dispatch on the table type
-(SymbolTable = canonical, uint16 ndarray = lite).
+This is the only string format: every persisted table is a
+:class:`SymbolTable`.
 """
 
 from __future__ import annotations
@@ -214,12 +212,9 @@ def build_table(sample_bytes: np.ndarray, max_symbols: int = MAX_SYMBOLS,
     return table
 
 
-def encode_strings(data: np.ndarray, lens: np.ndarray, table):
+def encode_strings(data: np.ndarray, lens: np.ndarray, table: SymbolTable):
     """Encode concatenated uint8 string bytes (row lengths ``lens``).
-    Returns (encoded uint8 flat, encoded row lens int64).  Dispatches
-    to the legacy bigram codec when given a uint16 key array."""
-    if isinstance(table, np.ndarray):
-        return encode_strings_lite(data, lens, table)
+    Returns (encoded uint8 flat, encoded row lens int64)."""
     lens = np.asarray(lens, np.int64)
     total = int(lens.sum())
     nrows = len(lens)
@@ -257,12 +252,27 @@ def encode_strings(data: np.ndarray, lens: np.ndarray, table):
     return enc, outcnt
 
 
-def decode_strings(enc: np.ndarray, enc_lens: np.ndarray, table):
+def _run_parity_select(cand: np.ndarray, boundary: np.ndarray) -> np.ndarray:
+    """cand positions chosen by greedy leftmost matching: within each
+    maximal run of True (runs broken at ``boundary`` positions), keep
+    even offsets."""
+    if cand.size == 0:
+        return cand
+    prev = np.zeros_like(cand)
+    prev[1:] = cand[:-1]
+    prev[boundary] = False
+    run_start = cand & ~prev
+    idx = np.arange(cand.size)
+    start_idx = np.where(run_start, idx, 0)
+    start_idx = np.maximum.accumulate(np.where(cand, start_idx, idx))
+    return cand & (((idx - start_idx) & 1) == 0)
+
+
+def decode_strings(enc: np.ndarray, enc_lens: np.ndarray,
+                   table: SymbolTable):
     """Inverse of :func:`encode_strings` -> (decoded uint8 flat, lens).
     Fully vectorized: escape parity resolves marker chains, symbol
     expansion is 8 masked scatters."""
-    if isinstance(table, np.ndarray):
-        return decode_strings_lite(enc, enc_lens, table)
     enc_lens = np.asarray(enc_lens, np.int64)
     total = int(enc_lens.sum())
     nrows = len(enc_lens)
@@ -284,7 +294,7 @@ def decode_strings(enc: np.ndarray, enc_lens: np.ndarray, table):
     is_sym = ~esc & ~consumed
 
     # A non-escape, non-consumed code past the table is a corrupt
-    # stream or a table/format_version mismatch — mapping it to
+    # stream or a stream decoded with the wrong table — mapping it to
     # sym_len 0 would silently drop bytes and return shorter strings.
     bad = is_sym & (e.astype(np.int64) >= int(table.size))
     if bad.any():
@@ -321,120 +331,3 @@ def flat_to_strings(flat: np.ndarray, lens: np.ndarray) -> list[str]:
     buf = flat.tobytes()
     return [buf[int(s): int(s) + int(n)].decode("utf-8")
             for s, n in zip(starts, lens)]
-
-
-# ---------------------------------------------------------------------------
-# Legacy FSST-lite (bigram symbols) — kept ONLY to decode string
-# columns persisted with format_version 2.  New tables are canonical.
-# ---------------------------------------------------------------------------
-
-LITE_ESCAPE = 0xFF
-LITE_FIRST_CODE = 0x80
-LITE_MAX_SYMBOLS = 127
-
-
-def build_table_lite(sample_bytes: np.ndarray,
-                     max_symbols: int = LITE_MAX_SYMBOLS,
-                     min_count: int = 4) -> np.ndarray:
-    """Top bigrams of a concatenated uint8 sample -> uint16 array of
-    bigram keys (a*256+b), most frequent first."""
-    if sample_bytes.size < 2:
-        return np.zeros(0, np.uint16)
-    pairs = sample_bytes[:-1].astype(np.uint32) * 256 + sample_bytes[1:]
-    counts = np.bincount(pairs, minlength=65536)
-    order = np.argsort(counts, kind="stable")[::-1][:max_symbols]
-    keep = order[counts[order] >= min_count]
-    return keep.astype(np.uint16)
-
-
-def _run_parity_select(cand: np.ndarray, boundary: np.ndarray) -> np.ndarray:
-    """cand positions chosen by greedy leftmost matching: within each
-    maximal run of True (runs broken at ``boundary`` positions), keep
-    even offsets."""
-    if cand.size == 0:
-        return cand
-    prev = np.zeros_like(cand)
-    prev[1:] = cand[:-1]
-    prev[boundary] = False
-    run_start = cand & ~prev
-    idx = np.arange(cand.size)
-    start_idx = np.where(run_start, idx, 0)
-    start_idx = np.maximum.accumulate(np.where(cand, start_idx, idx))
-    return cand & (((idx - start_idx) & 1) == 0)
-
-
-def encode_strings_lite(data: np.ndarray, lens: np.ndarray,
-                        table: np.ndarray):
-    lens = np.asarray(lens, np.int64)
-    total = int(lens.sum())
-    if total == 0:
-        return np.zeros(0, np.uint8), np.zeros(len(lens), np.int64)
-    starts = np.cumsum(lens) - lens
-    b = np.asarray(data, np.uint8)
-    code_of = np.full(65536, -1, np.int32)
-    code_of[table.astype(np.int64)] = LITE_FIRST_CODE + np.arange(table.size)
-
-    pair_key = np.zeros(total, np.int64)
-    pair_key[:-1] = b[:-1].astype(np.int64) * 256 + b[1:]
-    cand = code_of[pair_key] >= 0
-    row_last = starts + lens - 1
-    cand[row_last[lens > 0]] = False
-    boundary = np.zeros(total, bool)
-    boundary[starts[lens > 0]] = True
-    rep = _run_parity_select(cand, boundary)
-    consumed = np.zeros(total, bool)
-    consumed[1:] = rep[:-1]
-
-    is_lit = ~rep & ~consumed
-    needs_escape = is_lit & (b >= 0x80)
-    out_len_per_pos = np.where(rep, 1, np.where(consumed, 0,
-                               np.where(needs_escape, 2, 1)))
-    out_off = np.cumsum(out_len_per_pos) - out_len_per_pos
-    out = np.zeros(int(out_len_per_pos.sum()), np.uint8)
-    out[out_off[rep]] = code_of[pair_key[rep]].astype(np.uint8)
-    plain = is_lit & ~needs_escape
-    out[out_off[plain]] = b[plain]
-    out[out_off[needs_escape]] = LITE_ESCAPE
-    out[out_off[needs_escape] + 1] = b[needs_escape]
-
-    row_of = np.repeat(np.arange(len(lens)), lens)
-    enc_lens = np.bincount(row_of, weights=out_len_per_pos,
-                           minlength=len(lens)).astype(np.int64)
-    return out, enc_lens
-
-
-def decode_strings_lite(enc: np.ndarray, enc_lens: np.ndarray,
-                        table: np.ndarray):
-    enc_lens = np.asarray(enc_lens, np.int64)
-    total = int(enc_lens.sum())
-    if total == 0:
-        return np.zeros(0, np.uint8), np.zeros(len(enc_lens), np.int64)
-    starts = np.cumsum(enc_lens) - enc_lens
-    e = np.asarray(enc, np.uint8)
-    sym_a = (table >> 8).astype(np.uint8)
-    sym_b = (table & 0xFF).astype(np.uint8)
-
-    is_escape_marker = e == LITE_ESCAPE
-    boundary = np.zeros(total, bool)
-    boundary[starts[enc_lens > 0]] = True
-    esc = _run_parity_select(is_escape_marker, boundary)
-    consumed = np.zeros(total, bool)
-    consumed[1:] = esc[:-1]
-    is_sym = (e >= LITE_FIRST_CODE) & (e < LITE_ESCAPE) & ~consumed & ~esc
-    is_lit = ~esc & ~consumed & ~is_sym
-
-    out_len = np.where(esc, 1, np.where(consumed, 0, np.where(is_sym, 2, 1)))
-    out_off = np.cumsum(out_len) - out_len
-    out = np.zeros(int(out_len.sum()), np.uint8)
-    out[out_off[is_lit]] = e[is_lit]
-    nxt = np.zeros(total, np.uint8)
-    nxt[:-1] = e[1:]
-    out[out_off[esc]] = nxt[esc]
-    si = e[is_sym].astype(np.int64) - LITE_FIRST_CODE
-    out[out_off[is_sym]] = sym_a[si]
-    out[out_off[is_sym] + 1] = sym_b[si]
-
-    row_of = np.repeat(np.arange(len(enc_lens)), enc_lens)
-    dec_lens = np.bincount(row_of, weights=out_len,
-                           minlength=len(enc_lens)).astype(np.int64)
-    return out, dec_lens

@@ -6,11 +6,11 @@ reference CUDA kernels (all file:line cites into /root/reference):
 - compressed-size formula .... include/misc/ibp_misc_dev.cuh:20-46 (block)
   and :62-91 (warp) -- ``comp_size``
 - encode bitstream ........... include/compress/ibp_compress_dev.cuh:8-97
-  (``compress_and_write``) -- ``encode_matrix``
+  (``compress_and_write``) -- ``encode_concat``
 - compress-or-verbatim rule .. include/compress/ibp_compress_kernel.cuh:28-31
   (strict ``comp_size < vec_bytes``)
 - decode ..................... include/decompress/ibp_decompress_dev.cuh:131-340
-  (inverse of the encoder's format) -- ``decode_matrix``
+  (inverse of the encoder's format) -- ``decode_concat``
 - bit-count histogram ........ include/preproc/ibp_preproc_kernels.cuh:8-31
   -- ``count_bits``
 - mask/bitval construction ... include/preproc/ibp_preproc_kernels.cuh:34-51
@@ -56,9 +56,6 @@ __all__ = [
     "check_feats",
     "sweep_thresholds",
     "preprocess",
-    "encode_matrix",
-    "decode_matrix",
-    "decode_blob",
     "encode_concat",
     "decode_concat",
 ]
@@ -388,27 +385,9 @@ def encode_concat(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray):
     return flat, sizes, is_comp
 
 
-def encode_matrix(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray):
-    """Like :func:`encode_concat` but returns per-vector ``bytes`` blobs
-    ``(blobs, is_comp, sizes)`` — the in-place/per-row layout."""
-    flat, sizes, is_comp = encode_concat(block, mask, bitval)
-    offsets = np.concatenate([[0], np.cumsum(sizes)])
-    blobs = [flat[offsets[i] : offsets[i + 1]].tobytes() for i in range(len(sizes))]
-    return blobs, is_comp, sizes
-
-
 # ---------------------------------------------------------------------------
 # Decode (inverse; ibp_decompress_dev.cuh:131-340 semantics)
 # ---------------------------------------------------------------------------
-
-def decode_blob(blob: bytes, is_comp: bool, vec_size: int,
-                mask: np.ndarray, bitval: np.ndarray) -> np.ndarray:
-    """Decode one vector."""
-    mask_u = _as_unsigned(np.ascontiguousarray(mask))
-    out = decode_matrix([blob], np.array([is_comp]), vec_size,
-                        mask_u, _as_unsigned(np.ascontiguousarray(bitval)))
-    return out[0]
-
 
 def decode_concat(flat: np.ndarray, sizes, is_comp, vec_size: int,
                   mask: np.ndarray, bitval: np.ndarray) -> np.ndarray:
@@ -507,11 +486,3 @@ def decode_concat(flat: np.ndarray, sizes, is_comp, vec_size: int,
     dec = words.reshape(m, v, itemsize).copy().view(dt.newbyteorder(">")).reshape(m, v)
     out[cidx] = dec.astype(dt)
     return out
-
-
-def decode_matrix(blobs, is_comp, vec_size: int,
-                  mask: np.ndarray, bitval: np.ndarray) -> np.ndarray:
-    """Decode a list of per-vector ``bytes`` blobs (see decode_concat)."""
-    flat = np.frombuffer(b"".join(blobs), np.uint8)
-    sizes = np.array([len(b) for b in blobs], np.int64)
-    return decode_concat(flat, sizes, is_comp, vec_size, mask, bitval)

@@ -1,12 +1,13 @@
-"""Global-FSST string-column codec (Spark wiring).
+"""FSST string-column codec (Spark wiring).
 
 The reference has no string surface (its mmap loader reads raw numeric
-arrays, src/ibp_api.cu:51-121); FSST is north-rule new work.  The
-symbol table here is learned ONCE on a driver-side sample, rides to
+arrays, src/ibp_api.cu:51-121); FSST is north-rule new work.  A symbol
+table is learned once per snapshot on a driver-side sample, rides to
 executors in the UDF closure (broadcast-variable semantics), and is
-persisted as hex alongside snapshot params — so encoded string columns
-written to disk remain decodable by later sessions, unlike a
-per-batch table, which makes FSST a *storable* codec.
+persisted as hex alongside the snapshot's params — so encoded string
+columns written to disk remain decodable by later sessions, unlike a
+per-batch table, which makes FSST a *storable* codec.  Stored
+``doc_id``/``source`` columns are always FSST-encoded binary.
 """
 
 from __future__ import annotations
@@ -18,28 +19,21 @@ from pyspark.sql import DataFrame
 from ..codecs import fsst
 
 
-def table_to_hex(table) -> str:
-    """Canonical SymbolTable -> hex (9-byte records: len + 8 sym
-    bytes); legacy uint16 bigram arrays serialize as before."""
-    if isinstance(table, np.ndarray):
-        return table.astype("<u2").tobytes().hex()
+def table_to_hex(table: fsst.SymbolTable) -> str:
+    """SymbolTable -> hex (9-byte records: len + 8 sym bytes)."""
     return table.to_bytes().hex()
 
 
-def table_from_hex(s: str, format_version: int = 3):
-    """Inverse of :func:`table_to_hex`; ``format_version`` 2 = legacy
-    bigram keys, 3 = canonical 1-8-byte symbols."""
-    raw = bytes.fromhex(s)
-    if format_version <= 2:
-        return np.frombuffer(raw, "<u2").astype(np.uint16)
-    return fsst.SymbolTable.from_bytes(raw)
+def table_from_hex(s: str) -> fsst.SymbolTable:
+    """Inverse of :func:`table_to_hex`."""
+    return fsst.SymbolTable.from_bytes(bytes.fromhex(s))
 
 
 def learn_table_df(df: DataFrame, cols=("doc_id", "source"),
                    sample_rows: int = 2048,
                    sample_bytes: int = 1_000_000,
-                   seed: int = 11) -> np.ndarray:
-    """Learn one global symbol table from a driver-side SEEDED UNIFORM
+                   seed: int = 11) -> fsst.SymbolTable:
+    """Learn one symbol table from a driver-side SEEDED UNIFORM
     sample of the given string columns — a head-of-table slice would
     fit the table to one modality of an ingest-ordered corpus.
     Deterministic: seeded Bernoulli sample, then ordered by the first
@@ -111,8 +105,8 @@ _DEC_MASS_CAP = 192 << 20
 
 def _string_mass_ranges(rb, names, cols, cap):
     """Row ranges of an Arrow batch bounded by the target string/binary
-    columns' total byte mass — the string twin of
-    ``framing.split_by_token_mass``."""
+    columns' total byte mass (``ibp._mass_ranges`` over byte lengths
+    instead of token counts)."""
     from ..operators.ibp import _mass_ranges, binary_array_flat
 
     mass = np.zeros(rb.num_rows, np.int64)
@@ -138,7 +132,7 @@ def _string_mass_ranges(rb, names, cols, cap):
 _FUSE_TAG = "_ibp_fsst_encode_of"
 
 
-def encode_string_cols(df: DataFrame, table: np.ndarray,
+def encode_string_cols(df: DataFrame, table: fsst.SymbolTable,
                        cols=("doc_id", "source"),
                        mass_cap: int | None = None) -> DataFrame:
     """Replace string columns with their FSST-encoded binary twins
@@ -180,7 +174,7 @@ def encode_string_cols(df: DataFrame, table: np.ndarray,
     return out
 
 
-def decode_string_cols(df: DataFrame, table: np.ndarray,
+def decode_string_cols(df: DataFrame, table: fsst.SymbolTable,
                        cols=("doc_id", "source"),
                        mass_cap: int | None = None) -> DataFrame:
     """Inverse of :func:`encode_string_cols` (``mapInArrow``; decoded
@@ -222,7 +216,7 @@ def decode_string_cols(df: DataFrame, table: np.ndarray,
     return df.mapInArrow(dec, schema=_schema_with(df, cols, "string"))
 
 
-def _roundtrip_string_cols(df: DataFrame, table: np.ndarray, cols,
+def _roundtrip_string_cols(df: DataFrame, table: fsst.SymbolTable, cols,
                            enc_cap: int, dec_mass_cap: int | None
                            ) -> DataFrame:
     """Fused encode-then-decode of string columns in ONE ``mapInArrow``

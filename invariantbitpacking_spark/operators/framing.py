@@ -25,37 +25,11 @@ import numpy as np
 
 VEC_SIZE = 128
 
-
+# Spark caps Arrow batches by ROW count
+# (spark.sql.execution.arrow.maxRecordsPerBatch) but not by bytes, so
+# every UDF sub-batches by token mass (``ibp._mass_ranges``) to keep a
+# batch of long documents from materializing multi-GB framing buffers.
 MAX_BATCH_TOKENS = 16_000_000  # ~64 MB of int32 per UDF sub-batch
-
-
-def split_by_token_mass(pdf, tokens_col: str = "tokens",
-                        max_tokens: int | None = None):
-    """Split one Arrow batch into sub-batches bounded by total token
-    count.  Spark caps batches by ROW count
-    (spark.sql.execution.arrow.maxRecordsPerBatch) but not by bytes, so
-    a batch of long documents could otherwise materialize multi-GB
-    framing buffers inside the Python worker.
-
-    ``tokens_col`` may be the token-array column or an integer length
-    column (e.g. ``n_tok`` on already-encoded tables)."""
-    if max_tokens is None:
-        max_tokens = MAX_BATCH_TOKENS
-    vals = pdf[tokens_col].values
-    if vals.dtype == object:
-        lens = np.fromiter((len(a) if a is not None else 0 for a in vals),
-                           np.int64, count=len(pdf))
-    else:
-        lens = np.asarray(vals, np.int64)
-    if lens.sum() <= max_tokens:
-        yield pdf
-        return
-    bucket = np.minimum(np.cumsum(lens) // max_tokens, np.iinfo(np.int64).max)
-    start = 0
-    for i in range(1, len(pdf) + 1):
-        if i == len(pdf) or bucket[i] != bucket[start]:
-            yield pdf.iloc[start:i].reset_index(drop=True)
-            start = i
 
 
 def gather_ranges(flat: np.ndarray, starts: np.ndarray, lengths: np.ndarray) -> np.ndarray:
@@ -124,7 +98,13 @@ def frame_batch_flat(tok_flat: np.ndarray, starts: np.ndarray,
     per-doc lengths) — the Arrow ListArray layout (``values`` buffer +
     ``offsets``), so ``mapInArrow`` paths frame with ZERO per-document
     Python: no list of arrays, no concatenate.  ``starts`` need not be
-    contiguous (null docs carry len 0 and any start)."""
+    contiguous (null docs carry len 0 and any start).
+
+    The element width follows ``tok_flat.dtype`` — 1/2/4/8 bytes, the
+    full reference preprocess dtype dispatch (src/preprocess.cu:25-26,
+    56-72; compress adds the 4/8-byte pair, src/compress.cu:192).
+    Matrices come out as the same-width unsigned dtype; the numpy codec
+    layer is dtype-generic."""
     sdt = SIGNED_DT[tok_flat.dtype.itemsize]
     udt = UNSIGNED_DT[tok_flat.dtype.itemsize]
     tok_flat = tok_flat.view(sdt)
@@ -208,52 +188,6 @@ def list_array_flat(col, itemsize: int = 4):
     return np.ascontiguousarray(values).view(sdt), starts, lens
 
 
-def frame_batch(token_arrays, vec_size: int = VEC_SIZE,
-                itemsize: int = 4) -> FramedBatch:
-    """``itemsize`` selects the element width: 1/2/4/8 bytes — the full
-    reference preprocess dtype dispatch (src/preprocess.cu:25-26,
-    56-72 instantiates int8/int16/int32/ull; compress adds the 4/8-byte
-    pair, src/compress.cu:192).  4 (int32 tokens) is the primary path;
-    1/2-byte views cover byte-quantized embeddings and uint16 vocab
-    ids.  Matrices come out as the unsigned twin; the numpy codec layer
-    is dtype-generic."""
-    sdt = SIGNED_DT[itemsize]
-    udt = UNSIGNED_DT[itemsize]
-    # null arrays (SQL NULL tokens) are treated as empty documents
-    arrs = [np.asarray(a, sdt) if a is not None else np.zeros(0, sdt)
-            for a in token_arrays]
-    ndocs = len(arrs)
-    lens = np.fromiter((a.size for a in arrs), np.int64, count=ndocs)
-    nfull = lens // vec_size
-    tail_len = lens % vec_size
-    nblocks = nfull + (tail_len > 0)
-
-    tok_flat = (np.concatenate(arrs) if lens.sum() else np.zeros(0, sdt))
-    doc_tok_start = np.cumsum(lens) - lens
-
-    # full blocks, doc-major
-    full_mat = gather_ranges(tok_flat, doc_tok_start, nfull * vec_size)
-    full_mat = full_mat.reshape(-1, vec_size).view(udt)
-
-    # ragged tails grouped by width
-    tails: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    tdocs = np.flatnonzero(tail_len)
-    if tdocs.size:
-        tstarts = doc_tok_start[tdocs] + nfull[tdocs] * vec_size
-        twidth = tail_len[tdocs]
-        order = np.argsort(twidth, kind="stable")
-        tdocs, tstarts, twidth = tdocs[order], tstarts[order], twidth[order]
-        uniq, grp_start = np.unique(twidth, return_index=True)
-        grp_end = np.append(grp_start[1:], twidth.size)
-        for L, s, e in zip(uniq, grp_start, grp_end):
-            L = int(L)
-            docs = tdocs[s:e]
-            mat = gather_ranges(tok_flat, tstarts[s:e], twidth[s:e])
-            tails[L] = (mat.reshape(-1, L).view(udt), docs)
-
-    return FramedBatch(lens, nfull, tail_len, nblocks, full_mat, tails, vec_size)
-
-
 def unframe_flat(fb: FramedBatch, full_dec: np.ndarray,
                  tail_dec: dict[int, np.ndarray]):
     """Rebuild the batch's decoded tokens as ONE flat array plus
@@ -275,43 +209,3 @@ def unframe_flat(fb: FramedBatch, full_dec: np.ndarray,
         tstarts = doc_tok_start[docs] + fb.nfull[docs] * v
         flat[tstarts[:, None] + np.arange(L)[None, :]] = dec
     return flat, doc_tok_start
-
-
-def unframe_batch(fb: FramedBatch, full_dec: np.ndarray,
-                  tail_dec: dict[int, np.ndarray]) -> list[np.ndarray]:
-    """Rebuild per-document int32 token arrays from decoded full-block
-    and tail-group matrices."""
-    flat, doc_tok_start = unframe_flat(fb, full_dec, tail_dec)
-    return [flat[int(doc_tok_start[i]): int(doc_tok_start[i]) + int(fb.lens[i])]
-            for i in range(len(fb.lens))]
-
-
-# Backwards-compatible rectangular helpers (used by tests / stats on
-# rectangular data).
-
-def frame_tokens(token_arrays, vec_size: int = VEC_SIZE):
-    """Zero-padded rectangular framing: [N x vec_size] plus per-doc
-    block counts.  Retained for stats paths and tests on rectangular
-    data; the encode/decode pipeline uses ragged frame_batch."""
-    fb = frame_batch(token_arrays, vec_size)
-    total_blocks = int(fb.nblocks.sum())
-    out = np.zeros((total_blocks, vec_size), np.uint32)
-    blk_start = np.cumsum(fb.nblocks) - fb.nblocks
-    # place full blocks
-    if fb.full_mat.shape[0]:
-        fidx = gather_ranges(np.arange(total_blocks, dtype=np.int64),
-                             blk_start, fb.nfull)
-        out[fidx] = fb.full_mat
-    for L, (mat, docs) in fb.tails.items():
-        out[blk_start[docs] + fb.nfull[docs], :L] = mat
-    return out, fb.nblocks
-
-
-def unframe_tokens(matrix: np.ndarray, nblocks: np.ndarray, n_toks: np.ndarray):
-    """Inverse of :func:`frame_tokens` (rectangular layout)."""
-    vec_size = matrix.shape[1]
-    flat = matrix.view(np.int32).reshape(-1)
-    doc_blk_start = np.cumsum(nblocks) - nblocks
-    return [flat[int(doc_blk_start[i]) * vec_size:
-                 int(doc_blk_start[i]) * vec_size + int(n_toks[i])]
-            for i in range(len(nblocks))]

@@ -38,8 +38,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..codecs import numpy_ref as nr
 from .framing import (SIGNED_DT, UNSIGNED_DT, VEC_SIZE, FramedBatch,
-                      frame_batch, frame_batch_flat, gather_ranges,
-                      list_array_flat, split_by_token_mass, unframe_batch,
+                      frame_batch_flat, gather_ranges, list_array_flat,
                       unframe_flat)
 
 
@@ -65,8 +64,9 @@ def binary_array_flat(arr):
 
 
 def _mass_ranges(lens: np.ndarray, max_tokens: int | None):
-    """Sub-batch boundaries [(i0, i1), ...] bounded by total token
-    mass — the arrow twin of split_by_token_mass."""
+    """Sub-batch boundaries [(i0, i1), ...] of one Arrow batch bounded
+    by total token mass (``lens`` = per-row token counts, or any per-row
+    mass; ``None`` = ``framing.MAX_BATCH_TOKENS``)."""
     from .framing import MAX_BATCH_TOKENS
 
     if max_tokens is None:
@@ -410,28 +410,6 @@ def encode_batch_flat(fb: FramedBatch, mask: np.ndarray, bitval: np.ndarray):
     return buf, doc_bytes.astype(np.int64), sizes, flags_packed, flag_bits // 8
 
 
-def encode_batch(fb: FramedBatch, mask: np.ndarray, bitval: np.ndarray):
-    """Encode one framed batch; returns per-doc (payloads bytes list,
-    block_sizes list, block_flags bytes list, comp_bytes int64[]).
-    All byte assembly happens in :func:`encode_batch_flat`; the per-doc
-    loop below only slices contiguous spans (O(ndocs) cheap slicing,
-    no per-doc numpy work — the offset-table assembly the reference's
-    condensed layout implies, src/compress.cu:284-285)."""
-    if len(fb.lens) == 0:
-        return [], [], [], np.zeros(0, np.int64)
-    buf, doc_bytes, sizes, flags_packed, flag_nbytes = encode_batch_flat(
-        fb, mask, bitval)
-    doc_off = np.cumsum(doc_bytes) - doc_bytes
-    flag_off = np.cumsum(flag_nbytes) - flag_nbytes
-    payloads = [buf[o:o + n].tobytes()
-                for o, n in zip(doc_off.tolist(), doc_bytes.tolist())]
-    bsizes = np.split(sizes.astype(np.int32),
-                      np.cumsum(fb.nblocks[:-1]).tolist())
-    bflags = [flags_packed[o:o + n].tobytes()
-              for o, n in zip(flag_off.tolist(), flag_nbytes.tolist())]
-    return payloads, bsizes, bflags, doc_bytes
-
-
 def encode_ibp(df: DataFrame, params: IbpParams,
                tokens_col: str = "tokens",
                max_batch_tokens: int | None = None) -> DataFrame:
@@ -528,74 +506,15 @@ def sizes_ibp(df: DataFrame, params: IbpParams,
                         schema="doc_id string, n_tok int, comp_bytes long"))
 
 
-def decode_docs(lens: np.ndarray, block_sizes_list, block_flags_list,
-                payload_list, mask: np.ndarray, bitval: np.ndarray,
-                v: int) -> list[np.ndarray]:
-    """Decode a batch of encoded documents to int32 token arrays —
-    the vectorized inverse of :func:`encode_batch`."""
-    ndocs = len(lens)
-    sdt = SIGNED_DT[mask.dtype.itemsize]
-    lens = np.asarray(lens, np.int64)
-    nfull = lens // v
-    tail_len = lens % v
-    nblocks = nfull + (tail_len > 0)
-    if ndocs == 0 or nblocks.sum() == 0:
-        return [np.zeros(0, sdt)] * ndocs
-    sizes = np.concatenate(
-        [np.asarray(s, np.int64) for s in block_sizes_list])
-    flat = np.frombuffer(b"".join(payload_list), np.uint8)
-    offsets = np.cumsum(sizes) - sizes
-    # per-doc flag bitmaps are byte-padded; unpack per doc width
-    bits = np.unpackbits(
-        np.frombuffer(b"".join(block_flags_list), np.uint8),
-        bitorder="little")
-    doc_flag_bits = ((nblocks + 7) // 8) * 8
-    fb_start = np.cumsum(doc_flag_bits) - doc_flag_bits
-    blk_start = np.cumsum(nblocks) - nblocks
-    within = (np.arange(int(nblocks.sum()), dtype=np.int64)
-              - np.repeat(blk_start, nblocks))
-    is_comp = bits[np.repeat(fb_start, nblocks) + within].astype(bool)
-
-    doc_of_block = np.repeat(np.arange(ndocs), nblocks)
-    is_tail = (tail_len[doc_of_block] > 0) & (
-        within == (nblocks[doc_of_block] - 1))
-
-    # full blocks: one vectorized decode
-    fsel = ~is_tail
-    fbuf = gather_ranges(flat, offsets[fsel], sizes[fsel])
-    full_dec = nr.decode_concat(
-        fbuf, sizes[fsel], is_comp[fsel], v, mask, bitval)
-
-    # tails grouped by width
-    tail_dec: dict[int, np.ndarray] = {}
-    tails: dict[int, tuple] = {}
-    tsel = np.flatnonzero(is_tail)
-    if tsel.size:
-        widths = tail_len[doc_of_block[tsel]]
-        order = np.argsort(widths, kind="stable")
-        tsel, widths = tsel[order], widths[order]
-        uniq, gs = np.unique(widths, return_index=True)
-        ge = np.append(gs[1:], widths.size)
-        for L, s, e in zip(uniq, gs, ge):
-            L = int(L)
-            sel = tsel[s:e]
-            buf = gather_ranges(flat, offsets[sel], sizes[sel])
-            tail_dec[L] = nr.decode_concat(
-                buf, sizes[sel], is_comp[sel], L, mask[:L], bitval[:L])
-            tails[L] = (None, doc_of_block[sel])
-
-    fb = FramedBatch(lens, nfull, tail_len, nblocks, full_dec, tails, v)
-    return unframe_batch(fb, full_dec, tail_dec)
-
-
 def decode_docs_flat(lens: np.ndarray, sizes: np.ndarray,
                      flags_flat: np.ndarray, flags_starts: np.ndarray,
                      pay_flat: np.ndarray, pay_starts: np.ndarray,
                      mask: np.ndarray, bitval: np.ndarray, v: int):
-    """Flat-native decode (the Arrow twin of :func:`decode_docs`):
-    per-doc payload/flag spans are addressed through explicit start
-    offsets into shared buffers — no joins, no per-doc bytes objects.
-    Returns ``(tok_flat, tok_starts)`` in the ListArray layout."""
+    """Decode a batch of encoded documents — the vectorized inverse of
+    :func:`encode_batch_flat`.  Per-doc payload/flag spans are
+    addressed through explicit start offsets into shared buffers — no
+    joins, no per-doc bytes objects.  Returns ``(tok_flat,
+    tok_starts)`` in the ListArray layout."""
     sdt = SIGNED_DT[mask.dtype.itemsize]
     ndocs = len(lens)
     lens = np.asarray(lens, np.int64)

@@ -37,9 +37,9 @@ from pyspark.sql import DataFrame, functions as F
 from ..codecs import numpy_ref as nr
 from ..codecs.lightweight import _scatter_rows
 from ..codecs.numpy_ref import popcount32
-from .framing import (FramedBatch, VEC_SIZE, frame_batch, frame_batch_flat,
+from .framing import (FramedBatch, VEC_SIZE, frame_batch_flat,
                       gather_ranges, list_array_flat, unframe_flat)
-from .ibp import _elem_bytes, _mass_ranges, binary_array_flat
+from .ibp import _elem_bytes, _mass_ranges, _value_kind, binary_array_flat
 
 
 def _cluster_counts_batches(batches, centroids, vec_size):
@@ -76,18 +76,28 @@ def _cluster_counts_batches(batches, centroids, vec_size):
                     names=["cluster", "pos", "cnt"])
 
 
+def _frame_sample(rows: DataFrame, tokens_col: str,
+                  vec_size: int) -> FramedBatch:
+    """Frame a small driver-side sample (the centroid seed pool) through
+    the same Arrow-buffer path the executors use."""
+    flat, starts, lens = list_array_flat(rows.toArrow()[tokens_col], 4)
+    return frame_batch_flat(flat, starts, lens, vec_size)
+
+
 def _require_int32_kmeans(df: DataFrame, tokens_col: str, op: str) -> None:
-    """The clustered codec is 32-bit throughout (uint32 centroids,
-    popcount32 Hamming distance — matching the reference's kmeans
-    preprocessing, which only instantiates on 4-byte words,
-    ibp_preproc_host.cuh:118-284).  frame_batch would silently truncate
-    wider elements, so refuse them here; 64-bit input goes through the
-    pure-IBP path (encode_ibp/decode_ibp handle array<bigint>)."""
-    if _elem_bytes(df, tokens_col) != 4:
+    """The clustered codec is 32-bit integer throughout (uint32
+    centroids, popcount32 Hamming distance — matching the reference's
+    kmeans preprocessing, which only instantiates on 4-byte words,
+    ibp_preproc_host.cuh:118-284), and its decoder emits
+    ``array<int>``.  Refuse wider elements and float elements (a float
+    column would come back as a different type); 64-bit and float input
+    go through the pure-IBP path (encode_ibp/decode_ibp)."""
+    if (_elem_bytes(df, tokens_col) != 4
+            or _value_kind(df, tokens_col) != "int"):
         raise ValueError(
             f"{op}: tokens column must be array<int> — the kmeans codec "
-            "clusters 32-bit words; use encode_ibp/decode_ibp for wider "
-            "elements")
+            "clusters 32-bit integer words; use encode_ibp/decode_ibp for "
+            "wider or float elements")
 
 
 @dataclass
@@ -194,15 +204,15 @@ def learn_kmeans(df: DataFrame, k: int = 8, iters: int = 10,
             seed_src = seed_src.sample(fraction=frac, seed=seed)
         if "doc_id" in df.columns:
             seed_src = seed_src.orderBy("doc_id")
-        sample_rows = seed_src.limit(3 * n_seed_rows).toPandas()
-        fb0 = frame_batch(sample_rows[tokens_col].values, vec_size)
+        fb0 = _frame_sample(seed_src.limit(3 * n_seed_rows), tokens_col,
+                            vec_size)
         if fb0.full_mat.shape[0] < k and frac < 1.0:
             # sampling undershot (short docs / binomial variance): retry
             # over the full table before giving up
             retry = (df.select("doc_id", tokens_col).orderBy("doc_id")
                      if "doc_id" in df.columns else df.select(tokens_col))
-            sample_rows = retry.limit(3 * n_seed_rows).toPandas()
-            fb0 = frame_batch(sample_rows[tokens_col].values, vec_size)
+            fb0 = _frame_sample(retry.limit(3 * n_seed_rows), tokens_col,
+                                vec_size)
         if fb0.full_mat.shape[0] < k:
             toks.unpersist()
             raise ValueError(

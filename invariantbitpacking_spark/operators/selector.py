@@ -19,18 +19,15 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..codecs import lightweight as lw
 from ..codecs.bitutil import width_for
-from .framing import (frame_batch, frame_batch_flat, gather_ranges,
-                      list_array_flat, split_by_token_mass)
+from .framing import frame_batch_flat, gather_ranges, list_array_flat
 from .ibp import (ENCODED_SCHEMA, IbpParams, _elem_bytes, _mass_ranges,
-                  _value_kind,
-                  binary_array_flat, decode_docs, decode_docs_flat,
-                  encode_batch_flat, predict_sizes_ibp)
+                  binary_array_flat, decode_docs_flat, encode_batch_flat,
+                  predict_sizes_ibp)
 
 
 def _require_int32(df: DataFrame, tokens_col: str, op: str) -> None:
@@ -155,53 +152,21 @@ def choose_codec(sizes: dict[str, np.ndarray],
     return np.argmin(stack, axis=0)
 
 
-def encode_docs_auto(token_arrays, params: IbpParams,
-                     allowed: tuple[str, ...] = CODEC_ORDER):
-    """Encode one batch of documents with per-document codec choice.
-
-    Returns (codec_names list[str], payloads list[bytes], block_sizes
-    list[np.int32 array], block_flags list[bytes], comp_bytes int64[],
-    lens int64[], nblocks int64[]).
-
-    Assembly is fully vectorized: every codec group encodes into a flat
-    blob, blobs land in ONE doc-major output buffer via offset-table
-    scatters, and per-doc values (payload, block sizes, flag bitmap)
-    come out as contiguous-span slices — no per-document numpy work
-    (the condensed-offsets shape of the reference's scan,
-    src/compress.cu:284-285, generalized to a mixed-codec row group)."""
-    v = params.vec_size
-    lens = np.fromiter((len(a) if a is not None else 0
-                        for a in token_arrays), np.int64,
-                       count=len(token_arrays))
-    flat = (np.concatenate([np.asarray(a, np.int32) for a in token_arrays
-                            if a is not None])
-            if total_of(lens) else np.zeros(0, np.int32)).view(np.uint32)
-    (pick, out, pbytes, bsz_all, nblocks_out, flags_all,
-     fnbytes) = encode_docs_auto_flat(flat, lens, params, allowed)
-    ndocs = len(lens)
-    if ndocs == 0:
-        z = np.zeros(0, np.int64)
-        return [], [], [], [], z, lens, z
-    doc_off = np.cumsum(pbytes) - pbytes
-    flag_off = np.cumsum(fnbytes) - fnbytes
-    payloads = [out[o:o + n].tobytes()
-                for o, n in zip(doc_off.tolist(), pbytes.tolist())]
-    bsizes = np.split(bsz_all.astype(np.int32),
-                      np.cumsum(nblocks_out[:-1]).tolist())
-    bflags = [flags_all[o:o + n].tobytes()
-              for o, n in zip(flag_off.tolist(), fnbytes.tolist())]
-    codec_names = np.array(CODEC_ORDER, object)[pick].tolist()
-    return codec_names, payloads, bsizes, bflags, pbytes, lens, nblocks_out
-
-
 def encode_docs_auto_flat(flat: np.ndarray, lens: np.ndarray,
                           params: IbpParams,
                           allowed: tuple[str, ...] = CODEC_ORDER):
-    """Flat core of :func:`encode_docs_auto`: tokens arrive as one
-    contiguous doc-major uint32 buffer + per-doc lengths (the Arrow
-    values/offsets layout after null compaction) and every output is a
-    flat buffer + per-doc extents.  Returns ``(pick, payload_buf,
-    pbytes, block_sizes_flat, nblocks, flags_flat, flag_nbytes)``."""
+    """Encode one batch of documents with per-document codec choice.
+    Tokens arrive as one contiguous doc-major uint32 buffer + per-doc
+    lengths (the Arrow values/offsets layout after null compaction)
+    and every output is a flat buffer + per-doc extents.  Returns
+    ``(pick, payload_buf, pbytes, block_sizes_flat, nblocks,
+    flags_flat, flag_nbytes)``; ``pick`` indexes CODEC_ORDER.
+
+    Assembly is fully vectorized: every codec group encodes into a flat
+    blob and blobs land in ONE doc-major output buffer via offset-table
+    scatters — no per-document numpy work (the condensed-offsets shape
+    of the reference's scan, src/compress.cu:284-285, generalized to a
+    mixed-codec row group)."""
     v = params.vec_size
     lens = np.asarray(lens, np.int64)
     ndocs = len(lens)
@@ -277,10 +242,6 @@ def encode_docs_auto_flat(flat: np.ndarray, lens: np.ndarray,
         lw._scatter_rows(flags_all, flag_off[docs], flags_packed, flag_nb)
 
     return pick, out, pbytes, bsz_all, nblocks_out, flags_all, fnbytes
-
-
-def total_of(lens) -> int:
-    return int(np.asarray(lens, np.int64).sum())
 
 
 def encode_auto(df: DataFrame, params: IbpParams,
@@ -363,38 +324,43 @@ def predicted_sizes_by_source(df: DataFrame, params: IbpParams,
     """Per-(source, codec) predicted total bytes for EVERY candidate
     codec over the same data — the analog of the reference's Table-4
     invariance-vs-bitpack comparison (tests/invariance_perc.py:27-76),
-    with the whole codec family instead of two baselines.  One scan, no
-    encoding."""
+    with the whole codec family instead of two baselines.  One
+    ``mapInArrow`` scan, no encoding; each sub-batch pre-aggregates at
+    (source, codec) grain.  Rows with a null ``source`` are left out of
+    the totals."""
+    import pyarrow as pa
+
     _require_int32(df, tokens_col, "predicted_sizes_by_source")
-    is_float = _value_kind(df, tokens_col) == "float32"
+    v = params.vec_size
+    too_big = np.iinfo(np.int64).max
 
-    def sizer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def as_i32(a):
-            # float input must be bit-VIEWED, never value-cast
-            return (np.asarray(a, np.float32).view(np.int32) if is_float
-                    else np.asarray(a, np.int32))
+    def sizer(batches) -> "Iterator[pa.RecordBatch]":
+        for rb in batches:
+            values, starts, lens_all = list_array_flat(rb.column(0), 4)
+            for i0, i1 in _mass_ranges(lens_all, None):
+                lens = lens_all[i0:i1]
+                flat = gather_ranges(values, starts[i0:i1], lens
+                                     ).view(np.uint32)
+                fb = frame_batch_flat(flat, np.cumsum(lens) - lens, lens, v)
+                sizes = predict_sizes(flat, lens, fb, params)
+                src = rb.column(1).slice(i0, i1 - i0)
+                has_src = src.is_valid().to_numpy(zero_copy_only=False)
+                parts = []
+                for codec, sz in sizes.items():
+                    keep = pa.array(has_src & (sz < too_big))
+                    n = int(keep.true_count)
+                    parts.append(pa.table({
+                        "source": src.filter(keep),
+                        "codec": pa.array([codec] * n, pa.string()),
+                        "bytes": pa.array(sz, pa.int64()).filter(keep)}))
+                agg = (pa.concat_tables(parts).group_by(["source", "codec"])
+                       .aggregate([("bytes", "sum"), ("bytes", "count")]))
+                yield from agg.select(
+                    ["source", "codec", "bytes_sum", "bytes_count"]
+                ).rename_columns(
+                    ["source", "codec", "total_bytes", "docs"]).to_batches()
 
-        for pdf0 in batches:
-          for pdf in split_by_token_mass(pdf0, tokens_col):
-            arrays = [as_i32(a) if a is not None else None
-                      for a in pdf[tokens_col].values]
-            fb = frame_batch(arrays, params.vec_size)
-            starts = np.cumsum(fb.lens) - fb.lens
-            flat = (np.concatenate([a for a in arrays if a is not None])
-                    if fb.lens.sum() else np.zeros(0, np.int32)).view(np.uint32)
-            sizes = predict_sizes(flat, fb.lens, fb, params)
-            src = pdf["source"].values
-            outs = []
-            for codec, sz in sizes.items():
-                valid = sz < np.iinfo(np.int64).max
-                d = pd.DataFrame({"source": src[valid], "codec": codec,
-                                  "bytes": sz[valid]})
-                outs.append(d.groupby(["source", "codec"], as_index=False)
-                            .agg(total_bytes=("bytes", "sum"),
-                                 docs=("bytes", "size")))
-            yield pd.concat(outs, ignore_index=True)
-
-    part = df.select(tokens_col, "source").mapInPandas(
+    part = df.select(tokens_col, "source").mapInArrow(
         sizer, schema="source string, codec string, total_bytes long, docs long")
     return (part.groupBy("source", "codec")
             .agg(F.sum("total_bytes").alias("total_bytes"),

@@ -21,6 +21,10 @@ North-rule scale machinery:
   commit per bucket wins).  :meth:`compact` is the only code that
   rewrites a base bucket; physical erasure is ``delete`` followed by
   ``compact``.
+- **One stored layout**: ``doc_id``/``source`` are always canonical
+  FSST binary, encoded with the snapshot's own persisted table
+  (``params/fsst_<snapshot>.json``), and every stored row carries its
+  ``row_xxh`` payload hash, so delta commits never re-read payload.
 - **Time travel** (``as_of_seq``): reads can rewind to any
   still-uncompacted lineage commit.
 - **One metadata transport**: lineage, tombstone markers, params and
@@ -304,47 +308,26 @@ class CompressionPipeline:
         self.fs.write_text_atomic(path, json.dumps(params.to_dict()))
         return params
 
-    def _fsst_path(self, snapshot_id: str | None) -> str | None:
-        """Resolve which persisted FSST table file a snapshot decodes
-        with: its OWN ``fsst_<snapshot>.json`` when present, else the
-        legacy shared ``fsst_table.json`` (pre-evolution outputs), else
-        None (v1 plain-string layout)."""
-        if snapshot_id is not None:
-            own = _join(self.params_dir, f"fsst_{snapshot_id}.json")
-            if self.fs.exists(own):
-                return own
-        legacy = _join(self.params_dir, "fsst_table.json")
-        return legacy if self.fs.exists(legacy) else None
+    def _fsst_path(self, snapshot_id: str) -> str:
+        return _join(self.params_dir, f"fsst_{snapshot_id}.json")
 
-    def load_or_learn_fsst(self, toks: DataFrame,
-                           snapshot_id: str | None = None):
+    def load_or_learn_fsst(self, toks: DataFrame, snapshot_id: str):
         """PER-SNAPSHOT FSST symbol table (learned on a driver-side
         sample of the doc_id/source columns, persisted as hex with a
         ``table_id``): each new snapshot fits its own string
         distribution instead of inheriting whatever corpus ran first —
         a later snapshot with different doc_id shapes no longer
         compresses worse forever.  Old snapshots keep decoding with
-        the table they were written under (:meth:`_fsst_path` resolves
-        per snapshot, falling back to the legacy shared file), so
-        evolution never breaks an existing read."""
+        the table they were written under, so evolution never breaks
+        an existing read."""
         path = self._fsst_path(snapshot_id)
-        if path is not None:
-            meta = json.loads(self.fs.read_text(path))
-            return fstr.table_from_hex(meta["hex"],
-                                       meta.get("format_version", 2))
+        if self.fs.exists(path):
+            return self._fsst_table(snapshot_id)
         table = fstr.learn_table_df(toks, ("doc_id", "source"))
-        own = _join(self.params_dir,
-                    f"fsst_{snapshot_id}.json" if snapshot_id is not None
-                    else "fsst_table.json")
-        # format_version marks the string-column layout: v3 = canonical
-        # FSST (1-8-byte symbols), v2 = legacy bigram FSST-lite (still
-        # decodable), v1 = plain strings with no table file —
-        # read_encoded detects all three
-        self.fs.write_text_atomic(own, json.dumps(
+        self.fs.write_text_atomic(path, json.dumps(
             {"hex": fstr.table_to_hex(table),
              "symbols": int(table.size),
-             "table_id": snapshot_id or "global",
-             "format_version": 3}))
+             "table_id": snapshot_id}))
         return table
 
     # -- staging -------------------------------------------------------------
@@ -385,15 +368,15 @@ class CompressionPipeline:
                 f"at {path} — run() the snapshot first")
         return IbpParams.from_dict(json.loads(self.fs.read_text(path)))
 
-    def _fsst_table(self, snapshot_id: str | None = None):
-        """The FSST table a snapshot decodes with (per-snapshot file,
-        legacy shared file, or None for v1 plain-string outputs)."""
+    def _fsst_table(self, snapshot_id: str):
+        """The snapshot's PERSISTED FSST table — the one table reader;
+        every stored doc_id/source column is encoded with it."""
         path = self._fsst_path(snapshot_id)
-        if path is None:
-            return None
-        meta = json.loads(self.fs.read_text(path))
-        return fstr.table_from_hex(meta["hex"],
-                                   meta.get("format_version", 2))
+        if not self.fs.exists(path):
+            raise ValueError(
+                f"no persisted FSST table for snapshot {snapshot_id!r} "
+                f"at {path} — run() the snapshot first")
+        return fstr.table_from_hex(json.loads(self.fs.read_text(path))["hex"])
 
     # -- merge-on-read deltas ------------------------------------------------
     #
@@ -652,7 +635,7 @@ class CompressionPipeline:
             part = staged.filter(F.col("bucket").isin(wave))  # dir-pruned
             enc = selector.encode_auto(part, params, allowed=self.allowed,
                                        passthrough=("bucket", "snapshot_id"))
-            # string columns ride FSST-encoded against the global table
+            # string columns ride FSST-encoded against the snapshot's table
             enc = fstr.encode_string_cols(enc, fsst_table,
                                           ("doc_id", "source"))
             # persisted per-row payload hash: lets delta-append commits
@@ -826,9 +809,6 @@ class CompressionPipeline:
                 "finish run() before appending")
         nb = self.num_buckets
         params = self.load_or_learn_params(toks_delta, snapshot_id)
-        # Legacy v1 outputs carry PLAIN string columns (no table file);
-        # appending binary-encoded strings next to them would fork the
-        # schema, so only encode strings when the snapshot already does.
         fsst_table = self._fsst_table(snapshot_id)
         salted = (toks_delta.withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"))
@@ -853,18 +833,16 @@ class CompressionPipeline:
         t0 = time.perf_counter()
         enc = selector.encode_auto(salted, params, allowed=self.allowed,
                                    passthrough=("bucket", "snapshot_id"))
-        if fsst_table is not None:
-            enc = fstr.encode_string_cols(enc, fsst_table,
-                                          ("doc_id", "source"))
+        enc = fstr.encode_string_cols(enc, fsst_table, ("doc_id", "source"))
         enc = enc.withColumn("row_xxh", F.xxhash64("payload"))
         seq = self._next_commit_seq()
         enc = enc.withColumn("delta_seq", F.lit(seq).cast("long"))
         # Stats of the rows this delta SUPERSEDES, computed from the
         # pre-delta resolved view restricted (broadcast semi-join) to
         # the delta's keys.
-        keys = salted.select("snapshot_id", "doc_id").distinct()
-        if fsst_table is not None:
-            keys = fstr.encode_string_cols(keys, fsst_table, ("doc_id",))
+        keys = fstr.encode_string_cols(
+            salted.select("snapshot_id", "doc_id").distinct(), fsst_table,
+            ("doc_id",))
         repl = self._replaced_stats(snapshot_id, affected, keys)
         (enc.write.mode("append")
          .partitionBy("snapshot_id", "bucket", "delta_seq")
@@ -905,39 +883,21 @@ class CompressionPipeline:
         """Per-(bucket, codec) stats of the CURRENT rows matching
         ``keys`` (a DataFrame of (snapshot_id, doc_id) with doc_id
         already encoded to the storage layout) — the rows a delta
-        upsert or tombstone delete supersedes.  row_xxh keeps the scan
-        thin; a legacy base without the column (or with null rows in
-        it) falls back to hashing payload for this wave (documented
-        degradation)."""
+        upsert or tombstone delete supersedes.  The persisted row_xxh
+        keeps the scan thin: payload bytes stay unread."""
         try:
             cur = self._resolved(snapshot_id, wave)
         except ValueError:
             return []
-        matched = cur.join(F.broadcast(keys),
-                           ["snapshot_id", "doc_id"], "left_semi")
-
-        def _repl_agg(hx):
-            return (matched.withColumn("_hx", hx)
-                    .groupBy("bucket", "codec").agg(
-                F.count(F.lit(1)).alias("docs"),
-                F.sum("n_tok").alias("tokens"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("comp_bytes").alias("comp_bytes"),
-                F.expr("bit_xor(_hx)").alias("xxh"),
-                F.sum(F.when(F.col("_hx").isNull(), 1)
-                      .otherwise(0)).alias("nulls"))
+        return (cur.join(F.broadcast(keys), ["snapshot_id", "doc_id"],
+                         "left_semi")
+                .groupBy("bucket", "codec").agg(
+                    F.count(F.lit(1)).alias("docs"),
+                    F.sum("n_tok").alias("tokens"),
+                    F.sum("raw_bytes").alias("raw_bytes"),
+                    F.sum("comp_bytes").alias("comp_bytes"),
+                    F.expr("bit_xor(row_xxh)").alias("xxh"))
                 .collect())
-
-        # thin path: the persisted row hash keeps payload bytes
-        # UNREAD.  Only a legacy base (files written before row_xxh
-        # existed => nulls) forces the degraded pass.
-        if "row_xxh" in cur.columns:
-            repl = _repl_agg(F.col("row_xxh"))
-            if any(int(r["nulls"] or 0) > 0 for r in repl):
-                repl = _repl_agg(F.xxhash64("payload"))
-        else:
-            repl = _repl_agg(F.xxhash64("payload"))
-        return repl
 
     def _commit_delta_wave(self, snapshot_id: str, wave, repl, added,
                            wall: float, seq: int) -> list:
@@ -1050,11 +1010,8 @@ class CompressionPipeline:
         stage_root = _join(self.output_dir, "compact_staging", snapshot_id)
         for wi, wave in enumerate(waves):
             t0 = time.perf_counter()
-            resolved = self._resolved(snapshot_id, wave)
-            if "row_xxh" in resolved.columns:
-                resolved = resolved.drop("row_xxh")
-            resolved = (resolved.withColumn("row_xxh",
-                                            F.xxhash64("payload"))
+            resolved = (self._resolved(snapshot_id, wave)
+                        .withColumn("row_xxh", F.xxhash64("payload"))
                         .sortWithinPartitions("bucket", "doc_id"))
             stage = _join(stage_root, f"wave{wi}")
             (resolved.write.mode("overwrite")
@@ -1212,26 +1169,11 @@ class CompressionPipeline:
             cur = self._resolved(snapshot_id, affected)
         except ValueError:
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
-        is_binary = dict(cur.dtypes).get("doc_id") == "binary"
-        if fsst_table is not None and is_binary:
-            key_vals = fstr.encode_id_literals(id_list, fsst_table)
-        else:
-            key_vals = id_list
-        hits = cur.filter(F.col("doc_id").isin(key_vals))
-        thin = ["bucket", "doc_id", "codec", "n_tok",
-                "raw_bytes", "comp_bytes"]
-        if "row_xxh" in cur.columns:
-            victims = hits.select(*thin, "row_xxh").collect()
-            if any(r["row_xxh"] is None for r in victims):
-                # legacy base without persisted row hashes: one more
-                # pass hashing payload (documented degradation, same
-                # as _replaced_stats)
-                victims = hits.select(
-                    *thin, F.xxhash64("payload").alias("row_xxh")
-                ).collect()
-        else:
-            victims = hits.select(
-                *thin, F.xxhash64("payload").alias("row_xxh")).collect()
+        key_vals = fstr.encode_id_literals(id_list, fsst_table)
+        victims = (cur.filter(F.col("doc_id").isin(key_vals))
+                   .select("bucket", "doc_id", "codec", "n_tok",
+                           "raw_bytes", "comp_bytes", "row_xxh")
+                   .collect())
         if not victims:
             # nothing matched: pure ghost delete, a no-op
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
@@ -1251,8 +1193,7 @@ class CompressionPipeline:
             a["xxh"] ^= int(r["row_xxh"])
         repl = list(repl_agg.values())
         seq = self._next_commit_seq()
-        self._write_tombstones(snapshot_id, seq, victims, is_binary,
-                               fsst_table)
+        self._write_tombstones(snapshot_id, seq, victims)
         wall = time.perf_counter() - t0
         totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
         for r in self._commit_delta_wave(snapshot_id, affected, repl, [],
@@ -1265,33 +1206,32 @@ class CompressionPipeline:
                               totals["tokens"], totals["raw_bytes"],
                               totals["comp_bytes"])
 
-    def _write_tombstones(self, snapshot_id: str, seq: int, victims,
-                          is_binary: bool, fsst_table) -> None:
+    def _write_tombstones(self, snapshot_id: str, seq: int,
+                          victims) -> None:
         """Driver-side tombstone-marker write: the markers are <=
         len(ids) rows spread over <= num_buckets delta dirs, and a
         Spark dynamic-partition write paid ~1.0 s of commit-protocol
         fixed cost for them (measured, 100 rows / 32 dirs / local[32]).
-        One pyarrow file per bucket dir through ``self.fs``, column
-        types matching the Spark-written delta files exactly."""
-        id_t = pa.binary() if is_binary else pa.string()
-        src_t = pa.binary() if fsst_table is not None else pa.string()
+        One pyarrow file per bucket dir through ``self.fs``, with the
+        exact arrow schema of the Spark-written base and delta files."""
         schema = pa.schema([
-            ("doc_id", id_t), ("source", src_t),
+            ("doc_id", pa.binary()), ("source", pa.binary()),
             ("n_tok", pa.int32()), ("n_blocks", pa.int32()),
             ("block_sizes", pa.list_(pa.int32())),
             ("block_flags", pa.binary()), ("payload", pa.binary()),
             ("comp_bytes", pa.int64()), ("raw_bytes", pa.int64()),
-            ("codec", pa.string()), ("row_xxh", pa.int64()),
+            # Spark writes xxhash64's non-null result as a required column
+            ("codec", pa.string()), pa.field("row_xxh", pa.int64(), False),
         ])
         by_bucket: dict[int, list] = {}
         for r in victims:
             by_bucket.setdefault(int(r["bucket"]), []).append(
-                bytes(r["doc_id"]) if is_binary else r["doc_id"])
+                bytes(r["doc_id"]))
         for b, ids in sorted(by_bucket.items()):
             n = len(ids)
             table = pa.table({
-                "doc_id": pa.array(ids, id_t),
-                "source": pa.array([None] * n, src_t),
+                "doc_id": pa.array(ids, pa.binary()),
+                "source": pa.array([None] * n, pa.binary()),
                 "n_tok": pa.array([0] * n, pa.int32()),
                 "n_blocks": pa.array([0] * n, pa.int32()),
                 "block_sizes": pa.array([[]] * n, pa.list_(pa.int32())),
@@ -1325,10 +1265,10 @@ class CompressionPipeline:
         if not affected:
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
         t0 = time.perf_counter()
-        keys = salted.withColumn("snapshot_id", F.lit(snapshot_id))
-        if fsst_table is not None:
-            keys = fstr.encode_string_cols(keys, fsst_table, ("doc_id",))
-        keys = keys.select("snapshot_id", "doc_id").distinct()
+        keys = fstr.encode_string_cols(
+            salted.withColumn("snapshot_id", F.lit(snapshot_id)),
+            fsst_table, ("doc_id",)
+        ).select("snapshot_id", "doc_id").distinct()
         try:
             cur = self._resolved(snapshot_id, affected)
         except ValueError:
@@ -1338,11 +1278,10 @@ class CompressionPipeline:
             # nothing matched: pure ghost delete, a no-op
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
         seq = self._next_commit_seq()
-        src_t = "binary" if fsst_table is not None else "string"
         tomb = (cur.join(F.broadcast(keys), ["snapshot_id", "doc_id"],
                          "left_semi")
                 .select("snapshot_id", "doc_id", "bucket")
-                .withColumn("source", F.lit(None).cast(src_t))
+                .withColumn("source", F.lit(None).cast("binary"))
                 .withColumn("n_tok", F.lit(0).cast("int"))
                 .withColumn("n_blocks", F.lit(0).cast("int"))
                 .withColumn("block_sizes",
@@ -1392,14 +1331,10 @@ class CompressionPipeline:
         older than the last compaction of a bucket return the
         compacted (current-base) state for that bucket.  Requires a
         ``snapshot_id``.
-        String columns decode transparently via the persisted global
-        FSST table when the data dir carries the v2 (FSST) layout;
-        legacy dirs (plain string columns, no fsst_table.json) read
-        unchanged — detected both by the table file's presence and by
-        the columns' actual parquet types, so a v1 directory never hits
-        a FileNotFoundError or a spurious binary decode.  The view is
-        the RESOLVED state: base rows superseded by merge-on-read
-        deltas are replaced by the latest delta rows."""
+        The FSST-encoded doc_id/source columns decode transparently,
+        each snapshot with its own persisted table.  The view is the
+        RESOLVED state: base rows superseded by merge-on-read deltas
+        are replaced by the latest delta rows."""
         if as_of_seq is not None and snapshot_id is None:
             raise ValueError("read_encoded: as_of_seq needs a snapshot_id")
         try:
@@ -1415,41 +1350,19 @@ class CompressionPipeline:
                     or not self.committed_buckets(snapshot_id)):
                 raise
             return self.spark.createDataFrame([], EMPTY_READ_SCHEMA)
-        if "row_xxh" in df.columns:
-            df = df.drop("row_xxh")
-        enc_cols = tuple(
-            c for c in ("doc_id", "source")
-            if dict(df.dtypes).get(c) == "binary")
-        if not enc_cols:
-            return df
+        df = df.drop("row_xxh")
+        cols = ("doc_id", "source")
         if snapshot_id is not None:
-            table = self._fsst_table(snapshot_id)
-            if table is None:
-                return df
-            return fstr.decode_string_cols(df, table, enc_cols)
-        # multi-snapshot read: snapshots may have EVOLVED onto their
-        # own tables; group them by resolved table file and decode each
-        # group with its table (distinct on the partition column is a
-        # listing-level scan, one row per snapshot)
-        snaps = [r[0] for r in df.select("snapshot_id")
-                 .distinct().collect()]
-        groups: dict = {}
-        for s in snaps:
-            groups.setdefault(self._fsst_path(s), []).append(s)
-        if len(groups) == 1:
-            path = next(iter(groups))
-            if path is None:
-                return df
-            return fstr.decode_string_cols(df, self._fsst_table(snaps[0]),
-                                           enc_cols)
-        parts = []
-        for path, ss in groups.items():
-            sub = df.filter(F.col("snapshot_id").isin(ss))
-            if path is None:
-                parts.append(sub)
-            else:
-                parts.append(fstr.decode_string_cols(
-                    sub, self._fsst_table(ss[0]), enc_cols))
+            return fstr.decode_string_cols(
+                df, self._fsst_table(snapshot_id), cols)
+        # multi-snapshot read: each snapshot decodes with its own table
+        # (distinct on the partition column is a listing-level scan,
+        # one row per snapshot)
+        snaps = sorted(r[0] for r in
+                       df.select("snapshot_id").distinct().collect())
+        parts = [fstr.decode_string_cols(
+            df.filter(F.col("snapshot_id") == s), self._fsst_table(s), cols)
+            for s in snaps]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1504,11 +1417,9 @@ class CompressionPipeline:
                 return self.spark.createDataFrame([], EMPTY_READ_SCHEMA)
             return self.spark.createDataFrame(
                 [], selector.decoded_schema(params))
-        enc = self._resolved(snapshot_id, buckets, as_of_seq=as_of_seq)
-        if "row_xxh" in enc.columns:
-            enc = enc.drop("row_xxh")
+        enc = self._resolved(snapshot_id, buckets,
+                             as_of_seq=as_of_seq).drop("row_xxh")
         table = self._fsst_table(snapshot_id)
-        is_binary = dict(enc.dtypes).get("doc_id") == "binary"
         if len(ids) <= 1024:
             # Literal IN predicate instead of a join: it reaches the
             # parquet scan as a PushedFilter, so the doc_id-CLUSTERED
@@ -1517,19 +1428,15 @@ class CompressionPipeline:
             # the file level.  Keys are FSST-encoded driver-side (the
             # encoding is deterministic, so literal byte equality IS id
             # equality).
-            key_vals = (fstr.encode_id_literals(ids, table)
-                        if is_binary and table is not None else ids)
-            hits = enc.filter(F.col("doc_id").isin(key_vals))
+            hits = enc.filter(F.col("doc_id").isin(
+                fstr.encode_id_literals(ids, table)))
         else:
-            keys = self.spark.createDataFrame([(i,) for i in ids],
-                                              "doc_id string")
-            if table is not None and is_binary:
-                keys = fstr.encode_string_cols(keys, table, ("doc_id",))
+            keys = fstr.encode_string_cols(
+                self.spark.createDataFrame([(i,) for i in ids],
+                                           "doc_id string"),
+                table, ("doc_id",))
             hits = enc.join(F.broadcast(keys), "doc_id", "left_semi")
-        enc_cols = tuple(c for c in ("doc_id", "source")
-                         if dict(hits.dtypes).get(c) == "binary")
-        if table is not None and enc_cols:
-            hits = fstr.decode_string_cols(hits, table, enc_cols)
+        hits = fstr.decode_string_cols(hits, table, ("doc_id", "source"))
         if not decode:
             return hits
         return selector.decode_auto(hits, params)

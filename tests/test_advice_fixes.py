@@ -16,7 +16,8 @@ import pyarrow as pa
 import pytest
 
 from invariantbitpacking_spark.operators import ibp, selector
-from invariantbitpacking_spark.operators.framing import list_array_flat
+from invariantbitpacking_spark.operators.framing import (gather_ranges,
+                                                         list_array_flat)
 from invariantbitpacking_spark.functions.strings import _offsets32
 from invariantbitpacking_spark.codecs import numpy_ref as nr
 
@@ -60,25 +61,27 @@ def test_list_array_flat_null_docs_ok():
     assert flat[starts[2]:starts[2] + 1].tolist() == [7]
 
 
-def _decode_all_ibp(payloads, bsizes, bflags, lens, params):
+def _encode_all_ibp(docs, params):
+    """Encode docs (int32 arrays or None) with encode_docs_auto_flat
+    forced onto ibp; returns (lens, its output tuple)."""
+    vals, starts, lens = list_array_flat(
+        pa.array(docs, pa.list_(pa.int32())), 4)
+    flat = gather_ranges(vals, starts, lens).view(np.uint32)
+    return lens, selector.encode_docs_auto_flat(flat, lens, params,
+                                                allowed=("ibp",))
+
+
+def _decode_all_ibp(enc, lens, params):
     from invariantbitpacking_spark.operators.ibp import decode_docs_flat
 
-    pay_lens = np.array([len(p) for p in payloads], np.int64)
-    pay_flat = np.frombuffer(b"".join(payloads), np.uint8)
-    pay_starts = np.cumsum(pay_lens) - pay_lens
-    flag_lens = np.array([len(f) for f in bflags], np.int64)
-    flags_flat = np.frombuffer(b"".join(bflags), np.uint8)
-    flags_starts = np.cumsum(flag_lens) - flag_lens
-    sizes = (np.concatenate([np.asarray(b, np.int64) for b in bsizes])
-             if len(bsizes) else np.zeros(0, np.int64))
-    flat, _ = decode_docs_flat(np.asarray(lens, np.int64), sizes,
-                               flags_flat, flags_starts, pay_flat,
-                               pay_starts, params.mask, params.bitval,
-                               params.vec_size)
+    _, pay_flat, pbytes, sizes, _, flags_flat, fnbytes = enc
+    flat, _ = decode_docs_flat(lens, sizes, flags_flat,
+                               np.cumsum(fnbytes) - fnbytes, pay_flat,
+                               np.cumsum(pbytes) - pbytes, params.mask,
+                               params.bitval, params.vec_size)
     flat = flat.view(np.int32)
     starts = np.cumsum(lens) - lens
-    return [flat[s:s + l] for s, l in zip(starts.tolist(),
-                                          np.asarray(lens).tolist())]
+    return [flat[s:s + l] for s, l in zip(starts.tolist(), lens.tolist())]
 
 
 def test_empty_doc_last_in_batch_zero_block_codec():
@@ -87,12 +90,11 @@ def test_empty_doc_last_in_batch_zero_block_codec():
     tokens = rng.integers(0, 32000, 300).astype(np.int32)
     # empty doc LAST and forced onto ibp (a zero-block codec):
     # blk_start[last] == len(bsz_all) without the fancy-index mask
-    (codecs, payloads, bsizes, bflags, comp_bytes, lens, nblocks
-     ) = selector.encode_docs_auto([tokens, None], params,
-                                   allowed=("ibp",))
+    lens, enc = _encode_all_ibp([tokens, None], params)
+    _, _, comp_bytes, _, nblocks, _, _ = enc
     assert lens.tolist() == [300, 0]
     assert comp_bytes[1] == 0 and nblocks[1] == 0
-    dec = _decode_all_ibp(payloads, bsizes, bflags, lens, params)
+    dec = _decode_all_ibp(enc, lens, params)
     assert np.array_equal(dec[0], tokens)
     assert dec[1].size == 0
 
@@ -102,9 +104,8 @@ def test_empty_doc_mid_batch_zero_block_codec():
     rng = np.random.default_rng(2)
     a = rng.integers(0, 32000, 300).astype(np.int32)
     b = rng.integers(0, 32000, 130).astype(np.int32)
-    (codecs, payloads, bsizes, bflags, comp_bytes, lens, nblocks
-     ) = selector.encode_docs_auto([a, None, b], params, allowed=("ibp",))
-    dec = _decode_all_ibp(payloads, bsizes, bflags, lens, params)
+    lens, enc = _encode_all_ibp([a, None, b], params)
+    dec = _decode_all_ibp(enc, lens, params)
     assert np.array_equal(dec[0], a)
     assert dec[1].size == 0
     assert np.array_equal(dec[2], b)

@@ -1,5 +1,5 @@
 """Canonical FSST string codec: lossless round-trip, 1-8-byte symbols,
-compression sanity, legacy (v2 bigram) decode compatibility."""
+compression sanity."""
 
 import numpy as np
 import pytest
@@ -99,26 +99,16 @@ def test_table_serialization_roundtrip():
     np.testing.assert_array_equal(enc1, enc2)
 
 
-def test_legacy_lite_roundtrip_still_decodes():
-    """format_version 2 tables (uint16 bigram keys) must keep decoding
-    via the dispatch in encode/decode_strings."""
-    docs = ["the quick brown fox"] * 100 + ["ÿ\xffescape"]
-    flat, lens = fsst.strings_to_flat(docs)
-    table = fsst.build_table_lite(flat)
-    assert isinstance(table, np.ndarray)
-    enc, enc_lens = fsst.encode_strings(flat, lens, table)
-    dec, dec_lens = fsst.decode_strings(enc, enc_lens, table)
-    assert fsst.flat_to_strings(dec, dec_lens) == docs
-
-
 def test_canonical_beats_lite_on_path_like_ids():
+    """Multi-byte symbols must capture the long shared prefixes of
+    object-store ids.  The retired bigram-only table reached 0.51 of
+    raw on this corpus; canonical FSST must stay under 0.5 (it gets
+    ~0.16)."""
     ids = [f"s3://bucket/prefix/part-{i:05d}.parquet" for i in range(500)]
     flat, lens = fsst.strings_to_flat(ids)
-    lite = fsst.build_table_lite(flat)
-    enc_l, _ = fsst.encode_strings(flat, lens, lite)
     canon = fsst.build_table(flat, sample_lens=lens)
     enc_c, _ = fsst.encode_strings(flat, lens, canon)
-    assert enc_c.size < enc_l.size, (enc_c.size, enc_l.size)
+    assert enc_c.size < 0.5 * flat.size, (enc_c.size, flat.size)
 
 
 def test_random_bytes_roundtrip_property():

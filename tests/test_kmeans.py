@@ -97,3 +97,23 @@ def test_kmeans_refuses_non_int32_tokens(spark):
         bitvals=__import__("numpy").zeros((2, 16), "uint32"), vec_size=16)
     with pytest.raises(ValueError, match="array<int>"):
         km.encode_ibp_kmeans(df, kp)
+
+
+def test_kmeans_refuses_float_tokens(spark):
+    """array<float> has 4-byte elements but is not an int column: the
+    clustered codec would seed centroids from value-truncated floats
+    (0.5 -> 0, not its bit pattern) and decode back to array<int>.
+    Both entry points must refuse it."""
+    from invariantbitpacking_spark.operators import kmeans as km
+
+    rows = [(f"d{i:02d}", [float(i % 8) + 5.5] * 64, 64, "s")
+            for i in range(40)]
+    df = spark.createDataFrame(
+        rows, "doc_id string, tokens array<float>, n_tok int, source string")
+    with pytest.raises(ValueError, match="array<int>"):
+        km.learn_kmeans(df, k=2, iters=0, vec_size=16)
+    z = np.zeros((2, 16), np.uint32)
+    kp = km.KmeansParams(centroids=z, masks=z.copy(), bitvals=z.copy(),
+                         vec_size=16)
+    with pytest.raises(ValueError, match="array<int>"):
+        km.encode_ibp_kmeans(df, kp)

@@ -40,21 +40,21 @@ class TestEncodeMicroVectors:
                    0x0000CDEF, 0x00000011, 0xFFFF2233, 0x00004455)
         mask = np.full(8, 0xFFFF0000, np.uint32)
         bitval = (vals & mask)  # every element passes the predicate
-        blobs, is_comp, sizes = nr.encode_matrix(vals[None, :], mask, bitval)
+        flat, sizes, is_comp = nr.encode_concat(vals[None, :], mask, bitval)
         assert sizes[0] == 20 and bool(is_comp[0])
         expect = bytes([0xFF, 0, 0, 0,
                         0x23, 0x01, 0xCD, 0xAB,
                         0xAB, 0x89, 0x67, 0x45,
                         0x11, 0x00, 0xEF, 0xCD,
                         0x55, 0x44, 0x33, 0x22])
-        assert blobs[0] == expect
+        assert flat.tobytes() == expect
 
     def test_noncontiguous_mask_with_verbatim_element(self):
         # mask 0xF0F0F0F0: CLZ run-extraction interleaves 4-bit free runs
         vals = u32(*([0x1A3B5C7D] + [0xDEADBEEF] + [0x1A3B5C7D] * 6))
         mask = np.full(8, 0xF0F0F0F0, np.uint32)
         bitval = np.full(8, 0x10305070, np.uint32)
-        blobs, is_comp, sizes = nr.encode_matrix(vals[None, :], mask, bitval)
+        flat, sizes, is_comp = nr.encode_concat(vals[None, :], mask, bitval)
         assert sizes[0] == 24 and bool(is_comp[0])
         expect = bytes([0xFD, 0, 0, 0,
                         0xAD, 0xDE, 0xCD, 0xAB,
@@ -62,38 +62,38 @@ class TestEncodeMicroVectors:
                         0xCD, 0xAB, 0xCD, 0xAB,
                         0xCD, 0xAB, 0xCD, 0xAB,
                         0x00, 0x00, 0xCD, 0xAB])
-        assert blobs[0] == expect
+        assert flat.tobytes() == expect
 
     def test_v33_header_spans_words(self):
         vals = np.arange(33, dtype=np.uint32)
         mask = np.full(33, 0xFFFFFF00, np.uint32)
         bitval = np.zeros(33, np.uint32)
-        blobs, is_comp, sizes = nr.encode_matrix(vals[None, :], mask, bitval)
+        flat, sizes, is_comp = nr.encode_concat(vals[None, :], mask, bitval)
         assert sizes[0] == 44 and bool(is_comp[0])
         hdr = bytes([0xFF, 0xFF, 0xFF, 0xFF, 0x01, 0, 0, 0])
         stream = bytes(range(33)) + bytes(3)  # zero-padded to 36
         payload = b"".join(stream[i:i + 4][::-1] for i in range(0, 36, 4))
-        assert blobs[0] == hdr + payload
+        assert flat.tobytes() == hdr + payload
 
     def test_not_smaller_stays_verbatim(self):
         # comp_size == vec_bytes exactly -> strict rule keeps verbatim
         vals = u32(0x0000ABCD, 0xFFFF0123)
         mask = np.full(2, 0xFFFF0000, np.uint32)
         bitval = vals & mask
-        blobs, is_comp, sizes = nr.encode_matrix(vals[None, :], mask, bitval)
+        flat, sizes, is_comp = nr.encode_concat(vals[None, :], mask, bitval)
         assert sizes[0] == 8 and not bool(is_comp[0])
-        assert blobs[0] == vals.astype("<u4").tobytes()
+        assert flat.tobytes() == vals.astype("<u4").tobytes()
 
     def test_incompressible_verbatim(self):
         rng = np.random.default_rng(1)
         vals = rng.integers(0, 2**32, (4, 16), dtype=np.uint32)
         mask = np.zeros(16, np.uint32)
         bitval = np.zeros(16, np.uint32)
-        blobs, is_comp, sizes = nr.encode_matrix(vals, mask, bitval)
+        flat, sizes, is_comp = nr.encode_concat(vals, mask, bitval)
         assert not is_comp.any()
         assert (sizes == 64).all()
-        for i in range(4):
-            assert blobs[i] == vals[i].astype("<u4").tobytes()
+        # four verbatim rows back-to-back
+        assert flat.tobytes() == vals.astype("<u4").tobytes()
 
 
 class TestRoundTrip:
@@ -114,11 +114,10 @@ class TestRoundTrip:
             half = data[:20]
             hit = rng.random((20, v)) < 0.9
             half[hit] = (half & ~mask[None, :].astype(dtype))[hit] | np.broadcast_to(bitval, (20, v))[hit]
-            blobs, is_comp, sizes = nr.encode_matrix(data, mask, bitval)
+            flat, sizes, is_comp = nr.encode_concat(data, mask, bitval)
             assert sizes.tolist() == nr.comp_sizes_matrix(data, mask, bitval).tolist()
-            for i, b in enumerate(blobs):
-                assert len(b) == sizes[i]
-            out = nr.decode_matrix(blobs, is_comp, v, mask, bitval)
+            assert len(flat) == sizes.sum()
+            out = nr.decode_concat(flat, sizes, is_comp, v, mask, bitval)
             np.testing.assert_array_equal(out, data)
 
     def test_semidense_canonical_win(self):
@@ -127,28 +126,28 @@ class TestRoundTrip:
         data = rng.integers(0, 2**31 // 100, (64, 128), dtype=np.int64).astype(np.uint32)
         mask, bitval, theta, saved = nr.preprocess(data)
         assert saved > 0
-        blobs, is_comp, sizes = nr.encode_matrix(data, mask, bitval)
+        flat, sizes, is_comp = nr.encode_concat(data, mask, bitval)
         assert is_comp.all()
         assert sizes.sum() < data.nbytes
-        out = nr.decode_matrix(blobs, is_comp, 128, mask, bitval)
+        out = nr.decode_concat(flat, sizes, is_comp, 128, mask, bitval)
         np.testing.assert_array_equal(out, data)
 
     def test_constant_rows(self):
         data = np.full((16, 64), 0x1234ABCD, np.uint32)
         mask, bitval, _, _ = nr.preprocess(data)
         assert (mask == 0xFFFFFFFF).all()
-        blobs, is_comp, sizes = nr.encode_matrix(data, mask, bitval)
+        flat, sizes, is_comp = nr.encode_concat(data, mask, bitval)
         # header-only payload: meta=align(8,4)=8, data=align(256-256,4)=0
         assert (sizes == 8).all() and is_comp.all()
-        out = nr.decode_matrix(blobs, is_comp, 64, mask, bitval)
+        out = nr.decode_concat(flat, sizes, is_comp, 64, mask, bitval)
         np.testing.assert_array_equal(out, data)
 
     def test_adversarial_dense_uniform(self):
         rng = np.random.default_rng(3)
         data = rng.integers(0, 2**31, (100, 100), dtype=np.int64).astype(np.uint32)
         mask, bitval, _, _ = nr.preprocess(data)
-        blobs, is_comp, sizes = nr.encode_matrix(data, mask, bitval)
-        out = nr.decode_matrix(blobs, is_comp, 100, mask, bitval)
+        flat, sizes, is_comp = nr.encode_concat(data, mask, bitval)
+        out = nr.decode_concat(flat, sizes, is_comp, 100, mask, bitval)
         np.testing.assert_array_equal(out, data)
 
     @pytest.mark.parametrize("rate", [0.125, 0.25, 0.5, 0.75, 0.9])
@@ -164,12 +163,12 @@ class TestRoundTrip:
         mask = mask.copy().view("<u4").reshape(v)
         bitval = np.zeros(v, np.uint32)
         data = np.zeros((32, v), np.uint32)
-        blobs, is_comp, sizes = nr.encode_matrix(data, mask, bitval)
+        flat, sizes, is_comp = nr.encode_concat(data, mask, bitval)
         expect = nr.comp_size(v, nbits * 1, 4)  # per row: all elements pass
         saved_per_row = int(nr._popcount(mask).sum())
         assert (sizes == nr.comp_size(v, saved_per_row, 4)).all()
         assert expect == sizes[0]
-        out = nr.decode_matrix(blobs, is_comp, v, mask, bitval)
+        out = nr.decode_concat(flat, sizes, is_comp, v, mask, bitval)
         np.testing.assert_array_equal(out, data)
 
 
@@ -236,8 +235,8 @@ class TestReferenceGeneratedTensors:
 
     def _roundtrip(self, mat):
         mask, bitval, _, _ = nr.preprocess(mat)
-        blobs, is_comp, sizes = nr.encode_matrix(mat, mask, bitval)
-        out = nr.decode_matrix(blobs, is_comp, mat.shape[1], mask, bitval)
+        flat, sizes, is_comp = nr.encode_concat(mat, mask, bitval)
+        out = nr.decode_concat(flat, sizes, is_comp, mat.shape[1], mask, bitval)
         np.testing.assert_array_equal(out, nr._as_unsigned(mat))
         assert (sizes <= mat.shape[1] * mat.dtype.itemsize).all()
 
@@ -264,5 +263,5 @@ class TestReferenceGeneratedTensors:
         self._roundtrip(d.view(np.uint32))
         # the canonical IBP win: shared high-zero prefix compresses
         mask, bitval, _, _ = nr.preprocess(d.view(np.uint32))
-        _, _, sizes = nr.encode_matrix(d.view(np.uint32), mask, bitval)
+        _, sizes, _ = nr.encode_concat(d.view(np.uint32), mask, bitval)
         assert sizes.sum() < d.nbytes

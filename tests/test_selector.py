@@ -5,7 +5,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from invariantbitpacking_spark.operators import ibp, selector
-from invariantbitpacking_spark.operators.framing import frame_batch
+from invariantbitpacking_spark.operators.framing import (frame_batch_flat,
+                                                         gather_ranges,
+                                                         list_array_flat)
+
+
+def _compact(col):
+    """Arrow tokens column -> contiguous doc-major uint32 buffer + lens,
+    the input layout of selector.encode_docs_auto_flat."""
+    vals, starts, lens = list_array_flat(col)
+    return gather_ranges(vals, starts, lens).view(np.uint32), lens
+
+
+def _codec_names(pick):
+    return [selector.CODEC_ORDER[i] for i in pick]
 
 
 @pytest.fixture(scope="module")
@@ -24,15 +37,16 @@ def test_local_choices_match_expectations():
         "uniform": rng.integers(0, 2**32, n, dtype=np.uint64).astype(np.int32),
         "empty": np.zeros(0, np.int32),
     }
-    arrays = list(docs.values())
+    import pyarrow as pa
+
+    flat, lens = _compact(pa.array(list(docs.values()), pa.list_(pa.int32())))
     # learn IBP params on the vocab doc only (typical token corpus)
     from invariantbitpacking_spark.codecs import numpy_ref as nr
     mat = docs["vocab"][: (n // 128) * 128].reshape(-1, 128)
     mask, bitval, _, _ = nr.preprocess(mat.view(np.uint32))
     p = ibp.IbpParams(mask, bitval)
-    (codecs, payloads, bsizes, bflags, comp_bytes, lens, nblocks
-     ) = selector.encode_docs_auto(arrays, p)
-    by_name = dict(zip(docs.keys(), codecs))
+    pick, _, comp_bytes, *_ = selector.encode_docs_auto_flat(flat, lens, p)
+    by_name = dict(zip(docs.keys(), _codec_names(pick)))
     assert by_name["runs"] == "rle"
     assert by_name["sorted"] == "dfor"
     assert by_name["lowcard"] == "dict"
@@ -70,14 +84,13 @@ def test_auto_beats_ibp_alone(spark, tokens_df, params):
 def test_selected_sizes_are_exact(spark, tokens_df, params):
     """predict_sizes must equal the actual encoded size for the chosen
     codec (selection is closed-form, not heuristic)."""
-    local = tokens_df.orderBy("doc_id").select("tokens").toPandas()
-    arrays = list(local["tokens"].values)
-    fb = frame_batch(arrays)
-    flat = np.concatenate([np.asarray(a, np.int32) for a in arrays]).view(np.uint32)
-    sizes = selector.predict_sizes(flat, fb.lens, fb, params)
-    (codecs, payloads, bsizes, bflags, comp_bytes, lens, nblocks
-     ) = selector.encode_docs_auto(arrays, params)
-    for i, c in enumerate(codecs):
+    local = tokens_df.orderBy("doc_id").select("tokens").toArrow()
+    flat, lens = _compact(local["tokens"])
+    fb = frame_batch_flat(flat, np.cumsum(lens) - lens, lens)
+    sizes = selector.predict_sizes(flat, lens, fb, params)
+    pick, _, comp_bytes, *_ = selector.encode_docs_auto_flat(flat, lens,
+                                                             params)
+    for i, c in enumerate(_codec_names(pick)):
         assert sizes[c][i] == comp_bytes[i], (i, c)
 
 
@@ -141,3 +154,19 @@ def test_auto_roundtrip_with_forced_sub_batching_and_nulls(spark, params):
         max_batch_tokens=900).collect()}
     for doc_id, vals, n, _ in rows:
         assert dec[doc_id] == (vals if vals else []), doc_id
+
+
+def test_predicted_sizes_by_source_runs_as_arrow_udf(spark, tokens_df, params):
+    """The per-(source, codec) size scan runs over flat Arrow buffers:
+    its executed plan holds a MapInArrow node and no MapInPandas."""
+    out = selector.predicted_sizes_by_source(tokens_df, params)
+    rows = out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+    # the raw candidate is exactly 4 bytes per token for every doc
+    want = {r["source"]: (r["raw"], r["docs"]) for r in tokens_df.groupBy(
+        "source").agg((4 * F.sum("n_tok")).alias("raw"),
+                      F.count(F.lit(1)).alias("docs")).collect()}
+    got = {r["source"]: (r["total_bytes"], r["docs"])
+           for r in rows if r["codec"] == "raw"}
+    assert got == want

@@ -10,8 +10,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from invariantbitpacking_spark.codecs import numpy_ref as nr
-from invariantbitpacking_spark.operators.framing import frame_tokens
+from invariantbitpacking_spark.operators.framing import (frame_batch_flat,
+                                                         list_array_flat)
 from invariantbitpacking_spark.operators import ibp
+
+
+def _frame_arrow(col):
+    """Frame an Arrow tokens column through the flat kernel API."""
+    return frame_batch_flat(*list_array_flat(col))
 
 
 @pytest.fixture(scope="module")
@@ -21,12 +27,11 @@ def params(tokens_df):
 
 def test_learn_params_matches_local_ragged(spark, tokens_df, params):
     """Distributed learn == single-process learn over ragged frames."""
-    from invariantbitpacking_spark.operators.framing import frame_batch
     from invariantbitpacking_spark.operators.ibp import (
         _batch_counts, _gated_savings)
 
-    local = tokens_df.orderBy("doc_id").select("tokens").toPandas()
-    fb = frame_batch(local["tokens"].values)
+    local = tokens_df.orderBy("doc_id").select("tokens").toArrow()
+    fb = _frame_arrow(local["tokens"])
     counts, cov = _batch_counts(fb, 128)
     best, best_saved = None, 0
     for t in nr.sweep_thresholds():
@@ -57,8 +62,12 @@ def test_learn_params_rectangular_matches_reference(spark):
     df = spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string")
     p = ibp.learn_params(df)
-    mat, _ = frame_tokens([np.array(r[1], np.int32) for r in rows])
-    mask, bitval, theta, saved = nr.preprocess(mat)
+    lens = np.array([r[2] for r in rows], np.int64)
+    fb = frame_batch_flat(
+        np.concatenate([np.array(r[1], np.int32) for r in rows]),
+        np.cumsum(lens) - lens, lens)
+    assert not fb.tails  # rectangular: full blocks only
+    mask, bitval, theta, saved = nr.preprocess(fb.full_mat)
     np.testing.assert_array_equal(p.mask, mask)
     np.testing.assert_array_equal(p.bitval, bitval)
     assert p.saved_bits == saved and p.threshold == pytest.approx(theta)
@@ -94,13 +103,12 @@ def test_sizes_match_formula_and_never_expand(spark, tokens_df, params):
     bad2 = enc.filter(F.col("comp_bytes") > F.col("raw_bytes")).count()
     assert bad2 == 0
     # distributed sizes equal the local single-process encode, doc by doc
-    from invariantbitpacking_spark.operators.framing import frame_batch
-    from invariantbitpacking_spark.operators.ibp import encode_batch
+    from invariantbitpacking_spark.operators.ibp import encode_batch_flat
 
-    local = tokens_df.orderBy("doc_id").select("doc_id", "tokens").toPandas()
-    fb = frame_batch(local["tokens"].values)
-    _, _, _, comp_bytes = encode_batch(fb, params.mask, params.bitval)
-    expect = {local["doc_id"][i]: int(comp_bytes[i]) for i in range(len(local))}
+    local = tokens_df.orderBy("doc_id").select("doc_id", "tokens").toArrow()
+    fb = _frame_arrow(local["tokens"])
+    _, comp_bytes, _, _, _ = encode_batch_flat(fb, params.mask, params.bitval)
+    expect = dict(zip(local["doc_id"].to_pylist(), comp_bytes.tolist()))
     got = {r["doc_id"]: r["comp_bytes"] for r in enc.select("doc_id", "comp_bytes").collect()}
     assert got == expect
     enc.unpersist()
