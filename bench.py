@@ -212,15 +212,18 @@ def main() -> None:
     # q7: FSST string columns (functions/strings.py): learn the symbol
     # table on a sample, encode doc_id+source for the whole corpus,
     # decode back — the string half of every durable snapshot write.
+    # Encode and decode are composed explicitly into one Arrow stage
+    # chain, so the round trip crosses into Python once per task.
     from invariantbitpacking_spark.functions import strings as fstr
+    from invariantbitpacking_spark.operators import stages
 
     table = fstr.learn_table_df(toks, ("doc_id", "source"))
     sids = toks.select("doc_id", "source")
     fstr.encode_string_cols(sids, table, ("doc_id", "source")).count()  # warm
 
     def run_fsst():
-        enc_s = fstr.encode_string_cols(sids, table, ("doc_id", "source"))
-        dec_s = fstr.decode_string_cols(enc_s, table, ("doc_id", "source"))
+        dec_s = stages.apply(sids, fstr.encode_stage(table),
+                             fstr.decode_stage(table))
         return dec_s.agg(F.sum(F.length("doc_id")),
                          F.count(F.lit(1))).collect()[0]
 

@@ -331,8 +331,8 @@ def simhash64(docs: DataFrame, with_counts: bool = False) -> DataFrame:
     def sim(batches):
         import pyarrow as pa
 
-        from ..operators.ibp import _mass_ranges
         from ..operators.framing import gather_ranges
+        from ..operators.stages import mass_ranges
 
         for rb in batches:
             col = rb.column(1)
@@ -344,7 +344,7 @@ def simhash64(docs: DataFrame, with_counts: bool = False) -> DataFrame:
                 nulls = col.is_null().to_numpy(zero_copy_only=False)
                 lens_all = np.where(nulls, 0, lens_all)
             # bound the words x 64-bit vote working set per sub-batch
-            for i0, i1 in _mass_ranges(lens_all, 2_000_000):
+            for i0, i1 in mass_ranges(lens_all, 2_000_000):
                 ndocs = i1 - i0
                 lens = lens_all[i0:i1]
                 total = int(lens.sum())

@@ -1327,7 +1327,7 @@ def decode_and_featurize(assets: DataFrame, feat_dim: int = 16) -> DataFrame:
         import pyarrow as pa
 
         from ..operators.framing import gather_ranges
-        from ..operators.ibp import binary_array_flat
+        from ..operators.framing import binary_array_flat
 
         for rb in batches:
             names = rb.schema.names
@@ -1403,7 +1403,7 @@ def sample_video_frames(assets: DataFrame, every: int = 2) -> DataFrame:
         import pyarrow as pa
 
         from ..operators.framing import gather_ranges
-        from ..operators.ibp import binary_array_flat
+        from ..operators.framing import binary_array_flat
 
         for rb in batches:
             names = rb.schema.names

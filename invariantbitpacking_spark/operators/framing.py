@@ -27,8 +27,9 @@ VEC_SIZE = 128
 
 # Spark caps Arrow batches by ROW count
 # (spark.sql.execution.arrow.maxRecordsPerBatch) but not by bytes, so
-# every UDF sub-batches by token mass (``ibp._mass_ranges``) to keep a
-# batch of long documents from materializing multi-GB framing buffers.
+# every token stage sub-batches by token mass (``stages.Stage``) to keep
+# a batch of long documents from materializing multi-GB framing
+# buffers.  Read when a stage is built.
 MAX_BATCH_TOKENS = 16_000_000  # ~64 MB of int32 per UDF sub-batch
 
 
@@ -186,6 +187,27 @@ def list_array_flat(col, itemsize: int = 4):
             f"token values decoded to {values.dtype}, expected a "
             f"{itemsize}-byte integer or float dtype")
     return np.ascontiguousarray(values).view(sdt), starts, lens
+
+
+def binary_array_flat(arr):
+    """Decompose a pyarrow Binary/String array into ``(flat uint8,
+    starts, lens)`` numpy views, honoring slices and nulls (null ->
+    length 0)."""
+    import pyarrow as pa
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    bufs = arr.buffers()
+    offs = np.frombuffer(bufs[1], np.int32)[
+        arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
+    data = (np.frombuffer(bufs[2], np.uint8)
+            if bufs[2] is not None else np.zeros(0, np.uint8))
+    starts = offs[:-1]
+    lens = offs[1:] - starts
+    if arr.null_count:
+        nulls = arr.is_null().to_numpy(zero_copy_only=False)
+        lens = np.where(nulls, 0, lens)
+    return data, starts, lens
 
 
 def unframe_flat(fb: FramedBatch, full_dec: np.ndarray,

@@ -30,55 +30,19 @@ ceremony).  All hot loops are whole-batch numpy over Arrow data.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
+from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from ..codecs import numpy_ref as nr
+from . import framing, stages
 from .framing import (SIGNED_DT, UNSIGNED_DT, VEC_SIZE, FramedBatch,
-                      frame_batch_flat, gather_ranges, list_array_flat,
-                      unframe_flat)
-
-
-def binary_array_flat(arr):
-    """Decompose a pyarrow Binary/String array into ``(flat uint8,
-    starts, lens)`` numpy views, honoring slices and nulls (null ->
-    length 0)."""
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    bufs = arr.buffers()
-    offs = np.frombuffer(bufs[1], np.int32)[
-        arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
-    data = (np.frombuffer(bufs[2], np.uint8)
-            if bufs[2] is not None else np.zeros(0, np.uint8))
-    starts = offs[:-1]
-    lens = offs[1:] - starts
-    if arr.null_count:
-        nulls = arr.is_null().to_numpy(zero_copy_only=False)
-        lens = np.where(nulls, 0, lens)
-    return data, starts, lens
-
-
-def _mass_ranges(lens: np.ndarray, max_tokens: int | None):
-    """Sub-batch boundaries [(i0, i1), ...] of one Arrow batch bounded
-    by total token mass (``lens`` = per-row token counts, or any per-row
-    mass; ``None`` = ``framing.MAX_BATCH_TOKENS``)."""
-    from .framing import MAX_BATCH_TOKENS
-
-    if max_tokens is None:
-        max_tokens = MAX_BATCH_TOKENS
-    n = len(lens)
-    if n == 0 or int(lens.sum()) <= max_tokens:
-        return [(0, n)]
-    bucket = np.cumsum(lens) // max_tokens
-    brk = np.flatnonzero(np.diff(bucket)) + 1
-    bounds = [0, *brk.tolist(), n]
-    return [(bounds[i], bounds[i + 1]) for i in range(len(bounds) - 1)
-            if bounds[i] < bounds[i + 1]]
+                      binary_array_flat, frame_batch_flat, gather_ranges,
+                      list_array_flat, unframe_flat)
 
 
 @dataclass
@@ -119,8 +83,6 @@ class IbpParams:
 
     @classmethod
     def from_dict(cls, d: dict) -> "IbpParams":
-        from .framing import UNSIGNED_DT
-
         dt = UNSIGNED_DT[int(d.get("item_bytes", 4))]
         return cls(
             mask=np.array(d["mask"], dt),
@@ -133,7 +95,7 @@ class IbpParams:
         )
 
 
-def _elem_bytes(df: DataFrame, tokens_col: str) -> int:
+def _elem_bytes(schema: StructType, tokens_col: str) -> int:
     """Element width from the Spark schema: 1 for array<tinyint>, 2 for
     array<smallint>, 4 for array<int> OR array<float>, 8 for
     array<bigint> OR array<double> — the full reference element-size
@@ -144,7 +106,7 @@ def _elem_bytes(df: DataFrame, tokens_col: str) -> int:
     from pyspark.sql.types import (ArrayType, ByteType, DoubleType,
                                    LongType, ShortType)
 
-    dt = df.schema[tokens_col].dataType
+    dt = schema[tokens_col].dataType
     if isinstance(dt, ArrayType):
         if isinstance(dt.elementType, ByteType):
             return 1
@@ -155,18 +117,41 @@ def _elem_bytes(df: DataFrame, tokens_col: str) -> int:
     return 4
 
 
-def _value_kind(df: DataFrame, tokens_col: str) -> str:
+def _value_kind(schema: StructType, tokens_col: str) -> str:
     """'float32' / 'float64' for float element types (encoded via IEEE
     bit view, decoded back to the same float type), 'int' otherwise."""
     from pyspark.sql.types import ArrayType, DoubleType, FloatType
 
-    dt = df.schema[tokens_col].dataType
+    dt = schema[tokens_col].dataType
     if isinstance(dt, ArrayType):
         if isinstance(dt.elementType, FloatType):
             return "float32"
         if isinstance(dt.elementType, DoubleType):
             return "float64"
     return "int"
+
+
+def token_stage(kernel, schema, tokens_col: str,
+                reads: tuple[str, ...]) -> stages.Stage:
+    """A stage over rows of a token list column, sub-batched by token
+    mass up to ``framing.MAX_BATCH_TOKENS``."""
+    return stages.Stage(kernel, schema, stages.list_mass(tokens_col),
+                        framing.MAX_BATCH_TOKENS, reads)
+
+
+def framed_stage(fn, schema: str, tokens_col: str, item_bytes: int,
+                 vec_size: int, reads: tuple[str, ...] | None = None
+                 ) -> stages.Stage:
+    """A token stage whose kernel frames each sub-batch's
+    ``tokens_col`` into codec blocks and returns ``fn(rb,
+    framed_batch)``."""
+    def kernel(rb):
+        flat, starts, lens = list_array_flat(rb.column(tokens_col),
+                                             item_bytes)
+        return fn(rb, frame_batch_flat(flat, starts, lens, vec_size))
+
+    return token_stage(kernel, stages.fixed(schema), tokens_col,
+                       reads or (tokens_col,))
 
 
 # ---------------------------------------------------------------------------
@@ -199,28 +184,22 @@ def bit_count_df(df: DataFrame, tokens_col: str = "tokens",
     scheme (ibp_preproc_kernels.cuh:8-31).  The word width W follows the
     input element type (32 for array<int>, 64 for array<bigint> —
     src/preprocess.cu:56-72 dtype dispatch)."""
-    import pyarrow as pa
-
-    ib = _elem_bytes(df, tokens_col)
+    ib = _elem_bytes(df.schema, tokens_col)
     w = ib * 8
+    pos = np.concatenate(
+        [[-1], np.arange(vec_size * w + vec_size)]).astype(np.int32)
 
-    def counter(batches) -> "Iterator[pa.RecordBatch]":
-        for rb in batches:
-            flat, starts, lens = list_array_flat(rb.column(0), ib)
-            for i0, i1 in _mass_ranges(lens, None):
-                fb = frame_batch_flat(flat, starts[i0:i1], lens[i0:i1],
-                                      vec_size)
-                counts, cov = _batch_counts(fb, vec_size, w)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(
-                        [[-1], np.arange(vec_size * w + vec_size)]
-                    ).astype(np.int32), pa.int32()),
-                     pa.array(np.concatenate(
-                        [[int(fb.nblocks.sum())], counts.reshape(-1), cov]
-                     ).astype(np.int64), pa.int64())],
-                    names=["pos", "cnt"])
+    def counter(rb, fb):
+        counts, cov = _batch_counts(fb, vec_size, w)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(pos, pa.int32()),
+             pa.array(np.concatenate(
+                 [[int(fb.nblocks.sum())], counts.reshape(-1), cov]
+             ).astype(np.int64), pa.int64())],
+            names=["pos", "cnt"])
 
-    partial = df.select(tokens_col).mapInArrow(counter, schema="pos int, cnt long")
+    partial = stages.apply(df, framed_stage(
+        counter, "pos int, cnt long", tokens_col, ib, vec_size))
     return partial.groupBy("pos").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -267,7 +246,7 @@ def learn_params(df: DataFrame, tokens_col: str = "tokens",
     eval_df = df
     if eval_sample_fraction is not None and eval_sample_fraction < 1.0:
         eval_df = df.sample(fraction=eval_sample_fraction, seed=seed + 1)
-    ib = _elem_bytes(df, tokens_col)
+    ib = _elem_bytes(df.schema, tokens_col)
     w = ib * 8
     udt = UNSIGNED_DT[ib]
 
@@ -295,30 +274,23 @@ def learn_params(df: DataFrame, tokens_col: str = "tokens",
 
     # Single evaluation pass for ALL thresholds: per batch, per-block
     # gated savings (ibp_preproc_kernels.cuh:69-72) summed per candidate.
-    def evaluator(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            flat, starts, lens = list_array_flat(rb.column(0), ib)
-            for i0, i1 in _mass_ranges(lens, None):
-                fb = frame_batch_flat(flat, starts[i0:i1], lens[i0:i1],
-                                      vec_size)
-                saveds = np.zeros(len(grid), np.int64)
-                for g in range(len(grid)):
-                    if fb.full_mat.shape[0]:
-                        saveds[g] += _gated_savings(
-                            fb.full_mat, masks[g], bitvals[g], mask_popc[g])
-                    for L, (mat, _) in fb.tails.items():
-                        saveds[g] += _gated_savings(
-                            mat, masks[g], bitvals[g], mask_popc[g])
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.arange(len(grid), dtype=np.int32)),
-                     pa.array(saveds, pa.int64())],
-                    names=["ti", "saved"])
+    def evaluator(rb, fb):
+        saveds = np.zeros(len(grid), np.int64)
+        for g in range(len(grid)):
+            if fb.full_mat.shape[0]:
+                saveds[g] += _gated_savings(
+                    fb.full_mat, masks[g], bitvals[g], mask_popc[g])
+            for L, (mat, _) in fb.tails.items():
+                saveds[g] += _gated_savings(
+                    mat, masks[g], bitvals[g], mask_popc[g])
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.arange(len(grid), dtype=np.int32)),
+             pa.array(saveds, pa.int64())],
+            names=["ti", "saved"])
 
     ev = (
-        eval_df.select(tokens_col)
-        .mapInArrow(evaluator, schema="ti int, saved long")
+        stages.apply(eval_df, framed_stage(
+            evaluator, "ti int, saved long", tokens_col, ib, vec_size))
         .groupBy("ti").agg(F.sum("saved").alias("saved"))
         .collect()
     )
@@ -332,7 +304,7 @@ def learn_params(df: DataFrame, tokens_col: str = "tokens",
     for g in range(len(grid)):
         if saved_by_t[g] > best_saved:
             best_g, best_saved = g, int(saved_by_t[g])
-    vk = _value_kind(df, tokens_col)
+    vk = _value_kind(df.schema, tokens_col)
     if best_g is None:
         z = np.zeros(vec_size, udt)
         return IbpParams(z, z.copy(), vec_size, None, 0, num_vecs,
@@ -357,6 +329,46 @@ ENCODED_SCHEMA = (
 )
 
 
+def _full_block_ids(fb: FramedBatch, blk_start: np.ndarray) -> np.ndarray:
+    """Doc-major global block id of each row of ``fb.full_mat``."""
+    doc_of_full = np.repeat(np.arange(len(fb.lens)), fb.nfull)
+    within = (np.arange(fb.full_mat.shape[0])
+              - np.repeat(np.cumsum(fb.nfull) - fb.nfull, fb.nfull))
+    return blk_start[doc_of_full] + within
+
+
+def _assemble_blocks(fb: FramedBatch, blk_start: np.ndarray, groups):
+    """Lay encoded block groups ``(block ids, blob, sizes, is_comp)``
+    into ONE doc-major buffer (one scatter per group) and pack every
+    doc's byte-padded LSB-first flag bitmap in ONE packbits call.
+    Returns ``(buf, doc_bytes, sizes, flags_packed, flag_nbytes)``."""
+    from ..codecs.lightweight import _scatter_rows
+
+    nb_tot = int(fb.nblocks.sum())
+    sizes = np.zeros(nb_tot, np.int64)
+    is_comp = np.zeros(nb_tot, bool)
+    for gidx, _, sz, comp in groups:
+        sizes[gidx] = sz
+        is_comp[gidx] = comp
+    offsets = np.cumsum(sizes) - sizes
+    buf = np.zeros(int(sizes.sum()), np.uint8)
+    for gidx, flat, sz, _ in groups:
+        _scatter_rows(buf, offsets[gidx], flat, sz)
+    # blocks are doc-major, so each doc's payload is one contiguous span
+    doc_bytes = np.add.reduceat(
+        np.append(sizes, 0), np.minimum(blk_start, nb_tot)
+    ) * (fb.nblocks > 0) if len(fb.lens) else np.zeros(0, np.int64)
+    flag_bits = ((fb.nblocks + 7) // 8) * 8
+    fbit_start = np.cumsum(flag_bits) - flag_bits
+    bigbits = np.zeros(int(flag_bits.sum()), np.uint8)
+    if nb_tot:
+        within_all = np.arange(nb_tot) - np.repeat(blk_start, fb.nblocks)
+        bigbits[np.repeat(fbit_start, fb.nblocks) + within_all] = is_comp
+    flags_packed = np.packbits(bigbits, bitorder="little")
+    return (buf, doc_bytes.astype(np.int64), sizes, flags_packed,
+            flag_bits // 8)
+
+
 def encode_batch_flat(fb: FramedBatch, mask: np.ndarray, bitval: np.ndarray):
     """Encode one framed batch into ONE doc-major buffer (no per-doc
     Python in the byte assembly — every phase is a vectorized scatter).
@@ -368,51 +380,52 @@ def encode_batch_flat(fb: FramedBatch, mask: np.ndarray, bitval: np.ndarray):
     sizes, ``flags_packed`` uint8 the per-doc byte-padded LSB-first
     compressed bitmaps back-to-back, ``flag_nbytes`` int64[ndocs] each
     doc's bitmap width in ``flags_packed``."""
-    from ..codecs.lightweight import _scatter_rows
-
-    ndocs = len(fb.lens)
-    nb_tot = int(fb.nblocks.sum())
     blk_start = np.cumsum(fb.nblocks) - fb.nblocks
-    sizes = np.zeros(nb_tot, np.int64)
-    is_comp = np.zeros(nb_tot, bool)
-    pending: list[tuple] = []  # (global block ids, group blob, sizes)
+    groups = []
     if fb.full_mat.shape[0]:
-        flat_full, sizes_full, comp_full = nr.encode_concat(
-            fb.full_mat, mask, bitval)
-        doc_of_full = np.repeat(np.arange(ndocs), fb.nfull)
-        within = (np.arange(fb.full_mat.shape[0])
-                  - np.repeat(np.cumsum(fb.nfull) - fb.nfull, fb.nfull))
-        gidx = blk_start[doc_of_full] + within
-        sizes[gidx] = sizes_full
-        is_comp[gidx] = comp_full
-        pending.append((gidx, flat_full, sizes_full))
+        groups.append((_full_block_ids(fb, blk_start),
+                       *nr.encode_concat(fb.full_mat, mask, bitval)))
     for L, (mat, docs) in fb.tails.items():
-        tflat, tsizes, tcomp = nr.encode_concat(mat, mask[:L], bitval[:L])
-        gidx = blk_start[docs] + fb.nblocks[docs] - 1
-        sizes[gidx] = tsizes
-        is_comp[gidx] = tcomp
-        pending.append((gidx, tflat, tsizes))
-    offsets = np.cumsum(sizes) - sizes
-    buf = np.zeros(int(sizes.sum()), np.uint8)
-    for gidx, flat, sz in pending:
-        _scatter_rows(buf, offsets[gidx], flat, sz)
-    # blocks are doc-major, so each doc's payload is one contiguous span
-    doc_bytes = np.add.reduceat(
-        np.append(sizes, 0), np.minimum(blk_start, nb_tot)) * (fb.nblocks > 0)
-    # per-doc byte-padded flag bitmaps packed in ONE packbits call
-    flag_bits = ((fb.nblocks + 7) // 8) * 8
-    fbit_start = np.cumsum(flag_bits) - flag_bits
-    bigbits = np.zeros(int(flag_bits.sum()), np.uint8)
-    if nb_tot:
-        within_all = np.arange(nb_tot) - np.repeat(blk_start, fb.nblocks)
-        bigbits[np.repeat(fbit_start, fb.nblocks) + within_all] = is_comp
-    flags_packed = np.packbits(bigbits, bitorder="little")
-    return buf, doc_bytes.astype(np.int64), sizes, flags_packed, flag_bits // 8
+        groups.append((blk_start[docs] + fb.nblocks[docs] - 1,
+                       *nr.encode_concat(mat, mask[:L], bitval[:L])))
+    return _assemble_blocks(fb, blk_start, groups)
+
+
+def encoded_batch(rb, lens, nblocks, sizes, flags, flag_nbytes, payload,
+                  pbytes, codec, item_bytes: int = 4, clusters=None,
+                  extra=()):
+    """One encoded-row RecordBatch (:data:`ENCODED_SCHEMA` column order)
+    from flat per-batch buffers: ``sizes`` the doc-major block sizes,
+    ``flags``/``payload`` the doc-major flag bitmaps and payloads with
+    per-doc extents ``flag_nbytes``/``pbytes``.  ``codec`` is one name
+    or a per-doc array; ``clusters`` (one u8 per block) adds the
+    ``block_clusters`` column; ``extra`` columns ride through from
+    ``rb``."""
+    n = len(lens)
+    cols = {
+        "doc_id": rb.column("doc_id"), "source": rb.column("source"),
+        "n_tok": pa.array(lens.astype(np.int32), pa.int32()),
+        "n_blocks": pa.array(nblocks.astype(np.int32), pa.int32()),
+        "block_sizes": stages.list_col(
+            pa.array(sizes.astype(np.int32), pa.int32()), nblocks),
+        "block_flags": stages.binary_col(flags, flag_nbytes),
+    }
+    if clusters is not None:
+        cols["block_clusters"] = stages.binary_col(clusters, nblocks)
+    cols.update({
+        "payload": stages.binary_col(payload, pbytes),
+        "comp_bytes": pa.array(pbytes, pa.int64()),
+        "raw_bytes": pa.array(lens * item_bytes, pa.int64()),
+        "codec": pa.array(np.full(n, codec, object) if isinstance(codec, str)
+                          else codec),
+    })
+    for c in extra:
+        cols[c] = rb.column(c)
+    return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 
 
 def encode_ibp(df: DataFrame, params: IbpParams,
-               tokens_col: str = "tokens",
-               max_batch_tokens: int | None = None) -> DataFrame:
+               tokens_col: str = "tokens") -> DataFrame:
     """Encode the tokens table into per-document condensed blobs.
 
     Output row = one document: ``payload`` holds its blocks'
@@ -423,107 +436,103 @@ def encode_ibp(df: DataFrame, params: IbpParams,
     Element width follows ``params.mask.dtype`` (4- or 8-byte words,
     src/compress.cu:192).
 
-    Runs as ``mapInArrow``: tokens arrive as one Arrow values buffer +
+    Runs as one Arrow stage: tokens arrive as one Arrow values buffer +
     offsets (no pandas conversion, no per-doc array objects), and every
     output column is built from one flat numpy buffer + offsets — the
     whole encode is zero per-document Python."""
-    import pyarrow as pa
+    mask, bitval, ib = params.mask, params.bitval, params.item_bytes
 
-    mask, bitval, v = params.mask, params.bitval, params.vec_size
-    ib = params.item_bytes
+    def encode(rb, fb):
+        buf, doc_bytes, sizes, flags, flag_nb = encode_batch_flat(
+            fb, mask, bitval)
+        return encoded_batch(rb, fb.lens, fb.nblocks, sizes, flags, flag_nb,
+                             buf, doc_bytes, "ibp", ib)
 
-    def encoder(batches) -> "Iterator[pa.RecordBatch]":
-        for rb in batches:
-            flat, starts, lens = list_array_flat(
-                rb.column(rb.schema.names.index(tokens_col)), ib)
-            for i0, i1 in _mass_ranges(lens, max_batch_tokens):
-                fb = frame_batch_flat(flat, starts[i0:i1], lens[i0:i1], v)
-                buf, doc_bytes, sizes, flags_packed, flag_nbytes = (
-                    encode_batch_flat(fb, mask, bitval))
-                n = i1 - i0
-                pay_off = np.zeros(n + 1, np.int32)
-                np.cumsum(doc_bytes, out=pay_off[1:])
-                payload = pa.BinaryArray.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(pay_off), pa.py_buffer(buf)])
-                blk_off = np.zeros(n + 1, np.int32)
-                np.cumsum(fb.nblocks, out=blk_off[1:])
-                block_sizes = pa.ListArray.from_arrays(
-                    pa.array(blk_off, pa.int32()),
-                    pa.array(sizes.astype(np.int32), pa.int32()))
-                flg_off = np.zeros(n + 1, np.int32)
-                np.cumsum(flag_nbytes, out=flg_off[1:])
-                block_flags = pa.BinaryArray.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(flg_off), pa.py_buffer(flags_packed)])
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(rb.schema.names.index("doc_id")).slice(i0, n),
-                     rb.column(rb.schema.names.index("source")).slice(i0, n),
-                     pa.array(fb.lens.astype(np.int32), pa.int32()),
-                     pa.array(fb.nblocks.astype(np.int32), pa.int32()),
-                     block_sizes, block_flags, payload,
-                     pa.array(doc_bytes, pa.int64()),
-                     pa.array(fb.lens * ib, pa.int64()),
-                     pa.array(np.full(n, "ibp", object))],
-                    names=["doc_id", "source", "n_tok", "n_blocks",
-                           "block_sizes", "block_flags", "payload",
-                           "comp_bytes", "raw_bytes", "codec"])
-
-    cols = ["doc_id", tokens_col, "source"]
-    return df.select(*cols).mapInArrow(encoder, schema=ENCODED_SCHEMA)
+    return stages.apply(df, framed_stage(
+        encode, ENCODED_SCHEMA, tokens_col, ib, params.vec_size,
+        reads=("doc_id", tokens_col, "source")))
 
 
 def sizes_ibp(df: DataFrame, params: IbpParams,
-              tokens_col: str = "tokens",
-              max_batch_tokens: int | None = None) -> DataFrame:
+              tokens_col: str = "tokens") -> DataFrame:
     """Per-document IBP compressed size WITHOUT encoding — the
     DataFrame face of :func:`predict_sizes_ibp` (the reference's
     get_compress_size operator, src/compress.cu:25-174).  One predicate
     pass over the framed tokens: no payload assembly, no flag packing,
     no output buffers — for size-only consumers (offset scans, planning)
     this costs a fraction of a full :func:`encode_ibp` evaluation."""
-    import pyarrow as pa
+    mask, bitval = params.mask, params.bitval
 
-    mask, bitval, v = params.mask, params.bitval, params.vec_size
-    ib = params.item_bytes
+    def sizer(rb, fb):
+        return pa.RecordBatch.from_arrays(
+            [rb.column("doc_id"),
+             pa.array(fb.lens.astype(np.int32), pa.int32()),
+             pa.array(predict_sizes_ibp(fb, mask, bitval), pa.int64())],
+            names=["doc_id", "n_tok", "comp_bytes"])
 
-    def sizer(batches) -> "Iterator[pa.RecordBatch]":
-        for rb in batches:
-            flat, starts, lens = list_array_flat(
-                rb.column(rb.schema.names.index(tokens_col)), ib)
-            for i0, i1 in _mass_ranges(lens, max_batch_tokens):
-                fb = frame_batch_flat(flat, starts[i0:i1], lens[i0:i1], v)
-                sizes = predict_sizes_ibp(fb, mask, bitval)
-                n = i1 - i0
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(rb.schema.names.index("doc_id")).slice(i0, n),
-                     pa.array(fb.lens.astype(np.int32), pa.int32()),
-                     pa.array(sizes, pa.int64())],
-                    names=["doc_id", "n_tok", "comp_bytes"])
-
-    return (df.select("doc_id", tokens_col)
-            .mapInArrow(sizer,
-                        schema="doc_id string, n_tok int, comp_bytes long"))
+    return stages.apply(df, framed_stage(
+        sizer, "doc_id string, n_tok int, comp_bytes long", tokens_col,
+        params.item_bytes, params.vec_size, reads=("doc_id", tokens_col)))
 
 
-def decode_docs_flat(lens: np.ndarray, sizes: np.ndarray,
-                     flags_flat: np.ndarray, flags_starts: np.ndarray,
-                     pay_flat: np.ndarray, pay_starts: np.ndarray,
-                     mask: np.ndarray, bitval: np.ndarray, v: int):
-    """Decode a batch of encoded documents — the vectorized inverse of
-    :func:`encode_batch_flat`.  Per-doc payload/flag spans are
-    addressed through explicit start offsets into shared buffers — no
-    joins, no per-doc bytes objects.  Returns ``(tok_flat,
-    tok_starts)`` in the ListArray layout."""
-    sdt = SIGNED_DT[mask.dtype.itemsize]
-    ndocs = len(lens)
+class _BlockTable(NamedTuple):
+    """Doc-major block layout of a batch of encoded documents: every
+    block's payload offset, byte size and compressed flag, its doc and
+    whether it is that doc's ragged tail."""
+
+    lens: np.ndarray
+    nfull: np.ndarray
+    tail_len: np.ndarray
+    nblocks: np.ndarray
+    within: np.ndarray        # block ordinal inside its doc
+    offsets: np.ndarray       # payload byte offset
+    sizes: np.ndarray
+    is_comp: np.ndarray
+    doc_of_block: np.ndarray
+    is_tail: np.ndarray
+    vec_size: int
+
+    def decode(self, pay_flat, sel, width, mask, bitval):
+        """Decode blocks ``sel`` (all ``width`` wide) with one
+        (mask, bitval)."""
+        return nr.decode_concat(
+            gather_ranges(pay_flat, self.offsets[sel], self.sizes[sel]),
+            self.sizes[sel], self.is_comp[sel], width, mask[:width],
+            bitval[:width])
+
+    def tail_groups(self):
+        """``[(width, block ids), ...]`` of the tail blocks, one entry
+        per width in ascending order."""
+        tsel = np.flatnonzero(self.is_tail)
+        if not tsel.size:
+            return []
+        widths = self.tail_len[self.doc_of_block[tsel]]
+        order = np.argsort(widths, kind="stable")
+        tsel, widths = tsel[order], widths[order]
+        uniq, gs = np.unique(widths, return_index=True)
+        ge = np.append(gs[1:], widths.size)
+        return [(int(L), tsel[s:e]) for L, s, e in zip(uniq, gs, ge)]
+
+    def unframe(self, full_dec, groups, tail_dec):
+        """Decoded blocks back to ``(tok_flat, tok_starts)``."""
+        tails = {L: (None, self.doc_of_block[sel]) for L, sel in groups}
+        fb = FramedBatch(self.lens, self.nfull, self.tail_len, self.nblocks,
+                         full_dec, tails, self.vec_size)
+        return unframe_flat(fb, full_dec, tail_dec)
+
+
+def _block_table(lens, sizes, flags_flat, flags_starts, pay_starts,
+                 v: int) -> _BlockTable | None:
+    """The block layout of encoded docs, or None when they hold no
+    block.  Per-doc payload/flag spans are addressed through explicit
+    start offsets into shared buffers."""
     lens = np.asarray(lens, np.int64)
     nfull = lens // v
     tail_len = lens % v
     nblocks = nfull + (tail_len > 0)
     nb_tot = int(nblocks.sum())
-    if ndocs == 0 or nb_tot == 0:
-        return np.zeros(0, sdt), np.zeros(ndocs, np.int64)
+    if nb_tot == 0:
+        return None
     sizes = np.asarray(sizes, np.int64)
     blk_start = np.cumsum(nblocks) - nblocks
     # byte offset of each block = its doc's payload base + the local
@@ -537,34 +546,31 @@ def decode_docs_flat(lens: np.ndarray, sizes: np.ndarray,
     fbyte = np.repeat(flags_starts, nblocks) + (within >> 3)
     is_comp = ((flags_flat[fbyte].astype(np.int64) >> (within & 7)) & 1
                ).astype(bool)
-    doc_of_block = np.repeat(np.arange(ndocs), nblocks)
+    doc_of_block = np.repeat(np.arange(len(lens)), nblocks)
     is_tail = (tail_len[doc_of_block] > 0) & (
         within == (nblocks[doc_of_block] - 1))
+    return _BlockTable(lens, nfull, tail_len, nblocks, within, offsets,
+                       sizes, is_comp, doc_of_block, is_tail, v)
 
-    fsel = ~is_tail
-    fbuf = gather_ranges(pay_flat, offsets[fsel], sizes[fsel])
-    full_dec = nr.decode_concat(
-        fbuf, sizes[fsel], is_comp[fsel], v, mask, bitval)
 
-    tail_dec: dict[int, np.ndarray] = {}
-    tails: dict[int, tuple] = {}
-    tsel = np.flatnonzero(is_tail)
-    if tsel.size:
-        widths = tail_len[doc_of_block[tsel]]
-        order = np.argsort(widths, kind="stable")
-        tsel, widths = tsel[order], widths[order]
-        uniq, gs = np.unique(widths, return_index=True)
-        ge = np.append(gs[1:], widths.size)
-        for L, s, e in zip(uniq, gs, ge):
-            L = int(L)
-            sel = tsel[s:e]
-            buf = gather_ranges(pay_flat, offsets[sel], sizes[sel])
-            tail_dec[L] = nr.decode_concat(
-                buf, sizes[sel], is_comp[sel], L, mask[:L], bitval[:L])
-            tails[L] = (None, doc_of_block[sel])
-
-    fb = FramedBatch(lens, nfull, tail_len, nblocks, full_dec, tails, v)
-    return unframe_flat(fb, full_dec, tail_dec)
+def decode_docs_flat(lens: np.ndarray, sizes: np.ndarray,
+                     flags_flat: np.ndarray, flags_starts: np.ndarray,
+                     pay_flat: np.ndarray, pay_starts: np.ndarray,
+                     mask: np.ndarray, bitval: np.ndarray, v: int):
+    """Decode a batch of encoded documents — the vectorized inverse of
+    :func:`encode_batch_flat`.  Per-doc payload/flag spans are
+    addressed through explicit start offsets into shared buffers — no
+    joins, no per-doc bytes objects.  Returns ``(tok_flat,
+    tok_starts)`` in the ListArray layout."""
+    bt = _block_table(lens, sizes, flags_flat, flags_starts, pay_starts, v)
+    if bt is None:
+        return (np.zeros(0, SIGNED_DT[mask.dtype.itemsize]),
+                np.zeros(len(lens), np.int64))
+    full_dec = bt.decode(pay_flat, ~bt.is_tail, v, mask, bitval)
+    groups = bt.tail_groups()
+    tail_dec = {L: bt.decode(pay_flat, sel, L, mask, bitval)
+                for L, sel in groups}
+    return bt.unframe(full_dec, groups, tail_dec)
 
 
 def predict_sizes_ibp(fb: FramedBatch, mask: np.ndarray,
@@ -584,66 +590,96 @@ def predict_sizes_ibp(fb: FramedBatch, mask: np.ndarray,
     return out
 
 
-def decode_ibp(df: DataFrame, params: IbpParams,
-               max_batch_tokens: int | None = None) -> DataFrame:
+class EncodedRows(NamedTuple):
+    """The flat buffers of one batch of encoded rows."""
+
+    lens: np.ndarray          # int64 n_tok per doc
+    block_sizes: tuple        # (values, starts, lens) of block_sizes
+    flags: np.ndarray
+    flag_starts: np.ndarray
+    payload: np.ndarray
+    pay_starts: np.ndarray
+    pay_lens: np.ndarray
+
+    def sizes(self, docs=slice(None)) -> np.ndarray:
+        """Doc-major block sizes of ``docs`` (default: every doc)."""
+        vals, starts, lens = self.block_sizes
+        return gather_ranges(vals, starts[docs], lens[docs])
+
+
+def read_encoded_rows(rb) -> EncodedRows:
+    """Flat views of an encoded-row batch's n_tok, block_sizes,
+    block_flags and payload columns."""
+    flags, flag_starts, _ = binary_array_flat(rb.column("block_flags"))
+    return EncodedRows(
+        rb.column("n_tok").to_numpy(zero_copy_only=False).astype(np.int64),
+        list_array_flat(rb.column("block_sizes"), 4), flags, flag_starts,
+        *binary_array_flat(rb.column("payload")))
+
+
+# decoded token element: (Spark type, numpy dtype) by item width, or
+# by value kind for float corpora
+_ELEM_TYPES = {1: ("tinyint", np.int8), 2: ("smallint", np.int16),
+               4: ("int", np.int32), 8: ("bigint", np.int64),
+               "float32": ("float", np.float32),
+               "float64": ("double", np.float64)}
+
+
+def _elem_type(params) -> tuple[str, type]:
+    return _ELEM_TYPES[params.value_kind if params.value_kind != "int"
+                       else params.item_bytes]
+
+
+def decoded_schema(params: IbpParams) -> str:
+    """DDL schema of a decoder's output for these params — the single
+    source of truth, shared with the pipeline's empty-fetch
+    short-circuit so a zero-row frame unions cleanly with a decoded
+    one (float corpora decode to ``array<float>``, not the int
+    default)."""
+    return (f"doc_id string, tokens array<{_elem_type(params)[0]}>, "
+            "n_tok int, source string")
+
+
+def decoded_batch(rb, tok_flat: np.ndarray, lens: np.ndarray, dtype):
+    """Decoded-row RecordBatch ``(doc_id, tokens, n_tok, source)``; the
+    token words are viewed as ``dtype`` (float corpora round-trip
+    through their IEEE bit patterns)."""
+    return pa.RecordBatch.from_arrays(
+        [rb.column("doc_id"),
+         stages.list_col(pa.array(tok_flat.view(dtype)), lens),
+         pa.array(lens.astype(np.int32), pa.int32()),
+         rb.column("source")],
+        names=["doc_id", "tokens", "n_tok", "source"])
+
+
+def decoding_stage(kernel, schema: str, *extra_reads: str) -> stages.Stage:
+    """A stage over encoded rows, sub-batched by decoded token mass
+    (``n_tok``) up to ``framing.MAX_BATCH_TOKENS``."""
+    return stages.Stage(
+        kernel, stages.fixed(schema), stages.value_mass("n_tok"),
+        framing.MAX_BATCH_TOKENS,
+        ("doc_id", "source", "n_tok", "block_sizes", "block_flags",
+         "payload", *extra_reads))
+
+
+def decode_ibp(df: DataFrame, params: IbpParams) -> DataFrame:
     """Decode an encoded table back to ``(doc_id, tokens, n_tok,
     source)`` — per-row inverse, bit-identical token arrays.  The
     tokens element type follows ``params.item_bytes`` (tinyint /
     smallint / int / bigint).
 
-    Runs as ``mapInArrow``: payload/flag/size columns are consumed as
+    Runs as one Arrow stage: payload/flag/size columns are consumed as
     shared Arrow buffers with per-doc offsets, and the decoded tokens
     column is emitted as ONE values buffer + offsets — zero
     per-document Python end to end."""
-    import pyarrow as pa
-
     mask, bitval, v = params.mask, params.bitval, params.vec_size
-    pa_elem = {1: pa.int8(), 2: pa.int16(), 4: pa.int32(),
-               8: pa.int64()}[params.item_bytes]
-    np_out = None
-    if params.value_kind == "float32":
-        pa_elem, np_out = pa.float32(), np.float32
-    elif params.value_kind == "float64":
-        pa_elem, np_out = pa.float64(), np.float64
+    elem = _elem_type(params)[1]
 
-    def decoder(batches) -> "Iterator[pa.RecordBatch]":
-        for rb in batches:
-            names = rb.schema.names
-            n_tok_all = rb.column(names.index("n_tok")).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            for i0, i1 in _mass_ranges(n_tok_all, max_batch_tokens):
-                n = i1 - i0
-                sl = rb.slice(i0, n)
-                lens = n_tok_all[i0:i1]
-                bs_vals, bs_starts, bs_lens = list_array_flat(
-                    sl.column(names.index("block_sizes")), 4)
-                sizes = gather_ranges(bs_vals, bs_starts, bs_lens)
-                flags_flat, flags_starts, _ = binary_array_flat(
-                    sl.column(names.index("block_flags")))
-                pay_flat, pay_starts, _ = binary_array_flat(
-                    sl.column(names.index("payload")))
-                tok_flat, tok_starts = decode_docs_flat(
-                    lens, sizes, flags_flat, flags_starts,
-                    pay_flat, pay_starts, mask, bitval, v)
-                tok_off = np.zeros(n + 1, np.int32)
-                np.cumsum(lens, out=tok_off[1:])
-                if np_out is not None:  # float bit view back
-                    tok_flat = tok_flat.view(np_out)
-                tokens = pa.ListArray.from_arrays(
-                    pa.array(tok_off, pa.int32()),
-                    pa.array(tok_flat, pa_elem))
-                yield pa.RecordBatch.from_arrays(
-                    [sl.column(names.index("doc_id")),
-                     tokens,
-                     pa.array(lens.astype(np.int32), pa.int32()),
-                     sl.column(names.index("source"))],
-                    names=["doc_id", "tokens", "n_tok", "source"])
+    def decode(rb):
+        e = read_encoded_rows(rb)
+        tok_flat, _ = decode_docs_flat(
+            e.lens, e.sizes(), e.flags, e.flag_starts, e.payload,
+            e.pay_starts, mask, bitval, v)
+        return decoded_batch(rb, tok_flat, e.lens, elem)
 
-    elem = {1: "tinyint", 2: "smallint", 4: "int", 8: "bigint"}[params.item_bytes]
-    if params.value_kind == "float32":
-        elem = "float"
-    elif params.value_kind == "float64":
-        elem = "double"
-    schema = f"doc_id string, tokens array<{elem}>, n_tok int, source string"
-    return df.select("doc_id", "n_blocks", "block_sizes", "block_flags",
-                     "payload", "n_tok", "source").mapInArrow(decoder, schema=schema)
+    return stages.apply(df, decoding_stage(decode, decoded_schema(params)))

@@ -28,52 +28,66 @@ prefix Hamming distance.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..codecs import numpy_ref as nr
-from ..codecs.lightweight import _scatter_rows
 from ..codecs.numpy_ref import popcount32
+from . import stages
 from .framing import (FramedBatch, VEC_SIZE, frame_batch_flat,
-                      gather_ranges, list_array_flat, unframe_flat)
-from .ibp import _elem_bytes, _mass_ranges, _value_kind, binary_array_flat
+                      list_array_flat)
+from .ibp import (_assemble_blocks, _block_table, _elem_bytes,
+                  _full_block_ids, _value_kind, binary_array_flat,
+                  decoded_batch, decoding_stage, encoded_batch, framed_stage,
+                  read_encoded_rows)
 
 
-def _cluster_counts_batches(batches, centroids, vec_size):
-    """Shared mapInArrow body for the Lloyd/statistics passes: per
-    sub-batch, assign full blocks to centroids and emit per-(cluster,
-    bit-position) set counts plus a pos=-1 cluster-size row."""
-    import pyarrow as pa
-
+def _cluster_counts(df: DataFrame, centroids, tokens_col: str,
+                    vec_size: int):
+    """Lloyd/statistics pass: assign every full block to its nearest
+    centroid; returns per-cluster LSB-first bit-position set counts
+    ``[k, vec_size * 32]`` and cluster sizes ``[k]``.  Executors emit
+    partial counts plus a pos=-1 cluster-size row per sub-batch."""
     k = centroids.shape[0]
-    for rb in batches:
-        flat, starts, lens = list_array_flat(rb.column(0), 4)
-        for i0, i1 in _mass_ranges(lens, None):
-            fb = frame_batch_flat(flat, starts[i0:i1], lens[i0:i1], vec_size)
-            if fb.full_mat.shape[0] == 0:
+
+    def counts_of(rb, fb):
+        if fb.full_mat.shape[0] == 0:
+            return None
+        cl = hamming_assign(fb.full_mat, centroids)
+        bits = nr._bits_msb(fb.full_mat)[..., ::-1]  # LSB-first
+        outs_c, outs_p, outs_n = [], [], []
+        for c in range(k):
+            sel = cl == c
+            if not sel.any():
                 continue
-            cl = hamming_assign(fb.full_mat, centroids)
-            bits = nr._bits_msb(fb.full_mat)[..., ::-1]  # LSB-first
-            outs_c, outs_p, outs_n = [], [], []
-            for c in range(k):
-                sel = cl == c
-                if not sel.any():
-                    continue
-                counts = bits[sel].sum(axis=0, dtype=np.int64).reshape(-1)
-                outs_c.append(np.full(counts.size + 1, c, np.int32))
-                outs_p.append(np.concatenate(
-                    [[-1], np.arange(counts.size)]).astype(np.int32))
-                outs_n.append(np.concatenate([[int(sel.sum())], counts]))
-            if outs_c:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate(outs_c), pa.int32()),
-                     pa.array(np.concatenate(outs_p), pa.int32()),
-                     pa.array(np.concatenate(outs_n).astype(np.int64),
-                              pa.int64())],
-                    names=["cluster", "pos", "cnt"])
+            counts = bits[sel].sum(axis=0, dtype=np.int64).reshape(-1)
+            outs_c.append(np.full(counts.size + 1, c, np.int32))
+            outs_p.append(np.concatenate(
+                [[-1], np.arange(counts.size)]).astype(np.int32))
+            outs_n.append(np.concatenate([[int(sel.sum())], counts]))
+        if not outs_c:
+            return None
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(outs_c), pa.int32()),
+             pa.array(np.concatenate(outs_p), pa.int32()),
+             pa.array(np.concatenate(outs_n).astype(np.int64), pa.int64())],
+            names=["cluster", "pos", "cnt"])
+
+    rows = (stages.apply(df, framed_stage(
+        counts_of, "cluster int, pos int, cnt long", tokens_col, 4,
+        vec_size))
+        .groupBy("cluster", "pos").agg(F.sum("cnt").alias("cnt")).collect())
+    counts = np.zeros((k, vec_size * 32), np.int64)
+    sizes = np.zeros(k, np.int64)
+    for r in rows:
+        if r["pos"] == -1:
+            sizes[r["cluster"]] = r["cnt"]
+        else:
+            counts[r["cluster"], r["pos"]] = r["cnt"]
+    return counts, sizes
 
 
 def _frame_sample(rows: DataFrame, tokens_col: str,
@@ -92,8 +106,8 @@ def _require_int32_kmeans(df: DataFrame, tokens_col: str, op: str) -> None:
     ``array<int>``.  Refuse wider elements and float elements (a float
     column would come back as a different type); 64-bit and float input
     go through the pure-IBP path (encode_ibp/decode_ibp)."""
-    if (_elem_bytes(df, tokens_col) != 4
-            or _value_kind(df, tokens_col) != "int"):
+    if (_elem_bytes(df.schema, tokens_col) != 4
+            or _value_kind(df.schema, tokens_col) != "int"):
         raise ValueError(
             f"{op}: tokens column must be array<int> — the kmeans codec "
             "clusters 32-bit integer words; use encode_ibp/decode_ibp for "
@@ -223,21 +237,8 @@ def learn_kmeans(df: DataFrame, k: int = 8, iters: int = 10,
 
     # ---- Lloyd iterations (distributed assign + majority re-center) -----
     for _ in range(iters):
-        cent = centroids  # closure capture per iteration
-
-        def it(batches):
-            yield from _cluster_counts_batches(batches, cent, vec_size)
-
-        rows = (toks.mapInArrow(it, schema="cluster int, pos int, cnt long")
-                .groupBy("cluster", "pos").agg(F.sum("cnt").alias("cnt"))
-                .collect())
-        counts = np.zeros((k, vec_size * 32), np.int64)
-        sizes = np.zeros(k, np.int64)
-        for r in rows:
-            if r["pos"] == -1:
-                sizes[r["cluster"]] = r["cnt"]
-            else:
-                counts[r["cluster"], r["pos"]] = r["cnt"]
+        counts, sizes = _cluster_counts(toks, centroids, tokens_col,
+                                        vec_size)
         # majority vote with integer division (construct_bitmasks :230)
         weights = (np.uint64(1) << np.arange(32, dtype=np.uint64))
         new = np.zeros((k, vec_size), np.uint32)
@@ -249,19 +250,7 @@ def learn_kmeans(df: DataFrame, k: int = 8, iters: int = 10,
         centroids = new
 
     # ---- final per-cluster (mask, bitval): global-threshold sweep -------
-    def stats(batches):
-        yield from _cluster_counts_batches(batches, centroids, vec_size)
-
-    rows = (toks.mapInArrow(stats, schema="cluster int, pos int, cnt long")
-            .groupBy("cluster", "pos").agg(F.sum("cnt").alias("cnt"))
-            .collect())
-    counts = np.zeros((k, vec_size * 32), np.int64)
-    sizes = np.zeros(k, np.int64)
-    for r in rows:
-        if r["pos"] == -1:
-            sizes[r["cluster"]] = r["cnt"]
-        else:
-            counts[r["cluster"], r["pos"]] = r["cnt"]
+    counts, sizes = _cluster_counts(toks, centroids, tokens_col, vec_size)
 
     grid = [threshold] if threshold is not None else nr.sweep_thresholds()
     cand = []  # per theta: (masks [k,v], bitvals [k,v])
@@ -276,43 +265,36 @@ def learn_kmeans(df: DataFrame, k: int = 8, iters: int = 10,
         cand.append((ms, bs))
 
     # one distributed pass evaluates savings for every theta
-    def evaluator(batches):
-        import pyarrow as pa
-
-        for rb in batches:
-            flat, starts, lens = list_array_flat(rb.column(0), 4)
-            for i0, i1 in _mass_ranges(lens, None):
-                fb = frame_batch_flat(flat, starts[i0:i1], lens[i0:i1],
-                                      vec_size)
-                if fb.full_mat.shape[0] == 0:
+    def evaluator(rb, fb):
+        if fb.full_mat.shape[0] == 0:
+            return None
+        cl = hamming_assign(fb.full_mat, centroids)
+        saveds = np.zeros(len(grid), np.int64)
+        for g, (ms, bs) in enumerate(cand):
+            popc = popcount32(ms)
+            for c in range(k):
+                sel = cl == c
+                if not sel.any():
                     continue
-                cl = hamming_assign(fb.full_mat, centroids)
-                saveds = np.zeros(len(grid), np.int64)
-                for g, (ms, bs) in enumerate(cand):
-                    popc = popcount32(ms)
-                    for c in range(k):
-                        sel = cl == c
-                        if not sel.any():
-                            continue
-                        sub = fb.full_mat[sel]
-                        pred = (sub & ms[c][None, :]) == bs[c][None, :]
-                        # exact float32 matvec (see ibp._gated_savings);
-                        # same 2^24 exactness guard as there
-                        if int(popc[c].sum()) < (1 << 24):
-                            per_vec = (pred.astype(np.float32)
-                                       @ popc[c].astype(np.float32)
-                                       ).astype(np.int64)
-                        else:
-                            per_vec = pred @ popc[c].astype(np.int64)
-                        saveds[g] += np.where(per_vec > vec_size,
-                                              per_vec - vec_size, 0).sum()
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.arange(len(grid), dtype=np.int32)),
-                     pa.array(saveds, pa.int64())],
-                    names=["ti", "saved"])
+                sub = fb.full_mat[sel]
+                pred = (sub & ms[c][None, :]) == bs[c][None, :]
+                # exact float32 matvec (see ibp._gated_savings); same
+                # 2^24 exactness guard as there
+                if int(popc[c].sum()) < (1 << 24):
+                    per_vec = (pred.astype(np.float32)
+                               @ popc[c].astype(np.float32)).astype(np.int64)
+                else:
+                    per_vec = pred @ popc[c].astype(np.int64)
+                saveds[g] += np.where(per_vec > vec_size,
+                                      per_vec - vec_size, 0).sum()
+        return pa.RecordBatch.from_arrays(
+            [pa.array(np.arange(len(grid), dtype=np.int32)),
+             pa.array(saveds, pa.int64())],
+            names=["ti", "saved"])
 
-    ev = (toks.mapInArrow(evaluator, schema="ti int, saved long")
-          .groupBy("ti").agg(F.sum("saved").alias("saved")).collect())
+    ev = (stages.apply(toks, framed_stage(
+        evaluator, "ti int, saved long", tokens_col, 4, vec_size))
+        .groupBy("ti").agg(F.sum("saved").alias("saved")).collect())
     toks.unpersist()
     saved_by_t = np.zeros(len(grid), np.int64)
     for r in ev:
@@ -337,70 +319,31 @@ ENCODED_KMEANS_SCHEMA = (
 )
 
 
-def _encode_group(mat, mask, bitval):
-    return nr.encode_concat(mat, mask, bitval)
-
-
 def _encode_kmeans_flat(fb: FramedBatch, cents, masks, bitvals):
     """Clustered encode of one framed batch into flat buffers (the
     kmeans twin of ibp.encode_batch_flat): global doc-major block
     table, per-(cluster, width) group encodes, ONE scatter per group,
     ONE packbits for all flag bitmaps.  Returns ``(buf, doc_bytes,
     sizes, clusters, flags_packed, flag_nbytes)``."""
-    ndocs = len(fb.lens)
-    nb_tot = int(fb.nblocks.sum())
-    sizes = np.zeros(nb_tot, np.int64)
-    is_comp = np.zeros(nb_tot, bool)
-    clusters = np.zeros(nb_tot, np.uint8)
-    pending: list[tuple] = []  # (block ids, group blob, sizes)
     blk_start = np.cumsum(fb.nblocks) - fb.nblocks
-    # full blocks, grouped by cluster
-    if fb.full_mat.shape[0]:
-        cl = hamming_assign(fb.full_mat, cents)
-        doc_of_full = np.repeat(np.arange(ndocs), fb.nfull)
-        within = (np.arange(fb.full_mat.shape[0])
-                  - np.repeat(np.cumsum(fb.nfull) - fb.nfull, fb.nfull))
-        gidx = blk_start[doc_of_full] + within
-        clusters[gidx] = cl.astype(np.uint8)
-        for c in np.unique(cl):
-            sel = cl == c
-            flat, sz, ic = _encode_group(fb.full_mat[sel], masks[c],
-                                         bitvals[c])
-            tgt = gidx[sel]
-            sizes[tgt] = sz
-            is_comp[tgt] = ic
-            pending.append((tgt, flat, sz))
-    # tails: assign by prefix distance, group by (cluster, L)
-    for L, (mat, docs) in fb.tails.items():
+    clusters = np.zeros(int(fb.nblocks.sum()), np.uint8)
+    groups = []
+    # full blocks by cluster; tails by (cluster, width), assigned by
+    # prefix distance
+    blocks = [(fb.full_mat, _full_block_ids(fb, blk_start), fb.vec_size)
+              ] if fb.full_mat.shape[0] else []
+    blocks += [(mat, blk_start[docs] + fb.nblocks[docs] - 1, L)
+               for L, (mat, docs) in fb.tails.items()]
+    for mat, gidx, L in blocks:
         cl = hamming_assign(mat, cents[:, :L])
-        gidx = blk_start[docs] + fb.nblocks[docs] - 1
         clusters[gidx] = cl.astype(np.uint8)
         for c in np.unique(cl):
             sel = cl == c
-            flat, sz, ic = _encode_group(mat[sel], masks[c][:L],
-                                         bitvals[c][:L])
-            tgt = gidx[sel]
-            sizes[tgt] = sz
-            is_comp[tgt] = ic
-            pending.append((tgt, flat, sz))
-    offsets = np.cumsum(sizes) - sizes
-    buf = np.zeros(int(sizes.sum()), np.uint8)
-    for tgt, flat, sz in pending:
-        _scatter_rows(buf, offsets[tgt], flat, sz)
-    # blocks are doc-major, so each doc's payload is one contiguous span
-    doc_bytes = np.add.reduceat(
-        np.append(sizes, 0), np.minimum(blk_start, nb_tot)
-    ) * (fb.nblocks > 0) if ndocs else np.zeros(0, np.int64)
-    # per-doc byte-padded flag bitmaps in ONE packbits call
-    flag_bits = ((fb.nblocks + 7) // 8) * 8
-    fbit_start = np.cumsum(flag_bits) - flag_bits
-    bigbits = np.zeros(int(flag_bits.sum()), np.uint8)
-    if nb_tot:
-        within_all = np.arange(nb_tot) - np.repeat(blk_start, fb.nblocks)
-        bigbits[np.repeat(fbit_start, fb.nblocks) + within_all] = is_comp
-    flags_packed = np.packbits(bigbits, bitorder="little")
-    return (buf, doc_bytes.astype(np.int64), sizes, clusters,
-            flags_packed, flag_bits // 8)
+            groups.append((gidx[sel], *nr.encode_concat(
+                mat[sel], masks[c][:L], bitvals[c][:L])))
+    buf, doc_bytes, sizes, flags_packed, flag_nbytes = _assemble_blocks(
+        fb, blk_start, groups)
+    return buf, doc_bytes, sizes, clusters, flags_packed, flag_nbytes
 
 
 def encode_ibp_kmeans(df: DataFrame, kp: KmeansParams,
@@ -408,60 +351,20 @@ def encode_ibp_kmeans(df: DataFrame, kp: KmeansParams,
     """Per-block cluster assignment + per-cluster (mask, bitval) encode;
     cluster ids stored as one u8 per block (``block_clusters``).
 
-    Runs as ``mapInArrow`` over flat buffers (see
+    Runs as one Arrow stage over flat buffers (see
     :func:`_encode_kmeans_flat`) — zero per-document Python."""
-    import pyarrow as pa
-
     _require_int32_kmeans(df, tokens_col, "encode_ibp_kmeans")
-    v = kp.vec_size
     cents, masks, bitvals = kp.centroids, kp.masks, kp.bitvals
 
-    def encoder(batches) -> "Iterator[pa.RecordBatch]":
-        for rb in batches:
-            names = rb.schema.names
-            flat, starts, lens = list_array_flat(
-                rb.column(names.index(tokens_col)), 4)
-            for i0, i1 in _mass_ranges(lens, None):
-                n = i1 - i0
-                fb = frame_batch_flat(flat, starts[i0:i1], lens[i0:i1], v)
-                buf, doc_bytes, sizes, clusters, flags_packed, flag_nb = (
-                    _encode_kmeans_flat(fb, cents, masks, bitvals))
-                pay_off = np.zeros(n + 1, np.int32)
-                np.cumsum(doc_bytes, out=pay_off[1:])
-                payload = pa.BinaryArray.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(pay_off), pa.py_buffer(buf)])
-                blk_off = np.zeros(n + 1, np.int32)
-                np.cumsum(fb.nblocks, out=blk_off[1:])
-                block_sizes = pa.ListArray.from_arrays(
-                    pa.array(blk_off, pa.int32()),
-                    pa.array(sizes.astype(np.int32), pa.int32()))
-                # block_clusters: the doc-major u8 table IS the binary
-                # column; its offsets are the block offsets
-                block_clusters = pa.BinaryArray.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(blk_off), pa.py_buffer(clusters)])
-                flg_off = np.zeros(n + 1, np.int32)
-                np.cumsum(flag_nb, out=flg_off[1:])
-                block_flags = pa.BinaryArray.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(flg_off),
-                     pa.py_buffer(flags_packed)])
-                yield pa.RecordBatch.from_arrays(
-                    [rb.column(names.index("doc_id")).slice(i0, n),
-                     rb.column(names.index("source")).slice(i0, n),
-                     pa.array(fb.lens.astype(np.int32), pa.int32()),
-                     pa.array(fb.nblocks.astype(np.int32), pa.int32()),
-                     block_sizes, block_flags, block_clusters, payload,
-                     pa.array(doc_bytes, pa.int64()),
-                     pa.array(fb.lens * 4, pa.int64()),
-                     pa.array(np.full(n, "ibp_kmeans", object))],
-                    names=["doc_id", "source", "n_tok", "n_blocks",
-                           "block_sizes", "block_flags", "block_clusters",
-                           "payload", "comp_bytes", "raw_bytes", "codec"])
+    def encode(rb, fb):
+        buf, doc_bytes, sizes, clusters, flags, flag_nb = (
+            _encode_kmeans_flat(fb, cents, masks, bitvals))
+        return encoded_batch(rb, fb.lens, fb.nblocks, sizes, flags, flag_nb,
+                             buf, doc_bytes, "ibp_kmeans", clusters=clusters)
 
-    cols = ["doc_id", tokens_col, "source"]
-    return df.select(*cols).mapInArrow(encoder, schema=ENCODED_KMEANS_SCHEMA)
+    return stages.apply(df, framed_stage(
+        encode, ENCODED_KMEANS_SCHEMA, tokens_col, 4, kp.vec_size,
+        reads=("doc_id", tokens_col, "source")))
 
 
 def _decode_kmeans_flat(lens, sizes, flags_flat, flags_starts,
@@ -470,105 +373,44 @@ def _decode_kmeans_flat(lens, sizes, flags_flat, flags_starts,
     """Flat-native clustered decode (the kmeans twin of
     ibp.decode_docs_flat) — per-doc spans addressed through explicit
     start offsets into shared Arrow buffers."""
-    ndocs = len(lens)
-    lens = np.asarray(lens, np.int64)
-    nfull = lens // v
-    tail_len = lens % v
-    nblocks = nfull + (tail_len > 0)
-    nb_tot = int(nblocks.sum())
-    if ndocs == 0 or nb_tot == 0:
-        return np.zeros(0, np.int32), np.zeros(ndocs, np.int64)
-    sizes = np.asarray(sizes, np.int64)
-    blk_start = np.cumsum(nblocks) - nblocks
-    exc = np.append(np.cumsum(sizes) - sizes, 0)
-    local = exc[:-1] - np.repeat(exc[np.minimum(blk_start, nb_tot)], nblocks)
-    offsets = np.repeat(pay_starts, nblocks) + local
-    within = np.arange(nb_tot, dtype=np.int64) - np.repeat(blk_start, nblocks)
-    fbyte = np.repeat(flags_starts, nblocks) + (within >> 3)
-    is_comp = ((flags_flat[fbyte].astype(np.int64) >> (within & 7)) & 1
-               ).astype(bool)
-    clusters = clus_flat[np.repeat(clus_starts, nblocks) + within]
-    doc_of_block = np.repeat(np.arange(ndocs), nblocks)
-    is_tail = (tail_len[doc_of_block] > 0) & (
-        within == nblocks[doc_of_block] - 1)
-
-    full_dec = np.zeros((int((~is_tail).sum()), v), np.uint32)
-    fpos = np.cumsum(~is_tail) - 1  # full-block ordinal per block
-    for c in np.unique(clusters[~is_tail]):
-        sel = ~is_tail & (clusters == c)
-        buf = gather_ranges(pay_flat, offsets[sel], sizes[sel])
-        full_dec[fpos[sel]] = nr.decode_concat(
-            buf, sizes[sel], is_comp[sel], v, masks[c], bitvals[c])
-
+    bt = _block_table(lens, sizes, flags_flat, flags_starts, pay_starts, v)
+    if bt is None:
+        return np.zeros(0, np.int32), np.zeros(len(lens), np.int64)
+    clusters = clus_flat[np.repeat(clus_starts, bt.nblocks) + bt.within]
+    full = ~bt.is_tail
+    full_dec = np.zeros((int(full.sum()), v), np.uint32)
+    fpos = np.cumsum(full) - 1  # full-block ordinal per block
+    for c in np.unique(clusters[full]):
+        sel = full & (clusters == c)
+        full_dec[fpos[sel]] = bt.decode(pay_flat, sel, v, masks[c],
+                                        bitvals[c])
+    groups = bt.tail_groups()
     tail_dec: dict[int, np.ndarray] = {}
-    tails: dict[int, tuple] = {}
-    tsel = np.flatnonzero(is_tail)
-    if tsel.size:
-        widths = tail_len[doc_of_block[tsel]]
-        order = np.argsort(widths, kind="stable")
-        tsel, widths = tsel[order], widths[order]
-        uniq, gs = np.unique(widths, return_index=True)
-        ge = np.append(gs[1:], widths.size)
-        for L, s, e in zip(uniq, gs, ge):
-            L = int(L)
-            sel = tsel[s:e]
-            dec = np.zeros((sel.size, L), np.uint32)
-            for c in np.unique(clusters[sel]):
-                cs = sel[clusters[sel] == c]
-                buf = gather_ranges(pay_flat, offsets[cs], sizes[cs])
-                dec[clusters[sel] == c] = nr.decode_concat(
-                    buf, sizes[cs], is_comp[cs], L,
-                    masks[c][:L], bitvals[c][:L])
-            tail_dec[L] = dec
-            tails[L] = (None, doc_of_block[sel])
-
-    fb = FramedBatch(lens, nfull, tail_len, nblocks, full_dec, tails, v)
-    return unframe_flat(fb, full_dec, tail_dec)
+    for L, sel in groups:
+        dec = np.zeros((sel.size, L), np.uint32)
+        for c in np.unique(clusters[sel]):
+            in_c = clusters[sel] == c
+            dec[in_c] = bt.decode(pay_flat, sel[in_c], L, masks[c],
+                                  bitvals[c])
+        tail_dec[L] = dec
+    return bt.unframe(full_dec, groups, tail_dec)
 
 
 def decode_ibp_kmeans(df: DataFrame, kp: KmeansParams) -> DataFrame:
-    """Inverse of :func:`encode_ibp_kmeans`, as ``mapInArrow`` over
+    """Inverse of :func:`encode_ibp_kmeans`, as one Arrow stage over
     flat buffers — zero per-document Python."""
-    import pyarrow as pa
-
-    v = kp.vec_size
     masks, bitvals = kp.masks, kp.bitvals
 
-    def decoder(batches) -> "Iterator[pa.RecordBatch]":
-        for rb in batches:
-            names = rb.schema.names
-            n_tok_all = rb.column(names.index("n_tok")).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            for i0, i1 in _mass_ranges(n_tok_all, None):
-                n = i1 - i0
-                sl = rb.slice(i0, n)
-                lens = n_tok_all[i0:i1]
-                bs_vals, bs_starts, bs_lens = list_array_flat(
-                    sl.column(names.index("block_sizes")), 4)
-                sizes = gather_ranges(bs_vals, bs_starts, bs_lens)
-                flags_flat, flags_starts, _ = binary_array_flat(
-                    sl.column(names.index("block_flags")))
-                clus_flat, clus_starts, _ = binary_array_flat(
-                    sl.column(names.index("block_clusters")))
-                pay_flat, pay_starts, _ = binary_array_flat(
-                    sl.column(names.index("payload")))
-                tok_flat, _ = _decode_kmeans_flat(
-                    lens, sizes, flags_flat, flags_starts,
-                    clus_flat, clus_starts, pay_flat, pay_starts,
-                    masks, bitvals, v)
-                tok_off = np.zeros(n + 1, np.int32)
-                np.cumsum(lens, out=tok_off[1:])
-                tokens = pa.ListArray.from_arrays(
-                    pa.array(tok_off, pa.int32()),
-                    pa.array(tok_flat.view(np.int32), pa.int32()))
-                yield pa.RecordBatch.from_arrays(
-                    [sl.column(names.index("doc_id")),
-                     tokens,
-                     pa.array(lens.astype(np.int32), pa.int32()),
-                     sl.column(names.index("source"))],
-                    names=["doc_id", "tokens", "n_tok", "source"])
+    def decode(rb):
+        e = read_encoded_rows(rb)
+        clus_flat, clus_starts, _ = binary_array_flat(
+            rb.column("block_clusters"))
+        tok_flat, _ = _decode_kmeans_flat(
+            e.lens, e.sizes(), e.flags, e.flag_starts, clus_flat,
+            clus_starts, e.payload, e.pay_starts, masks, bitvals,
+            kp.vec_size)
+        return decoded_batch(rb, tok_flat, e.lens, np.int32)
 
-    schema = "doc_id string, tokens array<int>, n_tok int, source string"
-    return df.select("doc_id", "n_blocks", "block_sizes", "block_flags",
-                     "block_clusters", "payload", "n_tok", "source"
-                     ).mapInArrow(decoder, schema=schema)
+    return stages.apply(df, decoding_stage(
+        decode, "doc_id string, tokens array<int>, n_tok int, source string",
+        "block_clusters"))

@@ -16,21 +16,23 @@ path, while `raw` below is the document-level never-expand guarantee.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from ..codecs import lightweight as lw
 from ..codecs.bitutil import width_for
+from . import stages
 from .framing import frame_batch_flat, gather_ranges, list_array_flat
-from .ibp import (ENCODED_SCHEMA, IbpParams, _elem_bytes, _mass_ranges,
-                  binary_array_flat, decode_docs_flat, encode_batch_flat,
-                  predict_sizes_ibp)
+from .ibp import (ENCODED_SCHEMA, IbpParams, _elem_bytes, _elem_type,
+                  decode_docs_flat, decoded_batch, decoded_schema,
+                  decoding_stage, encode_batch_flat, encoded_batch,
+                  predict_sizes_ibp, read_encoded_rows, token_stage)
 
 
-def _require_int32(df: DataFrame, tokens_col: str, op: str) -> None:
+def _require_int32(schema: StructType, tokens_col: str, op: str) -> None:
     """The lightweight codec family packs 32-bit words; silently
     truncating array<bigint> input would corrupt data, so refuse it
     here — 64-bit elements go through the pure-IBP path (encode_ibp /
@@ -40,7 +42,7 @@ def _require_int32(df: DataFrame, tokens_col: str, op: str) -> None:
     the family is a bijection on patterns (dict/RLE match patterns;
     FOR/DFOR arithmetic on the signed int32 view inverts exactly), so
     float round trips are bit-identical."""
-    if _elem_bytes(df, tokens_col) != 4:
+    if _elem_bytes(schema, tokens_col) != 4:
         raise ValueError(
             f"{op}: tokens column must be array<int> or array<float> — "
             "the dict/RLE/FOR codec family is 32-bit; use "
@@ -191,10 +193,7 @@ def encode_docs_auto_flat(flat: np.ndarray, lens: np.ndarray,
         if docs.size == 0:
             continue
         if codec == "ibp":
-            sub_flat = gather_ranges(flat, starts[docs], lens[docs])
-            sub_lens = lens[docs]
-            sub_fb = frame_batch_flat(
-                sub_flat, np.cumsum(sub_lens) - sub_lens, sub_lens, v)
+            sub_fb = frame_batch_flat(flat, starts[docs], lens[docs], v)
             buf, doc_bytes, bsz_flat, flags_packed, flag_nb = (
                 encode_batch_flat(sub_fb, params.mask, params.bitval))
             pbytes[docs] = doc_bytes
@@ -244,79 +243,53 @@ def encode_docs_auto_flat(flat: np.ndarray, lens: np.ndarray,
     return pick, out, pbytes, bsz_all, nblocks_out, flags_all, fnbytes
 
 
+def _compact_tokens(rb, tokens_col: str):
+    """The sub-batch's tokens as one contiguous doc-major uint32 buffer
+    plus per-doc lengths (handles slices and null-doc gaps in the Arrow
+    values buffer)."""
+    values, starts, lens = list_array_flat(rb.column(tokens_col), 4)
+    return gather_ranges(values, starts, lens).view(np.uint32), lens
+
+
+def encode_auto_stage(params: IbpParams, tokens_col: str = "tokens",
+                      allowed: tuple[str, ...] = CODEC_ORDER,
+                      passthrough: tuple[str, ...] = ()) -> stages.Stage:
+    """The auto-selected encode as a composable stage (see
+    :func:`encode_auto`)."""
+    codec_pool = np.array(CODEC_ORDER, object)
+
+    def encode(rb):
+        flat, lens = _compact_tokens(rb, tokens_col)
+        (pick, out, pbytes, bsz_all, nblocks, flags_all,
+         fnbytes) = encode_docs_auto_flat(flat, lens, params, allowed)
+        return encoded_batch(rb, lens, nblocks, bsz_all, flags_all, fnbytes,
+                             out, pbytes, codec_pool[pick],
+                             extra=passthrough)
+
+    def schema(in_schema: StructType) -> StructType:
+        _require_int32(in_schema, tokens_col, "encode_auto")
+        out = StructType.fromDDL(ENCODED_SCHEMA)
+        for c in passthrough:
+            out.add(c, in_schema[c].dataType)
+        return out
+
+    return token_stage(encode, schema, tokens_col,
+                        ("doc_id", tokens_col, "source", *passthrough))
+
+
 def encode_auto(df: DataFrame, params: IbpParams,
                 tokens_col: str = "tokens",
                 allowed: tuple[str, ...] = CODEC_ORDER,
-                passthrough: tuple[str, ...] = (),
-                max_batch_tokens: int | None = None) -> DataFrame:
+                passthrough: tuple[str, ...] = ()) -> DataFrame:
     """Auto-selected encode: same output schema as encode_ibp, with the
     ``codec`` column recording the per-document choice.  ``passthrough``
     columns (e.g. a salt bucket) are carried to the output unchanged —
     cheaper than re-joining them afterwards.
 
-    Runs as ``mapInArrow`` on flat buffers end to end (see
+    Runs as one Arrow stage on flat buffers end to end (see
     :func:`encode_docs_auto_flat`)."""
-    import pyarrow as pa
-
-    _require_int32(df, tokens_col, "encode_auto")
-
-    def encoder(batches) -> "Iterator[pa.RecordBatch]":
-        codec_pool = np.array(CODEC_ORDER, object)
-        for rb in batches:
-            names = rb.schema.names
-            values, starts, lens_all = list_array_flat(
-                rb.column(names.index(tokens_col)), 4)
-            for i0, i1 in _mass_ranges(lens_all, max_batch_tokens):
-                n = i1 - i0
-                lens = lens_all[i0:i1]
-                # compact to one contiguous doc-major buffer (handles
-                # slices and null-doc gaps in the Arrow values buffer)
-                cflat = gather_ranges(values, starts[i0:i1], lens
-                                      ).view(np.uint32)
-                (pick, out, pbytes, bsz_all, nblocks, flags_all,
-                 fnbytes) = encode_docs_auto_flat(cflat, lens, params,
-                                                  allowed)
-                pay_off = np.zeros(n + 1, np.int32)
-                np.cumsum(pbytes, out=pay_off[1:])
-                payload = pa.BinaryArray.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(pay_off), pa.py_buffer(out)])
-                blk_off = np.zeros(n + 1, np.int32)
-                np.cumsum(nblocks, out=blk_off[1:])
-                block_sizes = pa.ListArray.from_arrays(
-                    pa.array(blk_off, pa.int32()),
-                    pa.array(bsz_all.astype(np.int32), pa.int32()))
-                flg_off = np.zeros(n + 1, np.int32)
-                np.cumsum(fnbytes, out=flg_off[1:])
-                block_flags = pa.BinaryArray.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(flg_off), pa.py_buffer(flags_all)])
-                arrays = [
-                    rb.column(names.index("doc_id")).slice(i0, n),
-                    rb.column(names.index("source")).slice(i0, n),
-                    pa.array(lens.astype(np.int32), pa.int32()),
-                    pa.array(nblocks.astype(np.int32), pa.int32()),
-                    block_sizes, block_flags, payload,
-                    pa.array(pbytes, pa.int64()),
-                    pa.array(lens * 4, pa.int64()),
-                    pa.array(codec_pool[pick]),
-                ]
-                out_names = ["doc_id", "source", "n_tok", "n_blocks",
-                             "block_sizes", "block_flags", "payload",
-                             "comp_bytes", "raw_bytes", "codec"]
-                for c in passthrough:
-                    arrays.append(rb.column(names.index(c)).slice(i0, n))
-                    out_names.append(c)
-                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    cols = ["doc_id", tokens_col, "source", *passthrough]
-    schema = ENCODED_SCHEMA
-    if passthrough:
-        extra = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.select(*passthrough).schema.fields)
-        schema = f"{ENCODED_SCHEMA}, {extra}"
-    return df.select(*cols).mapInArrow(encoder, schema=schema)
+    return stages.apply(df, encode_auto_stage(params, tokens_col, allowed,
+                                              passthrough))
 
 
 def predicted_sizes_by_source(df: DataFrame, params: IbpParams,
@@ -324,130 +297,83 @@ def predicted_sizes_by_source(df: DataFrame, params: IbpParams,
     """Per-(source, codec) predicted total bytes for EVERY candidate
     codec over the same data — the analog of the reference's Table-4
     invariance-vs-bitpack comparison (tests/invariance_perc.py:27-76),
-    with the whole codec family instead of two baselines.  One
-    ``mapInArrow`` scan, no encoding; each sub-batch pre-aggregates at
-    (source, codec) grain.  Rows with a null ``source`` are left out of
-    the totals."""
-    import pyarrow as pa
-
-    _require_int32(df, tokens_col, "predicted_sizes_by_source")
+    with the whole codec family instead of two baselines.  One Arrow
+    stage, no encoding; each sub-batch pre-aggregates at (source,
+    codec) grain.  Rows with a null ``source`` are left out of the
+    totals."""
     v = params.vec_size
     too_big = np.iinfo(np.int64).max
 
-    def sizer(batches) -> "Iterator[pa.RecordBatch]":
-        for rb in batches:
-            values, starts, lens_all = list_array_flat(rb.column(0), 4)
-            for i0, i1 in _mass_ranges(lens_all, None):
-                lens = lens_all[i0:i1]
-                flat = gather_ranges(values, starts[i0:i1], lens
-                                     ).view(np.uint32)
-                fb = frame_batch_flat(flat, np.cumsum(lens) - lens, lens, v)
-                sizes = predict_sizes(flat, lens, fb, params)
-                src = rb.column(1).slice(i0, i1 - i0)
-                has_src = src.is_valid().to_numpy(zero_copy_only=False)
-                parts = []
-                for codec, sz in sizes.items():
-                    keep = pa.array(has_src & (sz < too_big))
-                    n = int(keep.true_count)
-                    parts.append(pa.table({
-                        "source": src.filter(keep),
-                        "codec": pa.array([codec] * n, pa.string()),
-                        "bytes": pa.array(sz, pa.int64()).filter(keep)}))
-                agg = (pa.concat_tables(parts).group_by(["source", "codec"])
-                       .aggregate([("bytes", "sum"), ("bytes", "count")]))
-                yield from agg.select(
-                    ["source", "codec", "bytes_sum", "bytes_count"]
-                ).rename_columns(
-                    ["source", "codec", "total_bytes", "docs"]).to_batches()
+    def sizer(rb):
+        flat, lens = _compact_tokens(rb, tokens_col)
+        fb = frame_batch_flat(flat, np.cumsum(lens) - lens, lens, v)
+        sizes = predict_sizes(flat, lens, fb, params)
+        src = rb.column("source")
+        has_src = src.is_valid().to_numpy(zero_copy_only=False)
+        parts = []
+        for codec, sz in sizes.items():
+            keep = pa.array(has_src & (sz < too_big))
+            n = int(keep.true_count)
+            parts.append(pa.table({
+                "source": src.filter(keep),
+                "codec": pa.array([codec] * n, pa.string()),
+                "bytes": pa.array(sz, pa.int64()).filter(keep)}))
+        agg = (pa.concat_tables(parts).group_by(["source", "codec"])
+               .aggregate([("bytes", "sum"), ("bytes", "count")]))
+        return agg.select(
+            ["source", "codec", "bytes_sum", "bytes_count"]
+        ).rename_columns(["source", "codec", "total_bytes", "docs"])
 
-    part = df.select(tokens_col, "source").mapInArrow(
-        sizer, schema="source string, codec string, total_bytes long, docs long")
+    def schema(in_schema: StructType) -> StructType:
+        _require_int32(in_schema, tokens_col, "predicted_sizes_by_source")
+        return StructType.fromDDL(
+            "source string, codec string, total_bytes long, docs long")
+
+    part = stages.apply(df, token_stage(sizer, schema, tokens_col,
+                                         (tokens_col, "source")))
     return (part.groupBy("source", "codec")
             .agg(F.sum("total_bytes").alias("total_bytes"),
                  F.sum("docs").alias("docs")))
 
 
-def decoded_schema(params: IbpParams) -> str:
-    """DDL schema of :func:`decode_auto`'s output for these params —
-    the single source of truth, shared with the pipeline's empty-fetch
-    short-circuit so a zero-row frame unions cleanly with a decoded
-    one (float corpora decode to ``array<float>``, not the int
-    default)."""
-    elem = "float" if params.value_kind == "float32" else "int"
-    return (f"doc_id string, tokens array<{elem}>, n_tok int, "
-            "source string")
+def decode_auto_stage(params: IbpParams) -> stages.Stage:
+    """The mixed-codec decode as a composable stage (see
+    :func:`decode_auto`)."""
+    mask, bitval, v = params.mask, params.bitval, params.vec_size
+    elem = _elem_type(params)[1]
+
+    def decode(rb):
+        e = read_encoded_rows(rb)
+        codecs = rb.column("codec").to_numpy(zero_copy_only=False)
+        tok_flat = np.zeros(int(e.lens.sum()), np.int32)
+        tok_starts = np.cumsum(e.lens) - e.lens
+        for codec in np.unique(codecs):
+            docs = np.flatnonzero(codecs == codec)
+            lens = e.lens[docs]
+            if codec == "ibp":
+                sub_flat, _ = decode_docs_flat(
+                    lens, e.sizes(docs), e.flags, e.flag_starts[docs],
+                    e.payload, e.pay_starts[docs], mask, bitval, v)
+                vals = sub_flat.view(np.int32)
+            elif codec == "raw":
+                vals = np.ascontiguousarray(gather_ranges(
+                    e.payload, e.pay_starts[docs], 4 * lens)
+                ).view("<i4").astype(np.int32)
+            else:
+                blob = gather_ranges(
+                    e.payload, e.pay_starts[docs], e.pay_lens[docs])
+                vals = getattr(lw, f"decode_{codec}")(
+                    blob, e.pay_lens[docs], lens).view(np.int32)
+            lw._scatter_rows(tok_flat, tok_starts[docs], vals, lens)
+        return decoded_batch(rb, tok_flat, e.lens, elem)
+
+    return decoding_stage(decode, decoded_schema(params), "codec")
 
 
-def decode_auto(df: DataFrame, params: IbpParams,
-                max_batch_tokens: int | None = None) -> DataFrame:
+def decode_auto(df: DataFrame, params: IbpParams) -> DataFrame:
     """Decode a mixed-codec encoded table (inverse of encode_auto).
 
-    Runs as ``mapInArrow``: each codec group decodes from shared Arrow
+    Runs as one Arrow stage: each codec group decodes from shared Arrow
     buffers into one flat tokens buffer via offset-table scatters —
     zero per-document Python."""
-    import pyarrow as pa
-
-    mask, bitval, v = params.mask, params.bitval, params.vec_size
-    as_float = params.value_kind == "float32"
-
-    def decoder(batches) -> "Iterator[pa.RecordBatch]":
-        for rb in batches:
-            names = rb.schema.names
-            n_tok_all = rb.column(names.index("n_tok")).to_numpy(
-                zero_copy_only=False).astype(np.int64)
-            codec_all = rb.column(names.index("codec")).to_numpy(
-                zero_copy_only=False)
-            for i0, i1 in _mass_ranges(n_tok_all, max_batch_tokens):
-                n = i1 - i0
-                sl = rb.slice(i0, n)
-                lens = n_tok_all[i0:i1]
-                codecs = codec_all[i0:i1]
-                pay_flat, pay_starts, pay_lens = binary_array_flat(
-                    sl.column(names.index("payload")))
-                tok_flat = np.zeros(int(lens.sum()), np.int32)
-                tok_starts = np.cumsum(lens) - lens
-                for codec in np.unique(codecs):
-                    docs = np.flatnonzero(codecs == codec)
-                    if codec == "ibp":
-                        bs_vals, bs_starts, bs_lens = list_array_flat(
-                            sl.column(names.index("block_sizes")), 4)
-                        sizes = gather_ranges(
-                            bs_vals, bs_starts[docs], bs_lens[docs])
-                        flags_flat, flags_starts, _ = binary_array_flat(
-                            sl.column(names.index("block_flags")))
-                        sub_flat, _ = decode_docs_flat(
-                            lens[docs], sizes, flags_flat,
-                            flags_starts[docs], pay_flat, pay_starts[docs],
-                            mask, bitval, v)
-                        vals = sub_flat.view(np.int32)
-                    elif codec == "raw":
-                        vals = np.ascontiguousarray(gather_ranges(
-                            pay_flat, pay_starts[docs], 4 * lens[docs])
-                        ).view("<i4").astype(np.int32)
-                    else:
-                        blob = gather_ranges(
-                            pay_flat, pay_starts[docs], pay_lens[docs])
-                        vals = getattr(lw, f"decode_{codec}")(
-                            blob, pay_lens[docs], lens[docs]).view(np.int32)
-                    lw._scatter_rows(tok_flat, tok_starts[docs], vals,
-                                     lens[docs])
-                tok_off = np.zeros(n + 1, np.int32)
-                np.cumsum(lens, out=tok_off[1:])
-                if as_float:  # IEEE bit view back to float32
-                    tokens_vals = pa.array(tok_flat.view(np.float32),
-                                           pa.float32())
-                else:
-                    tokens_vals = pa.array(tok_flat, pa.int32())
-                tokens = pa.ListArray.from_arrays(
-                    pa.array(tok_off, pa.int32()), tokens_vals)
-                yield pa.RecordBatch.from_arrays(
-                    [sl.column(names.index("doc_id")),
-                     tokens,
-                     pa.array(lens.astype(np.int32), pa.int32()),
-                     sl.column(names.index("source"))],
-                    names=["doc_id", "tokens", "n_tok", "source"])
-
-    schema = decoded_schema(params)
-    return df.select("doc_id", "codec", "n_blocks", "block_sizes",
-                     "block_flags", "payload", "n_tok", "source"
-                     ).mapInArrow(decoder, schema=schema)
+    return stages.apply(df, decode_auto_stage(params))

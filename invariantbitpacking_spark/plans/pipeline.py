@@ -50,10 +50,12 @@ from dataclasses import dataclass
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions import strings as fstr
-from ..operators import selector
-from ..operators.ibp import IbpParams, learn_params
+from ..operators import selector, stages
+from ..operators.framing import gather_ranges, list_array_flat
+from ..operators.ibp import IbpParams, learn_params, token_stage
 from .fsio import HadoopFS
 
 
@@ -72,34 +74,22 @@ def _float_bits_view(df: DataFrame, itemsize: int) -> DataFrame:
     Spark's value equality is NaN-safe (NaN = NaN holds) but it
     conflates -0.0 with 0.0 and all NaN payload bits — weaker than the
     bit-identical guarantee the codec makes, and the bit view is
-    exactly what the encoder packed anyway.  One zero-copy mapInArrow
-    pass, no per-row Python."""
-    import numpy as np
-    import pyarrow as pa
-
-    from ..operators.framing import gather_ranges, list_array_flat
-
+    exactly what the encoder packed anyway.  One zero-copy Arrow stage,
+    no per-row Python."""
     elem = "bigint" if itemsize == 8 else "int"
-    pa_elem = pa.int64() if itemsize == 8 else pa.int32()
 
-    def view(batches):
-        for rb in batches:
-            names = rb.schema.names
-            vals, starts, lens = list_array_flat(
-                rb.column(names.index("tokens")), itemsize)
-            flat = gather_ranges(vals, starts, lens)
-            off = np.zeros(len(lens) + 1, np.int32)
-            np.cumsum(lens, out=off[1:])
-            toks = pa.ListArray.from_arrays(
-                pa.array(off, pa.int32()), pa.array(flat, pa_elem))
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(names.index("doc_id")), toks,
-                 rb.column(names.index("n_tok"))],
-                names=["doc_id", "tokens", "n_tok"])
+    def view(rb):
+        vals, starts, lens = list_array_flat(rb.column("tokens"), itemsize)
+        toks = stages.list_col(pa.array(gather_ranges(vals, starts, lens)),
+                               lens)
+        return pa.RecordBatch.from_arrays(
+            [rb.column("doc_id"), toks, rb.column("n_tok")],
+            names=["doc_id", "tokens", "n_tok"])
 
-    return (df.select("doc_id", "tokens", "n_tok")
-            .mapInArrow(view, schema=("doc_id string, tokens "
-                                      f"array<{elem}>, n_tok int")))
+    return stages.apply(df, token_stage(
+        view, stages.fixed(f"doc_id string, tokens array<{elem}>, n_tok int"),
+        "tokens", ("doc_id", "tokens", "n_tok")))
+
 
 # one row per (snapshot, bucket) commit; the arrow schema of every
 # lineage parquet file and of the lineage() / latest_lineage() views
@@ -121,6 +111,18 @@ EMPTY_READ_SCHEMA = (
     "comp_bytes long, raw_bytes long, codec string, "
     "snapshot_id string, bucket int"
 )
+
+# Arrow schema of every stored row file (base, delta, tombstone
+# marker): the encode stages' nullable columns, and row_xxh, which
+# Spark writes as required because xxhash64 is never null.
+STORED_SCHEMA = pa.schema([
+    ("doc_id", pa.binary()), ("source", pa.binary()),
+    ("n_tok", pa.int32()), ("n_blocks", pa.int32()),
+    ("block_sizes", pa.list_(pa.int32())),
+    ("block_flags", pa.binary()), ("payload", pa.binary()),
+    ("comp_bytes", pa.int64()), ("raw_bytes", pa.int64()),
+    ("codec", pa.string()), pa.field("row_xxh", pa.int64(), False),
+])
 
 # Sentinel codec of a DELETE marker row in the delta tree: it wins
 # latest-wins resolution like any delta row but is filtered from every
@@ -633,15 +635,7 @@ class CompressionPipeline:
         for wave in waves:
             t0 = time.perf_counter()
             part = staged.filter(F.col("bucket").isin(wave))  # dir-pruned
-            enc = selector.encode_auto(part, params, allowed=self.allowed,
-                                       passthrough=("bucket", "snapshot_id"))
-            # string columns ride FSST-encoded against the snapshot's table
-            enc = fstr.encode_string_cols(enc, fsst_table,
-                                          ("doc_id", "source"))
-            # persisted per-row payload hash: lets delta-append commits
-            # recompute bucket checksums from THIN columns (no payload
-            # read) — see _append_delta
-            enc = enc.withColumn("row_xxh", F.xxhash64("payload"))
+            enc = self._stored_rows(part, params, fsst_table)
             # doc_id-clustered row groups: a local sort (no shuffle)
             # gives each parquet row group a tight doc_id min/max, so
             # fetch()'s pushed IN filter can SKIP row groups, not just
@@ -665,6 +659,21 @@ class CompressionPipeline:
         return PipelineResult(snapshot_id, buckets_run, len(done),
                               totals["docs"], totals["tokens"],
                               totals["raw_bytes"], totals["comp_bytes"])
+
+    def _stored_rows(self, toks: DataFrame, params: IbpParams,
+                     fsst_table) -> DataFrame:
+        """The stored rows of a run() wave or an append() delta, in ONE
+        Arrow stage chain: the auto-selected token encode, then FSST
+        encode of the string columns against the snapshot's table.
+        Then the persisted per-row payload hash, which lets delta
+        commits recompute bucket checksums from THIN columns (no
+        payload read)."""
+        enc = stages.apply(
+            toks,
+            selector.encode_auto_stage(params, allowed=self.allowed,
+                                       passthrough=("bucket", "snapshot_id")),
+            fstr.encode_stage(fsst_table, ("doc_id", "source")))
+        return enc.withColumn("row_xxh", F.xxhash64("payload"))
 
     # every wave/delta/delete commit appends one small lineage parquet
     # file; past this many files the next run() folds the history to
@@ -831,10 +840,7 @@ class CompressionPipeline:
         # splitting it would only multiply the fixed per-wave job
         # overhead (scan, commit, lineage append)
         t0 = time.perf_counter()
-        enc = selector.encode_auto(salted, params, allowed=self.allowed,
-                                   passthrough=("bucket", "snapshot_id"))
-        enc = fstr.encode_string_cols(enc, fsst_table, ("doc_id", "source"))
-        enc = enc.withColumn("row_xxh", F.xxhash64("payload"))
+        enc = self._stored_rows(salted, params, fsst_table)
         seq = self._next_commit_seq()
         enc = enc.withColumn("delta_seq", F.lit(seq).cast("long"))
         # Stats of the rows this delta SUPERSEDES, computed from the
@@ -867,17 +873,7 @@ class CompressionPipeline:
                 F.sum("comp_bytes").alias("comp_bytes"),
                 F.expr("bit_xor(row_xxh)").alias("xxh"))
                 .collect())
-        wall = time.perf_counter() - t0
-        totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
-        for r in self._commit_delta_wave(snapshot_id, affected, repl,
-                                         added, wall, seq):
-            for k in totals:
-                totals[k] += int(r[k])
-        self._maybe_compact_deltas(snapshot_id, affected)
-        return PipelineResult(snapshot_id, len(affected),
-                              nb - len(affected), totals["docs"],
-                              totals["tokens"], totals["raw_bytes"],
-                              totals["comp_bytes"])
+        return self._finish_delta(snapshot_id, affected, repl, added, t0, seq)
 
     def _replaced_stats(self, snapshot_id: str, wave, keys) -> list:
         """Per-(bucket, codec) stats of the CURRENT rows matching
@@ -898,6 +894,20 @@ class CompressionPipeline:
                     F.sum("comp_bytes").alias("comp_bytes"),
                     F.expr("bit_xor(row_xxh)").alias("xxh"))
                 .collect())
+
+    def _finish_delta(self, snapshot_id: str, affected: list, repl, added,
+                      t0: float, seq: int, sign: int = 1) -> PipelineResult:
+        """Commit a written delta wave (upsert or tombstones), fold
+        buckets whose delta stack got deep, and report the committed
+        amounts; a delete (``sign=-1``) reports removed amounts as
+        positives."""
+        rows = self._commit_delta_wave(snapshot_id, affected, repl, added,
+                                       time.perf_counter() - t0, seq)
+        totals = [sign * sum(int(r[k]) for r in rows)
+                  for k in ("docs", "tokens", "raw_bytes", "comp_bytes")]
+        self._maybe_compact_deltas(snapshot_id, affected)
+        return PipelineResult(snapshot_id, len(affected),
+                              self.num_buckets - len(affected), *totals)
 
     def _commit_delta_wave(self, snapshot_id: str, wave, repl, added,
                            wall: float, seq: int) -> list:
@@ -1194,17 +1204,8 @@ class CompressionPipeline:
         repl = list(repl_agg.values())
         seq = self._next_commit_seq()
         self._write_tombstones(snapshot_id, seq, victims)
-        wall = time.perf_counter() - t0
-        totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
-        for r in self._commit_delta_wave(snapshot_id, affected, repl, [],
-                                         wall, seq):
-            for k in totals:
-                totals[k] -= int(r[k])  # removed amounts, as positives
-        self._maybe_compact_deltas(snapshot_id, affected)
-        return PipelineResult(snapshot_id, len(affected),
-                              nb - len(affected), totals["docs"],
-                              totals["tokens"], totals["raw_bytes"],
-                              totals["comp_bytes"])
+        return self._finish_delta(snapshot_id, affected, repl, [], t0, seq,
+                                  sign=-1)
 
     def _write_tombstones(self, snapshot_id: str, seq: int,
                           victims) -> None:
@@ -1212,17 +1213,9 @@ class CompressionPipeline:
         len(ids) rows spread over <= num_buckets delta dirs, and a
         Spark dynamic-partition write paid ~1.0 s of commit-protocol
         fixed cost for them (measured, 100 rows / 32 dirs / local[32]).
-        One pyarrow file per bucket dir through ``self.fs``, with the
-        exact arrow schema of the Spark-written base and delta files."""
-        schema = pa.schema([
-            ("doc_id", pa.binary()), ("source", pa.binary()),
-            ("n_tok", pa.int32()), ("n_blocks", pa.int32()),
-            ("block_sizes", pa.list_(pa.int32())),
-            ("block_flags", pa.binary()), ("payload", pa.binary()),
-            ("comp_bytes", pa.int64()), ("raw_bytes", pa.int64()),
-            # Spark writes xxhash64's non-null result as a required column
-            ("codec", pa.string()), pa.field("row_xxh", pa.int64(), False),
-        ])
+        One pyarrow file per bucket dir through ``self.fs``, with
+        ``STORED_SCHEMA``, the arrow schema of the Spark-written base and
+        delta files."""
         by_bucket: dict[int, list] = {}
         for r in victims:
             by_bucket.setdefault(int(r["bucket"]), []).append(
@@ -1241,7 +1234,7 @@ class CompressionPipeline:
                 "raw_bytes": pa.array([0] * n, pa.int64()),
                 "codec": pa.array([TOMBSTONE_CODEC] * n, pa.string()),
                 "row_xxh": pa.array([0] * n, pa.int64()),
-            }, schema=schema)
+            }, schema=STORED_SCHEMA)
             self._write_parquet(
                 _join(self.delta_dir, f"snapshot_id={snapshot_id}",
                       f"bucket={b}", f"delta_seq={seq}",
@@ -1293,20 +1286,17 @@ class CompressionPipeline:
                 .withColumn("codec", F.lit(TOMBSTONE_CODEC))
                 .withColumn("row_xxh", F.lit(0).cast("long"))
                 .withColumn("delta_seq", F.lit(seq).cast("long")))
+        # Literals are non-null and Spark writes declared nullability;
+        # a union with an empty STORED_SCHEMA frame relaxes the literal
+        # columns so the markers' file schema equals the base files'.
+        tomb = tomb.unionByName(
+            self.spark.createDataFrame([], from_arrow_schema(STORED_SCHEMA)),
+            allowMissingColumns=True)
         (tomb.write.mode("append")
          .partitionBy("snapshot_id", "bucket", "delta_seq")
          .parquet(self.delta_dir))
-        wall = time.perf_counter() - t0
-        totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
-        for r in self._commit_delta_wave(snapshot_id, affected, repl, [],
-                                         wall, seq):
-            for k in totals:
-                totals[k] -= int(r[k])  # removed amounts, as positives
-        self._maybe_compact_deltas(snapshot_id, affected)
-        return PipelineResult(snapshot_id, len(affected),
-                              nb - len(affected), totals["docs"],
-                              totals["tokens"], totals["raw_bytes"],
-                              totals["comp_bytes"])
+        return self._finish_delta(snapshot_id, affected, repl, [], t0, seq,
+                                  sign=-1)
 
     def cleanup_staging(self, snapshot_id: str) -> None:
         """Drop the staged (uncompressed) copy once every bucket of the
@@ -1394,8 +1384,6 @@ class CompressionPipeline:
         ``as_of_seq`` time-travels the lookup (see
         :meth:`read_encoded`): upserts and tombstone deletes after
         that lineage commit are invisible."""
-        from ..operators import selector
-
         from ..functions.hashing import bucket_of
 
         ids = [str(i) for i in ids]
@@ -1436,10 +1424,11 @@ class CompressionPipeline:
                                            "doc_id string"),
                 table, ("doc_id",))
             hits = enc.join(F.broadcast(keys), "doc_id", "left_semi")
-        hits = fstr.decode_string_cols(hits, table, ("doc_id", "source"))
         if not decode:
-            return hits
-        return selector.decode_auto(hits, params)
+            return fstr.decode_string_cols(hits, table, ("doc_id", "source"))
+        return stages.apply(hits,
+                            fstr.decode_stage(table, ("doc_id", "source")),
+                            selector.decode_auto_stage(params))
 
     def verify_checksums(self, snapshot_id: str) -> int:
         """Integrity audit against lineage: recompute each committed

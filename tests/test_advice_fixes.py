@@ -7,7 +7,7 @@
 2. selector.encode_docs_auto_flat: a zero-token doc assigned a
    zero-block codec, LAST in the batch, used to write out of bounds in
    the bsz/flag fancy-index scatters.
-3. strings._offsets32: >2 GiB of string bytes in one Arrow batch used
+3. stages.offsets32: >2 GiB of string bytes in one Arrow batch used
    to silently wrap the int32 offset buffer.
 """
 
@@ -18,7 +18,7 @@ import pytest
 from invariantbitpacking_spark.operators import ibp, selector
 from invariantbitpacking_spark.operators.framing import (gather_ranges,
                                                          list_array_flat)
-from invariantbitpacking_spark.functions.strings import _offsets32
+from invariantbitpacking_spark.operators.stages import offsets32
 from invariantbitpacking_spark.codecs import numpy_ref as nr
 
 
@@ -112,10 +112,10 @@ def test_empty_doc_mid_batch_zero_block_codec():
 
 
 def test_offsets32_guard():
-    off = _offsets32(np.array([10, 20], np.int64), 2)
+    off = offsets32(np.array([10, 20], np.int64), 2)
     assert off.dtype == np.int32 and off.tolist() == [0, 10, 30]
     with pytest.raises(ValueError, match="int32-offset"):
-        _offsets32(np.array([2**31], np.int64), 1)
+        offsets32(np.array([2**31], np.int64), 1)
 
 
 def test_fsst_decode_raises_on_out_of_table_code():

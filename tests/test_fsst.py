@@ -124,10 +124,11 @@ def test_random_bytes_roundtrip_property():
     np.testing.assert_array_equal(dec_lens, lens)
 
 
-def test_string_cols_forced_byte_mass_split(spark, tokens_df):
+def test_string_cols_forced_byte_mass_split(spark, tokens_df, monkeypatch):
     """Round-4 verdict item 6: a batch over the byte-mass cap must
     degrade to multiple sub-batches with byte-identical output, not
-    trip the int32-offset guard (mirror of the token-path split test)."""
+    trip the int32-offset guard (mirror of the token-path split test).
+    The caps are read when a DataFrame is built."""
     from pyspark.sql import functions as F
 
     from invariantbitpacking_spark.functions import strings as fstr
@@ -137,7 +138,9 @@ def test_string_cols_forced_byte_mass_split(spark, tokens_df):
     plain = {(r["doc_id"], r["source"]) for r in sub.collect()}
 
     enc_norm = fstr.encode_string_cols(sub, table)
-    enc_split = fstr.encode_string_cols(sub, table, mass_cap=64)
+    monkeypatch.setattr(fstr, "_ENC_MASS_CAP", 64)
+    monkeypatch.setattr(fstr, "_DEC_MASS_CAP", 64)
+    enc_split = fstr.encode_string_cols(sub, table)
     a = {r["doc_id"]: bytes(r["source"]) for r in
          enc_norm.select(F.hex("doc_id").alias("doc_id"), "source")
          .collect()}
@@ -146,46 +149,31 @@ def test_string_cols_forced_byte_mass_split(spark, tokens_df):
          .collect()}
     assert a == b  # byte-identical under forced splitting
 
-    dec = fstr.decode_string_cols(
-        fstr.encode_string_cols(sub, table, mass_cap=64),
-        table, mass_cap=64)
+    dec = fstr.decode_string_cols(enc_split, table)
     assert {(r["doc_id"], r["source"]) for r in dec.collect()} == plain
 
 
 def test_roundtrip_fusion_identical_and_scoped(spark, tokens_df):
-    """decode(encode(df)) fuses into ONE mapInArrow (r08 optimization);
-    the fused plan must be value-identical to the unfused one, and the
-    fusion must NOT fire across an intervening transformation or a
-    different symbol table."""
-    from pyspark.sql import functions as F
-
+    """An FSST encode->decode chain composed explicitly with
+    ``stages.apply`` runs as ONE mapInArrow and gives the same values
+    as the two-call form, which runs as two: nothing fuses implicitly."""
     from invariantbitpacking_spark.functions import strings as fstr
-    from invariantbitpacking_spark.codecs import fsst
+    from invariantbitpacking_spark.operators import stages
 
     sub = tokens_df.limit(150).coalesce(1)
     table = fstr.learn_table_df(sub, ("doc_id", "source"))
     plain = {(r["doc_id"], r["source"]) for r in sub.collect()}
 
-    enc = fstr.encode_string_cols(sub, table)
-    fused = fstr.decode_string_cols(enc, table)
-    # fused: a single ArrowEvalPython-class node in the plan
-    plan = fused._sc._jvm.PythonSQLUtils.explainString(
-        fused._jdf.queryExecution(), "formatted")
-    assert plan.count("MapInArrow") == 2  # 1 node: tree + detail
-    assert {(r["doc_id"], r["source"]) for r in fused.collect()} == plain
+    def nodes(df):
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+        return plan.count("MapInArrow") // 2  # tree line + detail block
 
-    # intervening transformation -> no fusion, still correct
-    enc2 = fstr.encode_string_cols(sub, table).filter(F.lit(True))
-    unfused = fstr.decode_string_cols(enc2, table)
-    plan2 = unfused._sc._jvm.PythonSQLUtils.explainString(
-        unfused._jdf.queryExecution(), "formatted")
-    assert plan2.count("MapInArrow") == 4  # 2 nodes
-    assert {(r["doc_id"], r["source"]) for r in unfused.collect()} == plain
+    chained = stages.apply(sub, fstr.encode_stage(table),
+                           fstr.decode_stage(table))
+    assert nodes(chained) == 1
+    assert {(r["doc_id"], r["source"]) for r in chained.collect()} == plain
 
-    # different table -> no fusion (decode must use ITS table)
-    other = fsst.SymbolTable(table.syms[:1].copy(), table.lens[:1].copy())
-    enc3 = fstr.encode_string_cols(sub, table)
-    dec3 = fstr.decode_string_cols(enc3, other, ("doc_id", "source"))
-    plan3 = dec3._sc._jvm.PythonSQLUtils.explainString(
-        dec3._jdf.queryExecution(), "formatted")
-    assert plan3.count("MapInArrow") == 4  # 2 nodes
+    two = fstr.decode_string_cols(fstr.encode_string_cols(sub, table), table)
+    assert nodes(two) == 2
+    assert {(r["doc_id"], r["source"]) for r in two.collect()} == plain

@@ -719,7 +719,7 @@ def test_pipeline_long_document_skew(spark, tokens_df, outdir):
     correct end to end — full-block framing for the mega-doc, ragged
     tails for the rest — with green audits, a bit-identical round
     trip, and a working point fetch of the mega-doc itself.  The
-    token-mass sub-batching (ibp._mass_ranges) is what keeps the
+    token-mass sub-batching (stages.mass_ranges) is what keeps the
     mega-doc's framing buffers bounded inside the Python worker."""
     import numpy as np
 
@@ -801,11 +801,26 @@ def test_store_files_share_one_schema(spark, tokens_df, outdir):
     base and upsert files, the driver-written tombstone marker) carries
     the same arrow schema, so _dir_schema — which reads ONE footer —
     agrees with Spark's schema inference over all of them."""
+    _check_store_files_share_one_schema(spark, tokens_df, outdir, None)
+
+
+def test_store_files_share_one_schema_dataframe_delete(spark, tokens_df,
+                                                       outdir):
+    """The same one-schema check when the delete takes the DataFrame
+    path (id sets over MAX_DRIVER_DELETE_IDS): its Spark-written marker
+    must not declare the literal columns non-null."""
+    _check_store_files_share_one_schema(spark, tokens_df, outdir, 0)
+
+
+def _check_store_files_share_one_schema(spark, tokens_df, outdir,
+                                        driver_delete_cap):
     import glob
     import os
 
     pipe = CompressionPipeline(spark, outdir, num_buckets=1, wave_buckets=1,
                                sample_fraction=None)
+    if driver_delete_cap is not None:
+        pipe.MAX_DRIVER_DELETE_IDS = driver_delete_cap
     sub = tokens_df.limit(100)
     pipe.run(sub, "snapS")
     pipe.append(_delta_df(spark, 3), "snapS")
@@ -836,3 +851,40 @@ def test_store_files_share_one_schema(spark, tokens_df, outdir):
     data_cols = got.fieldNames()[:-3]
     assert ([got[c].dataType for c in data_cols]
             == [inferred[c].dataType for c in data_cols])
+
+
+def test_dataframe_delete_path_matches_driver_path(spark, tokens_df,
+                                                   tmp_path):
+    """Twin stores delete the same ids, one through the driver fast path
+    and one through the DataFrame path (driver cap 0): same resolved
+    rows, same lineage totals and checksums, same result, both audits
+    green.  Ghost ids are a no-op on both."""
+    sub = tokens_df.limit(120)
+    ids = [r["doc_id"] for r in
+           sub.orderBy("doc_id").limit(9).collect()] + ["ghost-id"]
+    outcomes = []
+    for name, cap in (("driver", None), ("dataframe", 0)):
+        pipe = CompressionPipeline(spark, str(tmp_path / name),
+                                   num_buckets=4, wave_buckets=4,
+                                   sample_fraction=None)
+        if cap is not None:
+            pipe.MAX_DRIVER_DELETE_IDS = cap
+        pipe.run(sub, "snapDD")
+        res = pipe.delete(
+            spark.createDataFrame([(i,) for i in ids], "doc_id string"),
+            "snapDD")
+        rows = sorted(
+            (r["doc_id"], r["source"], r["codec"], r["n_tok"],
+             bytes(r["payload"]))
+            for r in pipe.read_encoded("snapDD").collect())
+        lin = sorted(
+            (r["bucket"], r["docs"], r["tokens"], r["comp_bytes"],
+             r["payload_xxh"])
+            for r in pipe.latest_lineage("snapDD").collect())
+        totals = tuple(pipe.latest_lineage("snapDD").agg(
+            F.sum("docs"), F.sum("tokens"), F.sum("comp_bytes")).first())
+        assert pipe.verify_checksums("snapDD") == 0
+        outcomes.append((res, rows, lin, totals))
+    assert outcomes[0][0].docs == 9
+    assert len(outcomes[0][1]) == 111
+    assert outcomes[0] == outcomes[1]

@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from invariantbitpacking_spark.operators import ibp, selector
+from invariantbitpacking_spark.operators import framing, ibp, selector
 from invariantbitpacking_spark.operators.framing import (frame_batch_flat,
                                                          gather_ranges,
                                                          list_array_flat)
@@ -113,7 +113,8 @@ def test_encode_auto_refuses_int64(spark):
     assert list(dec[0]["tokens"]) == [2**40 + 5, 7]
 
 
-def test_auto_roundtrip_with_forced_sub_batching_and_nulls(spark, params):
+def test_auto_roundtrip_with_forced_sub_batching_and_nulls(spark, params,
+                                                          monkeypatch):
     """Tiny token-mass sub-batches force the arrow UDFs to slice every
     RecordBatch (non-zero array offsets on ListArray/BinaryArray) with
     null and empty docs interleaved; results must byte-match the
@@ -143,15 +144,17 @@ def test_auto_roundtrip_with_forced_sub_batching_and_nulls(spark, params):
             rows.append((f"d{i:03d}", vals, n, "edge"))
     df = spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, n_tok int, source string")
-    enc = selector.encode_auto(df, params, max_batch_tokens=900)
+    unsplit = selector.encode_auto(df, params)
+    # the cap is read when a DataFrame is built
+    monkeypatch.setattr(framing, "MAX_BATCH_TOKENS", 900)
+    enc = selector.encode_auto(df, params)
     a = {r["doc_id"]: (bytes(r["payload"]), r["codec"])
          for r in enc.collect()}
     b = {r["doc_id"]: (bytes(r["payload"]), r["codec"])
-         for r in selector.encode_auto(df, params).collect()}
+         for r in unsplit.collect()}
     assert a == b  # sub-batching never changes bytes or codec choice
     dec = {r["doc_id"]: list(r["tokens"]) for r in selector.decode_auto(
-        selector.encode_auto(df, params, max_batch_tokens=900), params,
-        max_batch_tokens=900).collect()}
+        selector.encode_auto(df, params), params).collect()}
     for doc_id, vals, n, _ in rows:
         assert dec[doc_id] == (vals if vals else []), doc_id
 

@@ -145,20 +145,25 @@ def test_empty_and_single_token_docs(spark):
     assert [r["tokens"] for r in dec] == [r[1] for r in rows]
 
 
-def test_roundtrip_with_forced_sub_batching(spark, tokens_df, params):
+def test_roundtrip_with_forced_sub_batching(spark, tokens_df, params,
+                                            monkeypatch):
     """Token-mass sub-batching (memory guard for long-doc batches) must
     not change results: force tiny sub-batches through the executor
-    closures and round-trip."""
+    closures and round-trip.  The cap is read when a DataFrame is
+    built, so patching it on the driver reaches the executors."""
+    from invariantbitpacking_spark.operators import framing
+
     sub = tokens_df.limit(120)
-    enc = ibp.encode_ibp(sub, params, max_batch_tokens=5_000)
-    dec = ibp.decode_ibp(enc, params, max_batch_tokens=5_000)
+    unsplit = ibp.encode_ibp(sub, params)
+    monkeypatch.setattr(framing, "MAX_BATCH_TOKENS", 5_000)
+    enc = ibp.encode_ibp(sub, params)
+    dec = ibp.decode_ibp(enc, params)
     bad = (sub.alias("a").join(dec.alias("b"), "doc_id")
            .filter(F.col("a.tokens") != F.col("b.tokens")).count())
     assert bad == 0
     # byte-identity with the unsplit path
     a = {r["doc_id"]: bytes(r["payload"]) for r in enc.collect()}
-    b = {r["doc_id"]: bytes(r["payload"])
-         for r in ibp.encode_ibp(sub, params).collect()}
+    b = {r["doc_id"]: bytes(r["payload"]) for r in unsplit.collect()}
     assert a == b
 
 
