@@ -1165,8 +1165,7 @@ class CompressionPipeline:
            zero Spark jobs.
 
         Measured (sf0.1 store, 100-doc batch, local[32]): 5.0 s -> the
-        q9 number in OPTIMIZATION_r08.md; phase breakdown in
-        scripts/profile_r08.py."""
+        q9 number in OPTIMIZATION_r08.md."""
         nb = self.num_buckets
         self._purge_orphan_deltas(snapshot_id)
         from ..functions.hashing import bucket_of

@@ -78,7 +78,13 @@ def get_spark(app_name: str = "invariantbitpacking_spark",
     # (worker reuse is the knob for the rare JVM<->python Arrow socket
     # deadlock a reused worker can race into on long 100x runs: both
     # sides end up blocked in read; a fresh worker per task sidesteps
-    # the reuse handoff entirely at a small fork cost)
+    # the reuse handoff entirely at a small fork cost).  With reuse off,
+    # every task forks a fresh worker from the daemon, so the lazy
+    # zip-directory invalidation an engine stage installs
+    # (operators/stages.py) never carries over and each task pays the
+    # ~0.2 CPU-s stdlib floor.  PythonRDD workers that never run an
+    # engine stage keep the stdlib behaviour too, e.g. the one
+    # spark.createDataFrame(list) uses.
     for kv in filter(None, (s.strip() for s in
                             os.environ.get("IBP_SPARK_CONF", "").split(";"))):
         k, _, v = kv.partition("=")

@@ -1,5 +1,12 @@
-"""Arrow stage layer: plan shape of composed chains and per-stage
-sub-batching."""
+"""Arrow stage layer: plan shape of composed chains, per-stage
+sub-batching, and the worker-side lazy zip-directory invalidation."""
+
+import json
+import os
+import subprocess
+import sys
+import textwrap
+import zipimport
 
 import numpy as np
 import pyarrow as pa
@@ -149,3 +156,145 @@ def test_each_stage_sub_batches_by_its_own_mass(spark):
     assert max(r["id_rows"] for r in got) == 3
     # 1..7 tokens per row, cap 12: never more than 12 rows' worth
     assert 1 < max(r["tok_rows"] for r in got) <= 12
+
+
+def test_workers_install_lazy_zip_invalidation(spark):
+    """An engine eval's kernel sees the lazy invalidation installed in
+    its Python worker; the driver keeps the stdlib method."""
+    def kernel(rb):
+        lazy = zipimport.zipimporter.invalidate_caches is stages._drop_directory
+        return pa.record_batch([pa.array([lazy] * rb.num_rows)], ["lazy"])
+
+    probe = stages.Stage(kernel, stages.fixed("lazy boolean"),
+                         lambda rb: np.ones(rb.num_rows, np.int64), 1 << 30)
+    df = spark.range(0, 8, numPartitions=2)
+    stages.apply(df, probe).collect()
+    got = {r["lazy"] for r in stages.apply(df, probe).collect()}
+    assert got == {sys.version_info < (3, 13)}
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+    assert "_files" not in vars(zipimport.zipimporter)
+
+
+_LAZY_ZIP_SCRIPT = textwrap.dedent("""
+    import importlib, importlib.util, json, pkgutil, sys, zipfile, zipimport
+    zpath = sys.argv[1]
+
+    def write(files):
+        with zipfile.ZipFile(zpath, "w") as z:
+            for name, src in files.items():
+                z.writestr(name, src)
+
+    files = {"zlazy/__init__.py": "", "top.py": ""}
+    for sub in "abc":
+        files[f"zlazy/{sub}/__init__.py"] = ""
+        files[f"zlazy/{sub}/m.py"] = ""
+    files["zlazy/a/later.py"] = ""
+    files["zlazy/c/gone.py"] = ""
+    write(files)
+    sys.path.insert(0, zpath)
+    import top, zlazy.a.m, zlazy.b.m, zlazy.c.m
+
+    reads = 0
+    read_directory = zipimport._read_directory
+
+    def counting(archive):
+        global reads
+        reads += archive == zpath
+        return read_directory(archive)
+
+    zipimport._read_directory = counting
+
+    def reads_of(step):
+        global reads
+        reads = 0
+        step()
+        return reads
+
+    def invalidate_10():
+        for _ in range(10):
+            importlib.invalidate_caches()
+
+    out = {"importers": sum(isinstance(i, zipimport.zipimporter)
+                            and i.archive == zpath
+                            for i in sys.path_importer_cache.values())}
+    out["stdlib"] = reads_of(invalidate_10)
+
+    from invariantbitpacking_spark.operators import stages
+
+    class Frame:  # all apply() needs of a DataFrame
+        schema = None
+
+        def mapInArrow(self, chain, schema):
+            self.chain = chain
+
+    frame = Frame()
+    stages.apply(frame)
+
+    def run_task():  # what a Python worker does with each task
+        list(frame.chain(iter([])))
+
+    run_task()
+    out["lazy"] = reads_of(invalidate_10)
+    out["next_import"] = reads_of(lambda: importlib.import_module("zlazy.a.later"))
+    assert importlib.util.find_spec("zlazy.c.gone") is not None
+
+    # rewrite in place: one module gone, new ones at the root and in a
+    # sub-package, every later entry at a new offset
+    del files["zlazy/c/gone.py"]
+    files["fresh_top.py"] = "X = 'root'"
+    files["zlazy/b/fresh.py"] = "X = 'sub'"
+    write(files)
+    importlib.invalidate_caches()
+
+    def import_new():
+        import fresh_top, zlazy.b.fresh
+        out["fresh"] = [fresh_top.X, zlazy.b.fresh.X]
+
+    out["rewrite_import"] = reads_of(import_new)
+    import zlazy.b
+    out["listed"] = sorted(m.name for m in pkgutil.iter_modules(zlazy.b.__path__))
+    try:
+        import zlazy.c.gone
+        out["gone"] = "imported"
+    except ModuleNotFoundError:
+        out["gone"] = "ModuleNotFoundError"
+
+    def installed():
+        cls = vars(zipimport.zipimporter)
+        return (cls.get("invalidate_caches"), cls.get("_files"),
+                zipimport._zip_directory_cache)
+
+    first = installed()
+    run_task()
+    out["reinstall_same"] = all(a is b for a, b in zip(first, installed()))
+    out["reinstall_lazy"] = reads_of(invalidate_10)
+    print(json.dumps(out))
+""")
+
+
+def test_lazy_zip_invalidation_reads_each_archive_once(tmp_path):
+    """In a fresh interpreter (this one is never patched): once
+    apply()'s worker-side chain has run, invalidate_caches() reads no
+    zip directory, the next import reads it once for every importer of
+    the archive, and an archive rewritten in place is seen whole through
+    the root and the sub-package importers alike."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ,
+           "PYTHONPATH": os.pathsep.join(
+               filter(None, [root, os.environ.get("PYTHONPATH")]))}
+    proc = subprocess.run(
+        [sys.executable, "-c", _LAZY_ZIP_SCRIPT, str(tmp_path / "lazy.zip")],
+        capture_output=True, text=True, env=env, cwd=tmp_path, timeout=120)
+    assert proc.returncode == 0, proc.stderr
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["importers"] == 5  # the root, zlazy and its 3 sub-packages
+    if sys.version_info < (3, 13):
+        assert out["stdlib"] >= 10 * out["importers"]
+    assert out["lazy"] == 0
+    assert out["next_import"] == 1
+    assert out["rewrite_import"] == 1
+    assert out["fresh"] == ["root", "sub"]
+    assert out["listed"] == ["fresh", "m"]
+    assert out["gone"] == "ModuleNotFoundError"
+    assert out["reinstall_same"] is True
+    assert out["reinstall_lazy"] == 0
