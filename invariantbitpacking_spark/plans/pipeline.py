@@ -50,7 +50,8 @@ from dataclasses import dataclass
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StructField, _parse_datatype_string
 
 from ..functions import strings as fstr
 from ..operators import selector, stages
@@ -123,6 +124,10 @@ STORED_SCHEMA = pa.schema([
     ("comp_bytes", pa.int64()), ("raw_bytes", pa.int64()),
     ("codec", pa.string()), pa.field("row_xxh", pa.int64(), False),
 ])
+
+# Partition columns (name, DDL type) of the base and delta trees.
+BASE_PARTS = (("snapshot_id", "string"), ("bucket", "int"))
+DELTA_PARTS = BASE_PARTS + (("delta_seq", "long"),)
 
 # Sentinel codec of a DELETE marker row in the delta tree: it wins
 # latest-wins resolution like any delta row but is filtered from every
@@ -261,6 +266,13 @@ class CompressionPipeline:
         # of tuples would be unpickled by Python workers in a Spark job
         return self.spark.createDataFrame(
             pa.Table.from_pylist(recs, schema=LINEAGE_SCHEMA))
+
+    def _empty_df(self, ddl: str) -> DataFrame:
+        """A zero-row frame of schema ``ddl``, built from an Arrow
+        table like :meth:`_lineage_df`."""
+        schema = _parse_datatype_string(ddl)
+        return self.spark.createDataFrame(
+            to_arrow_schema(schema).empty_table(), schema)
 
     def lineage(self) -> DataFrame:
         """Every lineage row, as a DataFrame view."""
@@ -493,9 +505,6 @@ class CompressionPipeline:
         supplied-schema and inferred reads are interchangeable.
         Returns None when the path holds no parquet file yet (caller
         falls back to inference)."""
-        from pyspark.sql.pandas.types import from_arrow_schema
-        from pyspark.sql.types import _parse_datatype_string, StructField
-
         def first_parquet(d: str, depth: int):
             names = sorted(self.fs.listdir(d))
             for n in names:
@@ -521,20 +530,31 @@ class CompressionPipeline:
                 sch = sch.add(StructField(name, _parse_datatype_string(t)))
         return sch
 
+    def _read_dirs(self, root: str, paths: list[str],
+                   partition_fields) -> DataFrame:
+        """The parquet files under ``paths`` (partition dirs below
+        ``root``), read with the schema of one footer."""
+        reader = self.spark.read.option("basePath", root)
+        sch = self._dir_schema(paths[0], partition_fields)
+        if sch is not None:
+            reader = reader.schema(sch)
+        return reader.parquet(*paths)
+
     @staticmethod
-    def _latest_delta(deltas: DataFrame) -> DataFrame:
+    def _latest_delta(rows: DataFrame) -> DataFrame:
         """One row per (snapshot_id, doc_id), highest delta_seq wins.
-        The window runs over the SMALL delta set only — never the
-        base."""
+        The window runs over delta rows and, in a key-restricted view,
+        the keys' base rows — never a whole base."""
         from pyspark.sql import Window
 
         w = (Window.partitionBy("snapshot_id", "doc_id")
              .orderBy(F.desc("delta_seq")))
-        return (deltas.withColumn("_rn", F.row_number().over(w))
+        return (rows.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1).drop("_rn", "delta_seq"))
 
     def _resolved(self, snapshot_id: str | None = None,
-                  buckets=None, as_of_seq: int | None = None) -> DataFrame:
+                  buckets=None, as_of_seq: int | None = None,
+                  keys: DataFrame | None = None) -> DataFrame:
         """The snapshot's CURRENT logical rows: base minus doc_ids
         superseded by deltas, plus the latest delta rows — minus
         documents whose latest delta is a TOMBSTONE (codec
@@ -550,21 +570,20 @@ class CompressionPipeline:
         invisible and the superseded/deleted row resurfaces.  History
         reaches back to the last :meth:`compact` of the affected
         buckets: compaction folds deltas into the base and deletes the
-        delta files, garbage-collecting everything older."""
+        delta files, garbage-collecting everything older.
+
+        ``keys``, a frame of ``(snapshot_id, doc_id)`` with doc_id in
+        the stored encoding, restricts the view to those documents
+        BEFORE latest-wins: a broadcast semi-join keeps the keys' base
+        and delta rows, and one window resolves them together (a base
+        row ranks below every delta row, delta_seq 0), so a key-sized
+        view shuffles key-sized rows and needs no anti-join."""
         if buckets is not None:
             if snapshot_id is None:
                 raise ValueError("bucket pruning needs a snapshot_id")
             base_paths = self._wave_paths(snapshot_id, buckets)
-            if not base_paths:
-                base = None
-            else:
-                reader = self.spark.read.option("basePath", self.data_dir)
-                sch = self._dir_schema(base_paths[0],
-                                       (("snapshot_id", "string"),
-                                        ("bucket", "int")))
-                if sch is not None:
-                    reader = reader.schema(sch)
-                base = reader.parquet(*base_paths)
+            base = (self._read_dirs(self.data_dir, base_paths, BASE_PARTS)
+                    if base_paths else None)
             delta_paths = self._delta_paths(snapshot_id, buckets)
         else:
             try:
@@ -586,30 +605,37 @@ class CompressionPipeline:
                     if s.startswith("snapshot_id=")
                     and any(c.startswith("bucket=") for c in
                             self.fs.listdir(_join(self.delta_dir, s)))]
+        if keys is not None:
+            def restrict(df):
+                return df.join(F.broadcast(keys), ["snapshot_id", "doc_id"],
+                               "left_semi")
+            if base is not None:
+                base = restrict(base)
         if not delta_paths:
             if base is None:
                 raise ValueError("nothing stored at "
                                  f"{self.data_dir} / {self.delta_dir}")
             return base
-        dreader = self.spark.read.option("basePath", self.delta_dir)
-        dsch = self._dir_schema(delta_paths[0],
-                                (("snapshot_id", "string"),
-                                 ("bucket", "int"), ("delta_seq", "long")))
-        if dsch is not None:
-            dreader = dreader.schema(dsch)
-        deltas = dreader.parquet(*delta_paths)
+        deltas = self._read_dirs(self.delta_dir, delta_paths, DELTA_PARTS)
         if as_of_seq is not None:
             deltas = deltas.filter(F.col("delta_seq") <= int(as_of_seq))
-        latest = self._latest_delta(deltas)
+        if keys is not None:
+            deltas = restrict(deltas)
+            if base is not None:
+                deltas = deltas.unionByName(
+                    base.withColumn("delta_seq", F.lit(0).cast("long")),
+                    allowMissingColumns=True)
         # a tombstone that wins latest-wins DELETES the document: it
         # must still shadow the base row (stay in the anti-join keys)
         # but contribute no output row itself
-        live = latest.filter(F.col("codec") != TOMBSTONE_CODEC)
-        if base is None:
+        live = (self._latest_delta(deltas)
+                .filter(F.col("codec") != TOMBSTONE_CODEC))
+        if base is None or keys is not None:
             return live
-        keys = latest.select("snapshot_id", "doc_id")
-        kept = base.join(F.broadcast(keys), ["snapshot_id", "doc_id"],
-                         "left_anti")
+        # every delta row's doc_id shadows its base row, whichever
+        # delta row wins
+        kept = base.join(F.broadcast(deltas.select("snapshot_id", "doc_id")),
+                         ["snapshot_id", "doc_id"], "left_anti")
         return kept.unionByName(live, allowMissingColumns=True)
 
     # -- main --------------------------------------------------------------
@@ -769,20 +795,25 @@ class CompressionPipeline:
         delta's documents salt into their buckets and land as
         per-bucket DELTA files (merge-on-read, see the delta section
         above), and existing documents whose doc_id appears in the
-        delta are superseded at read time (latest wins).  Matching
-        happens on the FSST-encoded doc_id bytes — the encoding is
-        deterministic given the persisted table, so equality on encoded
-        bytes IS equality on ids, with no decode pass.
+        delta are superseded at read time (latest wins).  Codec params
+        and the FSST table are the snapshot's persisted ones, so every
+        appended document is encoded exactly as the original run would
+        have; re-running the same delta converges to identical resolved
+        rows and checksums.
 
-        No existing row is re-read in bulk or rewritten: the lineage
-        commit supersedes each affected bucket's row with stats updated
-        INCREMENTALLY — ``new_xxh = old_xxh ^ xor(replaced row hashes)
-        ^ xor(added row hashes)`` — from thin columns (doc_id, codec,
-        counts, row_xxh), so a 20-doc upsert stays out of the O(bucket)
-        cost class.  Codec params and the FSST table are the snapshot's
-        persisted ones, so every appended document is encoded exactly
-        as the original run would have; re-running the same delta
-        converges to identical resolved rows and checksums.
+        The delta is WRITTEN FIRST: dedupe it on doc_id, purge orphan
+        deltas, take the commit ``seq``, encode and write it in one
+        Python eval.  :meth:`_commit_written_delta` then derives the
+        affected buckets and the added and replaced stats from the
+        written files in one thin collect.  No existing row is re-read
+        in bulk or rewritten: the lineage commit supersedes each
+        affected bucket's row with stats updated INCREMENTALLY —
+        ``new_xxh = old_xxh ^ xor(replaced row hashes) ^ xor(added row
+        hashes)`` — from thin columns (doc_id, codec, counts, row_xxh),
+        so a 20-doc upsert stays out of the O(bucket) cost class.  A
+        crash between the write and the lineage commit leaves a delta
+        above the snapshot's lineage max, which the next mutation's
+        orphan purge removes.
 
         Delta pressure is self-bounding: once an affected bucket holds
         ``delta_compact_threshold`` delta_seq dirs, this call folds it
@@ -816,84 +847,77 @@ class CompressionPipeline:
                 f"append: snapshot {snapshot_id!r} has "
                 f"{len(done)}/{self.num_buckets} buckets committed — "
                 "finish run() before appending")
-        nb = self.num_buckets
         params = self.load_or_learn_params(toks_delta, snapshot_id)
         fsst_table = self._fsst_table(snapshot_id)
         salted = (toks_delta.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"))
+            "bucket",
+            F.pmod(F.xxhash64("doc_id"), F.lit(self.num_buckets)).cast("int"))
             .withColumn("snapshot_id", F.lit(snapshot_id)))
-        affected = sorted(r["bucket"] for r in
-                          salted.select("bucket").distinct().collect())
         # Crash-retry hygiene: an attempt that died between the delta
         # write and the lineage commit left orphan delta dirs whose seq
-        # never made it into lineage.  They must go before the
-        # replaced-stats read — otherwise repl would subtract the
-        # orphan rows instead of the base rows they superseded.  The
-        # purge keys on the SNAPSHOT's lineage max (every committed
+        # never made it into lineage.  They must go before this write,
+        # or the retry's commit would count them as committed rows.
+        # The purge keys on the SNAPSHOT's lineage max (every committed
         # delta_seq <= it), so it catches orphans even when other
         # snapshots advanced the global sequence since the crash.
         self._purge_orphan_deltas(snapshot_id)
-        if not affected:
-            return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
-        # ONE wave over every affected bucket: a delta's work is
-        # O(delta) regardless of how many buckets it salts into, and
-        # splitting it would only multiply the fixed per-wave job
-        # overhead (scan, commit, lineage append)
         t0 = time.perf_counter()
-        enc = self._stored_rows(salted, params, fsst_table)
         seq = self._next_commit_seq()
-        enc = enc.withColumn("delta_seq", F.lit(seq).cast("long"))
-        # Stats of the rows this delta SUPERSEDES, computed from the
-        # pre-delta resolved view restricted (broadcast semi-join) to
-        # the delta's keys.
-        keys = fstr.encode_string_cols(
-            salted.select("snapshot_id", "doc_id").distinct(), fsst_table,
-            ("doc_id",))
-        repl = self._replaced_stats(snapshot_id, affected, keys)
-        (enc.write.mode("append")
+        (self._stored_rows(salted, params, fsst_table)
+         .withColumn("delta_seq", F.lit(seq).cast("long"))
+         .write.mode("append")
          .partitionBy("snapshot_id", "bucket", "delta_seq")
          .parquet(self.delta_dir))
-        # read BACK the written delta (thin columns) for the added
-        # stats — same read-back discipline as _commit_wave, and it
-        # avoids evaluating the encode twice
-        new_paths = [
-            _join(self.delta_dir, f"snapshot_id={snapshot_id}",
-                  f"bucket={b}", f"delta_seq={seq}")
-            for b in affected]
-        new_paths = [p for p in new_paths if self.fs.exists(p)]
-        added = []
-        if new_paths:
-            written = (self.spark.read
-                       .option("basePath", self.delta_dir)
-                       .parquet(*new_paths))
-            added = (written.groupBy("bucket", "codec").agg(
-                F.count(F.lit(1)).alias("docs"),
-                F.sum("n_tok").alias("tokens"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("comp_bytes").alias("comp_bytes"),
-                F.expr("bit_xor(row_xxh)").alias("xxh"))
-                .collect())
-        return self._finish_delta(snapshot_id, affected, repl, added, t0, seq)
+        return self._commit_written_delta(snapshot_id, seq, t0)
 
-    def _replaced_stats(self, snapshot_id: str, wave, keys) -> list:
-        """Per-(bucket, codec) stats of the CURRENT rows matching
-        ``keys`` (a DataFrame of (snapshot_id, doc_id) with doc_id
-        already encoded to the storage layout) — the rows a delta
-        upsert or tombstone delete supersedes.  The persisted row_xxh
-        keeps the scan thin: payload bytes stay unread."""
-        try:
-            cur = self._resolved(snapshot_id, wave)
-        except ValueError:
-            return []
-        return (cur.join(F.broadcast(keys), ["snapshot_id", "doc_id"],
-                         "left_semi")
-                .groupBy("bucket", "codec").agg(
-                    F.count(F.lit(1)).alias("docs"),
-                    F.sum("n_tok").alias("tokens"),
-                    F.sum("raw_bytes").alias("raw_bytes"),
-                    F.sum("comp_bytes").alias("comp_bytes"),
-                    F.expr("bit_xor(row_xxh)").alias("xxh"))
-                .collect())
+    def _commit_written_delta(self, snapshot_id: str, seq: int, t0: float,
+                              sign: int = 1) -> PipelineResult:
+        """Commit the delta just written at ``delta_seq=seq`` (upsert
+        rows or tombstone markers), with every input derived from what
+        landed.  The affected buckets are the listed
+        ``bucket=*/delta_seq=<seq>`` dirs.  ONE thin collect returns
+        per-(side, bucket, codec) stats of both sides: ``added``, the
+        written rows that are not tombstones, and ``replaced``, the
+        rows of the pre-delta view (``as_of_seq = seq - 1``) whose
+        doc_id the delta carries.  The written doc_ids are FSST-encoded
+        with the snapshot's table already, and the encoding is
+        deterministic, so byte equality IS id equality and no key
+        encoding is needed.  The persisted row_xxh keeps the scan thin:
+        payload bytes stay unread."""
+        snap = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
+        paths = {}
+        if self.fs.exists(snap):
+            for name in self.fs.listdir(snap):
+                p = _join(snap, name, f"delta_seq={seq}")
+                if name.startswith("bucket=") and self.fs.exists(p):
+                    paths[int(name.split("=", 1)[1])] = p
+        affected = sorted(paths)
+        if not affected:
+            # empty delta, or no tombstone matched: a no-op
+            return PipelineResult(snapshot_id, 0, self.num_buckets,
+                                  0, 0, 0, 0)
+        written = self._read_dirs(self.delta_dir, list(paths.values()),
+                                  DELTA_PARTS)
+        thin = ("bucket", "codec", "n_tok", "raw_bytes", "comp_bytes",
+                "row_xxh")
+        added = (written.filter(F.col("codec") != TOMBSTONE_CODEC)
+                 .select(F.lit("added").alias("side"), *thin))
+        replaced = (self._resolved(
+            snapshot_id, affected, as_of_seq=seq - 1,
+            keys=written.select("snapshot_id", "doc_id"))
+            .select(F.lit("replaced").alias("side"), *thin))
+        stats = (added.unionByName(replaced)
+                 .groupBy("side", "bucket", "codec").agg(
+                     F.count(F.lit(1)).alias("docs"),
+                     F.sum("n_tok").alias("tokens"),
+                     F.sum("raw_bytes").alias("raw_bytes"),
+                     F.sum("comp_bytes").alias("comp_bytes"),
+                     F.expr("bit_xor(row_xxh)").alias("xxh"))
+                 .collect())
+        return self._finish_delta(
+            snapshot_id, affected,
+            [r for r in stats if r["side"] == "replaced"],
+            [r for r in stats if r["side"] == "added"], t0, seq, sign)
 
     def _finish_delta(self, snapshot_id: str, affected: list, repl, added,
                       t0: float, seq: int, sign: int = 1) -> PipelineResult:
@@ -1099,25 +1123,18 @@ class CompressionPipeline:
                 f"delete: snapshot {snapshot_id!r} has "
                 f"{len(done)}/{self.num_buckets} buckets committed — "
                 "finish run() before deleting")
-        nb = self.num_buckets
         fsst_table = self._fsst_table(snapshot_id)
         # Bounded victim sets take the driver fast path: the bucket
         # salt and FSST key encoding are computed driver-side (exactly
         # as fetch() does), so the whole verb costs ONE thin-column
         # scan + one marker write instead of four-plus scheduler round
-        # trips.  An id set too large to collect falls back to the
-        # DataFrame path below.
+        # trips.  An id set too large to collect takes the DataFrame
+        # path.
         id_list = self._collect_delete_ids(ids)
         if id_list is not None:
             return self._delete_tombstone_fast(id_list, snapshot_id,
                                                fsst_table)
-        salted = ids.select(
-            F.col("doc_id").cast("string").alias("doc_id")).withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"))
-        affected = sorted(r["bucket"] for r in
-                          salted.select("bucket").distinct().collect())
-        return self._delete_tombstone(salted, snapshot_id,
-                                      fsst_table, affected)
+        return self._delete_tombstone(ids, snapshot_id, fsst_table)
 
     # ids below this bound are deleted via the driver fast path (collect
     # the id strings, salt/encode them driver-side); larger sets keep the
@@ -1187,8 +1204,8 @@ class CompressionPipeline:
             # nothing matched: pure ghost delete, a no-op
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
         # replaced-stats at (bucket, codec) grain, composed driver-side
-        # exactly as the _replaced_stats aggregation would (sums of
-        # sums; XOR of XOR-folds)
+        # exactly as the _commit_written_delta aggregation would (sums
+        # of sums; XOR of XOR-folds)
         repl_agg: dict[tuple, dict] = {}
         for r in victims:
             k = (int(r["bucket"]), r["codec"])
@@ -1239,40 +1256,35 @@ class CompressionPipeline:
                       f"bucket={b}", f"delta_seq={seq}",
                       f"part-{uuid.uuid4().hex}.parquet"), table)
 
-    def _delete_tombstone(self, salted: DataFrame, snapshot_id: str,
-                          fsst_table, affected: list) -> PipelineResult:
+    def _delete_tombstone(self, ids: DataFrame, snapshot_id: str,
+                          fsst_table) -> PipelineResult:
         """O(delta) delete: per existing victim, one marker row with
         codec ``tombstone`` in the delta tree at a fresh delta_seq —
         latest-wins resolution then shadows the base row and the
-        tombstone itself is filtered from every resolved view.  Stats
-        are subtracted incrementally via the same thin-column
-        replaced-stats pass as delta appends (XOR checksum algebra
-        composes: removing a row XORs its hash back out), so
-        ``verify_checksums`` is green immediately.  Ghost ids write no
-        marker (the victim set is the semi-join of the resolved view
-        with the requested keys), keeping the committed-delta-has-
-        lineage invariant intact."""
-        nb = self.num_buckets
+        tombstone itself is filtered from every resolved view.  Write
+        first, like :meth:`append`: the markers are the snapshot's
+        resolved view restricted to the requested keys, so ghost ids
+        write no marker, and :meth:`_commit_written_delta` subtracts
+        the victims' stats (the rows the markers replace)
+        incrementally — the XOR checksum algebra composes, removing a
+        row XORs its hash back out — so ``verify_checksums`` is green
+        immediately.  An id set this large salts into every bucket, so
+        the view spans them all and the markers' dirs name the affected
+        ones."""
         self._purge_orphan_deltas(snapshot_id)
-        if not affected:
-            return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
         t0 = time.perf_counter()
         keys = fstr.encode_string_cols(
-            salted.withColumn("snapshot_id", F.lit(snapshot_id)),
-            fsst_table, ("doc_id",)
-        ).select("snapshot_id", "doc_id").distinct()
+            ids.select(F.col("doc_id").cast("string").alias("doc_id"),
+                       F.lit(snapshot_id).alias("snapshot_id")),
+            fsst_table, ("doc_id",))
         try:
-            cur = self._resolved(snapshot_id, affected)
+            cur = self._resolved(snapshot_id, range(self.num_buckets),
+                                 keys=keys)
         except ValueError:
-            return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
-        repl = self._replaced_stats(snapshot_id, affected, keys)
-        if not repl:
-            # nothing matched: pure ghost delete, a no-op
-            return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
+            return PipelineResult(snapshot_id, 0, self.num_buckets,
+                                  0, 0, 0, 0)
         seq = self._next_commit_seq()
-        tomb = (cur.join(F.broadcast(keys), ["snapshot_id", "doc_id"],
-                         "left_semi")
-                .select("snapshot_id", "doc_id", "bucket")
+        tomb = (cur.select("snapshot_id", "doc_id", "bucket")
                 .withColumn("source", F.lit(None).cast("binary"))
                 .withColumn("n_tok", F.lit(0).cast("int"))
                 .withColumn("n_blocks", F.lit(0).cast("int"))
@@ -1288,14 +1300,18 @@ class CompressionPipeline:
         # Literals are non-null and Spark writes declared nullability;
         # a union with an empty STORED_SCHEMA frame relaxes the literal
         # columns so the markers' file schema equals the base files'.
-        tomb = tomb.unionByName(
-            self.spark.createDataFrame([], from_arrow_schema(STORED_SCHEMA)),
+        # The frame is an empty range: the optimizer drops an empty
+        # local relation (an Arrow-built frame) from a union, and the
+        # relaxation with it.
+        tomb = tomb.unionByName(self.spark.range(0).select(*[
+            (F.lit(None) if f.nullable else F.lit(0))
+            .cast(f.dataType).alias(f.name)
+            for f in from_arrow_schema(STORED_SCHEMA).fields]),
             allowMissingColumns=True)
         (tomb.write.mode("append")
          .partitionBy("snapshot_id", "bucket", "delta_seq")
          .parquet(self.delta_dir))
-        return self._finish_delta(snapshot_id, affected, repl, [], t0, seq,
-                                  sign=-1)
+        return self._commit_written_delta(snapshot_id, seq, t0, sign=-1)
 
     def cleanup_staging(self, snapshot_id: str) -> None:
         """Drop the staged (uncompressed) copy once every bucket of the
@@ -1338,7 +1354,7 @@ class CompressionPipeline:
             if (snapshot_id is None
                     or not self.committed_buckets(snapshot_id)):
                 raise
-            return self.spark.createDataFrame([], EMPTY_READ_SCHEMA)
+            return self._empty_df(EMPTY_READ_SCHEMA)
         df = df.drop("row_xxh")
         cols = ("doc_id", "source")
         if snapshot_id is not None:
@@ -1400,29 +1416,25 @@ class CompressionPipeline:
             # (float corpora decode to array<float>), or the encoded
             # row shape when decode=False — so unions with non-empty
             # fetches stay well-typed.
-            if not decode:
-                return self.spark.createDataFrame([], EMPTY_READ_SCHEMA)
-            return self.spark.createDataFrame(
-                [], selector.decoded_schema(params))
+            return self._empty_df(EMPTY_READ_SCHEMA if not decode
+                                  else selector.decoded_schema(params))
         enc = self._resolved(snapshot_id, buckets,
                              as_of_seq=as_of_seq).drop("row_xxh")
         table = self._fsst_table(snapshot_id)
+        # Keys are FSST-encoded driver-side (the encoding is
+        # deterministic, so byte equality IS id equality)
+        keys = fstr.encode_id_literals(ids, table)
         if len(ids) <= 1024:
             # Literal IN predicate instead of a join: it reaches the
             # parquet scan as a PushedFilter, so the doc_id-CLUSTERED
             # row groups the write path lays down are SKIPPED by their
             # min/max stats — a broadcast join can never prune below
-            # the file level.  Keys are FSST-encoded driver-side (the
-            # encoding is deterministic, so literal byte equality IS id
-            # equality).
-            hits = enc.filter(F.col("doc_id").isin(
-                fstr.encode_id_literals(ids, table)))
+            # the file level.
+            hits = enc.filter(F.col("doc_id").isin(keys))
         else:
-            keys = fstr.encode_string_cols(
-                self.spark.createDataFrame([(i,) for i in ids],
-                                           "doc_id string"),
-                table, ("doc_id",))
-            hits = enc.join(F.broadcast(keys), "doc_id", "left_semi")
+            hits = enc.join(F.broadcast(self.spark.createDataFrame(
+                pa.table({"doc_id": pa.array(keys, pa.binary())}))),
+                "doc_id", "left_semi")
         if not decode:
             return fstr.decode_string_cols(hits, table, ("doc_id", "source"))
         return stages.apply(hits,

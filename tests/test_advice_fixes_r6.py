@@ -125,6 +125,7 @@ def test_lineage_heals_from_old_when_compact_missing(
 # call's path starts with, which matching call raises)
 FAULT_POINTS = {
     "delta_write": ("append", "writer", "delta_dir", 1),
+    "append_lineage": ("append", "write_bytes_atomic", "lineage_dir", 1),
     "marker_write": ("delete", "write_bytes_atomic", "delta_dir", 2),
     "lineage_append": ("delete", "write_bytes_atomic", "lineage_dir", 1),
     "compact_overwrite": ("compact", "writer", "data_dir", 1),

@@ -888,3 +888,45 @@ def test_dataframe_delete_path_matches_driver_path(spark, tokens_df,
     assert outcomes[0][0].docs == 9
     assert len(outcomes[0][1]) == 111
     assert outcomes[0] == outcomes[1]
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mutation_job_budget(spark, tokens_df, outdir):
+    """On a store with a pending delta, an upsert append and a
+    DataFrame-path delete each run in at most 9 Spark jobs: the delta
+    (or the markers) is written first, and one thin collect over the
+    written files and the key-restricted pre-delta view feeds the
+    lineage commit."""
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    sub = tokens_df.limit(120)
+    pipe.run(sub, "snapJB")
+    pipe.append(_delta_df(spark, 5, prefix="pending"), "snapJB")
+    ids = [r["doc_id"] for r in
+           sub.select("doc_id").orderBy("doc_id").limit(20).collect()]
+    upserts = spark.createDataFrame(
+        [(i, [1, 2, 3], 3, "upd") for i in ids[:10]], TOK_SCHEMA
+    ).unionByName(_delta_df(spark, 10, prefix="fresh"))
+
+    assert _jobs_run_by(spark, lambda: pipe.append(upserts, "snapJB")) <= 9
+
+    pipe.MAX_DRIVER_DELETE_IDS = 0
+    victims = spark.createDataFrame([(i,) for i in ids[5:15]],
+                                    "doc_id string")
+    assert _jobs_run_by(spark, lambda: pipe.delete(victims, "snapJB")) <= 9
+
+    assert pipe.read_encoded("snapJB").count() == 120 + 5 + 10 - 10
+    assert pipe.verify_checksums("snapJB") == 0
