@@ -298,9 +298,9 @@ def main() -> None:
         assert tt_rows == 10, f"time-travel fetch returned {tt_rows} rows"
         extras["time_travel_fetch_docs"] = int(tt_rows)
 
-        # the staged input copy and the store itself are bench scaffolding;
-        # drop them so a 100x run's disk peak is the live artifacts only
-        pipe.cleanup_staging(snap)
+        # the store is bench scaffolding; drop it so a 100x run's disk
+        # peak is the live artifacts only (a single-wave run stages no
+        # input copy)
         shutil.rmtree(store_dir, ignore_errors=True)
 
     # external-codec size comparison (reference Tables 1-2 role,

@@ -24,7 +24,7 @@ North-rule scale machinery:
 - **One stored layout**: ``doc_id``/``source`` are always canonical
   FSST binary, encoded with the snapshot's own persisted table
   (``params/fsst_<snapshot>.json``), and every stored row carries its
-  ``row_xxh`` payload hash, so delta commits never re-read payload.
+  ``row_xxh`` payload hash, so commits never re-read payload.
 - **Time travel** (``as_of_seq``): reads can rewind to any
   still-uncompacted lineage commit.
 - **One metadata transport**: lineage, tombstone markers, params and
@@ -346,20 +346,30 @@ class CompressionPipeline:
 
     # -- staging -------------------------------------------------------------
 
-    def stage_input(self, toks: DataFrame, snapshot_id: str) -> str:
-        """One salting pass: the input is scanned ONCE, shuffled on the
-        bucket salt, and written partitioned by bucket.  Every wave then
-        reads only its own bucket directories (partition pruning) —
-        without this, each wave would rescan the whole 100 TB input
-        because ``bucket`` is computed, not a prunable column.
-        Idempotent per snapshot (_SUCCESS marker)."""
+    def _salted(self, toks: DataFrame) -> DataFrame:
+        """``toks`` plus each document's ``bucket`` salt,
+        ``pmod(xxhash64(doc_id), num_buckets)``."""
+        return toks.withColumn("bucket", F.pmod(
+            F.xxhash64("doc_id"), F.lit(self.num_buckets)).cast("int"))
+
+    def stage_input(self, toks: DataFrame, snapshot_id: str) -> str | None:
+        """The salting pass of a MULTI-wave run: the input is scanned
+        ONCE, shuffled on the bucket salt, and written partitioned by
+        bucket.  Every wave then reads only its own bucket directories
+        (partition pruning) — without this, each wave would rescan the
+        whole 100 TB input because ``bucket`` is computed, not a
+        prunable column.  Idempotent per snapshot (_SUCCESS marker);
+        returns the staging dir.
+
+        A single-wave pipeline (``wave_buckets >= num_buckets``) has no
+        later wave to prune for: it stages nothing and returns None,
+        and :meth:`run` encodes straight from the salted input."""
+        if self.wave_buckets >= self.num_buckets:
+            return None
         staging = _join(self.output_dir, "staging", snapshot_id)
         if self.fs.exists(_join(staging, "_SUCCESS")):
             return staging
-        nb = self.num_buckets
-        salted = toks.withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(nb)).cast("int"))
-        (salted.repartition(nb, "bucket")
+        (self._salted(toks).repartition(self.num_buckets, "bucket")
          .write.mode("overwrite").partitionBy("bucket").parquet(staging))
         return staging
 
@@ -642,12 +652,30 @@ class CompressionPipeline:
 
     def run(self, toks: DataFrame, snapshot_id: str,
             max_waves: int | None = None) -> PipelineResult:
+        """Build snapshot ``snapshot_id`` from ``toks``: learn (or
+        reload) the persisted codec params and FSST table, then encode
+        the buckets not yet committed, ``wave_buckets`` at a time.  A
+        wave's lineage append is its commit point, so a rerun resumes
+        at the first uncommitted bucket; ``max_waves`` stops early.
+
+        Two paths feed the waves, decided by :meth:`stage_input`:
+
+        - Single wave (``wave_buckets >= num_buckets``): ONE pass.  The
+          salted input is filtered to the pending buckets, shuffled by
+          ``repartition(num_buckets, "bucket")`` — the shuffle staging
+          runs, with the same task count — and encoded in those
+          ``num_buckets`` tasks straight into the store write.  Nothing
+          is staged; a retry re-encodes from ``toks`` and the dynamic
+          partition overwrite replaces any partial output.
+        - Multi-wave: the salted input is staged once, and each wave
+          reads only its own bucket dirs of the staged copy."""
         nb = self.num_buckets
         params = self.load_or_learn_params(toks, snapshot_id)
         fsst_table = self.load_or_learn_fsst(toks, snapshot_id)
         staging = self.stage_input(toks, snapshot_id)
-        staged = (self.spark.read.parquet(staging)
-                  .withColumn("snapshot_id", F.lit(snapshot_id)))
+        src = (self._salted(toks) if staging is None
+               else self.spark.read.parquet(staging))
+        src = src.withColumn("snapshot_id", F.lit(snapshot_id))
 
         done = self.committed_buckets(snapshot_id)
         pending = [b for b in range(nb) if b not in done]
@@ -660,7 +688,10 @@ class CompressionPipeline:
         buckets_run = sum(len(w) for w in waves)
         for wave in waves:
             t0 = time.perf_counter()
-            part = staged.filter(F.col("bucket").isin(wave))  # dir-pruned
+            # dir-pruned when staged
+            part = src.filter(F.col("bucket").isin(wave))
+            if staging is None:
+                part = part.repartition(nb, "bucket")
             enc = self._stored_rows(part, params, fsst_table)
             # doc_id-clustered row groups: a local sort (no shuffle)
             # gives each parquet row group a tight doc_id min/max, so
@@ -723,24 +754,27 @@ class CompressionPipeline:
 
     def _commit_wave(self, snapshot_id: str, wave, wall: float) -> list:
         """Wave commit point: read back ONLY the wave's just-written
-        partition directories (a filter over data_dir would re-list
-        every snapshot/bucket ever written, a listing that grows with
-        pipeline history), aggregate totals + XOR-fold checksum + codec
-        mix at (bucket, codec) grain in ONE pass (XOR of XOR-folds and
-        sums of sums compose exactly; the collected frame is <= buckets
-        x codecs rows), and append one committed lineage row per
-        bucket.  Returns the per-bucket stat dicts."""
+        partition directories through :meth:`_read_dirs` (a filter over
+        data_dir would re-list every snapshot/bucket ever written, a
+        listing that grows with pipeline history), and aggregate
+        totals, codec mix and the XOR-fold of the persisted ``row_xxh``
+        at (bucket, codec) grain in ONE pass over thin columns.
+        ``row_xxh`` is ``xxhash64(payload)`` by construction
+        (:meth:`_stored_rows`), so the payload stays unread;
+        :meth:`verify_checksums` remains the deep check that rehashes
+        it.  XOR of XOR-folds and sums of sums compose exactly, and the
+        collected frame is <= buckets x codecs rows.  Appends one
+        committed lineage row per bucket and returns the per-bucket
+        stat dicts."""
         paths = self._wave_paths(snapshot_id, wave)
         if paths:
-            written = (self.spark.read
-                       .option("basePath", self.data_dir)
-                       .parquet(*paths))
+            written = self._read_dirs(self.data_dir, paths, BASE_PARTS)
             fine = (written.groupBy("bucket", "codec").agg(
                 F.count(F.lit(1)).alias("docs"),
                 F.sum("n_tok").alias("tokens"),
                 F.sum("raw_bytes").alias("raw_bytes"),
                 F.sum("comp_bytes").alias("comp_bytes"),
-                F.expr("bit_xor(xxhash64(payload))").alias("payload_xxh"),
+                F.expr("bit_xor(row_xxh)").alias("payload_xxh"),
             ).collect())
             agg: dict[int, dict] = {}
             for r in fine:
@@ -849,10 +883,8 @@ class CompressionPipeline:
                 "finish run() before appending")
         params = self.load_or_learn_params(toks_delta, snapshot_id)
         fsst_table = self._fsst_table(snapshot_id)
-        salted = (toks_delta.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("doc_id"), F.lit(self.num_buckets)).cast("int"))
-            .withColumn("snapshot_id", F.lit(snapshot_id)))
+        salted = (self._salted(toks_delta)
+                  .withColumn("snapshot_id", F.lit(snapshot_id)))
         # Crash-retry hygiene: an attempt that died between the delta
         # write and the lineage commit left orphan delta dirs whose seq
         # never made it into lineage.  They must go before this write,
@@ -1315,7 +1347,8 @@ class CompressionPipeline:
 
     def cleanup_staging(self, snapshot_id: str) -> None:
         """Drop the staged (uncompressed) copy once every bucket of the
-        snapshot is committed — it exists only to make waves prunable."""
+        snapshot is committed — it exists only to make the waves of a
+        multi-wave run prunable."""
         done = self.committed_buckets(snapshot_id)
         if len(done) >= self.num_buckets:
             staging = _join(self.output_dir, "staging", snapshot_id)

@@ -124,6 +124,8 @@ def test_lineage_heals_from_old_when_compact_missing(
 # fault point -> (verb it fires in, patched call, pipeline dir the
 # call's path starts with, which matching call raises)
 FAULT_POINTS = {
+    "run_write": ("run", "writer", "data_dir", 1),
+    "run_lineage": ("run", "write_bytes_atomic", "lineage_dir", 1),
     "delta_write": ("append", "writer", "delta_dir", 1),
     "append_lineage": ("append", "write_bytes_atomic", "lineage_dir", 1),
     "marker_write": ("delete", "write_bytes_atomic", "delta_dir", 2),
@@ -138,10 +140,11 @@ FAULT_POINTS = {
 @pytest.mark.parametrize("point", sorted(FAULT_POINTS))
 def test_fault_point_then_retry_converges(spark, tokens_df, outdir,
                                           monkeypatch, point):
-    """Crash at one step boundary of append -> delete -> compact ->
-    compact_lineage (the step raises once instead of running), retry
+    """Crash at one step boundary of run -> append -> delete -> compact
+    -> compact_lineage (the step raises once instead of running), retry
     the verb, and finish the sequence: the resolved rows equal the
-    expected rows and every checksum holds."""
+    expected rows and every checksum holds.  The store is single-wave,
+    so run() stages nothing and its retry re-encodes from the input."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from invariantbitpacking_spark.operators import selector
@@ -149,8 +152,6 @@ def test_fault_point_then_retry_converges(spark, tokens_df, outdir,
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
                                sample_fraction=None)
     sub = tokens_df.limit(60)
-    pipe.run(sub, "snapF")
-    params = pipe.load_or_learn_params(sub, "snapF")
     base = {r["doc_id"]: list(r["tokens"]) for r in sub.collect()}
     ids = sorted(base)
     upd = ids[0]
@@ -164,6 +165,7 @@ def test_fault_point_then_retry_converges(spark, tokens_df, outdir,
                                       "doc_id string")
 
     def check(want):
+        params = pipe._load_params("snapF")
         got = {r["doc_id"]: list(r["tokens"]) for r in
                selector.decode_auto(pipe.read_encoded("snapF"), params)
                .collect()}
@@ -201,7 +203,8 @@ def test_fault_point_then_retry_converges(spark, tokens_df, outdir,
 
     monkeypatch.setattr(owner, attr, step)
 
-    verbs = [("append", lambda: pipe.append(delta, "snapF"), appended),
+    verbs = [("run", lambda: pipe.run(sub, "snapF"), base),
+             ("append", lambda: pipe.append(delta, "snapF"), appended),
              ("delete", lambda: pipe.delete(victim_df, "snapF"), deleted),
              ("compact", lambda: pipe.compact("snapF"), deleted),
              ("compact_lineage", pipe.compact_lineage, deleted)]

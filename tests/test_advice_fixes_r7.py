@@ -30,10 +30,11 @@ import numpy as np
 # The STORED corpus uses the canonical quiet NaN: Spark's own parquet
 # writer canonicalizes NaN payloads (JVM floatToIntBits) on any float
 # rewrite — measured here: 0x7FC00001 written through
-# spark.write.parquet reads back 0x7FC00000 — so the pipeline's
-# staging write canonicalizes BEFORE the codec sees the bytes.  The
-# codec itself round-trips arbitrary payload bits exactly (verified
-# via direct encode_auto/decode_auto).  The tampered source then
+# spark.write.parquet reads back 0x7FC00000 — so a multi-wave run's
+# staging write canonicalizes BEFORE the codec sees the bytes.  A
+# single-wave run stages nothing, and the codec itself round-trips
+# arbitrary payload bits exactly (verified via direct
+# encode_auto/decode_auto).  The tampered source then
 # carries a non-canonical payload: value equality calls the two NaNs
 # equal, the bit view must not.
 NAN_CANON32 = 0x7FC00000
@@ -92,6 +93,23 @@ def test_verify_roundtrip_float32_nan_negzero_bit_view(spark, tmp_path):
     _write_f32_corpus(tam_path, NAN_PAYLOAD32, POS_ZERO32)
     tampered = spark.read.parquet(tam_path)
     assert pipe.verify_roundtrip(tampered, params, "f32snap") == 2
+
+
+def test_single_wave_run_keeps_nan_payload_bits(spark, tmp_path):
+    """A single-wave run encodes straight from the input, so no staging
+    parquet write canonicalizes a NaN payload: the store round-trips
+    the source's exact bits."""
+    from invariantbitpacking_spark.plans.pipeline import CompressionPipeline
+
+    src_path = str(tmp_path / "src.parquet")
+    _write_f32_corpus(src_path, NAN_PAYLOAD32, NEG_ZERO32)
+    src = spark.read.parquet(src_path)
+    pipe = CompressionPipeline(spark, str(tmp_path / "f32pipe"),
+                               num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    pipe.run(src, "f32snap")
+    params = pipe._load_params("f32snap")
+    assert pipe.verify_roundtrip(src, params, "f32snap") == 0
 
 
 def test_fetch_empty_bucket_schema_unions_with_nonempty(spark, tmp_path):

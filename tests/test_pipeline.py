@@ -78,7 +78,8 @@ def test_two_snapshots_coexist(spark, tokens_df, outdir):
 def test_cleanup_staging(spark, tokens_df, outdir):
     import os
 
-    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+    # a multi-wave run: only those stage their input
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=2,
                                sample_fraction=None)
     sub = tokens_df.limit(60)
     pipe.run(sub, "c1")
@@ -89,6 +90,34 @@ def test_cleanup_staging(spark, tokens_df, outdir):
     # encoded data and round-trip unaffected by dropping the staged copy
     p = pipe.load_or_learn_params(sub, "c1")
     assert pipe.verify_roundtrip(sub, p, "c1") == 0
+
+
+def test_single_wave_run_skips_staging(spark, tokens_df, tmp_path):
+    """A single-wave run encodes straight from the salted input and
+    stages nothing; a multi-wave run of the same input stages it.  Both
+    commit the same per-bucket lineage and persist the same params and
+    FSST table, because encoding is per document."""
+    import os
+
+    sub = tokens_df.limit(120)
+    cols = ("bucket", "docs", "tokens", "raw_bytes", "comp_bytes",
+            "payload_xxh", "codec_mix")
+    got = {}
+    for wave in (4, 2):
+        out = str(tmp_path / f"w{wave}")
+        pipe = CompressionPipeline(spark, out, num_buckets=4,
+                                   wave_buckets=wave, sample_fraction=None)
+        assert pipe.run(sub, "s1").buckets_done == 4
+        staged = os.path.exists(os.path.join(out, "staging", "s1"))
+        assert staged == (wave < 4)
+        lin = sorted(tuple(r[c] for c in cols)
+                     for r in pipe.latest_lineage("s1").collect())
+        params = [pipe.fs.read_text(os.path.join(pipe.params_dir, f))
+                  for f in ("s1.json", "fsst_s1.json")]
+        got[wave] = (lin, params)
+        assert pipe.verify_checksums("s1") == 0
+    assert len(got[4][0]) == 4
+    assert got[4] == got[2]
 
 
 def test_wave_retry_is_idempotent(spark, tokens_df, outdir):
