@@ -631,11 +631,8 @@ def _elem_type(params) -> tuple[str, type]:
 
 
 def decoded_schema(params: IbpParams) -> str:
-    """DDL schema of a decoder's output for these params — the single
-    source of truth, shared with the pipeline's empty-fetch
-    short-circuit so a zero-row frame unions cleanly with a decoded
-    one (float corpora decode to ``array<float>``, not the int
-    default)."""
+    """DDL schema of a decoder's output for these params (float
+    corpora decode to ``array<float>``, not the int default)."""
     return (f"doc_id string, tokens array<{_elem_type(params)[0]}>, "
             "n_tok int, source string")
 

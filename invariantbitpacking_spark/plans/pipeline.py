@@ -42,6 +42,7 @@ memory, SURVEY.md §1.5); this layer is new work per BASELINE.json.
 
 from __future__ import annotations
 
+import functools
 import json
 import time
 import uuid
@@ -54,6 +55,7 @@ from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructField, _parse_datatype_string
 
 from ..functions import strings as fstr
+from ..functions.hashing import bucket_of
 from ..operators import selector, stages
 from ..operators.framing import gather_ranges, list_array_flat
 from ..operators.ibp import IbpParams, learn_params, token_stage
@@ -92,6 +94,16 @@ def _float_bits_view(df: DataFrame, itemsize: int) -> DataFrame:
         "tokens", ("doc_id", "tokens", "n_tok")))
 
 
+def _with_parts(sch, partition_fields):
+    """``sch`` plus each ``(name, DDL type)`` partition field it lacks,
+    appended in order — the column order of Spark's discovery."""
+    have = set(sch.fieldNames())
+    for name, t in partition_fields:
+        if name not in have:
+            sch = sch.add(StructField(name, _parse_datatype_string(t)))
+    return sch
+
+
 # one row per (snapshot, bucket) commit; the arrow schema of every
 # lineage parquet file and of the lineage() / latest_lineage() views
 LINEAGE_SCHEMA = pa.schema([
@@ -102,16 +114,6 @@ LINEAGE_SCHEMA = pa.schema([
     ("payload_xxh", pa.int64()), ("wall_sec", pa.float64()),
     ("committed_at", pa.float64()), ("commit_seq", pa.int64()),
 ])
-
-# Decoded-shape schema of an encoded table with ZERO stored rows (a
-# fully-deleted-then-compacted snapshot): read_encoded returns this
-# empty frame instead of failing schema inference on missing files.
-EMPTY_READ_SCHEMA = (
-    "doc_id string, source string, n_tok int, n_blocks int, "
-    "block_sizes array<int>, block_flags binary, payload binary, "
-    "comp_bytes long, raw_bytes long, codec string, "
-    "snapshot_id string, bucket int"
-)
 
 # Arrow schema of every stored row file (base, delta, tombstone
 # marker): the encode stages' nullable columns, and row_xxh, which
@@ -266,13 +268,6 @@ class CompressionPipeline:
         # of tuples would be unpickled by Python workers in a Spark job
         return self.spark.createDataFrame(
             pa.Table.from_pylist(recs, schema=LINEAGE_SCHEMA))
-
-    def _empty_df(self, ddl: str) -> DataFrame:
-        """A zero-row frame of schema ``ddl``, built from an Arrow
-        table like :meth:`_lineage_df`."""
-        schema = _parse_datatype_string(ddl)
-        return self.spark.createDataFrame(
-            to_arrow_schema(schema).empty_table(), schema)
 
     def lineage(self) -> DataFrame:
         """Every lineage row, as a DataFrame view."""
@@ -458,18 +453,22 @@ class CompressionPipeline:
             self.fs.delete(snap, recursive=True)
         return removed
 
-    def _delta_buckets(self, snapshot_id: str) -> list[int]:
-        """Buckets of a snapshot that currently carry delta files —
-        childless bucket dirs (orphan-cleanup leftovers) don't count;
-        listing them would feed schema inference an empty tree."""
+    def _delta_buckets(self, snapshot_id: str, buckets=None) -> list[int]:
+        """Buckets of a snapshot (of ``buckets``, if given) that
+        currently carry delta files — childless bucket dirs
+        (orphan-cleanup leftovers) don't count; listing them would feed
+        schema inference an empty tree."""
         snap = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
+        want = None if buckets is None else set(buckets)
         out = []
         for n in self.fs.listdir(snap):
             if not n.startswith("bucket="):
                 continue
-            if any(c.startswith("delta_seq=")
-                   for c in self.fs.listdir(_join(snap, n))):
-                out.append(int(n.split("=", 1)[1]))
+            b = int(n.split("=", 1)[1])
+            if (want is None or b in want) and any(
+                    c.startswith("delta_seq=")
+                    for c in self.fs.listdir(_join(snap, n))):
+                out.append(b)
         return sorted(out)
 
     def _maybe_compact_deltas(self, snapshot_id: str,
@@ -500,11 +499,9 @@ class CompressionPipeline:
         return pressured
 
     def _delta_paths(self, snapshot_id: str, buckets=None) -> list[str]:
-        have = self._delta_buckets(snapshot_id)
-        if buckets is not None:
-            have = [b for b in have if b in set(buckets)]
         return [_join(self.delta_dir, f"snapshot_id={snapshot_id}",
-                      f"bucket={b}") for b in have]
+                      f"bucket={b}")
+                for b in self._delta_buckets(snapshot_id, buckets)]
 
     def _dir_schema(self, path: str, partition_fields):
         """Read schema of a parquet directory (walking into partition
@@ -534,11 +531,7 @@ class CompressionPipeline:
             sch = from_arrow_schema(self.fs.parquet_schema(f))
         except Exception:
             return None
-        have = {fl.name for fl in sch.fields}
-        for name, t in partition_fields:
-            if name not in have:
-                sch = sch.add(StructField(name, _parse_datatype_string(t)))
-        return sch
+        return _with_parts(sch, partition_fields)
 
     def _read_dirs(self, root: str, paths: list[str],
                    partition_fields) -> DataFrame:
@@ -562,8 +555,8 @@ class CompressionPipeline:
         return (rows.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1).drop("_rn", "delta_seq"))
 
-    def _resolved(self, snapshot_id: str | None = None,
-                  buckets=None, as_of_seq: int | None = None,
+    def _resolved(self, snapshot_id: str, buckets=None,
+                  as_of_seq: int | None = None,
                   keys: DataFrame | None = None) -> DataFrame:
         """The snapshot's CURRENT logical rows: base minus doc_ids
         superseded by deltas, plus the latest delta rows — minus
@@ -571,7 +564,11 @@ class CompressionPipeline:
         'tombstone', the O(delta) delete marker).  The big side (base)
         is never shuffled — superseded rows fall to a broadcast
         anti-join on the small delta key set.  ``buckets`` prunes both
-        listings to the given bucket dirs (the fetch path).
+        listings to the given bucket dirs (the fetch path); without it
+        the base is ONE path, the ``snapshot_id=S`` dir, not one path
+        per bucket.  Both shapes take their schema from one footer
+        (:meth:`_read_dirs`).  Nothing stored is a zero-row frame of
+        ``STORED_SCHEMA`` plus ``BASE_PARTS``.
 
         ``as_of_seq`` is TIME TRAVEL: only delta files with
         ``delta_seq <= as_of_seq`` participate (delta_seq is a
@@ -588,33 +585,15 @@ class CompressionPipeline:
         and delta rows, and one window resolves them together (a base
         row ranks below every delta row, delta_seq 0), so a key-sized
         view shuffles key-sized rows and needs no anti-join."""
-        if buckets is not None:
-            if snapshot_id is None:
-                raise ValueError("bucket pruning needs a snapshot_id")
-            base_paths = self._wave_paths(snapshot_id, buckets)
-            base = (self._read_dirs(self.data_dir, base_paths, BASE_PARTS)
-                    if base_paths else None)
-            delta_paths = self._delta_paths(snapshot_id, buckets)
+        if buckets is None:
+            snap = _join(self.data_dir, f"snapshot_id={snapshot_id}")
+            base_paths = [snap] if any(c.startswith("bucket=")
+                                       for c in self.fs.listdir(snap)) else []
         else:
-            try:
-                base = self.spark.read.parquet(self.data_dir)
-            except Exception:
-                base = None
-            if snapshot_id is not None:
-                if base is not None:
-                    base = base.filter(F.col("snapshot_id") == snapshot_id)
-                delta_paths = self._delta_paths(snapshot_id)
-            else:
-                # only snapshot dirs that still hold bucket children:
-                # compaction can leave empty snapshot dirs (and the
-                # root write drops a _SUCCESS marker) — reading those
-                # would fail schema inference
-                delta_paths = [
-                    _join(self.delta_dir, s)
-                    for s in self.fs.listdir(self.delta_dir)
-                    if s.startswith("snapshot_id=")
-                    and any(c.startswith("bucket=") for c in
-                            self.fs.listdir(_join(self.delta_dir, s)))]
+            base_paths = self._wave_paths(snapshot_id, buckets)
+        base = (self._read_dirs(self.data_dir, base_paths, BASE_PARTS)
+                if base_paths else None)
+        delta_paths = self._delta_paths(snapshot_id, buckets)
         if keys is not None:
             def restrict(df):
                 return df.join(F.broadcast(keys), ["snapshot_id", "doc_id"],
@@ -623,8 +602,10 @@ class CompressionPipeline:
                 base = restrict(base)
         if not delta_paths:
             if base is None:
-                raise ValueError("nothing stored at "
-                                 f"{self.data_dir} / {self.delta_dir}")
+                sch = _with_parts(from_arrow_schema(STORED_SCHEMA),
+                                  BASE_PARTS)
+                return self.spark.createDataFrame(
+                    to_arrow_schema(sch).empty_table(), sch)
             return base
         deltas = self._read_dirs(self.delta_dir, delta_paths, DELTA_PARTS)
         if as_of_seq is not None:
@@ -1064,9 +1045,7 @@ class CompressionPipeline:
         first — folding them into the base would promote uncommitted
         rows to committed state."""
         self._purge_orphan_deltas(snapshot_id)
-        have = self._delta_buckets(snapshot_id)
-        if buckets is not None:
-            have = [b for b in have if b in set(buckets)]
+        have = self._delta_buckets(snapshot_id, buckets)
         nb = self.num_buckets
         if not have:
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
@@ -1217,16 +1196,11 @@ class CompressionPipeline:
         q9 number in OPTIMIZATION_r08.md."""
         nb = self.num_buckets
         self._purge_orphan_deltas(snapshot_id)
-        from ..functions.hashing import bucket_of
-
         affected = sorted({bucket_of(d, nb) for d in id_list})
         if not affected:
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
         t0 = time.perf_counter()
-        try:
-            cur = self._resolved(snapshot_id, affected)
-        except ValueError:
-            return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
+        cur = self._resolved(snapshot_id, affected)
         key_vals = fstr.encode_id_literals(id_list, fsst_table)
         victims = (cur.filter(F.col("doc_id").isin(key_vals))
                    .select("bucket", "doc_id", "codec", "n_tok",
@@ -1301,20 +1275,15 @@ class CompressionPipeline:
         incrementally — the XOR checksum algebra composes, removing a
         row XORs its hash back out — so ``verify_checksums`` is green
         immediately.  An id set this large salts into every bucket, so
-        the view spans them all and the markers' dirs name the affected
-        ones."""
+        the view is the whole snapshot (one listing of its dir) and the
+        markers' dirs name the affected ones."""
         self._purge_orphan_deltas(snapshot_id)
         t0 = time.perf_counter()
         keys = fstr.encode_string_cols(
             ids.select(F.col("doc_id").cast("string").alias("doc_id"),
                        F.lit(snapshot_id).alias("snapshot_id")),
             fsst_table, ("doc_id",))
-        try:
-            cur = self._resolved(snapshot_id, range(self.num_buckets),
-                                 keys=keys)
-        except ValueError:
-            return PipelineResult(snapshot_id, 0, self.num_buckets,
-                                  0, 0, 0, 0)
+        cur = self._resolved(snapshot_id, keys=keys)
         seq = self._next_commit_seq()
         tomb = (cur.select("snapshot_id", "doc_id", "bucket")
                 .withColumn("source", F.lit(None).cast("binary"))
@@ -1355,10 +1324,70 @@ class CompressionPipeline:
             if self.fs.exists(staging):
                 self.fs.delete(staging, recursive=True)
 
+    def _read(self, snapshot_id: str | None, ids=None, decode: bool = False,
+              as_of_seq: int | None = None) -> DataFrame:
+        """THE store read, gather then decode like the reference's
+        ``decompress_fetch`` (src/decompress.cu:56-98): the resolved
+        view (see :meth:`_resolved`; ``as_of_seq`` time-travels it)
+        minus ``row_xxh``, through ONE Arrow stage chain — FSST decode
+        of doc_id/source with the snapshot's persisted table, then with
+        ``decode`` the token decode with its persisted params.  Raises
+        ValueError for a snapshot that was never run.
+
+        ``ids``, a bounded list of doc_id strings, makes it a point
+        lookup: their buckets and FSST encodings are computed
+        driver-side (the encoding is deterministic, so byte equality IS
+        id equality) and only those bucket dirs are listed.  Two
+        locators find the hits:
+
+        - up to 1024 ids, a literal ``IN`` filter, pushed into the
+          parquet scan, so doc_id-clustered row groups are skipped by
+          min/max and the doc_id bloom filter;
+        - above that, the ``keys`` view of :meth:`_resolved`, a
+          broadcast semi-join.
+
+        ``snapshot_id=None`` unions the reads of every snapshot with
+        committed lineage; ``ids`` and ``as_of_seq`` need a snapshot."""
+        if snapshot_id is None:
+            if ids is not None or as_of_seq is not None:
+                raise ValueError("ids and as_of_seq need a snapshot_id")
+            snaps = sorted({r["snapshot_id"] for r in self._lineage_records()
+                            if r["status"] == "committed"})
+            if not snaps:
+                raise ValueError(f"no committed snapshot at {self.output_dir}")
+            return functools.reduce(DataFrame.unionByName, [
+                self._read(s, decode=decode) for s in snaps])
+        table = self._fsst_table(snapshot_id)
+        if ids is None:
+            view = self._resolved(snapshot_id, as_of_seq=as_of_seq)
+        else:
+            ids = [str(i) for i in ids]
+            buckets = sorted({bucket_of(i, self.num_buckets) for i in ids})
+            keys = fstr.encode_id_literals(ids, table)
+            if len(ids) <= 1024:
+                view = (self._resolved(snapshot_id, buckets, as_of_seq)
+                        .filter(F.col("doc_id").isin(keys)))
+            else:
+                view = self._resolved(
+                    snapshot_id, buckets, as_of_seq,
+                    keys=self.spark.createDataFrame(pa.table({
+                        "snapshot_id": [snapshot_id] * len(keys),
+                        "doc_id": pa.array(keys, pa.binary())})))
+        chain = [fstr.decode_stage(table, ("doc_id", "source"))]
+        if decode:
+            chain.append(selector.decode_auto_stage(
+                self._load_params(snapshot_id)))
+        return stages.apply(view.drop("row_xxh"), *chain)
+
     def read_encoded(self, snapshot_id: str | None = None,
                      as_of_seq: int | None = None) -> DataFrame:
-        """Encoded table; partition pruning on (snapshot_id, bucket)
-        dirs makes per-snapshot reads touch only their own files.
+        """The RESOLVED encoded table — base rows superseded by
+        merge-on-read deltas are replaced by the latest delta rows —
+        with doc_id/source decoded, each snapshot with its own FSST
+        table: :meth:`_read` without ``ids``.  One snapshot reads only
+        its own ``snapshot_id=S`` dirs; ``snapshot_id=None`` unions
+        every snapshot with committed lineage.  A committed snapshot
+        whose every document was deleted reads as zero rows.
 
         ``as_of_seq`` is SNAPSHOT TIME TRAVEL: read the table as it
         stood when lineage commit_seq was ``as_of_seq`` — delta files
@@ -1368,63 +1397,16 @@ class CompressionPipeline:
         folds deltas into the base and deletes them, so as-of reads
         older than the last compaction of a bucket return the
         compacted (current-base) state for that bucket.  Requires a
-        ``snapshot_id``.
-        The FSST-encoded doc_id/source columns decode transparently,
-        each snapshot with its own persisted table.  The view is the
-        RESOLVED state: base rows superseded by merge-on-read deltas
-        are replaced by the latest delta rows."""
-        if as_of_seq is not None and snapshot_id is None:
-            raise ValueError("read_encoded: as_of_seq needs a snapshot_id")
-        try:
-            df = self._resolved(snapshot_id, as_of_seq=as_of_seq)
-        except ValueError:
-            # a COMMITTED snapshot can legitimately hold zero rows
-            # (every document tombstone-deleted, then compacted: all
-            # bucket dirs dropped).  That is an empty table, not an
-            # error — raising here broke the delete-everything
-            # lifecycle.  With no lineage either, the path truly holds
-            # nothing and the error stands.
-            if (snapshot_id is None
-                    or not self.committed_buckets(snapshot_id)):
-                raise
-            return self._empty_df(EMPTY_READ_SCHEMA)
-        df = df.drop("row_xxh")
-        cols = ("doc_id", "source")
-        if snapshot_id is not None:
-            return fstr.decode_string_cols(
-                df, self._fsst_table(snapshot_id), cols)
-        # multi-snapshot read: each snapshot decodes with its own table
-        # (distinct on the partition column is a listing-level scan,
-        # one row per snapshot)
-        snaps = sorted(r[0] for r in
-                       df.select("snapshot_id").distinct().collect())
-        parts = [fstr.decode_string_cols(
-            df.filter(F.col("snapshot_id") == s), self._fsst_table(s), cols)
-            for s in snaps]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        ``snapshot_id``."""
+        return self._read(snapshot_id, as_of_seq=as_of_seq)
 
     def fetch(self, ids, snapshot_id: str, decode: bool = True,
               as_of_seq: int | None = None) -> DataFrame:
         """Store-level point fetch — "give me these documents", the
-        most common operation against a compressed corpus store, and
-        the durable twin of ``decompress_fetch(index_arr)`` (reference
-        src/decompress.cu:56-98, proven at DataFrame level by the
-        gather_decode query).
-
-        ``ids`` is a bounded list of doc_id strings (a point lookup,
-        not a scan).  Because ``bucket = xxhash64(doc_id) % nb`` is
-        computable from the ids alone (one tiny local job, exactly as
-        :meth:`append`/:meth:`delete` salt their deltas), the read
-        lists ONLY the ids' own bucket directories — a 10-doc fetch
-        from a 100 TB snapshot opens <= 10 bucket dirs instead of
-        listing every partition the way :meth:`read_encoded` must.
-        Inside those buckets a broadcast semi-join on the
-        FSST-encoded doc_id bytes selects the hits (deterministic
-        encoding => byte equality IS id equality, no decode pass),
-        and only the hits are decoded.
+        durable twin of ``decompress_fetch(index_arr)`` (reference
+        src/decompress.cu:56-98): :meth:`_read` of ``ids``, a bounded
+        list of doc_id strings.  A 10-doc fetch from a 100 TB snapshot
+        lists <= 10 bucket dirs, and only the hits are decoded.
 
         ``decode=False`` returns the matching ENCODED rows (payload,
         block_sizes, flags...) with string columns decoded — the
@@ -1432,47 +1414,7 @@ class CompressionPipeline:
         ``as_of_seq`` time-travels the lookup (see
         :meth:`read_encoded`): upserts and tombstone deletes after
         that lineage commit are invisible."""
-        from ..functions.hashing import bucket_of
-
-        ids = [str(i) for i in ids]
-        nb = self.num_buckets
-        # bucket salt computed DRIVER-side (pure-Python XXH64, pinned
-        # bit-equal to Spark's xxhash64) — a point lookup should not
-        # pay a scheduler round-trip just to hash ten strings
-        buckets = sorted({bucket_of(i, nb) for i in ids})
-        paths = self._wave_paths(snapshot_id, buckets)
-        params = self._load_params(snapshot_id)
-        if not paths and not self._delta_paths(snapshot_id, buckets):
-            # Nothing stored in any target bucket.  The empty frame
-            # must carry the SAME schema the non-empty path would
-            # return — the decoded shape for this snapshot's params
-            # (float corpora decode to array<float>), or the encoded
-            # row shape when decode=False — so unions with non-empty
-            # fetches stay well-typed.
-            return self._empty_df(EMPTY_READ_SCHEMA if not decode
-                                  else selector.decoded_schema(params))
-        enc = self._resolved(snapshot_id, buckets,
-                             as_of_seq=as_of_seq).drop("row_xxh")
-        table = self._fsst_table(snapshot_id)
-        # Keys are FSST-encoded driver-side (the encoding is
-        # deterministic, so byte equality IS id equality)
-        keys = fstr.encode_id_literals(ids, table)
-        if len(ids) <= 1024:
-            # Literal IN predicate instead of a join: it reaches the
-            # parquet scan as a PushedFilter, so the doc_id-CLUSTERED
-            # row groups the write path lays down are SKIPPED by their
-            # min/max stats — a broadcast join can never prune below
-            # the file level.
-            hits = enc.filter(F.col("doc_id").isin(keys))
-        else:
-            hits = enc.join(F.broadcast(self.spark.createDataFrame(
-                pa.table({"doc_id": pa.array(keys, pa.binary())}))),
-                "doc_id", "left_semi")
-        if not decode:
-            return fstr.decode_string_cols(hits, table, ("doc_id", "source"))
-        return stages.apply(hits,
-                            fstr.decode_stage(table, ("doc_id", "source")),
-                            selector.decode_auto_stage(params))
+        return self._read(snapshot_id, ids, decode, as_of_seq)
 
     def verify_checksums(self, snapshot_id: str) -> int:
         """Integrity audit against lineage: recompute each committed
@@ -1484,14 +1426,7 @@ class CompressionPipeline:
         bytes themselves (a deep check — the persisted row_xxh column
         is deliberately not trusted here), so it also validates the
         incremental checksum math of delta commits."""
-        try:
-            enc = self._resolved(snapshot_id)
-        except ValueError:
-            # zero stored rows (fully-deleted snapshot): intact iff
-            # lineage agrees nothing should be there
-            return (self.latest_lineage(snapshot_id)
-                    .filter(F.col("docs") > 0).count())
-        got = enc.groupBy("bucket").agg(
+        got = self._resolved(snapshot_id).groupBy("bucket").agg(
             F.expr("bit_xor(xxhash64(payload))").alias("xxh"))
         # latest commit per bucket: appends supersede earlier rows
         lin = (self.latest_lineage(snapshot_id)
@@ -1510,11 +1445,14 @@ class CompressionPipeline:
         The missing half matters for a living snapshot: an inner join
         alone would silently pass a table that lost documents.
 
-        Float snapshots compare on the IEEE integer bit view (see
-        :func:`_float_bits_view`): value equality would wave through a
-        0.0 that decoded as -0.0 or a NaN whose payload bits changed —
-        the codec's contract is bit-identity, so the audit's is too."""
-        dec = selector.decode_auto(self.read_encoded(snapshot_id), params)
+        The table is :meth:`_read` with ``decode``: each snapshot
+        decodes with its OWN persisted params in one Python eval, so
+        ``params`` only says how to compare.  Float snapshots compare
+        on the IEEE integer bit view (see :func:`_float_bits_view`):
+        value equality would wave through a 0.0 that decoded as -0.0
+        or a NaN whose payload bits changed — the codec's contract is
+        bit-identity, so the audit's is too."""
+        dec = self._read(snapshot_id, decode=True)
         src = toks
         if params.value_kind.startswith("float"):
             isz = 8 if params.value_kind == "float64" else 4

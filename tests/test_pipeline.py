@@ -808,20 +808,64 @@ def test_lineage_auto_compaction_on_run(spark, tokens_df, outdir):
 
 
 def test_empty_read_schema_matches_nonempty_path(spark, tokens_df, outdir):
-    """EMPTY_READ_SCHEMA (the fully-deleted-snapshot frame) is a
-    literal, so any column added to the encoded table would silently
-    skew it from the real read_encoded shape (ADVICE r6).  Pin them
-    bit-equal: a committed snapshot's read_encoded schema must match
-    the empty frame field-for-field, name AND type."""
-    from invariantbitpacking_spark.plans.pipeline import EMPTY_READ_SCHEMA
-
+    """A snapshot whose every document was deleted and then compacted
+    stores no file at all.  Its reads are zero-row frames that carry
+    the non-empty reads' exact shape (names, types, order), so unions
+    with them stay well-typed; a float snapshot's empty fetch still
+    decodes to ``array<float>``."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=2, wave_buckets=2,
                                sample_fraction=None)
-    pipe.run(tokens_df.limit(40), "snapES")
-    real = [(f.name, f.dataType) for f in pipe.read_encoded("snapES").schema]
-    empty = [(f.name, f.dataType)
-             for f in spark.createDataFrame([], EMPTY_READ_SCHEMA).schema]
-    assert sorted(real) == sorted(empty)
+    sub = tokens_df.limit(40)
+    ids = [r["doc_id"] for r in
+           sub.select("doc_id").orderBy("doc_id").limit(3).collect()]
+    pipe.run(sub, "snapES")
+    floats = sub.withColumn("tokens", F.col("tokens").cast("array<float>"))
+    for snap, src in (("snapEE", sub), ("snapEF", floats)):
+        pipe.run(src, snap)
+        pipe.delete(sub.select("doc_id"), snap)
+        pipe.compact(snap)
+
+    def shape(df):
+        return [(f.name, f.dataType) for f in df.schema]
+
+    for read in (pipe.read_encoded, lambda s: pipe.fetch(ids, s),
+                 lambda s: pipe.fetch(ids, s, decode=False)):
+        full, empty = read("snapES"), read("snapEE")
+        assert full.count() > 0 and empty.count() == 0
+        assert shape(empty) == shape(full)
+    empty_f = pipe.fetch(ids, "snapEF")
+    assert empty_f.count() == 0
+    assert empty_f.schema["tokens"].dataType.simpleString() == "array<float>"
+    assert pipe.read_encoded().count() == sub.count()
+
+
+def test_verify_roundtrip_all_snapshots_uses_own_params(spark, tmp_path):
+    """Without a snapshot_id the round-trip audit decodes every
+    snapshot with its OWN persisted params: two snapshots that learned
+    different IBP masks audit clean together, whichever snapshot's
+    params the caller hands in (they only pick the comparison view)."""
+    import numpy as np
+
+    from invariantbitpacking_spark.sources.tokens import generate_tokens_df
+
+    a = generate_tokens_df(spark, 300, seed=1)
+    b = (generate_tokens_df(spark, 300, seed=2)
+         .withColumn("doc_id", F.concat(F.lit("B-"), "doc_id"))
+         .withColumn("tokens", F.transform("tokens", lambda t: (
+             (t.cast("bigint") * 37 + 100003) % 2000000000).cast("int"))))
+    pipe = CompressionPipeline(spark, str(tmp_path / "out"), num_buckets=4,
+                               wave_buckets=4, sample_fraction=None)
+    pipe.run(a, "A")
+    pipe.run(b, "B")
+    params_a = pipe.load_or_learn_params(a, "A")
+    params_b = pipe.load_or_learn_params(b, "B")
+    assert not (np.array_equal(params_a.mask, params_b.mask)
+                and np.array_equal(params_a.bitval, params_b.bitval))
+    enc_b = pipe.read_encoded("B")
+    assert enc_b.filter(F.col("codec") == "ibp").count() > 0
+    assert pipe.verify_roundtrip(a, params_a, "A") == 0
+    assert pipe.verify_roundtrip(b, params_b, "B") == 0
+    assert pipe.verify_roundtrip(a.unionByName(b), params_a) == 0
 
 
 def test_store_files_share_one_schema(spark, tokens_df, outdir):
@@ -959,3 +1003,30 @@ def test_mutation_job_budget(spark, tokens_df, outdir):
 
     assert pipe.read_encoded("snapJB").count() == 120 + 5 + 10 - 10
     assert pipe.verify_checksums("snapJB") == 0
+
+
+def test_read_path_budget(spark, tokens_df, outdir):
+    """Building a full read starts no Spark job (the base schema comes
+    from one footer, and one snapshot dir lists on the driver), and
+    every read face crosses into Python once: a decoded full scan and
+    a point fetch each plan ONE MapInArrow, and the fetch keeps its IN
+    literal pushed into the parquet scan."""
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    sub = tokens_df.limit(100)
+    pipe.run(sub, "snapRB")
+    ids = [r["doc_id"] for r in
+           sub.select("doc_id").orderBy("doc_id").limit(4).collect()]
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    for pending in (False, True):
+        if pending:
+            pipe.append(_delta_df(spark, 3, prefix="rb"), "snapRB")
+        assert _jobs_run_by(spark, lambda: pipe.read_encoded("snapRB")) == 0
+        assert plan(pipe._read("snapRB", decode=True)).count(
+            "MapInArrow") == 1
+        got = plan(pipe.fetch(ids, "snapRB"))
+        assert got.count("MapInArrow") == 1
+        assert "PushedFilters: [In(doc_id" in got
