@@ -127,15 +127,26 @@ STORED_SCHEMA = pa.schema([
     ("codec", pa.string()), pa.field("row_xxh", pa.int64(), False),
 ])
 
-# Partition columns (name, DDL type) of the base and delta trees.
-BASE_PARTS = (("snapshot_id", "string"), ("bucket", "int"))
-DELTA_PARTS = BASE_PARTS + (("delta_seq", "long"),)
-
 # Sentinel codec of a DELETE marker row in the delta tree: it wins
 # latest-wins resolution like any delta row but is filtered from every
 # resolved view, so the document reads as gone while the base bucket
 # stays byte-identical until compact() physically erases it.
 TOMBSTONE_CODEC = "tombstone"
+
+# The column values of every marker row after its doc_id, in
+# STORED_SCHEMA order: no payload, zero counts, the sentinel codec.
+_TOMBSTONE_MARKER = {
+    "source": None, "n_tok": 0, "n_blocks": 0, "block_sizes": [],
+    "block_flags": None, "payload": None, "comp_bytes": 0, "raw_bytes": 0,
+    "codec": TOMBSTONE_CODEC, "row_xxh": 0,
+}
+
+# Partition columns (name, DDL type) of the base and delta trees.
+BASE_PARTS = (("snapshot_id", "string"), ("bucket", "int"))
+DELTA_PARTS = BASE_PARTS + (("delta_seq", "long"),)
+
+# (count, sum) columns of the thin stats a commit folds into lineage
+_COUNTS = ("docs", "tokens", "raw_bytes", "comp_bytes")
 
 
 @dataclass
@@ -368,13 +379,15 @@ class CompressionPipeline:
          .write.mode("overwrite").partitionBy("bucket").parquet(staging))
         return staging
 
-    def _wave_paths(self, snapshot_id: str, wave) -> list[str]:
-        """Partition directories a wave just wrote (empty buckets write
-        nothing) — existence probes through the Hadoop FileSystem, so
-        the same code lists hdfs:/s3a: output."""
-        paths = [_join(self.data_dir, f"snapshot_id={snapshot_id}",
-                       f"bucket={b}") for b in wave]
-        return [p for p in paths if self.fs.exists(p)]
+    def _bucket_dirs(self, root: str, snapshot_id: str,
+                     buckets) -> dict[int, str]:
+        """``{bucket: dir}`` of the ``root/snapshot_id=S/bucket=B`` dirs
+        of ``buckets`` that exist (an empty bucket writes nothing) —
+        existence probes through the Hadoop FileSystem, so the same
+        code lists hdfs:/s3a: output."""
+        dirs = {b: _join(root, f"snapshot_id={snapshot_id}", f"bucket={b}")
+                for b in buckets}
+        return {b: p for b, p in dirs.items() if self.fs.exists(p)}
 
     def _load_params(self, snapshot_id: str) -> IbpParams:
         """The snapshot's PERSISTED codec params — read-side twin of
@@ -420,7 +433,29 @@ class CompressionPipeline:
         recs = self._committed(snapshot_id)
         return recs[-1]["commit_seq"] if recs else 0
 
-    def _purge_orphan_deltas(self, snapshot_id: str) -> int:
+    def _delta_tree(self, snapshot_id: str,
+                    buckets=None) -> dict[int, list[int]]:
+        """THE delta-tree listing: ``{bucket: [delta_seq, ...]}`` (seqs
+        ascending) of the snapshot's
+        ``delta/snapshot_id=S/bucket=*/delta_seq=*`` dirs.  ``buckets``
+        limits it to those bucket dirs: the snapshot dir is listed once,
+        then only the given bucket dirs that exist.  A childless bucket
+        dir (an orphan-purge leftover) maps to ``[]``."""
+        snap = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
+        want = None if buckets is None else {int(b) for b in buckets}
+        tree = {}
+        for name in self.fs.listdir(snap):
+            if not name.startswith("bucket="):
+                continue
+            b = int(name.split("=", 1)[1])
+            if want is None or b in want:
+                tree[b] = sorted(
+                    int(c.split("=", 1)[1])
+                    for c in self.fs.listdir(_join(snap, name))
+                    if c.startswith("delta_seq="))
+        return tree
+
+    def _purge_orphan_deltas(self, snapshot_id: str) -> dict[int, list[int]]:
         """Delete every delta_seq dir STRICTLY greater than the
         snapshot's lineage max commit_seq.  A crashed append leaves its
         delta files with no lineage commit; if other snapshots advance
@@ -428,52 +463,45 @@ class CompressionPipeline:
         longer matches the orphan's, so matching only the next seq
         (the old scheme) left the orphan behind as fake committed data
         — the incremental stats then drift permanently.  The
-        per-snapshot max is crash-ordering-proof.  Returns dirs
-        removed."""
-        snap = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
-        if not self.fs.exists(snap):
-            return 0
+        per-snapshot max is crash-ordering-proof.  Bucket dirs (and
+        the snapshot dir) left without deltas go too.  Returns the
+        delta tree that remains (see :meth:`_delta_tree`), which the
+        calling mutation reads instead of listing again."""
+        tree = self._delta_tree(snapshot_id)
+        if not tree:
+            return tree
         max_seq = self._snapshot_max_seq(snapshot_id)
-        removed = 0
-        for bname in self.fs.listdir(snap):
-            if not bname.startswith("bucket="):
-                continue
-            bdir = _join(snap, bname)
-            for sname in self.fs.listdir(bdir):
-                if not sname.startswith("delta_seq="):
-                    continue
-                if int(sname.split("=", 1)[1]) > max_seq:
-                    self.fs.delete(_join(bdir, sname), recursive=True)
-                    removed += 1
-            if not any(c.startswith("delta_seq=")
-                       for c in self.fs.listdir(bdir)):
-                self.fs.delete(bdir, recursive=True)
-        if not any(c.startswith("bucket=")
-                   for c in self.fs.listdir(snap)):
-            self.fs.delete(snap, recursive=True)
-        return removed
-
-    def _delta_buckets(self, snapshot_id: str, buckets=None) -> list[int]:
-        """Buckets of a snapshot (of ``buckets``, if given) that
-        currently carry delta files — childless bucket dirs
-        (orphan-cleanup leftovers) don't count; listing them would feed
-        schema inference an empty tree."""
         snap = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
-        want = None if buckets is None else set(buckets)
-        out = []
-        for n in self.fs.listdir(snap):
-            if not n.startswith("bucket="):
-                continue
-            b = int(n.split("=", 1)[1])
-            if (want is None or b in want) and any(
-                    c.startswith("delta_seq=")
-                    for c in self.fs.listdir(_join(snap, n))):
-                out.append(b)
-        return sorted(out)
+        for b, seqs in list(tree.items()):
+            bdir = _join(snap, f"bucket={b}")
+            for s in seqs:
+                if s > max_seq:
+                    self.fs.delete(_join(bdir, f"delta_seq={s}"),
+                                   recursive=True)
+            tree[b] = [s for s in seqs if s <= max_seq]
+            if not tree[b]:
+                self.fs.delete(bdir, recursive=True)
+                del tree[b]
+        if not tree:
+            self.fs.delete(snap, recursive=True)
+        return tree
 
-    def _maybe_compact_deltas(self, snapshot_id: str,
-                              buckets) -> list[int]:
-        """Fold any of ``buckets`` whose delta_seq directory count has
+    def _delta_buckets(self, snapshot_id: str, buckets=None,
+                       tree=None) -> list[int]:
+        """Buckets of a snapshot (of ``buckets``, if given) that
+        currently carry delta files, read from ``tree`` or a fresh
+        :meth:`_delta_tree` listing — childless bucket dirs don't
+        count; listing them would feed schema inference an empty
+        tree."""
+        if tree is None:
+            tree = self._delta_tree(snapshot_id, buckets)
+        want = None if buckets is None else set(buckets)
+        return sorted(b for b, seqs in tree.items()
+                      if seqs and (want is None or b in want))
+
+    def _maybe_compact_deltas(self, snapshot_id: str, tree) -> list[int]:
+        """Fold any bucket of ``tree`` (``{bucket: delta seqs}`` of the
+        buckets a mutation just committed) whose delta_seq count has
         reached ``delta_compact_threshold`` back into the base.  Called
         by the delta append and tombstone-delete paths after their
         lineage commit, so N small mutations cost O(delta) each plus
@@ -482,26 +510,11 @@ class CompressionPipeline:
         per bucket, a bound that holds at any corpus size.  Returns the
         buckets that were compacted."""
         thr = self.delta_compact_threshold
-        if not thr:
-            return []
-        snap = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
-        pressured = []
-        for b in buckets:
-            bdir = _join(snap, f"bucket={b}")
-            if not self.fs.exists(bdir):
-                continue
-            n = sum(1 for c in self.fs.listdir(bdir)
-                    if c.startswith("delta_seq="))
-            if n >= thr:
-                pressured.append(b)
+        pressured = [b for b, seqs in sorted(tree.items())
+                     if thr and len(seqs) >= thr]
         if pressured:
             self.compact(snapshot_id, buckets=pressured)
         return pressured
-
-    def _delta_paths(self, snapshot_id: str, buckets=None) -> list[str]:
-        return [_join(self.delta_dir, f"snapshot_id={snapshot_id}",
-                      f"bucket={b}")
-                for b in self._delta_buckets(snapshot_id, buckets)]
 
     def _dir_schema(self, path: str, partition_fields):
         """Read schema of a parquet directory (walking into partition
@@ -557,7 +570,7 @@ class CompressionPipeline:
 
     def _resolved(self, snapshot_id: str, buckets=None,
                   as_of_seq: int | None = None,
-                  keys: DataFrame | None = None) -> DataFrame:
+                  keys: DataFrame | None = None, tree=None) -> DataFrame:
         """The snapshot's CURRENT logical rows: base minus doc_ids
         superseded by deltas, plus the latest delta rows — minus
         documents whose latest delta is a TOMBSTONE (codec
@@ -584,16 +597,22 @@ class CompressionPipeline:
         BEFORE latest-wins: a broadcast semi-join keeps the keys' base
         and delta rows, and one window resolves them together (a base
         row ranks below every delta row, delta_seq 0), so a key-sized
-        view shuffles key-sized rows and needs no anti-join."""
+        view shuffles key-sized rows and needs no anti-join.
+
+        ``tree``, the snapshot's :meth:`_delta_tree` when the caller
+        has just listed it, spares the delta listing."""
         if buckets is None:
             snap = _join(self.data_dir, f"snapshot_id={snapshot_id}")
             base_paths = [snap] if any(c.startswith("bucket=")
                                        for c in self.fs.listdir(snap)) else []
         else:
-            base_paths = self._wave_paths(snapshot_id, buckets)
+            base_paths = list(self._bucket_dirs(
+                self.data_dir, snapshot_id, buckets).values())
         base = (self._read_dirs(self.data_dir, base_paths, BASE_PARTS)
                 if base_paths else None)
-        delta_paths = self._delta_paths(snapshot_id, buckets)
+        delta_paths = [
+            _join(self.delta_dir, f"snapshot_id={snapshot_id}", f"bucket={b}")
+            for b in self._delta_buckets(snapshot_id, buckets, tree)]
         if keys is not None:
             def restrict(df):
                 return df.join(F.broadcast(keys), ["snapshot_id", "doc_id"],
@@ -660,7 +679,7 @@ class CompressionPipeline:
 
         done = self.committed_buckets(snapshot_id)
         pending = [b for b in range(nb) if b not in done]
-        totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
+        totals = dict.fromkeys(_COUNTS, 0)
 
         waves = [pending[i:i + self.wave_buckets]
                  for i in range(0, len(pending), self.wave_buckets)]
@@ -670,7 +689,8 @@ class CompressionPipeline:
         for wave in waves:
             t0 = time.perf_counter()
             # dir-pruned when staged
-            part = src.filter(F.col("bucket").isin(wave))
+            part = src.filter(
+                F.expr(f"bucket IN ({', '.join(map(str, wave))})"))
             if staging is None:
                 part = part.repartition(nb, "bucket")
             enc = self._stored_rows(part, params, fsst_table)
@@ -734,64 +754,38 @@ class CompressionPipeline:
             self.compact_lineage()
 
     def _commit_wave(self, snapshot_id: str, wave, wall: float) -> list:
-        """Wave commit point: read back ONLY the wave's just-written
-        partition directories through :meth:`_read_dirs` (a filter over
-        data_dir would re-list every snapshot/bucket ever written, a
-        listing that grows with pipeline history), and aggregate
-        totals, codec mix and the XOR-fold of the persisted ``row_xxh``
-        at (bucket, codec) grain in ONE pass over thin columns.
-        ``row_xxh`` is ``xxhash64(payload)`` by construction
+        """Wave commit point of run() and compact(): read back ONLY the
+        wave's just-written partition directories through
+        :meth:`_read_dirs` (a filter over data_dir would re-list every
+        snapshot/bucket ever written, a listing that grows with
+        pipeline history), take their :meth:`_thin_stats`, and commit
+        them through the one fold, :meth:`_commit_delta_wave`, onto an
+        EMPTY base: the buckets were rewritten, so no old stats carry
+        over, and an empty bucket commits a zero row so resume skips
+        it.  ``row_xxh`` is ``xxhash64(payload)`` by construction
         (:meth:`_stored_rows`), so the payload stays unread;
         :meth:`verify_checksums` remains the deep check that rehashes
-        it.  XOR of XOR-folds and sums of sums compose exactly, and the
-        collected frame is <= buckets x codecs rows.  Appends one
-        committed lineage row per bucket and returns the per-bucket
-        stat dicts."""
-        paths = self._wave_paths(snapshot_id, wave)
-        if paths:
-            written = self._read_dirs(self.data_dir, paths, BASE_PARTS)
-            fine = (written.groupBy("bucket", "codec").agg(
-                F.count(F.lit(1)).alias("docs"),
-                F.sum("n_tok").alias("tokens"),
-                F.sum("raw_bytes").alias("raw_bytes"),
-                F.sum("comp_bytes").alias("comp_bytes"),
-                F.expr("bit_xor(row_xxh)").alias("payload_xxh"),
-            ).collect())
-            agg: dict[int, dict] = {}
-            for r in fine:
-                b = int(r["bucket"])
-                a = agg.setdefault(b, {
-                    "bucket": b, "docs": 0, "tokens": 0, "raw_bytes": 0,
-                    "comp_bytes": 0, "payload_xxh": 0, "mix": {}})
-                for k in ("docs", "tokens", "raw_bytes", "comp_bytes"):
-                    a[k] += int(r[k])
-                a["payload_xxh"] ^= int(r["payload_xxh"] or 0)
-                a["mix"][r["codec"]] = int(r["docs"])
-            stats = list(agg.values())
-            mixes = {a["bucket"]: a["mix"] for a in stats}
-        else:  # every bucket in the wave was empty
-            stats, mixes = [], {}
-        now = time.time()
-        seq = self._next_commit_seq()
-        rows = []
-        for r in stats:
-            b = int(r["bucket"])
-            rows.append((snapshot_id, b, "committed", r["docs"],
-                         r["tokens"], r["raw_bytes"], r["comp_bytes"],
-                         json.dumps({k: int(v) for k, v in
-                                     (mixes.get(b) or {}).items()},
-                                    sort_keys=True),
-                         int(r["payload_xxh"] or 0),
-                         wall / max(len(wave), 1), now, seq))
-        # empty buckets still commit (so resume skips them)
-        got = {int(r["bucket"]) for r in stats}
-        for b in wave:
-            if b not in got:
-                rows.append((snapshot_id, b, "committed",
-                             0, 0, 0, 0, "{}", 0,
-                             wall / max(len(wave), 1), now, seq))
-        self._append_lineage_rows(rows)
-        return stats
+        it.  Returns the per-bucket stat dicts."""
+        paths = list(self._bucket_dirs(self.data_dir, snapshot_id,
+                                       wave).values())
+        stats = (self._thin_stats(self._read_dirs(
+            self.data_dir, paths, BASE_PARTS), "bucket", "codec")
+            if paths else [])
+        return self._commit_delta_wave(snapshot_id, wave, [], stats, wall,
+                                       self._next_commit_seq(), rebase=True)
+
+    @staticmethod
+    def _thin_stats(rows: DataFrame, *by: str) -> list:
+        """THE thin-stats aggregation, collected: per ``by`` group the
+        row count and sums of n_tok/raw_bytes/comp_bytes (``_COUNTS``)
+        and the XOR-fold of the persisted ``row_xxh`` as ``xxh`` —
+        sums of sums and XORs of XOR-folds compose exactly."""
+        return rows.groupBy(*by).agg(
+            F.count(F.lit(1)).alias("docs"),
+            F.sum("n_tok").alias("tokens"),
+            F.sum("raw_bytes").alias("raw_bytes"),
+            F.sum("comp_bytes").alias("comp_bytes"),
+            F.expr("bit_xor(row_xxh)").alias("xxh")).collect()
 
     def _append_lineage_rows(self, rows: list) -> None:
         """One lineage commit = ONE new parquet file, written
@@ -887,115 +881,104 @@ class CompressionPipeline:
                               sign: int = 1) -> PipelineResult:
         """Commit the delta just written at ``delta_seq=seq`` (upsert
         rows or tombstone markers), with every input derived from what
-        landed.  The affected buckets are the listed
-        ``bucket=*/delta_seq=<seq>`` dirs.  ONE thin collect returns
-        per-(side, bucket, codec) stats of both sides: ``added``, the
-        written rows that are not tombstones, and ``replaced``, the
-        rows of the pre-delta view (``as_of_seq = seq - 1``) whose
-        doc_id the delta carries.  The written doc_ids are FSST-encoded
-        with the snapshot's table already, and the encoding is
-        deterministic, so byte equality IS id equality and no key
-        encoding is needed.  The persisted row_xxh keeps the scan thin:
-        payload bytes stay unread."""
-        snap = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
-        paths = {}
-        if self.fs.exists(snap):
-            for name in self.fs.listdir(snap):
-                p = _join(snap, name, f"delta_seq={seq}")
-                if name.startswith("bucket=") and self.fs.exists(p):
-                    paths[int(name.split("=", 1)[1])] = p
-        affected = sorted(paths)
+        landed.  The affected buckets are those whose
+        :meth:`_delta_tree` holds ``seq``.  ONE :meth:`_thin_stats`
+        collect returns per-(side, bucket, codec) stats of both sides:
+        ``added``, the written rows that are not tombstones, and
+        ``replaced``, the rows of the pre-delta view (``as_of_seq =
+        seq - 1``) whose doc_id the delta carries; the fold
+        (:meth:`_commit_delta_wave`) commits them.  The written doc_ids
+        are FSST-encoded with the snapshot's table already, and the
+        encoding is deterministic, so byte equality IS id equality and
+        no key encoding is needed.  The persisted row_xxh keeps the
+        scan thin: payload bytes stay unread."""
+        tree = self._delta_tree(snapshot_id)
+        affected = sorted(b for b, seqs in tree.items() if seq in seqs)
         if not affected:
             # empty delta, or no tombstone matched: a no-op
             return PipelineResult(snapshot_id, 0, self.num_buckets,
                                   0, 0, 0, 0)
-        written = self._read_dirs(self.delta_dir, list(paths.values()),
-                                  DELTA_PARTS)
+        written = self._read_dirs(self.delta_dir, [
+            _join(self.delta_dir, f"snapshot_id={snapshot_id}",
+                  f"bucket={b}", f"delta_seq={seq}") for b in affected],
+            DELTA_PARTS)
         thin = ("bucket", "codec", "n_tok", "raw_bytes", "comp_bytes",
                 "row_xxh")
         added = (written.filter(F.col("codec") != TOMBSTONE_CODEC)
                  .select(F.lit("added").alias("side"), *thin))
         replaced = (self._resolved(
             snapshot_id, affected, as_of_seq=seq - 1,
-            keys=written.select("snapshot_id", "doc_id"))
+            keys=written.select("snapshot_id", "doc_id"), tree=tree)
             .select(F.lit("replaced").alias("side"), *thin))
-        stats = (added.unionByName(replaced)
-                 .groupBy("side", "bucket", "codec").agg(
-                     F.count(F.lit(1)).alias("docs"),
-                     F.sum("n_tok").alias("tokens"),
-                     F.sum("raw_bytes").alias("raw_bytes"),
-                     F.sum("comp_bytes").alias("comp_bytes"),
-                     F.expr("bit_xor(row_xxh)").alias("xxh"))
-                 .collect())
+        stats = self._thin_stats(added.unionByName(replaced),
+                                 "side", "bucket", "codec")
         return self._finish_delta(
-            snapshot_id, affected,
+            snapshot_id, {b: tree[b] for b in affected},
             [r for r in stats if r["side"] == "replaced"],
             [r for r in stats if r["side"] == "added"], t0, seq, sign)
 
-    def _finish_delta(self, snapshot_id: str, affected: list, repl, added,
+    def _finish_delta(self, snapshot_id: str, tree, repl, added,
                       t0: float, seq: int, sign: int = 1) -> PipelineResult:
-        """Commit a written delta wave (upsert or tombstones), fold
-        buckets whose delta stack got deep, and report the committed
-        amounts; a delete (``sign=-1``) reports removed amounts as
-        positives."""
+        """Commit a written delta wave (upsert or tombstones) whose
+        buckets and their delta seqs, ``seq`` included, are ``tree``;
+        fold buckets whose delta stack got deep, and report the
+        committed amounts; a delete (``sign=-1``) reports removed
+        amounts as positives."""
+        affected = sorted(tree)
         rows = self._commit_delta_wave(snapshot_id, affected, repl, added,
                                        time.perf_counter() - t0, seq)
-        totals = [sign * sum(int(r[k]) for r in rows)
-                  for k in ("docs", "tokens", "raw_bytes", "comp_bytes")]
-        self._maybe_compact_deltas(snapshot_id, affected)
+        totals = [sign * sum(int(r[k]) for r in rows) for k in _COUNTS]
+        self._maybe_compact_deltas(snapshot_id, tree)
         return PipelineResult(snapshot_id, len(affected),
                               self.num_buckets - len(affected), *totals)
 
     def _commit_delta_wave(self, snapshot_id: str, wave, repl, added,
-                           wall: float, seq: int) -> list:
-        """Superseding lineage rows for a delta wave: per bucket,
-        old stats minus replaced plus added (counts subtract/add, the
-        XOR-fold composes exactly: x ^ x cancels a replaced row's
-        hash).  ``seq`` is the SAME sequence number the delta files
-        were written under — committing lineage at the delta's own seq
-        is what makes 'committed delta_seq <= snapshot lineage max'
-        a structural invariant (the orphan purge depends on it).
-        Returns the per-bucket ADDED-minus-REPLACED dicts so the
-        caller's running totals stay meaningful."""
-        old = self._latest_lineage_map(snapshot_id, wave)
-        agg: dict[int, dict] = {}
+                           wall: float, seq: int,
+                           rebase: bool = False) -> list:
+        """THE commit fold, the only code that turns (bucket, codec)
+        stats rows (:meth:`_thin_stats`) into lineage rows: per bucket
+        of ``wave``, the latest lineage row minus ``repl`` plus
+        ``added`` (counts subtract/add, the XOR-fold composes exactly:
+        x ^ x cancels a replaced row's hash); a bucket no row names
+        keeps its lineage row.  ``rebase`` folds onto an EMPTY base and
+        commits every bucket of the wave, a zero row for one without
+        stats (see :meth:`_commit_wave`).  ``seq`` is the SAME sequence
+        number the delta files were written under — committing lineage
+        at the delta's own seq is what makes 'committed delta_seq <=
+        snapshot lineage max' a structural invariant (the orphan purge
+        depends on it).  Returns the per-bucket ADDED-minus-REPLACED
+        dicts so the caller's running totals stay meaningful."""
+        def zero(**extra):
+            return {**dict.fromkeys(_COUNTS, 0), **extra}
 
-        def acc(rows, sign):
+        old = {} if rebase else self._latest_lineage_map(snapshot_id, wave)
+        agg = {b: zero(xxh=0, mix={}) for b in wave} if rebase else {}
+        for rows, sign in ((repl, -1), (added, 1)):
             for r in rows:
-                b = int(r["bucket"])
-                a = agg.setdefault(b, {
-                    "bucket": b, "docs": 0, "tokens": 0, "raw_bytes": 0,
-                    "comp_bytes": 0, "xxh": 0, "mix": {}})
-                for k in ("docs", "tokens", "raw_bytes", "comp_bytes"):
+                a = agg.setdefault(int(r["bucket"]), zero(xxh=0, mix={}))
+                for k in _COUNTS:
                     a[k] += sign * int(r[k])
                 a["xxh"] ^= int(r["xxh"] or 0)
                 c = r["codec"]
                 a["mix"][c] = a["mix"].get(c, 0) + sign * int(r["docs"])
-
-        acc(repl, -1)
-        acc(added, +1)
         now = time.time()
         rows, out = [], []
         for b in wave:
             d = agg.get(b)
-            if d is None:
+            if d is None:  # untouched by this delta
                 continue
-            o = old.get(b)
-            omix = json.loads(o["codec_mix"]) if o else {}
+            o = old.get(b) or zero(codec_mix="{}", payload_xxh=0)
+            mix = json.loads(o["codec_mix"])
             for c, n in d["mix"].items():
-                omix[c] = omix.get(c, 0) + n
-            omix = {c: n for c, n in omix.items() if n > 0}
+                mix[c] = mix.get(c, 0) + n
             rows.append((
                 snapshot_id, b, "committed",
-                (int(o["docs"]) if o else 0) + d["docs"],
-                (int(o["tokens"]) if o else 0) + d["tokens"],
-                (int(o["raw_bytes"]) if o else 0) + d["raw_bytes"],
-                (int(o["comp_bytes"]) if o else 0) + d["comp_bytes"],
-                json.dumps(omix, sort_keys=True),
-                (int(o["payload_xxh"]) if o else 0) ^ d["xxh"],
+                *(int(o[k]) + d[k] for k in _COUNTS),
+                json.dumps({c: n for c, n in mix.items() if n > 0},
+                           sort_keys=True),
+                int(o["payload_xxh"]) ^ d["xxh"],
                 wall / max(len(wave), 1), now, seq))
-            out.append({k: d[k] for k in
-                        ("docs", "tokens", "raw_bytes", "comp_bytes")})
+            out.append({k: d[k] for k in _COUNTS})
         if rows:
             self._append_lineage_rows(rows)
         return out
@@ -1044,31 +1027,28 @@ class CompressionPipeline:
         transition.  Orphan delta dirs from a crashed append are purged
         first — folding them into the base would promote uncommitted
         rows to committed state."""
-        self._purge_orphan_deltas(snapshot_id)
-        have = self._delta_buckets(snapshot_id, buckets)
+        tree = self._purge_orphan_deltas(snapshot_id)
+        have = self._delta_buckets(snapshot_id, buckets, tree)
         nb = self.num_buckets
         if not have:
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
-        totals = {"docs": 0, "tokens": 0, "raw_bytes": 0, "comp_bytes": 0}
+        totals = dict.fromkeys(_COUNTS, 0)
         waves = [have[i:i + self.wave_buckets]
                  for i in range(0, len(have), self.wave_buckets)]
         stage_root = _join(self.output_dir, "compact_staging", snapshot_id)
+        snap_dir = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
         for wi, wave in enumerate(waves):
             t0 = time.perf_counter()
-            resolved = (self._resolved(snapshot_id, wave)
+            resolved = (self._resolved(snapshot_id, wave, tree=tree)
                         .withColumn("row_xxh", F.xxhash64("payload"))
                         .sortWithinPartitions("bucket", "doc_id"))
             stage = _join(stage_root, f"wave{wi}")
             (resolved.write.mode("overwrite")
              .partitionBy("snapshot_id", "bucket").parquet(stage))
-            staged_dirs = [
-                _join(stage, f"snapshot_id={snapshot_id}", f"bucket={b}")
-                for b in wave
-                if self.fs.exists(_join(stage, f"snapshot_id={snapshot_id}",
-                                        f"bucket={b}"))]
-            if staged_dirs:
+            staged = self._bucket_dirs(stage, snapshot_id, wave)
+            if staged:
                 (self._base_writer(self.spark.read.option("basePath", stage)
-                                   .parquet(*staged_dirs))
+                                   .parquet(*staged.values()))
                  .mode("overwrite")
                  .option("partitionOverwriteMode", "dynamic")
                  .partitionBy("snapshot_id", "bucket")
@@ -1079,24 +1059,16 @@ class CompressionPipeline:
             # would then resurrect the deleted documents.  Drop the data
             # dir outright — even when the same wave also carries
             # partially-emptied buckets.
-            staged_set = set(staged_dirs)
+            for ddir in self._bucket_dirs(
+                    self.data_dir, snapshot_id,
+                    [b for b in wave if b not in staged]).values():
+                self.fs.delete(ddir, recursive=True)
             for b in wave:
-                if (_join(stage, f"snapshot_id={snapshot_id}",
-                          f"bucket={b}") not in staged_set):
-                    ddir = _join(self.data_dir,
-                                 f"snapshot_id={snapshot_id}",
-                                 f"bucket={b}")
-                    if self.fs.exists(ddir):
-                        self.fs.delete(ddir, recursive=True)
-            for b in wave:
-                self.fs.delete(
-                    _join(self.delta_dir, f"snapshot_id={snapshot_id}",
-                          f"bucket={b}"), recursive=True)
+                self.fs.delete(_join(snap_dir, f"bucket={b}"), recursive=True)
+                del tree[b]
             # fully-drained snapshot: drop the now-empty delta dir so
             # multi-snapshot readers never try to infer a schema from it
-            snap_dir = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
-            if not any(c.startswith("bucket=")
-                       for c in self.fs.listdir(snap_dir)):
+            if not tree:
                 self.fs.delete(snap_dir, recursive=True)
             wall = time.perf_counter() - t0
             for r in self._commit_wave(snapshot_id, wave, wall):
@@ -1135,12 +1107,9 @@ class CompressionPipeline:
                 f"{len(done)}/{self.num_buckets} buckets committed — "
                 "finish run() before deleting")
         fsst_table = self._fsst_table(snapshot_id)
-        # Bounded victim sets take the driver fast path: the bucket
-        # salt and FSST key encoding are computed driver-side (exactly
-        # as fetch() does), so the whole verb costs ONE thin-column
-        # scan + one marker write instead of four-plus scheduler round
-        # trips.  An id set too large to collect takes the DataFrame
-        # path.
+        # Bounded id sets take the driver fast path (fetch's locator,
+        # ONE thin-column scan, driver-written markers); an id set too
+        # large to collect takes the DataFrame path.
         id_list = self._collect_delete_ids(ids)
         if id_list is not None:
             return self._delete_tombstone_fast(id_list, snapshot_id,
@@ -1170,64 +1139,36 @@ class CompressionPipeline:
     def _delete_tombstone_fast(self, id_list: list, snapshot_id: str,
                                fsst_table) -> PipelineResult:
         """Driver fast path of the O(delta) tombstone delete — same
-        markers, same lineage rows, same idempotence as
-        :meth:`_delete_tombstone`, structured as exactly ONE
-        distributed scan plus one tiny write:
-
-        1. bucket salt + FSST key encoding driver-side (fetch()'s
-           trick: the encoding is deterministic, byte equality IS id
-           equality), so the victim lookup is a literal ``IN``
-           predicate that reaches the parquet scan as a PushedFilter —
-           row groups are skipped by doc_id min/max AND the doc_id
-           bloom filter, where the old broadcast semi-join could only
-           prune whole files;
-        2. one thin-column scan collects the victims' (bucket, doc_id,
-           codec, n_tok, raw_bytes, comp_bytes, row_xxh) — bounded by
-           len(id_list) — and the replaced-stats aggregation happens
-           driver-side (sums and XOR-folds compose identically);
-        3. marker rows are BUILT driver-side from the collected
-           victims (the old path re-ran the resolved-view semi-join a
-           second time just to project three columns) and land as one
-           driver-written parquet file per bucket;
-        4. markers and lineage ride the pyarrow metadata transport —
-           zero Spark jobs.
+        markers, same lineage rows, same result, same idempotence as
+        :meth:`_delete_tombstone`, in ONE distributed scan plus one tiny
+        write.  The victim locator, :meth:`_locate` (fetch's), finds the
+        ids; one thin-column collect, bounded by len(id_list), returns
+        the victims one doc per row under the fold's column names.  The
+        markers are built from them driver-side, and they and the
+        lineage rows of the fold (:meth:`_commit_delta_wave`, with the
+        victims as replaced rows) ride the pyarrow metadata transport —
+        no Spark job.  Only the victims' buckets are committed.
 
         Measured (sf0.1 store, 100-doc batch, local[32]): 5.0 s -> the
         q9 number in OPTIMIZATION_r08.md."""
-        nb = self.num_buckets
-        self._purge_orphan_deltas(snapshot_id)
-        affected = sorted({bucket_of(d, nb) for d in id_list})
-        if not affected:
-            return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
+        tree = self._purge_orphan_deltas(snapshot_id)
         t0 = time.perf_counter()
-        cur = self._resolved(snapshot_id, affected)
-        key_vals = fstr.encode_id_literals(id_list, fsst_table)
-        victims = (cur.filter(F.col("doc_id").isin(key_vals))
-                   .select("bucket", "doc_id", "codec", "n_tok",
-                           "raw_bytes", "comp_bytes", "row_xxh")
+        victims = (self._locate(snapshot_id, id_list, fsst_table, tree=tree)
+                   .select("bucket", "doc_id", "codec",
+                           F.lit(1).alias("docs"),
+                           F.col("n_tok").alias("tokens"), "raw_bytes",
+                           "comp_bytes", F.col("row_xxh").alias("xxh"))
                    .collect())
         if not victims:
             # nothing matched: pure ghost delete, a no-op
-            return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
-        # replaced-stats at (bucket, codec) grain, composed driver-side
-        # exactly as the _commit_written_delta aggregation would (sums
-        # of sums; XOR of XOR-folds)
-        repl_agg: dict[tuple, dict] = {}
-        for r in victims:
-            k = (int(r["bucket"]), r["codec"])
-            a = repl_agg.setdefault(k, {
-                "bucket": k[0], "codec": k[1], "docs": 0, "tokens": 0,
-                "raw_bytes": 0, "comp_bytes": 0, "xxh": 0})
-            a["docs"] += 1
-            a["tokens"] += int(r["n_tok"])
-            a["raw_bytes"] += int(r["raw_bytes"])
-            a["comp_bytes"] += int(r["comp_bytes"])
-            a["xxh"] ^= int(r["row_xxh"])
-        repl = list(repl_agg.values())
+            return PipelineResult(snapshot_id, 0, self.num_buckets,
+                                  0, 0, 0, 0)
         seq = self._next_commit_seq()
         self._write_tombstones(snapshot_id, seq, victims)
-        return self._finish_delta(snapshot_id, affected, repl, [], t0, seq,
-                                  sign=-1)
+        return self._finish_delta(
+            snapshot_id, {b: tree.get(b, []) + [seq]
+                          for b in {int(r["bucket"]) for r in victims}},
+            victims, [], t0, seq, sign=-1)
 
     def _write_tombstones(self, snapshot_id: str, seq: int,
                           victims) -> None:
@@ -1241,26 +1182,13 @@ class CompressionPipeline:
         by_bucket: dict[int, list] = {}
         for r in victims:
             by_bucket.setdefault(int(r["bucket"]), []).append(
-                bytes(r["doc_id"]))
-        for b, ids in sorted(by_bucket.items()):
-            n = len(ids)
-            table = pa.table({
-                "doc_id": pa.array(ids, pa.binary()),
-                "source": pa.array([None] * n, pa.binary()),
-                "n_tok": pa.array([0] * n, pa.int32()),
-                "n_blocks": pa.array([0] * n, pa.int32()),
-                "block_sizes": pa.array([[]] * n, pa.list_(pa.int32())),
-                "block_flags": pa.array([None] * n, pa.binary()),
-                "payload": pa.array([None] * n, pa.binary()),
-                "comp_bytes": pa.array([0] * n, pa.int64()),
-                "raw_bytes": pa.array([0] * n, pa.int64()),
-                "codec": pa.array([TOMBSTONE_CODEC] * n, pa.string()),
-                "row_xxh": pa.array([0] * n, pa.int64()),
-            }, schema=STORED_SCHEMA)
+                {"doc_id": bytes(r["doc_id"]), **_TOMBSTONE_MARKER})
+        for b, markers in sorted(by_bucket.items()):
             self._write_parquet(
                 _join(self.delta_dir, f"snapshot_id={snapshot_id}",
                       f"bucket={b}", f"delta_seq={seq}",
-                      f"part-{uuid.uuid4().hex}.parquet"), table)
+                      f"part-{uuid.uuid4().hex}.parquet"),
+                pa.Table.from_pylist(markers, schema=STORED_SCHEMA))
 
     def _delete_tombstone(self, ids: DataFrame, snapshot_id: str,
                           fsst_table) -> PipelineResult:
@@ -1277,27 +1205,20 @@ class CompressionPipeline:
         immediately.  An id set this large salts into every bucket, so
         the view is the whole snapshot (one listing of its dir) and the
         markers' dirs name the affected ones."""
-        self._purge_orphan_deltas(snapshot_id)
+        tree = self._purge_orphan_deltas(snapshot_id)
         t0 = time.perf_counter()
         keys = fstr.encode_string_cols(
             ids.select(F.col("doc_id").cast("string").alias("doc_id"),
                        F.lit(snapshot_id).alias("snapshot_id")),
             fsst_table, ("doc_id",))
-        cur = self._resolved(snapshot_id, keys=keys)
+        cur = self._resolved(snapshot_id, keys=keys, tree=tree)
         seq = self._next_commit_seq()
-        tomb = (cur.select("snapshot_id", "doc_id", "bucket")
-                .withColumn("source", F.lit(None).cast("binary"))
-                .withColumn("n_tok", F.lit(0).cast("int"))
-                .withColumn("n_blocks", F.lit(0).cast("int"))
-                .withColumn("block_sizes",
-                            F.expr("array()").cast("array<int>"))
-                .withColumn("block_flags", F.lit(None).cast("binary"))
-                .withColumn("payload", F.lit(None).cast("binary"))
-                .withColumn("comp_bytes", F.lit(0).cast("long"))
-                .withColumn("raw_bytes", F.lit(0).cast("long"))
-                .withColumn("codec", F.lit(TOMBSTONE_CODEC))
-                .withColumn("row_xxh", F.lit(0).cast("long"))
-                .withColumn("delta_seq", F.lit(seq).cast("long")))
+        stored = from_arrow_schema(STORED_SCHEMA)
+        tomb = cur.select(
+            "snapshot_id", "doc_id", "bucket",
+            *[F.lit(v).cast(stored[c].dataType).alias(c)
+              for c, v in _TOMBSTONE_MARKER.items()],
+            F.lit(seq).cast("long").alias("delta_seq"))
         # Literals are non-null and Spark writes declared nullability;
         # a union with an empty STORED_SCHEMA frame relaxes the literal
         # columns so the markers' file schema equals the base files'.
@@ -1306,8 +1227,7 @@ class CompressionPipeline:
         # relaxation with it.
         tomb = tomb.unionByName(self.spark.range(0).select(*[
             (F.lit(None) if f.nullable else F.lit(0))
-            .cast(f.dataType).alias(f.name)
-            for f in from_arrow_schema(STORED_SCHEMA).fields]),
+            .cast(f.dataType).alias(f.name) for f in stored.fields]),
             allowMissingColumns=True)
         (tomb.write.mode("append")
          .partitionBy("snapshot_id", "bucket", "delta_seq")
@@ -1324,6 +1244,35 @@ class CompressionPipeline:
             if self.fs.exists(staging):
                 self.fs.delete(staging, recursive=True)
 
+    def _locate(self, snapshot_id: str, ids: list, table,
+                as_of_seq: int | None = None, tree=None) -> DataFrame:
+        """THE victim locator of fetch and the driver delete: the
+        resolved view (see :meth:`_resolved`; ``as_of_seq`` and
+        ``tree`` pass through) restricted to ``ids``, a bounded list of
+        doc_id strings.  Their buckets are computed driver-side, so
+        only those bucket dirs are listed, and the ids are FSST-encoded
+        with the snapshot's ``table`` — the encoding is deterministic,
+        so byte equality IS id equality.  Two plans find the hits:
+
+        - up to 1024 ids, a literal ``IN`` filter, pushed into the
+          parquet scan, so doc_id-clustered row groups are skipped by
+          min/max and the doc_id bloom filter;
+        - above that, the ``keys`` view of :meth:`_resolved`, a
+          broadcast semi-join against an Arrow-built key frame (at
+          10 000 ids, local[4]: 0.07 s to build, where a literal ``IN``
+          took 8.5 s)."""
+        buckets = sorted({bucket_of(i, self.num_buckets) for i in ids})
+        keys = fstr.encode_id_literals(ids, table)
+        if len(keys) <= 1024:
+            return (self._resolved(snapshot_id, buckets, as_of_seq,
+                                   tree=tree)
+                    .filter(F.col("doc_id").isin(keys)))
+        return self._resolved(
+            snapshot_id, buckets, as_of_seq, tree=tree,
+            keys=self.spark.createDataFrame(pa.table({
+                "snapshot_id": [snapshot_id] * len(keys),
+                "doc_id": pa.array(keys, pa.binary())})))
+
     def _read(self, snapshot_id: str | None, ids=None, decode: bool = False,
               as_of_seq: int | None = None) -> DataFrame:
         """THE store read, gather then decode like the reference's
@@ -1335,16 +1284,9 @@ class CompressionPipeline:
         ValueError for a snapshot that was never run.
 
         ``ids``, a bounded list of doc_id strings, makes it a point
-        lookup: their buckets and FSST encodings are computed
-        driver-side (the encoding is deterministic, so byte equality IS
-        id equality) and only those bucket dirs are listed.  Two
-        locators find the hits:
-
-        - up to 1024 ids, a literal ``IN`` filter, pushed into the
-          parquet scan, so doc_id-clustered row groups are skipped by
-          min/max and the doc_id bloom filter;
-        - above that, the ``keys`` view of :meth:`_resolved`, a
-          broadcast semi-join.
+        lookup through the victim locator, :meth:`_locate`: only the
+        ids' bucket dirs are listed, and the hits are found on their
+        FSST-encoded keys.
 
         ``snapshot_id=None`` unions the reads of every snapshot with
         committed lineage; ``ids`` and ``as_of_seq`` need a snapshot."""
@@ -1358,21 +1300,10 @@ class CompressionPipeline:
             return functools.reduce(DataFrame.unionByName, [
                 self._read(s, decode=decode) for s in snaps])
         table = self._fsst_table(snapshot_id)
-        if ids is None:
-            view = self._resolved(snapshot_id, as_of_seq=as_of_seq)
-        else:
-            ids = [str(i) for i in ids]
-            buckets = sorted({bucket_of(i, self.num_buckets) for i in ids})
-            keys = fstr.encode_id_literals(ids, table)
-            if len(ids) <= 1024:
-                view = (self._resolved(snapshot_id, buckets, as_of_seq)
-                        .filter(F.col("doc_id").isin(keys)))
-            else:
-                view = self._resolved(
-                    snapshot_id, buckets, as_of_seq,
-                    keys=self.spark.createDataFrame(pa.table({
-                        "snapshot_id": [snapshot_id] * len(keys),
-                        "doc_id": pa.array(keys, pa.binary())})))
+        view = (self._resolved(snapshot_id, as_of_seq=as_of_seq)
+                if ids is None else
+                self._locate(snapshot_id, [str(i) for i in ids], table,
+                             as_of_seq))
         chain = [fstr.decode_stage(table, ("doc_id", "source"))]
         if decode:
             chain.append(selector.decode_auto_stage(

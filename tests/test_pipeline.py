@@ -927,15 +927,41 @@ def _check_store_files_share_one_schema(spark, tokens_df, outdir,
 
 
 def test_dataframe_delete_path_matches_driver_path(spark, tokens_df,
-                                                   tmp_path):
+                                                   tmp_path, monkeypatch):
     """Twin stores delete the same ids, one through the driver fast path
     and one through the DataFrame path (driver cap 0): same resolved
     rows, same lineage totals and checksums, same result, both audits
-    green.  Ghost ids are a no-op on both."""
+    green.  Three deletes run in turn on each store:
+
+    - 9 victims and a ghost id: ghosts are a no-op on both;
+    - one victim and a ghost that salts into a bucket with no victim:
+      both paths report the victim's bucket alone as done, since only
+      buckets that got a marker are committed;
+    - 9 victims and 1100 ghosts, over the 1024-id ``IN`` crossover:
+      the driver path locates them through the broadcast semi-join and
+      builds no ``IN`` of more than 1024 literals."""
+    from invariantbitpacking_spark.functions.hashing import bucket_of
+
+    in_sizes = []
+    col_cls = type(F.col("doc_id"))
+    real_isin = col_cls.isin
+
+    def isin_spy(self, *cols):
+        vals = cols[0] if len(cols) == 1 and isinstance(
+            cols[0], (list, set)) else cols
+        in_sizes.append(len(vals))
+        return real_isin(self, *cols)
+
+    monkeypatch.setattr(col_cls, "isin", isin_spy)
     sub = tokens_df.limit(120)
-    ids = [r["doc_id"] for r in
-           sub.orderBy("doc_id").limit(9).collect()] + ["ghost-id"]
-    outcomes = []
+    docs = sorted(r["doc_id"] for r in sub.select("doc_id").collect())
+    lone = docs[9]
+    ghost = next(g for g in (f"ghost-{i}" for i in range(100))
+                 if bucket_of(g, 4) != bucket_of(lone, 4))
+    cases = [(docs[:9] + ["ghost-id"], 9, None),
+             ([lone, ghost], 1, 1),
+             (docs[10:19] + [f"ghost-{i}" for i in range(1100)], 9, None)]
+    outcomes = {}
     for name, cap in (("driver", None), ("dataframe", 0)):
         pipe = CompressionPipeline(spark, str(tmp_path / name),
                                    num_buckets=4, wave_buckets=4,
@@ -943,24 +969,33 @@ def test_dataframe_delete_path_matches_driver_path(spark, tokens_df,
         if cap is not None:
             pipe.MAX_DRIVER_DELETE_IDS = cap
         pipe.run(sub, "snapDD")
-        res = pipe.delete(
-            spark.createDataFrame([(i,) for i in ids], "doc_id string"),
-            "snapDD")
-        rows = sorted(
-            (r["doc_id"], r["source"], r["codec"], r["n_tok"],
-             bytes(r["payload"]))
-            for r in pipe.read_encoded("snapDD").collect())
-        lin = sorted(
-            (r["bucket"], r["docs"], r["tokens"], r["comp_bytes"],
-             r["payload_xxh"])
-            for r in pipe.latest_lineage("snapDD").collect())
-        totals = tuple(pipe.latest_lineage("snapDD").agg(
-            F.sum("docs"), F.sum("tokens"), F.sum("comp_bytes")).first())
-        assert pipe.verify_checksums("snapDD") == 0
-        outcomes.append((res, rows, lin, totals))
-    assert outcomes[0][0].docs == 9
-    assert len(outcomes[0][1]) == 111
-    assert outcomes[0] == outcomes[1]
+        for ids, _, _ in cases:
+            id_df = spark.createDataFrame([(i,) for i in ids],
+                                          "doc_id string")
+            in_sizes.clear()
+            res = pipe.delete(id_df, "snapDD")
+            assert max(in_sizes, default=0) <= 1024, (name, len(ids))
+            rows = sorted(
+                (r["doc_id"], r["source"], r["codec"], r["n_tok"],
+                 bytes(r["payload"]))
+                for r in pipe.read_encoded("snapDD").collect())
+            lin = sorted(
+                (r["bucket"], r["docs"], r["tokens"], r["comp_bytes"],
+                 r["payload_xxh"])
+                for r in pipe.latest_lineage("snapDD").collect())
+            totals = tuple(pipe.latest_lineage("snapDD").agg(
+                F.sum("docs"), F.sum("tokens"), F.sum("comp_bytes")).first())
+            assert pipe.verify_checksums("snapDD") == 0
+            outcomes.setdefault(name, []).append((res, rows, lin, totals))
+    left = 120
+    for i, (_, n_del, n_buckets) in enumerate(cases):
+        driver, frame = outcomes["driver"][i], outcomes["dataframe"][i]
+        left -= n_del
+        assert driver[0].docs == n_del
+        assert len(driver[1]) == left
+        if n_buckets is not None:
+            assert driver[0].buckets_done == n_buckets
+        assert driver == frame, i
 
 
 def _jobs_run_by(spark, fn) -> int:
@@ -975,6 +1010,32 @@ def _jobs_run_by(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _fs_calls_by(pipe, fn) -> dict:
+    """Metadata calls ``fn()`` makes, by kind: ``pipe.fs`` listdir,
+    exists and read_bytes calls, and lineage reads (calls of
+    ``pipe._lineage_records``)."""
+    counts = dict.fromkeys(("listdir", "exists", "read_bytes", "lineage"),
+                           0)
+    spied = [(pipe.fs, "listdir", "listdir"), (pipe.fs, "exists", "exists"),
+             (pipe.fs, "read_bytes", "read_bytes"),
+             (pipe, "_lineage_records", "lineage")]
+
+    def counting(real, kind):
+        def call(*a, **k):
+            counts[kind] += 1
+            return real(*a, **k)
+        return call
+
+    for obj, attr, kind in spied:
+        setattr(obj, attr, counting(getattr(obj, attr), kind))
+    try:
+        fn()
+    finally:
+        for obj, attr, _ in spied:
+            delattr(obj, attr)
+    return counts
 
 
 def test_mutation_job_budget(spark, tokens_df, outdir):
@@ -1003,6 +1064,70 @@ def test_mutation_job_budget(spark, tokens_df, outdir):
 
     assert pipe.read_encoded("snapJB").count() == 120 + 5 + 10 - 10
     assert pipe.verify_checksums("snapJB") == 0
+
+
+def test_mutation_metadata_budget(spark, tokens_df, outdir):
+    """Each verb's driver metadata calls stay within a fixed budget:
+    ``self.fs`` listdir / exists / read_bytes calls and lineage reads,
+    on a 4-bucket store of 120 documents with a pending 5-doc delta,
+    for a 5-doc append, a 10-id driver delete, a 10-id DataFrame
+    delete, a 10-id fetch and a compact, in that order.  The bounds
+    are the counts of the code before the mutations shared one
+    delta-tree listing; after it they are (listdir, exists,
+    read_bytes, lineage):
+
+    ================  ================  ================
+    verb              before (bound)    after
+    ================  ================  ================
+    append            22, 16, 10, 4     17, 8, 10, 4
+    driver delete     26, 14, 13, 4     12, 9, 13, 4
+    dataframe delete  38, 19, 17, 4     23, 9, 17, 4
+    fetch             8, 6, 2, 0        8, 6, 2, 0
+    compact           27, 16, 10, 2     11, 15, 10, 2
+    ================  ================  ================
+
+    A listing that walks every bucket where the verb needs only the
+    affected ones breaks the bound."""
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    sub = tokens_df.limit(120)
+    pipe.run(sub, "snapMB")
+    pipe.append(_delta_df(spark, 5, prefix="pending"), "snapMB")
+    ids = sorted(r["doc_id"] for r in sub.select("doc_id").collect())
+    upserts = _delta_df(spark, 5, prefix="more")
+    driver_ids = spark.createDataFrame([(i,) for i in ids[:10]],
+                                       "doc_id string")
+    frame_ids = spark.createDataFrame([(i,) for i in ids[10:20]],
+                                      "doc_id string")
+
+    def frame_delete():
+        pipe.MAX_DRIVER_DELETE_IDS = 0
+        try:
+            pipe.delete(frame_ids, "snapMB")
+        finally:
+            del pipe.MAX_DRIVER_DELETE_IDS
+
+    budget = {  # listdir, exists, read_bytes, lineage reads
+        "append": (22, 16, 10, 4),
+        "driver delete": (26, 14, 13, 4),
+        "dataframe delete": (38, 19, 17, 4),
+        "fetch": (8, 6, 2, 0),
+        "compact": (27, 16, 10, 2),
+    }
+    verbs = {
+        "append": lambda: pipe.append(upserts, "snapMB"),
+        "driver delete": lambda: pipe.delete(driver_ids, "snapMB"),
+        "dataframe delete": frame_delete,
+        "fetch": lambda: pipe.fetch(ids[20:30], "snapMB"),
+        "compact": lambda: pipe.compact("snapMB"),
+    }
+    got = {name: tuple(_fs_calls_by(pipe, fn).values())
+           for name, fn in verbs.items()}
+    for name, counts in got.items():
+        assert all(c <= b for c, b in zip(counts, budget[name])), (
+            name, counts, budget[name])
+    assert pipe.read_encoded("snapMB").count() == 120 + 5 + 5 - 20
+    assert pipe.verify_checksums("snapMB") == 0
 
 
 def test_read_path_budget(spark, tokens_df, outdir):
