@@ -51,7 +51,7 @@ from dataclasses import dataclass
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructField, _parse_datatype_string
 
 from ..functions import strings as fstr
@@ -92,16 +92,6 @@ def _float_bits_view(df: DataFrame, itemsize: int) -> DataFrame:
     return stages.apply(df, token_stage(
         view, stages.fixed(f"doc_id string, tokens array<{elem}>, n_tok int"),
         "tokens", ("doc_id", "tokens", "n_tok")))
-
-
-def _with_parts(sch, partition_fields):
-    """``sch`` plus each ``(name, DDL type)`` partition field it lacks,
-    appended in order — the column order of Spark's discovery."""
-    have = set(sch.fieldNames())
-    for name, t in partition_fields:
-        if name not in have:
-            sch = sch.add(StructField(name, _parse_datatype_string(t)))
-    return sch
 
 
 # one row per (snapshot, bucket) commit; the arrow schema of every
@@ -269,9 +259,11 @@ class CompressionPipeline:
         pq.write_table(table, buf, compression="snappy")
         self.fs.write_bytes_atomic(path, buf.getvalue().to_pybytes())
 
-    def _committed(self, snapshot_id: str) -> list[dict]:
-        return [r for r in self._lineage_records()
-                if r["snapshot_id"] == snapshot_id
+    def _committed(self, snapshot_id: str, recs=None) -> list[dict]:
+        """The snapshot's committed rows of ``recs``, a verb's one
+        :meth:`_lineage_records` read (read here when not given)."""
+        recs = self._lineage_records() if recs is None else recs
+        return [r for r in recs if r["snapshot_id"] == snapshot_id
                 and r["status"] == "committed"]
 
     def _lineage_df(self, recs: list[dict]) -> DataFrame:
@@ -284,18 +276,32 @@ class CompressionPipeline:
         """Every lineage row, as a DataFrame view."""
         return self._lineage_df(self._lineage_records())
 
-    def _next_commit_seq(self) -> int:
+    def _next_commit_seq(self, recs=None) -> int:
         """Monotonic per-pipeline commit sequence number: the
         committed_at float ties when two commits of the same bucket
         land within one clock reading (rapid streaming upserts), and a
         tie would let latest_lineage surface a superseded checksum.
-        Derived from stored state (max over the tiny lineage table)
-        so it survives across pipeline object instances."""
-        recs = self._lineage_records()
+        Derived from stored state (max over the tiny lineage table,
+        ``recs`` when the verb has read it) so it survives across
+        pipeline object instances."""
+        recs = self._lineage_records() if recs is None else recs
         return (recs[-1]["commit_seq"] if recs else 0) + 1
 
     def committed_buckets(self, snapshot_id: str) -> set[int]:
         return {r["bucket"] for r in self._committed(snapshot_id)}
+
+    def _mutation_lineage(self, snapshot_id: str, verb: str) -> list[dict]:
+        """The one lineage read of ``verb`` (append, delete), checked to
+        commit no row for a bucket a resumed run() would then SKIP,
+        silently dropping that bucket's original corpus docs."""
+        recs = self._lineage_records()
+        n = len({r["bucket"] for r in self._committed(snapshot_id, recs)})
+        if n < self.num_buckets:
+            raise ValueError(
+                f"{verb}: snapshot {snapshot_id!r} has {n}/"
+                f"{self.num_buckets} buckets committed — finish run() "
+                f"before {verb}()")
+        return recs
 
     def latest_lineage(self, snapshot_id: str) -> DataFrame:
         """One committed row per bucket, LATEST commit wins — appends
@@ -305,13 +311,13 @@ class CompressionPipeline:
         return self._lineage_df(
             list(self._latest_lineage_map(snapshot_id).values()))
 
-    def _latest_lineage_map(self, snapshot_id: str,
-                            buckets=None) -> dict[int, dict]:
+    def _latest_lineage_map(self, snapshot_id: str, buckets=None,
+                            recs=None) -> dict[int, dict]:
         """{bucket: latest committed row as a plain dict}, commit_seq
         the strict tiebreaker (committed_at floats can tie under rapid
-        streaming upserts)."""
+        streaming upserts); from ``recs`` when given."""
         keep = None if buckets is None else {int(b) for b in buckets}
-        return {r["bucket"]: r for r in self._committed(snapshot_id)
+        return {r["bucket"]: r for r in self._committed(snapshot_id, recs)
                 if keep is None or r["bucket"] in keep}
 
     # -- params ------------------------------------------------------------
@@ -424,13 +430,13 @@ class CompressionPipeline:
     # :meth:`compact` folds them into the base and the read plan
     # returns to a pure scan.
 
-    def _snapshot_max_seq(self, snapshot_id: str) -> int:
-        """Max commit_seq over THIS snapshot's committed lineage rows.
-        Every committed delta dir satisfies delta_seq <= this value
-        (the delta commit appends lineage rows carrying the delta's own
-        seq), so any delta dir above it is an orphan from a crashed
-        append."""
-        recs = self._committed(snapshot_id)
+    def _snapshot_max_seq(self, snapshot_id: str, recs=None) -> int:
+        """Max commit_seq over THIS snapshot's committed lineage rows
+        (of ``recs`` when given).  Every committed delta dir satisfies
+        delta_seq <= this value (the delta commit appends lineage rows
+        carrying the delta's own seq), so any delta dir above it is an
+        orphan from a crashed append."""
+        recs = self._committed(snapshot_id, recs)
         return recs[-1]["commit_seq"] if recs else 0
 
     def _delta_tree(self, snapshot_id: str,
@@ -455,9 +461,11 @@ class CompressionPipeline:
                     if c.startswith("delta_seq="))
         return tree
 
-    def _purge_orphan_deltas(self, snapshot_id: str) -> dict[int, list[int]]:
+    def _purge_orphan_deltas(self, snapshot_id: str,
+                             recs: list[dict]) -> dict[int, list[int]]:
         """Delete every delta_seq dir STRICTLY greater than the
-        snapshot's lineage max commit_seq.  A crashed append leaves its
+        snapshot's lineage max commit_seq in ``recs``, the calling
+        verb's one lineage read.  A crashed append leaves its
         delta files with no lineage commit; if other snapshots advance
         the GLOBAL sequence before the retry, the retry's fresh seq no
         longer matches the orphan's, so matching only the next seq
@@ -470,7 +478,7 @@ class CompressionPipeline:
         tree = self._delta_tree(snapshot_id)
         if not tree:
             return tree
-        max_seq = self._snapshot_max_seq(snapshot_id)
+        max_seq = self._snapshot_max_seq(snapshot_id, recs)
         snap = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
         for b, seqs in list(tree.items()):
             bdir = _join(snap, f"bucket={b}")
@@ -491,8 +499,7 @@ class CompressionPipeline:
         """Buckets of a snapshot (of ``buckets``, if given) that
         currently carry delta files, read from ``tree`` or a fresh
         :meth:`_delta_tree` listing — childless bucket dirs don't
-        count; listing them would feed schema inference an empty
-        tree."""
+        count: they hold no delta to read."""
         if tree is None:
             tree = self._delta_tree(snapshot_id, buckets)
         want = None if buckets is None else set(buckets)
@@ -508,7 +515,8 @@ class CompressionPipeline:
         ONE amortized O(bucket) rewrite every threshold-th mutation —
         the read path then resolves at most ``threshold`` delta files
         per bucket, a bound that holds at any corpus size.  Returns the
-        buckets that were compacted."""
+        buckets that were compacted.  The fold is a :meth:`compact`, so
+        it reads lineage again, the mutation's own commit included."""
         thr = self.delta_compact_threshold
         pressured = [b for b, seqs in sorted(tree.items())
                      if thr and len(seqs) >= thr]
@@ -516,44 +524,20 @@ class CompressionPipeline:
             self.compact(snapshot_id, buckets=pressured)
         return pressured
 
-    def _dir_schema(self, path: str, partition_fields):
-        """Read schema of a parquet directory (walking into partition
-        subdirs for the first data file) and append the given partition
-        fields — sparing every bucket-pruned read its driver-side
-        schema-inference footer pass.  Field order mirrors what
-        discovery produces (data columns, then partition columns), so
-        supplied-schema and inferred reads are interchangeable.
-        Returns None when the path holds no parquet file yet (caller
-        falls back to inference)."""
-        def first_parquet(d: str, depth: int):
-            names = sorted(self.fs.listdir(d))
-            for n in names:
-                if n.endswith(".parquet") and not n.startswith((".", "_")):
-                    return _join(d, n)
-            for n in names if depth > 0 else ():
-                if "=" in n and not n.startswith((".", "_")):
-                    f = first_parquet(_join(d, n), depth - 1)
-                    if f is not None:
-                        return f
-            return None
-
-        f = first_parquet(path, 3)
-        if f is None:
-            return None
-        try:
-            sch = from_arrow_schema(self.fs.parquet_schema(f))
-        except Exception:
-            return None
-        return _with_parts(sch, partition_fields)
-
     def _read_dirs(self, root: str, paths: list[str],
                    partition_fields) -> DataFrame:
         """The parquet files under ``paths`` (partition dirs below
-        ``root``), read with the schema of one footer."""
-        reader = self.spark.read.option("basePath", root)
-        sch = self._dir_schema(paths[0], partition_fields)
-        if sch is not None:
-            reader = reader.schema(sch)
+        ``root``), read with the store's one row schema:
+        ``STORED_SCHEMA``, then each ``(name, DDL type)`` of
+        ``partition_fields``, the column order of Spark's discovery.
+        No dir is walked and no footer opened (:meth:`verify_checksums`
+        checks the footers).  Zero paths read as zero rows of it."""
+        sch = from_arrow_schema(STORED_SCHEMA)
+        for name, t in partition_fields:
+            sch = sch.add(StructField(name, _parse_datatype_string(t)))
+        reader = self.spark.read.schema(sch)
+        if paths:  # basePath must exist; zero paths need none
+            reader = reader.option("basePath", root)
         return reader.parquet(*paths)
 
     @staticmethod
@@ -579,9 +563,9 @@ class CompressionPipeline:
         anti-join on the small delta key set.  ``buckets`` prunes both
         listings to the given bucket dirs (the fetch path); without it
         the base is ONE path, the ``snapshot_id=S`` dir, not one path
-        per bucket.  Both shapes take their schema from one footer
-        (:meth:`_read_dirs`).  Nothing stored is a zero-row frame of
-        ``STORED_SCHEMA`` plus ``BASE_PARTS``.
+        per bucket.  Both shapes read with the stored schema
+        (:meth:`_read_dirs`), so nothing stored reads as a zero-path,
+        zero-row frame of the same shape.
 
         ``as_of_seq`` is TIME TRAVEL: only delta files with
         ``delta_seq <= as_of_seq`` participate (delta_seq is a
@@ -608,8 +592,7 @@ class CompressionPipeline:
         else:
             base_paths = list(self._bucket_dirs(
                 self.data_dir, snapshot_id, buckets).values())
-        base = (self._read_dirs(self.data_dir, base_paths, BASE_PARTS)
-                if base_paths else None)
+        base = self._read_dirs(self.data_dir, base_paths, BASE_PARTS)
         delta_paths = [
             _join(self.delta_dir, f"snapshot_id={snapshot_id}", f"bucket={b}")
             for b in self._delta_buckets(snapshot_id, buckets, tree)]
@@ -617,30 +600,22 @@ class CompressionPipeline:
             def restrict(df):
                 return df.join(F.broadcast(keys), ["snapshot_id", "doc_id"],
                                "left_semi")
-            if base is not None:
-                base = restrict(base)
+            base = restrict(base)
         if not delta_paths:
-            if base is None:
-                sch = _with_parts(from_arrow_schema(STORED_SCHEMA),
-                                  BASE_PARTS)
-                return self.spark.createDataFrame(
-                    to_arrow_schema(sch).empty_table(), sch)
             return base
         deltas = self._read_dirs(self.delta_dir, delta_paths, DELTA_PARTS)
         if as_of_seq is not None:
             deltas = deltas.filter(F.col("delta_seq") <= int(as_of_seq))
         if keys is not None:
-            deltas = restrict(deltas)
-            if base is not None:
-                deltas = deltas.unionByName(
-                    base.withColumn("delta_seq", F.lit(0).cast("long")),
-                    allowMissingColumns=True)
+            deltas = restrict(deltas).unionByName(
+                base.withColumn("delta_seq", F.lit(0).cast("long")),
+                allowMissingColumns=True)
         # a tombstone that wins latest-wins DELETES the document: it
         # must still shadow the base row (stay in the anti-join keys)
         # but contribute no output row itself
         live = (self._latest_delta(deltas)
                 .filter(F.col("codec") != TOMBSTONE_CODEC))
-        if base is None or keys is not None:
+        if keys is not None:
             return live
         # every delta row's doc_id shadows its base row, whichever
         # delta row wins
@@ -668,7 +643,10 @@ class CompressionPipeline:
           is staged; a retry re-encodes from ``toks`` and the dynamic
           partition overwrite replaces any partial output.
         - Multi-wave: the salted input is staged once, and each wave
-          reads only its own bucket dirs of the staged copy."""
+          reads only its own bucket dirs of the staged copy.
+
+        Lineage is read once; wave ``i`` commits at that read's next
+        seq plus ``i``."""
         nb = self.num_buckets
         params = self.load_or_learn_params(toks, snapshot_id)
         fsst_table = self.load_or_learn_fsst(toks, snapshot_id)
@@ -677,16 +655,18 @@ class CompressionPipeline:
                else self.spark.read.parquet(staging))
         src = src.withColumn("snapshot_id", F.lit(snapshot_id))
 
-        done = self.committed_buckets(snapshot_id)
+        recs = self._lineage_records()
+        done = {r["bucket"] for r in self._committed(snapshot_id, recs)}
+        seq = self._next_commit_seq(recs)
         pending = [b for b in range(nb) if b not in done]
-        totals = dict.fromkeys(_COUNTS, 0)
+        committed = []
 
         waves = [pending[i:i + self.wave_buckets]
                  for i in range(0, len(pending), self.wave_buckets)]
         if max_waves is not None:
             waves = waves[:max_waves]
         buckets_run = sum(len(w) for w in waves)
-        for wave in waves:
+        for wi, wave in enumerate(waves):
             t0 = time.perf_counter()
             # dir-pruned when staged
             part = src.filter(
@@ -708,15 +688,12 @@ class CompressionPipeline:
              .option("partitionOverwriteMode", "dynamic")
              .partitionBy("snapshot_id", "bucket")
              .parquet(self.data_dir))
-            wall = time.perf_counter() - t0
-            for r in self._commit_wave(snapshot_id, wave, wall):
-                for k in totals:
-                    totals[k] += int(r[k])
+            committed += self._commit_wave(
+                snapshot_id, wave, time.perf_counter() - t0, seq + wi)
 
         self._maybe_compact_lineage()
-        return PipelineResult(snapshot_id, buckets_run, len(done),
-                              totals["docs"], totals["tokens"],
-                              totals["raw_bytes"], totals["comp_bytes"])
+        return PipelineResult(snapshot_id, buckets_run, len(done), *(
+            sum(int(r[k]) for r in committed) for k in _COUNTS))
 
     def _stored_rows(self, toks: DataFrame, params: IbpParams,
                      fsst_table) -> DataFrame:
@@ -753,9 +730,10 @@ class CompressionPipeline:
         if n > self.LINEAGE_COMPACT_FILES:
             self.compact_lineage()
 
-    def _commit_wave(self, snapshot_id: str, wave, wall: float) -> list:
-        """Wave commit point of run() and compact(): read back ONLY the
-        wave's just-written partition directories through
+    def _commit_wave(self, snapshot_id: str, wave, wall: float,
+                     seq: int) -> list:
+        """Wave commit point of run() and compact(), at ``seq``: read
+        back ONLY the wave's just-written partition directories through
         :meth:`_read_dirs` (a filter over data_dir would re-list every
         snapshot/bucket ever written, a listing that grows with
         pipeline history), take their :meth:`_thin_stats`, and commit
@@ -772,7 +750,7 @@ class CompressionPipeline:
             self.data_dir, paths, BASE_PARTS), "bucket", "codec")
             if paths else [])
         return self._commit_delta_wave(snapshot_id, wave, [], stats, wall,
-                                       self._next_commit_seq(), rebase=True)
+                                       seq, rebase=True)
 
     @staticmethod
     def _thin_stats(rows: DataFrame, *by: str) -> list:
@@ -847,15 +825,7 @@ class CompressionPipeline:
                       .filter(F.col("_rn") == 1).drop("_rn"))
         if order_col is not None:  # ordering column is not payload
             toks_delta = toks_delta.drop(order_col)
-        done = self.committed_buckets(snapshot_id)
-        if len(done) < self.num_buckets:
-            # appending into a half-run snapshot would commit lineage
-            # rows for buckets the resumed run() then SKIPS, silently
-            # dropping the original corpus docs of those buckets
-            raise ValueError(
-                f"append: snapshot {snapshot_id!r} has "
-                f"{len(done)}/{self.num_buckets} buckets committed — "
-                "finish run() before appending")
+        recs = self._mutation_lineage(snapshot_id, "append")
         params = self.load_or_learn_params(toks_delta, snapshot_id)
         fsst_table = self._fsst_table(snapshot_id)
         salted = (self._salted(toks_delta)
@@ -867,17 +837,18 @@ class CompressionPipeline:
         # The purge keys on the SNAPSHOT's lineage max (every committed
         # delta_seq <= it), so it catches orphans even when other
         # snapshots advanced the global sequence since the crash.
-        self._purge_orphan_deltas(snapshot_id)
+        self._purge_orphan_deltas(snapshot_id, recs)
         t0 = time.perf_counter()
-        seq = self._next_commit_seq()
+        seq = self._next_commit_seq(recs)
         (self._stored_rows(salted, params, fsst_table)
          .withColumn("delta_seq", F.lit(seq).cast("long"))
          .write.mode("append")
          .partitionBy("snapshot_id", "bucket", "delta_seq")
          .parquet(self.delta_dir))
-        return self._commit_written_delta(snapshot_id, seq, t0)
+        return self._commit_written_delta(snapshot_id, seq, t0, recs)
 
     def _commit_written_delta(self, snapshot_id: str, seq: int, t0: float,
+                              recs: list[dict],
                               sign: int = 1) -> PipelineResult:
         """Commit the delta just written at ``delta_seq=seq`` (upsert
         rows or tombstone markers), with every input derived from what
@@ -887,7 +858,8 @@ class CompressionPipeline:
         ``added``, the written rows that are not tombstones, and
         ``replaced``, the rows of the pre-delta view (``as_of_seq =
         seq - 1``) whose doc_id the delta carries; the fold
-        (:meth:`_commit_delta_wave`) commits them.  The written doc_ids
+        (:meth:`_commit_delta_wave`) commits them onto the latest rows
+        of ``recs``, the verb's lineage read.  The written doc_ids
         are FSST-encoded with the snapshot's table already, and the
         encoding is deterministic, so byte equality IS id equality and
         no key encoding is needed.  The persisted row_xxh keeps the
@@ -915,29 +887,33 @@ class CompressionPipeline:
         return self._finish_delta(
             snapshot_id, {b: tree[b] for b in affected},
             [r for r in stats if r["side"] == "replaced"],
-            [r for r in stats if r["side"] == "added"], t0, seq, sign)
+            [r for r in stats if r["side"] == "added"], t0, seq, recs, sign)
 
-    def _finish_delta(self, snapshot_id: str, tree, repl, added,
-                      t0: float, seq: int, sign: int = 1) -> PipelineResult:
+    def _finish_delta(self, snapshot_id: str, tree, repl, added, t0: float,
+                      seq: int, recs: list[dict],
+                      sign: int = 1) -> PipelineResult:
         """Commit a written delta wave (upsert or tombstones) whose
-        buckets and their delta seqs, ``seq`` included, are ``tree``;
+        buckets and their delta seqs, ``seq`` included, are ``tree``,
+        onto the latest rows of ``recs``, the verb's lineage read;
         fold buckets whose delta stack got deep, and report the
         committed amounts; a delete (``sign=-1``) reports removed
         amounts as positives."""
         affected = sorted(tree)
         rows = self._commit_delta_wave(snapshot_id, affected, repl, added,
-                                       time.perf_counter() - t0, seq)
+                                       time.perf_counter() - t0, seq,
+                                       recs=recs)
         totals = [sign * sum(int(r[k]) for r in rows) for k in _COUNTS]
         self._maybe_compact_deltas(snapshot_id, tree)
         return PipelineResult(snapshot_id, len(affected),
                               self.num_buckets - len(affected), *totals)
 
     def _commit_delta_wave(self, snapshot_id: str, wave, repl, added,
-                           wall: float, seq: int,
+                           wall: float, seq: int, recs=None,
                            rebase: bool = False) -> list:
         """THE commit fold, the only code that turns (bucket, codec)
         stats rows (:meth:`_thin_stats`) into lineage rows: per bucket
-        of ``wave``, the latest lineage row minus ``repl`` plus
+        of ``wave``, the latest lineage row (of ``recs``, the verb's
+        lineage read) minus ``repl`` plus
         ``added`` (counts subtract/add, the XOR-fold composes exactly:
         x ^ x cancels a replaced row's hash); a bucket no row names
         keeps its lineage row.  ``rebase`` folds onto an EMPTY base and
@@ -951,7 +927,8 @@ class CompressionPipeline:
         def zero(**extra):
             return {**dict.fromkeys(_COUNTS, 0), **extra}
 
-        old = {} if rebase else self._latest_lineage_map(snapshot_id, wave)
+        old = ({} if rebase else
+               self._latest_lineage_map(snapshot_id, wave, recs))
         agg = {b: zero(xxh=0, mix={}) for b in wave} if rebase else {}
         for rows, sign in ((repl, -1), (added, 1)):
             for r in rows:
@@ -1026,13 +1003,16 @@ class CompressionPipeline:
         resolve to the same logical rows before AND after each
         transition.  Orphan delta dirs from a crashed append are purged
         first — folding them into the base would promote uncommitted
-        rows to committed state."""
-        tree = self._purge_orphan_deltas(snapshot_id)
+        rows to committed state.  Lineage is read once; wave ``i``
+        commits at that read's next seq plus ``i``."""
+        recs = self._lineage_records()
+        tree = self._purge_orphan_deltas(snapshot_id, recs)
         have = self._delta_buckets(snapshot_id, buckets, tree)
         nb = self.num_buckets
         if not have:
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
-        totals = dict.fromkeys(_COUNTS, 0)
+        seq = self._next_commit_seq(recs)
+        committed = []
         waves = [have[i:i + self.wave_buckets]
                  for i in range(0, len(have), self.wave_buckets)]
         stage_root = _join(self.output_dir, "compact_staging", snapshot_id)
@@ -1040,15 +1020,18 @@ class CompressionPipeline:
         for wi, wave in enumerate(waves):
             t0 = time.perf_counter()
             resolved = (self._resolved(snapshot_id, wave, tree=tree)
-                        .withColumn("row_xxh", F.xxhash64("payload"))
                         .sortWithinPartitions("bucket", "doc_id"))
             stage = _join(stage_root, f"wave{wi}")
             (resolved.write.mode("overwrite")
              .partitionBy("snapshot_id", "bucket").parquet(stage))
             staged = self._bucket_dirs(stage, snapshot_id, wave)
             if staged:
-                (self._base_writer(self.spark.read.option("basePath", stage)
-                                   .parquet(*staged.values()))
+                # row_xxh is rehashed from the payload on the way back:
+                # a file read declares every column nullable, and the
+                # hash's non-null type keeps the base at STORED_SCHEMA
+                (self._base_writer(self._read_dirs(
+                    stage, list(staged.values()), BASE_PARTS)
+                    .withColumn("row_xxh", F.xxhash64("payload")))
                  .mode("overwrite")
                  .option("partitionOverwriteMode", "dynamic")
                  .partitionBy("snapshot_id", "bucket")
@@ -1066,19 +1049,15 @@ class CompressionPipeline:
             for b in wave:
                 self.fs.delete(_join(snap_dir, f"bucket={b}"), recursive=True)
                 del tree[b]
-            # fully-drained snapshot: drop the now-empty delta dir so
-            # multi-snapshot readers never try to infer a schema from it
+            # fully-drained snapshot: drop the now-empty delta dir
             if not tree:
                 self.fs.delete(snap_dir, recursive=True)
-            wall = time.perf_counter() - t0
-            for r in self._commit_wave(snapshot_id, wave, wall):
-                for k in totals:
-                    totals[k] += int(r[k])
+            committed += self._commit_wave(
+                snapshot_id, wave, time.perf_counter() - t0, seq + wi)
         if self.fs.exists(stage_root):
             self.fs.delete(stage_root, recursive=True)
-        return PipelineResult(snapshot_id, len(have), nb - len(have),
-                              totals["docs"], totals["tokens"],
-                              totals["raw_bytes"], totals["comp_bytes"])
+        return PipelineResult(snapshot_id, len(have), nb - len(have), *(
+            sum(int(r[k]) for r in committed) for k in _COUNTS))
 
     def delete(self, ids: DataFrame, snapshot_id: str) -> PipelineResult:
         """O(delta) LOGICAL delete from a committed snapshot: one marker
@@ -1100,12 +1079,7 @@ class CompressionPipeline:
         matching against the stored table happens on FSST-encoded
         bytes exactly like upsert.  Deleting ids that don't exist is a
         no-op (no marker is written for them) — idempotent."""
-        done = self.committed_buckets(snapshot_id)
-        if len(done) < self.num_buckets:
-            raise ValueError(
-                f"delete: snapshot {snapshot_id!r} has "
-                f"{len(done)}/{self.num_buckets} buckets committed — "
-                "finish run() before deleting")
+        recs = self._mutation_lineage(snapshot_id, "delete")
         fsst_table = self._fsst_table(snapshot_id)
         # Bounded id sets take the driver fast path (fetch's locator,
         # ONE thin-column scan, driver-written markers); an id set too
@@ -1113,8 +1087,8 @@ class CompressionPipeline:
         id_list = self._collect_delete_ids(ids)
         if id_list is not None:
             return self._delete_tombstone_fast(id_list, snapshot_id,
-                                               fsst_table)
-        return self._delete_tombstone(ids, snapshot_id, fsst_table)
+                                               fsst_table, recs)
+        return self._delete_tombstone(ids, snapshot_id, fsst_table, recs)
 
     # ids below this bound are deleted via the driver fast path (collect
     # the id strings, salt/encode them driver-side); larger sets keep the
@@ -1137,7 +1111,7 @@ class CompressionPipeline:
         return sorted({r["doc_id"] for r in rows})
 
     def _delete_tombstone_fast(self, id_list: list, snapshot_id: str,
-                               fsst_table) -> PipelineResult:
+                               fsst_table, recs: list[dict]) -> PipelineResult:
         """Driver fast path of the O(delta) tombstone delete — same
         markers, same lineage rows, same result, same idempotence as
         :meth:`_delete_tombstone`, in ONE distributed scan plus one tiny
@@ -1151,7 +1125,7 @@ class CompressionPipeline:
 
         Measured (sf0.1 store, 100-doc batch, local[32]): 5.0 s -> the
         q9 number in OPTIMIZATION_r08.md."""
-        tree = self._purge_orphan_deltas(snapshot_id)
+        tree = self._purge_orphan_deltas(snapshot_id, recs)
         t0 = time.perf_counter()
         victims = (self._locate(snapshot_id, id_list, fsst_table, tree=tree)
                    .select("bucket", "doc_id", "codec",
@@ -1163,12 +1137,12 @@ class CompressionPipeline:
             # nothing matched: pure ghost delete, a no-op
             return PipelineResult(snapshot_id, 0, self.num_buckets,
                                   0, 0, 0, 0)
-        seq = self._next_commit_seq()
+        seq = self._next_commit_seq(recs)
         self._write_tombstones(snapshot_id, seq, victims)
         return self._finish_delta(
             snapshot_id, {b: tree.get(b, []) + [seq]
                           for b in {int(r["bucket"]) for r in victims}},
-            victims, [], t0, seq, sign=-1)
+            victims, [], t0, seq, recs, sign=-1)
 
     def _write_tombstones(self, snapshot_id: str, seq: int,
                           victims) -> None:
@@ -1191,7 +1165,7 @@ class CompressionPipeline:
                 pa.Table.from_pylist(markers, schema=STORED_SCHEMA))
 
     def _delete_tombstone(self, ids: DataFrame, snapshot_id: str,
-                          fsst_table) -> PipelineResult:
+                          fsst_table, recs: list[dict]) -> PipelineResult:
         """O(delta) delete: per existing victim, one marker row with
         codec ``tombstone`` in the delta tree at a fresh delta_seq —
         latest-wins resolution then shadows the base row and the
@@ -1205,14 +1179,14 @@ class CompressionPipeline:
         immediately.  An id set this large salts into every bucket, so
         the view is the whole snapshot (one listing of its dir) and the
         markers' dirs name the affected ones."""
-        tree = self._purge_orphan_deltas(snapshot_id)
+        tree = self._purge_orphan_deltas(snapshot_id, recs)
         t0 = time.perf_counter()
         keys = fstr.encode_string_cols(
             ids.select(F.col("doc_id").cast("string").alias("doc_id"),
                        F.lit(snapshot_id).alias("snapshot_id")),
             fsst_table, ("doc_id",))
         cur = self._resolved(snapshot_id, keys=keys, tree=tree)
-        seq = self._next_commit_seq()
+        seq = self._next_commit_seq(recs)
         stored = from_arrow_schema(STORED_SCHEMA)
         tomb = cur.select(
             "snapshot_id", "doc_id", "bucket",
@@ -1232,7 +1206,8 @@ class CompressionPipeline:
         (tomb.write.mode("append")
          .partitionBy("snapshot_id", "bucket", "delta_seq")
          .parquet(self.delta_dir))
-        return self._commit_written_delta(snapshot_id, seq, t0, sign=-1)
+        return self._commit_written_delta(snapshot_id, seq, t0, recs,
+                                          sign=-1)
 
     def cleanup_staging(self, snapshot_id: str) -> None:
         """Drop the staged (uncompressed) copy once every bucket of the
@@ -1356,7 +1331,13 @@ class CompressionPipeline:
         over the RESOLVED view and recomputes hashes from the payload
         bytes themselves (a deep check — the persisted row_xxh column
         is deliberately not trusted here), so it also validates the
-        incremental checksum math of delta commits."""
+        incremental checksum math of delta commits.
+
+        It is also the one schema check of the store: every read
+        supplies ``STORED_SCHEMA`` (:meth:`_read_dirs`), so one footer
+        per written dir — each base ``bucket=B`` dir and each delta
+        ``delta_seq=N`` dir — is compared with it, and each bucket with
+        a differing footer counts as one more bad bucket."""
         got = self._resolved(snapshot_id).groupBy("bucket").agg(
             F.expr("bit_xor(xxhash64(payload))").alias("xxh"))
         # latest commit per bucket: appends supersede earlier rows
@@ -1366,7 +1347,22 @@ class CompressionPipeline:
         bad = (got.join(lin, "bucket")
                .filter(F.col("xxh") != F.col("payload_xxh")).count())
         missing = lin.join(got, "bucket", "left_anti").count()
-        return bad + missing
+        base = _join(self.data_dir, f"snapshot_id={snapshot_id}")
+        dirs = [(int(n.split("=", 1)[1]), _join(base, n))
+                for n in self.fs.listdir(base) if n.startswith("bucket=")]
+        delta = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
+        dirs += [(b, _join(delta, f"bucket={b}", f"delta_seq={q}"))
+                 for b, seqs in self._delta_tree(snapshot_id).items()
+                 for q in seqs]
+        drift = set()
+        for b, d in dirs:
+            f = next((n for n in sorted(self.fs.listdir(d))
+                      if n.endswith(".parquet")
+                      and not n.startswith((".", "_"))), None)
+            if f is not None and not self.fs.parquet_schema(
+                    _join(d, f)).equals(STORED_SCHEMA):
+                drift.add(b)
+        return bad + missing + len(drift)
 
     def verify_roundtrip(self, toks: DataFrame, params: IbpParams,
                          snapshot_id: str | None = None) -> int:

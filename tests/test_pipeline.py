@@ -870,10 +870,11 @@ def test_verify_roundtrip_all_snapshots_uses_own_params(spark, tmp_path):
 
 def test_store_files_share_one_schema(spark, tokens_df, outdir):
     """One stored layout: after run -> append -> delete into the same
-    bucket, every parquet file under encoded/ and delta/ (Spark-written
-    base and upsert files, the driver-written tombstone marker) carries
-    the same arrow schema, so _dir_schema — which reads ONE footer —
-    agrees with Spark's schema inference over all of them."""
+    bucket, and after the compact that rewrites it, every parquet file
+    under encoded/ and delta/ (Spark-written base and upsert files, the
+    driver-written tombstone marker, the compacted base) carries
+    STORED_SCHEMA, so the schema every read supplies (_read_dirs) agrees
+    with Spark's schema inference over all of them."""
     _check_store_files_share_one_schema(spark, tokens_df, outdir, None)
 
 
@@ -890,6 +891,9 @@ def _check_store_files_share_one_schema(spark, tokens_df, outdir,
     import glob
     import os
 
+    from invariantbitpacking_spark.plans.pipeline import (
+        BASE_PARTS, DELTA_PARTS, STORED_SCHEMA)
+
     pipe = CompressionPipeline(spark, outdir, num_buckets=1, wave_buckets=1,
                                sample_fraction=None)
     if driver_delete_cap is not None:
@@ -900,30 +904,66 @@ def _check_store_files_share_one_schema(spark, tokens_df, outdir,
     victim = sub.select("doc_id").orderBy("doc_id").first()["doc_id"]
     pipe.delete(spark.createDataFrame([(victim,)], "doc_id string"), "snapS")
 
+    def schemas():
+        return {f: pipe.fs.parquet_schema(f)
+                for d in (pipe.data_dir, pipe.delta_dir)
+                for f in glob.glob(os.path.join(d, "**", "*.parquet"),
+                                   recursive=True)}
+
+    def check_supplied(root, path, parts):
+        # Spark infers over every file of the dir.  It reads file
+        # columns as nullable, and types partition columns by their
+        # values (delta_seq=2 -> int) where the read takes the caller's.
+        inferred = spark.read.option("basePath", root).parquet(path).schema
+        got = pipe._read_dirs(root, [path], parts).schema
+        assert got.fieldNames() == inferred.fieldNames()
+        data_cols = got.fieldNames()[:-len(parts)]
+        assert ([got[c].dataType for c in data_cols]
+                == [inferred[c].dataType for c in data_cols])
+
     delta_path = os.path.join(pipe.delta_dir, "snapshot_id=snapS", "bucket=0")
     seqs = sorted(os.listdir(delta_path))
     assert len(seqs) == 2, seqs  # the upsert and the tombstone marker
-    files = [f for d in (pipe.data_dir, pipe.delta_dir)
-             for f in glob.glob(os.path.join(d, "**", "*.parquet"),
-                                recursive=True)]
-    assert all(any(f.startswith(os.path.join(delta_path, s)) for f in files)
+    written = schemas()
+    assert all(any(f.startswith(os.path.join(delta_path, s)) for f in written)
                for s in seqs)
-    schemas = [pipe.fs.parquet_schema(f) for f in files]
-    assert all(s.equals(schemas[0]) for s in schemas), (
-        {f: str(s) for f, s in zip(files, schemas)})
+    check_supplied(pipe.delta_dir, delta_path, DELTA_PARTS)
+    pipe.compact("snapS")
+    rewritten = schemas()
+    assert rewritten and not set(rewritten) & set(written)
+    files = {**written, **rewritten}
+    assert all(s.equals(STORED_SCHEMA) for s in files.values()), (
+        {f: str(s) for f, s in files.items()})
+    check_supplied(pipe.data_dir,
+                   os.path.join(pipe.data_dir, "snapshot_id=snapS"),
+                   BASE_PARTS)
+    assert pipe.verify_checksums("snapS") == 0
 
-    # Spark infers over every file of the dir.  It reads file columns
-    # as nullable, and types partition columns by their values
-    # (delta_seq=2 -> int) where _dir_schema takes the caller's types.
-    inferred = (spark.read.option("basePath", pipe.delta_dir)
-                .parquet(delta_path).schema)
-    got = pipe._dir_schema(delta_path, (("snapshot_id", "string"),
-                                        ("bucket", "int"),
-                                        ("delta_seq", "long")))
-    assert got.fieldNames() == inferred.fieldNames()
-    data_cols = got.fieldNames()[:-3]
-    assert ([got[c].dataType for c in data_cols]
-            == [inferred[c].dataType for c in data_cols])
+
+def test_verify_checksums_counts_schema_drift(spark, tokens_df, outdir):
+    """verify_checksums compares one footer per written dir with
+    STORED_SCHEMA, the schema every read supplies: a base bucket whose
+    file is rewritten with the same rows but without row_xxh keeps
+    every payload hash, and still counts as one bad bucket."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    pipe.run(tokens_df.limit(80), "snapSD")
+    assert pipe.verify_checksums("snapSD") == 0
+    bucket = os.path.join(pipe.data_dir, "snapshot_id=snapSD", "bucket=0")
+    files = glob.glob(os.path.join(bucket, "*.parquet"))
+    assert files
+    for f in files:
+        table = pq.ParquetFile(f).read().drop_columns(["row_xxh"])
+        pq.write_table(table, f)
+        crc = os.path.join(bucket, f".{os.path.basename(f)}.crc")
+        if os.path.exists(crc):  # the local FS checksum of the old bytes
+            os.remove(crc)
+    assert pipe.verify_checksums("snapSD") == 1
 
 
 def test_dataframe_delete_path_matches_driver_path(spark, tokens_df,
@@ -1014,13 +1054,12 @@ def _jobs_run_by(spark, fn) -> int:
 
 def _fs_calls_by(pipe, fn) -> dict:
     """Metadata calls ``fn()`` makes, by kind: ``pipe.fs`` listdir,
-    exists and read_bytes calls, and lineage reads (calls of
-    ``pipe._lineage_records``)."""
-    counts = dict.fromkeys(("listdir", "exists", "read_bytes", "lineage"),
-                           0)
-    spied = [(pipe.fs, "listdir", "listdir"), (pipe.fs, "exists", "exists"),
-             (pipe.fs, "read_bytes", "read_bytes"),
-             (pipe, "_lineage_records", "lineage")]
+    exists, read_bytes and parquet_schema (footer read) calls, and
+    lineage reads (calls of ``pipe._lineage_records``)."""
+    kinds = ("listdir", "exists", "read_bytes", "parquet_schema")
+    counts = dict.fromkeys(kinds + ("lineage",), 0)
+    spied = [(pipe.fs, k, k) for k in kinds] + [
+        (pipe, "_lineage_records", "lineage")]
 
     def counting(real, kind):
         def call(*a, **k):
@@ -1043,7 +1082,9 @@ def test_mutation_job_budget(spark, tokens_df, outdir):
     DataFrame-path delete each run in at most 9 Spark jobs: the delta
     (or the markers) is written first, and one thin collect over the
     written files and the key-restricted pre-delta view feeds the
-    lineage commit."""
+    lineage commit.  The compact that folds the deltas runs in at most
+    6: its read-back of the staged rows supplies the stored schema
+    instead of inferring it in a job."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
                                sample_fraction=None)
     sub = tokens_df.limit(120)
@@ -1061,6 +1102,8 @@ def test_mutation_job_budget(spark, tokens_df, outdir):
     victims = spark.createDataFrame([(i,) for i in ids[5:15]],
                                     "doc_id string")
     assert _jobs_run_by(spark, lambda: pipe.delete(victims, "snapJB")) <= 9
+    assert _jobs_run_by(spark, lambda: pipe.compact("snapJB")) <= 6
+    assert not pipe._delta_buckets("snapJB")
 
     assert pipe.read_encoded("snapJB").count() == 120 + 5 + 10 - 10
     assert pipe.verify_checksums("snapJB") == 0
@@ -1068,26 +1111,29 @@ def test_mutation_job_budget(spark, tokens_df, outdir):
 
 def test_mutation_metadata_budget(spark, tokens_df, outdir):
     """Each verb's driver metadata calls stay within a fixed budget:
-    ``self.fs`` listdir / exists / read_bytes calls and lineage reads,
-    on a 4-bucket store of 120 documents with a pending 5-doc delta,
-    for a 5-doc append, a 10-id driver delete, a 10-id DataFrame
-    delete, a 10-id fetch and a compact, in that order.  The bounds
-    are the counts of the code before the mutations shared one
-    delta-tree listing; after it they are (listdir, exists,
-    read_bytes, lineage):
+    ``self.fs`` listdir / exists / read_bytes calls, footer reads
+    (``parquet_schema``) and lineage reads, on a 4-bucket store of 120
+    documents with a pending 5-doc delta, for a 5-doc append, a 10-id
+    driver delete, a 10-id DataFrame delete, a 10-id fetch, a compact,
+    and a run of a second snapshot in two waves, in that order.  The
+    bounds are the counts once every read supplies the stored schema
+    and every verb reads lineage once; before, they were (listdir,
+    exists, read_bytes, footer, lineage):
 
-    ================  ================  ================
-    verb              before (bound)    after
-    ================  ================  ================
-    append            22, 16, 10, 4     17, 8, 10, 4
-    driver delete     26, 14, 13, 4     12, 9, 13, 4
-    dataframe delete  38, 19, 17, 4     23, 9, 17, 4
-    fetch             8, 6, 2, 0        8, 6, 2, 0
-    compact           27, 16, 10, 2     11, 15, 10, 2
-    ================  ================  ================
+    ================  ==================  ==================
+    verb              before              after (bound)
+    ================  ==================  ==================
+    append            17, 8, 10, 3, 4     10, 5, 4, 0, 1
+    driver delete     12, 9, 13, 2, 4     6, 6, 4, 0, 1
+    dataframe delete  23, 9, 17, 5, 4     12, 6, 5, 0, 1
+    fetch             8, 6, 2, 2, 0       5, 6, 2, 0, 0
+    compact           11, 15, 10, 3, 2    6, 14, 5, 0, 1
+    run, 2 waves      6, 10, 19, 2, 3     2, 8, 6, 0, 1
+    ================  ==================  ==================
 
     A listing that walks every bucket where the verb needs only the
-    affected ones breaks the bound."""
+    affected ones, a footer read, or a second lineage read breaks the
+    bound."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
                                sample_fraction=None)
     sub = tokens_df.limit(120)
@@ -1107,12 +1153,20 @@ def test_mutation_metadata_budget(spark, tokens_df, outdir):
         finally:
             del pipe.MAX_DRIVER_DELETE_IDS
 
-    budget = {  # listdir, exists, read_bytes, lineage reads
-        "append": (22, 16, 10, 4),
-        "driver delete": (26, 14, 13, 4),
-        "dataframe delete": (38, 19, 17, 4),
-        "fetch": (8, 6, 2, 0),
-        "compact": (27, 16, 10, 2),
+    def two_wave_run():
+        pipe.wave_buckets = 2
+        try:
+            pipe.run(sub, "snapMB2")
+        finally:
+            pipe.wave_buckets = 4
+
+    budget = {  # listdir, exists, read_bytes, footer reads, lineage reads
+        "append": (10, 5, 4, 0, 1),
+        "driver delete": (6, 6, 4, 0, 1),
+        "dataframe delete": (12, 6, 5, 0, 1),
+        "fetch": (5, 6, 2, 0, 0),
+        "compact": (6, 14, 5, 0, 1),
+        "run, 2 waves": (2, 8, 6, 0, 1),
     }
     verbs = {
         "append": lambda: pipe.append(upserts, "snapMB"),
@@ -1120,6 +1174,7 @@ def test_mutation_metadata_budget(spark, tokens_df, outdir):
         "dataframe delete": frame_delete,
         "fetch": lambda: pipe.fetch(ids[20:30], "snapMB"),
         "compact": lambda: pipe.compact("snapMB"),
+        "run, 2 waves": two_wave_run,
     }
     got = {name: tuple(_fs_calls_by(pipe, fn).values())
            for name, fn in verbs.items()}
@@ -1128,11 +1183,13 @@ def test_mutation_metadata_budget(spark, tokens_df, outdir):
             name, counts, budget[name])
     assert pipe.read_encoded("snapMB").count() == 120 + 5 + 5 - 20
     assert pipe.verify_checksums("snapMB") == 0
+    assert pipe.read_encoded("snapMB2").count() == 120
+    assert pipe.verify_checksums("snapMB2") == 0
 
 
 def test_read_path_budget(spark, tokens_df, outdir):
-    """Building a full read starts no Spark job (the base schema comes
-    from one footer, and one snapshot dir lists on the driver), and
+    """Building a full read starts no Spark job (every read supplies
+    the stored schema, and one snapshot dir lists on the driver), and
     every read face crosses into Python once: a decoded full scan and
     a point fetch each plan ONE MapInArrow, and the fetch keeps its IN
     literal pushed into the parquet scan."""
