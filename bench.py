@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Bench harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on).
+Prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 The measured corpus is the deterministic synthetic tokens table
@@ -19,8 +20,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from invariantbitpacking_spark.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 # rows scaled so sf0.1 ~= 40k docs (~40M tokens, ~160 MB raw int32)
 SF = float(SF_DIR.rstrip("/").split("sf")[-1]) if "sf" in SF_DIR else 0.1
 NUM_ROWS = int(os.environ.get("IBP_BENCH_ROWS", str(max(2000, int(400_000 * SF)))))

@@ -10,12 +10,14 @@ per-batch table, which makes FSST a *storable* codec.  Stored
 ``doc_id``/``source`` columns are always FSST-encoded binary.
 
 Encode and decode are Arrow stages (``operators/stages.py``).
-:func:`encode_string_cols`/:func:`decode_string_cols` run one stage
-alone; callers that chain string and token codecs compose
+:func:`encode_string_cols`/:func:`decode_string_cols` run one stage;
+callers that chain string and token codecs either compose
 :func:`encode_stage`/:func:`decode_stage` with the other stages in one
-``stages.apply``, so the chain crosses into Python once per task
-(the store write, ``fetch``, bench q7).  Nothing is fused implicitly:
-``decode_string_cols(encode_string_cols(df))`` is two Python evals.
+``stages.apply`` (the store write, ``fetch``, bench q7) or call the
+functions one after the other: ``stages.apply`` composes onto an
+unmodified, unpersisted stage output, so
+``decode_string_cols(encode_string_cols(df))`` is one Python eval per
+task too.
 """
 
 from __future__ import annotations

@@ -8,12 +8,27 @@ flat buffers, emit a RecordBatch.  A :class:`Stage` is that kernel plus
 its mass rule and its output-schema rule; :func:`apply` runs a chain of
 stages as ONE ``mapInArrow``.
 
-Composition is explicit: ``apply(df, encode_auto_stage, fsst_stage)``
-is one Python eval per task where two separate calls would cross the
-JVM<->Python boundary twice ("Accelerating Python UDFs in Vectorized
-Query Execution", CIDR'22: per-call overhead dominates small vectors).
-Each stage still sub-batches its own input by its own mass and cap, so
-a chain produces exactly the bytes its stages produce one by one.
+Composition is structural: ``apply(df, *more)``, where ``df`` is the
+unmodified output of an earlier ``apply(src, *first)``, returns
+``apply(src, *first, *more)`` -- one Python eval per task where two
+calls would cross the JVM<->Python boundary twice ("Accelerating Python
+UDFs in Vectorized Query Execution", CIDR'22: per-call overhead
+dominates small vectors).  So ``decode_auto(read_encoded(s), params)``
+and ``decode_auto(encode_auto(df, params), params)`` are one eval each.
+It fires on nothing else: a ``filter``/``select``/``withColumn``/union
+of the output is a new frame that carries no chain, and
+``cache()``/``persist()`` mark the output itself (``df.is_cached``), so
+each keeps two evals and a user's cache is never bypassed.  (The
+check runs when the second call builds its frame: persist the output
+before that call, not after it.)  The
+composed result equals the two-call result in schema and rows: the
+input keeps the earlier call's projection, every projecting stage is
+handed exactly its ``reads`` (zero-copy ``RecordBatch.select``), as the
+second call's ``select`` would hand them, and each stage still
+sub-batches its own input by its own mass and cap.  Unlike the
+FSST-only fusion tag this layer once had, which fired when two string
+calls shared a symbol table, the rule belongs to the stage layer and
+serves every stage.
 
 The per-task floor of that boundary is mostly import bookkeeping, not
 data: a reused PySpark worker calls ``importlib.invalidate_caches()``
@@ -54,7 +69,8 @@ class Stage:
     projecting stage needs; ``None`` marks a stage that keeps every
     input column.  ``mass(rb)`` gives per-row mass, and consecutive
     rows are grouped into sub-batches of about ``cap`` mass (see
-    :func:`mass_ranges`)."""
+    :func:`mass_ranges`); a kernel is row-wise, so the grouping never
+    changes its output rows."""
 
     kernel: Callable
     schema: Callable[[StructType], StructType]
@@ -65,21 +81,45 @@ class Stage:
 
 def apply(df: DataFrame, *stages: Stage) -> DataFrame:
     """Run ``stages`` in order as ONE ``mapInArrow`` over ``df``.  The
-    input is projected to the first projecting stage's ``reads``;
-    stages before it keep every column they are handed."""
-    reads = next((s.reads for s in stages if s.reads is not None), None)
+    input is projected to the first projecting stage's ``reads``
+    (stages before it keep every column they are handed), and every
+    projecting stage is handed exactly its ``reads``.  A ``df`` that
+    an earlier ``apply`` returned, not persisted, composes into that
+    call's chain (see the module docstring)."""
+    link = vars(df).get(_CHAIN)
+    if link is not None and not df.is_cached:
+        df, reads, first = link
+        stages = first + stages
+    else:
+        reads = next((s.reads for s in stages if s.reads is not None), None)
     src = df if reads is None else df.select(*reads)
     schema = src.schema
     for s in stages:
+        if s.reads is not None:
+            schema = StructType([schema[c] for c in s.reads])
         schema = s.schema(schema)
 
     def chain(batches):
         install_lazy_zip_invalidation()
         for s in stages:
+            if s.reads is not None:
+                batches = _selected(s.reads, batches)
             batches = _sub_batched(s, batches)
         return batches
 
-    return src.mapInArrow(chain, schema=schema)
+    out = src.mapInArrow(chain, schema=schema)
+    if out is not None:  # a stand-in frame may return nothing
+        vars(out)[_CHAIN] = (df, reads, stages)
+    return out
+
+
+# (source frame, its projection, stages) an apply() output maps from
+_CHAIN = "_ibp_stage_chain"
+
+
+def _selected(cols, batches):
+    for rb in batches:
+        yield rb.select(cols)
 
 
 def _sub_batched(stage: Stage, batches):

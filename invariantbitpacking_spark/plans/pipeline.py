@@ -544,22 +544,26 @@ class CompressionPipeline:
     def _latest_delta(rows: DataFrame) -> DataFrame:
         """One row per (snapshot_id, doc_id), highest delta_seq wins.
         The window runs over delta rows and, in a key-restricted view,
-        the keys' base rows — never a whole base."""
+        the keys' base rows — a whole base only in the by-bucket rewrite
+        of :meth:`compact`, which reads it whole anyway."""
         from pyspark.sql import Window
 
-        w = (Window.partitionBy("snapshot_id", "doc_id")
+        # bucket is a function of doc_id, so it splits no group; as a
+        # key it lets a by-bucket shuffle serve the window
+        w = (Window.partitionBy("snapshot_id", "bucket", "doc_id")
              .orderBy(F.desc("delta_seq")))
         return (rows.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1).drop("_rn", "delta_seq"))
 
     def _resolved(self, snapshot_id: str, buckets=None,
                   as_of_seq: int | None = None,
-                  keys: DataFrame | None = None, tree=None) -> DataFrame:
+                  keys: DataFrame | None = None, tree=None,
+                  by_bucket: bool = False) -> DataFrame:
         """The snapshot's CURRENT logical rows: base minus doc_ids
         superseded by deltas, plus the latest delta rows — minus
         documents whose latest delta is a TOMBSTONE (codec
-        'tombstone', the O(delta) delete marker).  The big side (base)
-        is never shuffled — superseded rows fall to a broadcast
+        'tombstone', the O(delta) delete marker).  A read never shuffles
+        the big side (base) — superseded rows fall to a broadcast
         anti-join on the small delta key set.  ``buckets`` prunes both
         listings to the given bucket dirs (the fetch path); without it
         the base is ONE path, the ``snapshot_id=S`` dir, not one path
@@ -584,7 +588,12 @@ class CompressionPipeline:
         view shuffles key-sized rows and needs no anti-join.
 
         ``tree``, the snapshot's :meth:`_delta_tree` when the caller
-        has just listed it, spares the delta listing."""
+        has just listed it, spares the delta listing.
+
+        ``by_bucket`` is the rewrite form of :meth:`compact`: base and
+        delta rows hash on ``bucket`` in ONE shuffle and resolve in
+        that same window, so each bucket lands whole in one task and
+        is written as one file, as :meth:`run` writes it."""
         if buckets is None:
             snap = _join(self.data_dir, f"snapshot_id={snapshot_id}")
             base_paths = [snap] if any(c.startswith("bucket=")
@@ -607,15 +616,20 @@ class CompressionPipeline:
         if as_of_seq is not None:
             deltas = deltas.filter(F.col("delta_seq") <= int(as_of_seq))
         if keys is not None:
-            deltas = restrict(deltas).unionByName(
+            deltas = restrict(deltas)
+        merged = keys is not None or by_bucket
+        if merged:
+            deltas = deltas.unionByName(
                 base.withColumn("delta_seq", F.lit(0).cast("long")),
                 allowMissingColumns=True)
+        if by_bucket:
+            deltas = deltas.repartition(self.num_buckets, "bucket")
         # a tombstone that wins latest-wins DELETES the document: it
         # must still shadow the base row (stay in the anti-join keys)
         # but contribute no output row itself
         live = (self._latest_delta(deltas)
                 .filter(F.col("codec") != TOMBSTONE_CODEC))
-        if keys is not None:
+        if merged:
             return live
         # every delta row's doc_id shadows its base row, whichever
         # delta row wins
@@ -993,7 +1007,8 @@ class CompressionPipeline:
     def compact(self, snapshot_id: str, buckets=None) -> PipelineResult:
         """Fold delta files back into the base: rewrite each affected
         bucket from its RESOLVED view (the one-time O(bucket) cost
-        delta appends deferred), drop the bucket's delta dirs, and
+        delta appends deferred; one shuffle by bucket, so each bucket
+        is rewritten as one file), drop the bucket's delta dirs, and
         re-commit lineage from a full read-back — which also resets any
         accumulated incremental-stat drift to ground truth.  This is
         the ONLY code that rewrites a base bucket: the resolved rows
@@ -1019,7 +1034,8 @@ class CompressionPipeline:
         snap_dir = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
         for wi, wave in enumerate(waves):
             t0 = time.perf_counter()
-            resolved = (self._resolved(snapshot_id, wave, tree=tree)
+            resolved = (self._resolved(snapshot_id, wave, tree=tree,
+                                       by_bucket=True)
                         .sortWithinPartitions("bucket", "doc_id"))
             stage = _join(stage_root, f"wave{wi}")
             (resolved.write.mode("overwrite")

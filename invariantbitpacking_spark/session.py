@@ -43,10 +43,33 @@ def _malloc_tuning() -> dict[str, str]:
     return out
 
 
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run
+    on: its affinity mask, the count perfbench uses."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def default_driver_memory() -> str:
+    """``IBP_DRIVER_MEM`` when set, else half the machine's physical
+    memory (``MemTotal``) in whole GiB, at least 1g and at most 16g.  A
+    local-mode driver JVM hosts the executors; the other half is left
+    to the Python workers and the OS."""
+    env = os.environ.get("IBP_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16, max(1, (total // 2) >> 30))}g"
+
+
 def get_spark(app_name: str = "invariantbitpacking_spark",
               cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.appName(app_name)
@@ -67,7 +90,7 @@ def get_spark(app_name: str = "invariantbitpacking_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("IBP_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
     )

@@ -37,8 +37,9 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--wave", type=int, default=16)
     ap.add_argument("--max-waves", type=int, default=None)
-    ap.add_argument("--local-cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--local-cores", type=int, default=None,
+                    help="local[N] cores; default $SPARK_GRAFT_CPUS, else "
+                         "the CPUs this process may run on")
     ap.add_argument("--compact", action="store_true",
                     help="fold any pending delta files into the base "
                          "after the append and delete (physically "

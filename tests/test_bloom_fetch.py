@@ -8,7 +8,9 @@ Neither pyarrow 16 nor duckdb 1.0 exposes bloom offsets in metadata,
 so presence is pinned behaviorally: the same snapshot written with
 bloom_ndv=None is smaller by approximately the filter bytes (a
 power-of-two block-split filter, ~128 KiB per file at ndv=100k), and
-scattered-id fetches stay exact on the bloom-enabled store."""
+scattered-id fetches stay exact on the bloom-enabled store.  After a
+rewrite, the footers are read through parquet-mr on the JVM, which
+gives each column chunk's bloom filter offset."""
 
 import glob
 import os
@@ -27,6 +29,28 @@ def outdir(tmp_path):
 def _base_bytes(out):
     return sum(os.path.getsize(p) for p in glob.glob(
         os.path.join(out, "encoded", "**", "*.parquet"), recursive=True))
+
+
+def _files_without_bloom(spark, out):
+    """Base files whose doc_id column chunks carry no bloom filter."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    missing = []
+    for p in glob.glob(os.path.join(out, "encoded", "**", "*.parquet"),
+                       recursive=True):
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(p), conf))
+        try:
+            offsets = [c.getBloomFilterOffset()
+                       for b in reader.getFooter().getBlocks()
+                       for c in b.getColumns()
+                       if c.getPath().toDotString() == "doc_id"]
+        finally:
+            reader.close()
+        if not offsets or min(offsets) < 0:
+            missing.append(p)
+    return missing
 
 
 def test_bloom_filter_written_and_fetch_exact(spark, tokens_df, outdir):
@@ -64,13 +88,14 @@ def test_bloom_survives_append_and_compact(spark, tokens_df, outdir):
                                sample_fraction=None, bloom_ndv=50_000)
     sub = tokens_df.limit(120)
     pipe.run(sub, "s1")
-    size_run = _base_bytes(out)
     delta = spark.createDataFrame(
         [("bloom-new", [3, 1, 4, 1, 5], 5, "web")],
         "doc_id string, tokens array<int>, n_tok int, source string")
     pipe.append(delta, "s1")          # delta file, base untouched
     pipe.compact("s1")                # folds back through _base_writer
-    assert _base_bytes(out) >= size_run  # filters still present
+    assert glob.glob(os.path.join(out, "encoded", "**", "*.parquet"),
+                     recursive=True)
+    assert _files_without_bloom(spark, out) == []
     got = pipe.fetch(["bloom-new"], "s1").first()
     assert list(got["tokens"]) == [3, 1, 4, 1, 5]
     assert pipe.verify_checksums("s1") == 0

@@ -156,7 +156,7 @@ def test_string_cols_forced_byte_mass_split(spark, tokens_df, monkeypatch):
 def test_roundtrip_fusion_identical_and_scoped(spark, tokens_df):
     """An FSST encode->decode chain composed explicitly with
     ``stages.apply`` runs as ONE mapInArrow and gives the same values
-    as the two-call form, which runs as two: nothing fuses implicitly."""
+    as the two-call form, which composes into one as well."""
     from invariantbitpacking_spark.functions import strings as fstr
     from invariantbitpacking_spark.operators import stages
 
@@ -175,5 +175,5 @@ def test_roundtrip_fusion_identical_and_scoped(spark, tokens_df):
     assert {(r["doc_id"], r["source"]) for r in chained.collect()} == plain
 
     two = fstr.decode_string_cols(fstr.encode_string_cols(sub, table), table)
-    assert nodes(two) == 2
+    assert nodes(two) == 1
     assert {(r["doc_id"], r["source"]) for r in two.collect()} == plain

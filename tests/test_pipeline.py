@@ -1,10 +1,12 @@
 """Resumable pipeline: wave commits, lineage, resume, round-trip."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from invariantbitpacking_spark.operators import selector
 from invariantbitpacking_spark.plans.pipeline import CompressionPipeline
 
 
@@ -502,14 +504,34 @@ def test_compact_folds_deltas_into_base(spark, tokens_df, outdir):
         [("cp-doc-1", [1, 2], 2, "web"), ("cp-doc-2", [3, 4, 5], 3, "web")],
         "doc_id string, tokens array<int>, n_tok int, source string")
     pipe.append(delta, "snapCP")
-    assert pipe._delta_buckets("snapCP")
-    n_before = pipe.read_encoded("snapCP").count()
+    touched = pipe._delta_buckets("snapCP")
+    assert touched
+
+    def stats():
+        return {r["bucket"]: (r["docs"], r["tokens"], r["comp_bytes"],
+                              r["payload_xxh"])
+                for r in pipe.latest_lineage("snapCP").collect()}
+
+    def rows():
+        return {r["doc_id"]: r.asDict()
+                for r in pipe.read_encoded("snapCP").collect()}
+
+    rows_before = rows()
+    stats_before = stats()
     res = pipe.compact("snapCP")
     assert res.buckets_done >= 1
-    # deltas folded away; logical rows identical; audits green
+    # deltas folded away; logical rows and lineage stats identical;
+    # audits green
     assert pipe._delta_buckets("snapCP") == []
-    assert pipe.read_encoded("snapCP").count() == n_before
+    assert rows() == rows_before
+    assert stats() == stats_before
     assert pipe.verify_checksums("snapCP") == 0
+    # each rewritten bucket is one file, as run() writes it
+    for b in touched:
+        bdir = os.path.join(outdir, "encoded", "snapshot_id=snapCP",
+                            f"bucket={b}")
+        assert len([f for f in os.listdir(bdir)
+                    if f.endswith(".parquet")]) == 1, b
     params = pipe.load_or_learn_params(sub, "snapCP")
     both = sub.unionByName(delta)
     assert pipe.verify_roundtrip(both, params, "snapCP") == 0
@@ -1192,7 +1214,9 @@ def test_read_path_budget(spark, tokens_df, outdir):
     the stored schema, and one snapshot dir lists on the driver), and
     every read face crosses into Python once: a decoded full scan and
     a point fetch each plan ONE MapInArrow, and the fetch keeps its IN
-    literal pushed into the parquet scan."""
+    literal pushed into the parquet scan.  The public decoded scan,
+    ``decode_auto(read_encoded(s), params)``, composes into that same
+    one eval and gives its schema and rows."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
                                sample_fraction=None)
     sub = tokens_df.limit(100)
@@ -1207,8 +1231,14 @@ def test_read_path_budget(spark, tokens_df, outdir):
         if pending:
             pipe.append(_delta_df(spark, 3, prefix="rb"), "snapRB")
         assert _jobs_run_by(spark, lambda: pipe.read_encoded("snapRB")) == 0
-        assert plan(pipe._read("snapRB", decode=True)).count(
-            "MapInArrow") == 1
+        fused = pipe._read("snapRB", decode=True)
+        assert plan(fused).count("MapInArrow") == 1
+        public = selector.decode_auto(pipe.read_encoded("snapRB"),
+                                      pipe._load_params("snapRB"))
+        assert plan(public).count("MapInArrow") == 1
+        assert public.schema == fused.schema
+        assert ({r["doc_id"]: r for r in public.collect()}
+                == {r["doc_id"]: r for r in fused.collect()})
         got = plan(pipe.fetch(ids, "snapRB"))
         assert got.count("MapInArrow") == 1
         assert "PushedFilters: [In(doc_id" in got

@@ -125,6 +125,80 @@ def test_composed_chain_with_tiny_caps_is_byte_identical(store, monkeypatch):
         r["doc_id"]: (r["source"], list(r["tokens"])) for r in sub.collect()}
 
 
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_composition_is_scoped_to_the_unmodified_output(store):
+    """decode_auto over read_encoded's very output is one eval; a
+    filter, a select or a cache() in between keeps two (a cache is
+    never bypassed), and every form gives the same rows."""
+    pipe, _ = store
+    params = pipe._load_params("snapST")
+
+    def decoded(enc):
+        return selector.decode_auto(enc, params)
+
+    one = decoded(pipe.read_encoded("snapST"))
+    assert _python_nodes(one) == 1
+    want = _rows(one)
+    assert len(want) == 120
+    cached = pipe.read_encoded("snapST").cache()
+    try:
+        for enc in (pipe.read_encoded("snapST").filter(F.lit(True)),
+                    pipe.read_encoded("snapST").select("*"),
+                    cached):
+            two = decoded(enc)
+            assert _python_nodes(two) == 2
+            assert two.schema == one.schema
+            assert _rows(two) == want
+    finally:
+        cached.unpersist()
+
+
+def test_composed_projection_then_retyped_matches_two_calls(spark):
+    """A second call whose projecting stage is followed by a retyped
+    stage: the composed chain hands the projecting stage exactly its
+    reads and gives the two-call schema and rows."""
+    df = spark.createDataFrame(
+        [(i, f"s{i}", float(i) / 4) for i in range(30)],
+        "k int, s string, x double").coalesce(2)
+    one_row = stages.Stage(lambda rb: rb, lambda sch: sch,
+                           lambda rb: np.ones(rb.num_rows, np.int64), 7)
+    widen = stages.Stage(
+        lambda rb: rb.append_column("k2", pa.array(
+            rb.column("k").to_numpy() * 2, pa.int32())),
+        lambda sch: StructType(sch.fields + [StructField("k2",
+                                                         IntegerType())]),
+        lambda rb: np.ones(rb.num_rows, np.int64), 5)
+
+    def project(rb):
+        seen = set(rb.schema.names)
+        assert seen == {"k2", "s"}, seen
+        return pa.record_batch([rb.column("s"), rb.column("k2")],
+                               names=["s", "k2"])
+
+    pick = stages.Stage(project, stages.fixed("s string, k2 int"),
+                        lambda rb: np.ones(rb.num_rows, np.int64), 3,
+                        ("k2", "s"))
+    to_bin = stages.Stage(
+        lambda rb: pa.record_batch(
+            [rb.column("s").cast(pa.binary()), rb.column("k2")],
+            names=["s", "k2"]),
+        stages.retyped(("s",), "binary"),
+        lambda rb: np.ones(rb.num_rows, np.int64), 4)
+
+    first = stages.apply(df, one_row, widen)
+    fused = stages.apply(first, pick, to_bin)
+    unfused = stages.apply(first.select("*"), pick, to_bin)
+    assert _python_nodes(fused) == 1 and _python_nodes(unfused) == 2
+    assert fused.schema == unfused.schema
+    assert fused.columns == ["s", "k2"]
+    assert _rows(fused) == _rows(unfused)
+    assert _rows(fused) == sorted((f"s{i}".encode(), 2 * i)
+                                  for i in range(30))
+
+
 def test_each_stage_sub_batches_by_its_own_mass(spark):
     """Two probe stages in one chain report the row count of every
     sub-batch they see: each stays within its own cap."""
