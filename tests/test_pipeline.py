@@ -1099,35 +1099,79 @@ def _fs_calls_by(pipe, fn) -> dict:
     return counts
 
 
+def _collect_plans(spark, fn) -> list:
+    """The final executed plan of every ``DataFrame.collect`` that
+    ``fn()`` makes, as a string."""
+    cls = type(spark.range(0))
+    real = cls.collect
+    plans = []
+
+    def spy(df):
+        rows = real(df)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    cls.collect = spy
+    try:
+        fn()
+    finally:
+        cls.collect = real
+    return plans
+
+
 def test_mutation_job_budget(spark, tokens_df, outdir):
-    """On a store with a pending delta, an upsert append and a
-    DataFrame-path delete each run in at most 9 Spark jobs: the delta
-    (or the markers) is written first, and one thin collect over the
-    written files and the key-restricted pre-delta view feeds the
-    lineage commit.  The compact that folds the deltas runs in at most
-    6: its read-back of the staged rows supplies the stored schema
-    instead of inferring it in a job."""
+    """On a store with a pending delta, each key-restricted verb runs in
+    a fixed number of Spark jobs:
+
+    - an upsert append in at most 4: the delta is written first (2
+      jobs, its dedupe window's shuffle and the write), then one thin
+      collect of the written files and one of the keys' candidates
+      feed the lineage commit, which resolves latest-wins on the
+      driver (6 before, with a window, a broadcast and a groupBy);
+    - a 10-id driver delete in at most 2: the id collect and one thin
+      collect of the ids' candidates (4 before);
+    - a 10-id fetch in at most 2: the window's shuffle and the result,
+      with no broadcast anti-join (3 before);
+    - a DataFrame-path delete in at most 6 (8 before): the marker
+      write keeps the key frame's broadcast, and its commit is the
+      append's;
+    - the compact that folds the deltas in at most 6.
+
+    The commit's and the driver delete's collects plan no Exchange."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
                                sample_fraction=None)
     sub = tokens_df.limit(120)
     pipe.run(sub, "snapJB")
     pipe.append(_delta_df(spark, 5, prefix="pending"), "snapJB")
     ids = [r["doc_id"] for r in
-           sub.select("doc_id").orderBy("doc_id").limit(20).collect()]
+           sub.select("doc_id").orderBy("doc_id").limit(30).collect()]
     upserts = spark.createDataFrame(
         [(i, [1, 2, 3], 3, "upd") for i in ids[:10]], TOK_SCHEMA
     ).unionByName(_delta_df(spark, 10, prefix="fresh"))
 
-    assert _jobs_run_by(spark, lambda: pipe.append(upserts, "snapJB")) <= 9
+    plans = []
+    assert _jobs_run_by(spark, lambda: plans.extend(_collect_plans(
+        spark, lambda: pipe.append(upserts, "snapJB")))) <= 4
+    driver_ids = spark.createDataFrame([(i,) for i in ids[20:30]],
+                                       "doc_id string")
+    assert _jobs_run_by(spark, lambda: plans.extend(_collect_plans(
+        spark, lambda: pipe.delete(driver_ids, "snapJB")))) <= 2
+    assert len(plans) == 4
+    assert not [p for p in plans if "Exchange" in p]
+
+    fetched = pipe.fetch(ids[:5] + ids[20:25], "snapJB")
+    assert _jobs_run_by(spark, fetched.collect) <= 2
+    assert "BroadcastExchange" not in (
+        fetched._jdf.queryExecution().executedPlan().toString())
 
     pipe.MAX_DRIVER_DELETE_IDS = 0
     victims = spark.createDataFrame([(i,) for i in ids[5:15]],
                                     "doc_id string")
-    assert _jobs_run_by(spark, lambda: pipe.delete(victims, "snapJB")) <= 9
+    assert _jobs_run_by(spark, lambda: pipe.delete(victims, "snapJB")) <= 6
     assert _jobs_run_by(spark, lambda: pipe.compact("snapJB")) <= 6
     assert not pipe._delta_buckets("snapJB")
 
-    assert pipe.read_encoded("snapJB").count() == 120 + 5 + 10 - 10
+    assert pipe.read_encoded("snapJB").count() == 120 + 5 + 10 - 10 - 10
     assert pipe.verify_checksums("snapJB") == 0
 
 
@@ -1242,3 +1286,139 @@ def test_read_path_budget(spark, tokens_df, outdir):
         got = plan(pipe.fetch(ids, "snapRB"))
         assert got.count("MapInArrow") == 1
         assert "PushedFilters: [In(doc_id" in got
+
+
+def test_read_encoded_column_order_is_fixed(spark, tokens_df, outdir):
+    """``read_encoded(s)`` has one column order, the stored row then
+    ``snapshot_id`` and ``bucket``, whether a delta is pending or not
+    and after ``compact``, and a point fetch has the same one.  So a
+    positional row tuple of a document no mutation touched is the same
+    in every state."""
+    from invariantbitpacking_spark.plans.pipeline import STORED_SCHEMA
+
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    sub = tokens_df.limit(60)
+    pipe.run(sub, "snapCO")
+    probe = sub.select("doc_id").orderBy("doc_id").first()["doc_id"]
+    want = [n for n in STORED_SCHEMA.names if n != "row_xxh"] + [
+        "snapshot_id", "bucket"]
+
+    def state():
+        df = pipe.read_encoded("snapCO")
+        row = next(r for r in df.collect() if r["doc_id"] == probe)
+        return df.columns, tuple(row)
+
+    before = state()
+    assert before[0] == want
+    pipe.append(_delta_df(spark, 3, prefix="co"), "snapCO")
+    assert state() == before
+    assert pipe.fetch([probe], "snapCO", decode=False).columns == want
+    pipe.compact("snapCO")
+    assert state() == before
+
+
+def test_driver_resolve_matches_spark_resolve(spark, tokens_df, outdir):
+    """The driver-side latest-wins resolve (:meth:`_latest_rows` over a
+    thin collect of the keys' candidates) gives what Spark's resolved
+    views give, at every ``as_of_seq`` of a delta chain that holds an
+    upsert, a tombstone and a re-upsert of one id over three seqs, a
+    document whose latest row is a tombstone, a document only a delta
+    holds, and a ghost id:
+
+    - the driver delete's victims equal ``read_encoded(as_of_seq=…)``
+      restricted to the ids;
+    - the commit's driver-resolved stats equal ``_thin_stats`` over the
+      Spark-resolved view restricted to the keys;
+    - ``fetch(ids, as_of_seq=…)`` equals the decoded full read
+      restricted to the ids.
+
+    Once more over 1100 extra ghost ids, the key-frame branch, for the
+    fetch and the driver delete."""
+    from collections import defaultdict
+
+    from invariantbitpacking_spark.functions import strings as fstr
+    from invariantbitpacking_spark.functions.hashing import bucket_of
+
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+                               sample_fraction=None,
+                               delta_compact_threshold=None)
+    sub = tokens_df.limit(60)
+    pipe.run(sub, "snapDR")
+    docs = sorted(r["doc_id"] for r in sub.select("doc_id").collect())
+    flip, gone, kept = docs[0], docs[1], docs[2]
+
+    def upsert(*ids):
+        return spark.createDataFrame(
+            [(i, [7, len(i), 9], 3, "re") for i in ids], TOK_SCHEMA)
+
+    def delete(*ids):
+        pipe.delete(spark.createDataFrame([(i,) for i in ids],
+                                          "doc_id string"), "snapDR")
+
+    pipe.append(upsert(flip, "only-delta"), "snapDR")
+    delete(flip, gone)
+    pipe.append(upsert(flip), "snapDR")
+    ids = [flip, gone, kept, "only-delta", "ghost-id"]
+    table = pipe._fsst_table("snapDR")
+    name = dict(zip(fstr.encode_id_literals(ids, table), ids))
+    keys = list(name)
+    buckets = sorted({bucket_of(i, 4) for i in ids})
+    seqs = sorted({r["commit_seq"] for r in pipe._lineage_records()})
+    assert len(seqs) == 4
+
+    def victims(id_list, as_of):
+        rows, _ = pipe._locate("snapDR", id_list, table, as_of)
+        return sorted((name.get(bytes(r["doc_id"])), r["bucket"], r["codec"],
+                       r["tokens"], r["raw_bytes"], r["comp_bytes"], r["xxh"])
+                      for r in pipe._latest_rows(pipe._thin(rows)))
+
+    def expected_victims(as_of):
+        return sorted(
+            (r["doc_id"], r["bucket"], r["codec"], r["n_tok"],
+             r["raw_bytes"], r["comp_bytes"], r["xxh"])
+            for r in pipe.read_encoded("snapDR", as_of_seq=as_of)
+            .filter(F.col("doc_id").isin(ids))
+            .withColumn("xxh", F.xxhash64("payload")).collect())
+
+    def fetched(id_list, as_of):
+        return sorted((r["doc_id"], list(r["tokens"]), r["n_tok"],
+                       r["source"])
+                      for r in pipe.fetch(id_list, "snapDR",
+                                          as_of_seq=as_of).collect())
+
+    def expected_fetch(as_of):
+        return sorted(
+            (r["doc_id"], list(r["tokens"]), r["n_tok"], r["source"])
+            for r in pipe._read("snapDR", decode=True, as_of_seq=as_of)
+            .filter(F.col("doc_id").isin(ids)).collect())
+
+    live = []
+    for as_of in seqs:
+        want = expected_victims(as_of)
+        live.append({v[0] for v in want})
+        assert victims(ids, as_of) == want, as_of
+        stats = defaultdict(int)
+        for r in pipe._latest_rows(pipe._thin(pipe._candidates(
+                "snapDR", keys, buckets, as_of))):
+            for k in ("docs", "tokens", "raw_bytes", "comp_bytes"):
+                stats[(r["bucket"], r["codec"], k)] += r[k]
+            stats[(r["bucket"], r["codec"], "xxh")] ^= r["xxh"]
+        spark_stats = {}
+        for r in pipe._thin_stats(
+                pipe._resolved("snapDR", as_of)
+                .filter(F.col("doc_id").isin(keys)), "bucket", "codec"):
+            for k in ("docs", "tokens", "raw_bytes", "comp_bytes", "xxh"):
+                spark_stats[(r["bucket"], r["codec"], k)] = r[k]
+        assert dict(stats) == spark_stats, as_of
+        assert fetched(ids, as_of) == expected_fetch(as_of), as_of
+    # the chain covers each case: flip is live, gone, live again
+    assert [flip in s for s in live] == [True, True, False, True]
+    assert [gone in s for s in live] == [True, True, False, False]
+    assert [kept in s for s in live] == [True] * 4
+    assert ["only-delta" in s for s in live] == [False, True, True, True]
+    assert not any("ghost-id" in s for s in live)
+
+    many = ids + [f"ghost-{i}" for i in range(1100)]
+    assert victims(many, None) == expected_victims(None)
+    assert fetched(many, None) == expected_fetch(None)
