@@ -141,7 +141,19 @@ _VIEW = tuple(STORED_SCHEMA.names) + tuple(n for n, _ in BASE_PARTS)
 
 # Up to this many keys, a key-restricted read filters on a literal IN
 # pushed into the parquet scan; above it, on an Arrow-built key frame.
-_IN_KEYS = 1024
+# Build plus run of _thin(_candidates(...)) on a compacted 8000-doc,
+# 4-bucket store (5-16 row groups per doc_id-sorted file, one pending
+# delta), random live keys, local[4], median s:
+#
+#   keys        10     100    200    300    1024   10 000
+#   literal IN  0.27   0.36   0.40   0.49   1.15   10.4
+#   key frame   0.39   0.37   0.32   0.26   0.29    0.52
+#
+# Spark pushes an IN of more than 10 values into parquet as one
+# min/max range, so past 10 keys it skips no more row groups than the
+# frame, and its cost is the literals.  The crossover is 100-200 keys;
+# the bound sits above the 200-key commit of a 200-doc upsert.
+_IN_KEYS = 256
 
 # (count, sum) columns of the thin stats a commit folds into lineage
 _COUNTS = ("docs", "tokens", "raw_bytes", "comp_bytes")
@@ -436,12 +448,11 @@ class CompressionPipeline:
     # where the anti-join key set is broadcast — deltas are small by
     # contract (that is what makes them deltas); once they are not,
     # :meth:`compact` folds them into the base and the read plan
-    # returns to a pure scan.  A key-restricted verb (fetch, both
-    # deletes, every delta commit) instead reads the keys' CANDIDATES,
-    # base rows as delta_seq 0 unioned with delta rows, and resolves
-    # latest-wins over them: in one window (fetch, the DataFrame
-    # delete) or on the driver over a thin collect (the driver delete,
-    # the commit), so no anti-join is planned.
+    # returns to a pure scan.  A key-restricted verb (fetch, delete,
+    # every delta commit) instead reads the keys' CANDIDATES, base rows
+    # as delta_seq 0 unioned with delta rows, and resolves latest-wins
+    # over them: in one window (fetch) or on the driver over a thin
+    # collect (delete, the commit), so no anti-join is planned.
 
     def _snapshot_max_seq(self, snapshot_id: str, recs=None) -> int:
         """Max commit_seq over THIS snapshot's committed lineage rows
@@ -670,15 +681,15 @@ class CompressionPipeline:
         ``buckets`` (every bucket when None) as ``delta_seq`` 0, unioned
         with their delta rows (``as_of_seq`` and ``tree`` pass to
         :meth:`_sides`), each side filtered by ``keys`` and never joined
-        against the other.  ``keys`` are stored (FSST-encoded) doc_ids:
+        against the other.  ``keys``, a list of stored (FSST-encoded)
+        doc_ids, restricts both sides:
 
-        - a list of up to ``_IN_KEYS`` (1024) is a literal ``IN``,
-          pushed into the parquet scan, so doc_id-clustered row groups
-          are skipped by min/max and the doc_id bloom filter;
-        - a longer list becomes an Arrow-built key frame, and a frame
-          of ``(snapshot_id, doc_id)`` is used as it is, through a
-          broadcast semi-join (at 10 000 ids, local[4]: 0.07 s to
-          build the frame, where a literal ``IN`` took 8.5 s);
+        - up to ``_IN_KEYS`` (256) keys are a literal ``IN``, pushed
+          into the parquet scan, so doc_id-clustered row groups are
+          skipped by min/max (and, up to 10 keys, the doc_id bloom
+          filter);
+        - more keys become an Arrow-built key frame, through a
+          broadcast semi-join (``_IN_KEYS`` has the crossover);
         - ``None`` keeps every row (:meth:`compact`'s rewrite).
 
         Latest wins resolves the candidates, in Spark through
@@ -687,18 +698,17 @@ class CompressionPipeline:
         key list collects at most keys × (1 + the keys' delta depth)
         rows, and ``delta_compact_threshold`` bounds the depth."""
         base, deltas = self._sides(snapshot_id, buckets, as_of_seq, tree)
-        if isinstance(keys, list) and len(keys) > _IN_KEYS:
-            keys = self.spark.createDataFrame(pa.table({
+        if keys is not None and len(keys) > _IN_KEYS:
+            frame = F.broadcast(self.spark.createDataFrame(pa.table({
                 "snapshot_id": [snapshot_id] * len(keys),
-                "doc_id": pa.array(keys, pa.binary())}))
+                "doc_id": pa.array(keys, pa.binary())})))
 
         def restrict(df):
             if keys is None:
                 return df
-            if isinstance(keys, list):
+            if len(keys) <= _IN_KEYS:
                 return df.filter(F.col("doc_id").isin(keys))
-            return df.join(F.broadcast(keys), ["snapshot_id", "doc_id"],
-                           "left_semi")
+            return df.join(frame, ["snapshot_id", "doc_id"], "left_semi")
 
         rows = restrict(base).withColumn("delta_seq", F.lit(0).cast("long"))
         return rows if deltas is None else rows.unionByName(restrict(deltas))
@@ -928,31 +938,26 @@ class CompressionPipeline:
         return self._commit_written_delta(snapshot_id, seq, t0, recs)
 
     def _commit_written_delta(self, snapshot_id: str, seq: int, t0: float,
-                              recs: list[dict],
-                              sign: int = 1) -> PipelineResult:
-        """Commit the delta just written at ``delta_seq=seq`` (upsert
-        rows or tombstone markers), with every input derived from what
-        landed.  The affected buckets are those whose
-        :meth:`_delta_tree` holds ``seq``.  One :meth:`_thin` collect of
-        the written files gives ``added``, the written rows that are not
-        tombstones, and the keys; a second one, of the keys'
-        :meth:`_candidates` in the pre-delta view (``as_of_seq = seq -
-        1``), resolved on the driver (:meth:`_latest_rows`), gives
-        ``replaced``.  Neither plans a window, broadcast or exchange.
-        The fold (:meth:`_commit_delta_wave`) commits them onto the
-        latest rows of ``recs``, the verb's lineage read.  The written
-        doc_ids are FSST-encoded with the snapshot's table already, and
-        the encoding is deterministic, so byte equality IS id equality
-        and no key encoding is needed.
+                              recs: list[dict]) -> PipelineResult:
+        """Commit the upsert delta just written at ``delta_seq=seq``,
+        with every input derived from what landed.  The affected
+        buckets are those whose :meth:`_delta_tree` holds ``seq``.  One
+        :meth:`_thin` collect of the written files gives ``added`` and
+        the keys; a second one, of the keys' :meth:`_candidates` in the
+        pre-delta view (``as_of_seq = seq - 1``), resolved on the driver
+        (:meth:`_latest_rows`), gives ``replaced``.  Neither plans a
+        window, broadcast or exchange.  The fold
+        (:meth:`_commit_delta_wave`) commits them onto the latest rows
+        of ``recs``, the verb's lineage read.  The written doc_ids are
+        FSST-encoded with the snapshot's table already, and the encoding
+        is deterministic, so byte equality IS id equality and no key
+        encoding is needed.
 
         Both collects are O(delta): the written rows, and at most
-        their keys × (1 + delta depth) candidates.  That is the class
-        of any broadcast of the written keys, which puts every key on
-        the driver too."""
+        their keys × (1 + delta depth) candidates."""
         tree = self._delta_tree(snapshot_id)
         affected = sorted(b for b, seqs in tree.items() if seq in seqs)
-        if not affected:
-            # empty delta, or no tombstone matched: a no-op
+        if not affected:  # empty delta: a no-op
             return PipelineResult(snapshot_id, 0, self.num_buckets,
                                   0, 0, 0, 0)
         written = self._thin(self._read_dirs(self.delta_dir, [
@@ -963,9 +968,8 @@ class CompressionPipeline:
             snapshot_id, [bytes(r["doc_id"]) for r in written], affected,
             seq - 1, tree)))
         return self._finish_delta(
-            snapshot_id, {b: tree[b] for b in affected}, replaced,
-            [r for r in written if r["codec"] != TOMBSTONE_CODEC],
-            t0, seq, recs, sign)
+            snapshot_id, {b: tree[b] for b in affected}, replaced, written,
+            t0, seq, recs)
 
     def _finish_delta(self, snapshot_id: str, tree, repl, added, t0: float,
                       seq: int, recs: list[dict],
@@ -1151,64 +1155,36 @@ class CompressionPipeline:
         lineage commit subtracts the victims' stats from thin columns,
         and every read path (``read_encoded``, ``fetch``,
         ``verify_checksums``) sees the documents as gone — while the
-        base bucket files stay byte-identical.  Cost is independent of
-        bucket payload size: the only base read is the thin-column
-        stats pass.
+        base bucket files stay byte-identical.
+
+        ``ids`` is a DataFrame with a plain-string ``doc_id`` column.
+        Its distinct non-null ids are collected as Arrow; a null matches
+        no stored row, as under SQL equality.  The key lookup,
+        :meth:`_locate` (fetch's), FSST-encodes them with the snapshot's
+        table, exactly as upsert does, and reads their candidates; one
+        :meth:`_thin` collect of them, with no exchange, is resolved on
+        the driver by :meth:`_latest_rows`.  The markers and the lineage
+        rows of the fold (:meth:`_commit_delta_wave`, the victims as
+        replaced rows) ride the pyarrow metadata transport, and only
+        the victims' buckets are committed.  Deleting ids that don't
+        exist is a no-op (no marker is written for them) — idempotent.
+        The verb runs 2 Spark jobs, and 3 above ``_IN_KEYS`` ids (the
+        key frame's broadcast).
+
+        Driver cost is O(distinct ids): the ids, their buckets and keys,
+        and at most ids × (1 + delta depth) thin rows.  Per 100 000 ids
+        (local[4], 400-doc store): 1.2-1.3 s of driver CPU in a
+        3.3-3.5 s delete, and ~110 MB of Python heap at peak.
 
         Physical erasure (right to erasure) is this call followed by
         :meth:`compact` of the snapshot: compaction rewrites the
         affected buckets from the resolved view (markers excluded),
-        drops a bucket that was emptied, and deletes the delta files.
-
-        ``ids`` is a DataFrame with a plain-string ``doc_id`` column;
-        matching against the stored table happens on FSST-encoded
-        bytes exactly like upsert.  Deleting ids that don't exist is a
-        no-op (no marker is written for them) — idempotent."""
+        drops a bucket that was emptied, and deletes the delta files."""
         recs = self._mutation_lineage(snapshot_id, "delete")
         fsst_table = self._fsst_table(snapshot_id)
-        # Bounded id sets take the driver fast path (fetch's locator,
-        # ONE thin-column scan, driver-written markers); an id set too
-        # large to collect takes the DataFrame path.
-        id_list = self._collect_delete_ids(ids)
-        if id_list is not None:
-            return self._delete_tombstone_fast(id_list, snapshot_id,
-                                               fsst_table, recs)
-        return self._delete_tombstone(ids, snapshot_id, fsst_table, recs)
-
-    # ids below this bound are deleted via the driver fast path (collect
-    # the id strings, salt/encode them driver-side); larger sets keep the
-    # DataFrame path.  100k ids ~= a few MB of driver strings — the same
-    # cost class as fetch()'s id list and the delta-append key broadcast.
-    MAX_DRIVER_DELETE_IDS = 100_000
-
-    def _collect_delete_ids(self, ids: DataFrame) -> list | None:
-        """The distinct requested doc_ids as a driver-side sorted list,
-        or None when the set exceeds MAX_DRIVER_DELETE_IDS (caller
-        falls back to the DataFrame path).  The collect is bounded at
-        cap + 1 rows, so an oversized id set never lands on the driver
-        just to be counted (``spark.sql.limit.initialNumPartitions``
-        lets the limit finish in one job)."""
-        cap = self.MAX_DRIVER_DELETE_IDS
-        rows = (ids.select(F.col("doc_id").cast("string").alias("doc_id"))
-                .limit(cap + 1).collect())
-        if len(rows) > cap:
-            return None
-        return sorted({r["doc_id"] for r in rows})
-
-    def _delete_tombstone_fast(self, id_list: list, snapshot_id: str,
-                               fsst_table, recs: list[dict]) -> PipelineResult:
-        """Driver fast path of the O(delta) tombstone delete — same
-        markers, same lineage rows, same result, same idempotence as
-        :meth:`_delete_tombstone`, in ONE distributed scan plus one tiny
-        write.  The key lookup, :meth:`_locate` (fetch's), reads the
-        ids' candidates; one :meth:`_thin` collect, bounded by
-        len(id_list) × (1 + delta depth) rows, plans no exchange, and
-        :meth:`_latest_rows` resolves the victims from it on the
-        driver.  The markers are built from them driver-side, and they
-        and the lineage rows of the fold (:meth:`_commit_delta_wave`,
-        with the victims as replaced rows) ride the pyarrow metadata
-        transport — no Spark job.  Only the victims' buckets are
-        committed.  With the id collect, the verb runs 2 Spark jobs."""
+        col = (ids.select(F.col("doc_id").cast("string"))
+               .toArrow().column(0).drop_null())
+        id_list = sorted(set(col.to_pylist()))
         tree = self._purge_orphan_deltas(snapshot_id, recs)
         t0 = time.perf_counter()
         victims = self._latest_rows(self._thin(self._locate(
@@ -1244,54 +1220,6 @@ class CompressionPipeline:
                       f"part-{uuid.uuid4().hex}.parquet"),
                 pa.Table.from_pylist(markers, schema=STORED_SCHEMA))
 
-    def _delete_tombstone(self, ids: DataFrame, snapshot_id: str,
-                          fsst_table, recs: list[dict]) -> PipelineResult:
-        """O(delta) delete: per existing victim, one marker row with
-        codec ``tombstone`` in the delta tree at a fresh delta_seq —
-        latest-wins resolution then shadows the base row and the
-        tombstone itself is filtered from every resolved view.  Write
-        first, like :meth:`append`: the markers are the live rows of the
-        requested keys' :meth:`_candidates`, semi-joined with the
-        encoded key frame (the one broadcast of this path) and resolved
-        in one window, so ghost ids write no marker, and
-        :meth:`_commit_written_delta` subtracts
-        the victims' stats (the rows the markers replace)
-        incrementally — the XOR checksum algebra composes, removing a
-        row XORs its hash back out — so ``verify_checksums`` is green
-        immediately.  An id set this large salts into every bucket, so
-        the view is the whole snapshot (one listing of its dir) and the
-        markers' dirs name the affected ones."""
-        tree = self._purge_orphan_deltas(snapshot_id, recs)
-        t0 = time.perf_counter()
-        keys = fstr.encode_string_cols(
-            ids.select(F.col("doc_id").cast("string").alias("doc_id"),
-                       F.lit(snapshot_id).alias("snapshot_id")),
-            fsst_table, ("doc_id",))
-        cur = self._latest_delta(self._candidates(snapshot_id, keys, None,
-                                                  tree=tree))
-        seq = self._next_commit_seq(recs)
-        stored = from_arrow_schema(STORED_SCHEMA)
-        tomb = cur.select(
-            "snapshot_id", "doc_id", "bucket",
-            *[F.lit(v).cast(stored[c].dataType).alias(c)
-              for c, v in _TOMBSTONE_MARKER.items()],
-            F.lit(seq).cast("long").alias("delta_seq"))
-        # Literals are non-null and Spark writes declared nullability;
-        # a union with an empty STORED_SCHEMA frame relaxes the literal
-        # columns so the markers' file schema equals the base files'.
-        # The frame is an empty range: the optimizer drops an empty
-        # local relation (an Arrow-built frame) from a union, and the
-        # relaxation with it.
-        tomb = tomb.unionByName(self.spark.range(0).select(*[
-            (F.lit(None) if f.nullable else F.lit(0))
-            .cast(f.dataType).alias(f.name) for f in stored.fields]),
-            allowMissingColumns=True)
-        (tomb.write.mode("append")
-         .partitionBy("snapshot_id", "bucket", "delta_seq")
-         .parquet(self.delta_dir))
-        return self._commit_written_delta(snapshot_id, seq, t0, recs,
-                                          sign=-1)
-
     def cleanup_staging(self, snapshot_id: str) -> None:
         """Drop the staged (uncompressed) copy once every bucket of the
         snapshot is committed — it exists only to make the waves of a
@@ -1304,9 +1232,9 @@ class CompressionPipeline:
 
     def _locate(self, snapshot_id: str, ids: list, table,
                 as_of_seq: int | None = None, tree=None):
-        """THE key lookup of fetch and the driver delete:
-        ``(candidates, pending)``, the :meth:`_candidates` of ``ids``, a
-        bounded list of doc_id strings (``as_of_seq`` and ``tree`` pass
+        """THE key lookup of fetch and delete: ``(candidates,
+        pending)``, the :meth:`_candidates` of ``ids``, a list of
+        doc_id strings (``as_of_seq`` and ``tree`` pass
         through), and whether any delta dir of theirs is listed.  Their
         buckets are computed driver-side, so only those bucket dirs are
         listed, and the ids are FSST-encoded with the snapshot's

@@ -82,10 +82,10 @@ def get_spark(app_name: str = "invariantbitpacking_spark",
         # round (spark.sql.limit.scaleUpFactor), so a limit+collect over
         # an N-slice local relation runs ceil(log4(N)) SEQUENTIAL jobs —
         # measured 0.9 s for a 100-row bounded-id collect at 32 slices
-        # vs 0.2 s in one job.  Our limit+collect consumers are bounded
-        # driver-side id lists by contract, so first-try-everything is
-        # the right shape; scale-sensitive (cores-derived), not a magic
-        # constant.
+        # vs 0.2 s in one job.  Our limit+collect consumers (kmeans
+        # seeding, dataops query samples) take small bounded heads, so
+        # first-try-everything is the right shape; scale-sensitive
+        # (cores-derived), not a magic constant.
         .config("spark.sql.limit.initialNumPartitions", str(cores * 2))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")

@@ -897,19 +897,18 @@ def test_store_files_share_one_schema(spark, tokens_df, outdir):
     driver-written tombstone marker, the compacted base) carries
     STORED_SCHEMA, so the schema every read supplies (_read_dirs) agrees
     with Spark's schema inference over all of them."""
-    _check_store_files_share_one_schema(spark, tokens_df, outdir, None)
+    _check_store_files_share_one_schema(spark, tokens_df, outdir, 0)
 
 
 def test_store_files_share_one_schema_dataframe_delete(spark, tokens_df,
                                                        outdir):
-    """The same one-schema check when the delete takes the DataFrame
-    path (id sets over MAX_DRIVER_DELETE_IDS): its Spark-written marker
-    must not declare the literal columns non-null."""
-    _check_store_files_share_one_schema(spark, tokens_df, outdir, 0)
+    """The same one-schema check for a delete of more than 100 000 ids
+    (one victim and 100 000 ghosts), above the key-frame crossover:
+    its markers carry STORED_SCHEMA too."""
+    _check_store_files_share_one_schema(spark, tokens_df, outdir, 100_000)
 
 
-def _check_store_files_share_one_schema(spark, tokens_df, outdir,
-                                        driver_delete_cap):
+def _check_store_files_share_one_schema(spark, tokens_df, outdir, ghosts):
     import glob
     import os
 
@@ -918,13 +917,12 @@ def _check_store_files_share_one_schema(spark, tokens_df, outdir,
 
     pipe = CompressionPipeline(spark, outdir, num_buckets=1, wave_buckets=1,
                                sample_fraction=None)
-    if driver_delete_cap is not None:
-        pipe.MAX_DRIVER_DELETE_IDS = driver_delete_cap
     sub = tokens_df.limit(100)
     pipe.run(sub, "snapS")
     pipe.append(_delta_df(spark, 3), "snapS")
     victim = sub.select("doc_id").orderBy("doc_id").first()["doc_id"]
-    pipe.delete(spark.createDataFrame([(victim,)], "doc_id string"), "snapS")
+    res = pipe.delete(_ids_df(spark, [victim], ghosts), "snapS")
+    assert res.docs == 1
 
     def schemas():
         return {f: pipe.fs.parquet_schema(f)
@@ -988,20 +986,33 @@ def test_verify_checksums_counts_schema_drift(spark, tokens_df, outdir):
     assert pipe.verify_checksums("snapSD") == 1
 
 
+def _ids_df(spark, ids, ghosts=0):
+    """A ``doc_id`` frame of ``ids`` plus ``ghosts`` ids that no store
+    holds, built by ``spark.range`` so they never pass through Python."""
+    df = spark.createDataFrame([(i,) for i in ids], "doc_id string")
+    if ghosts:
+        df = df.unionByName(spark.range(ghosts).select(F.concat(
+            F.lit("ghost-r"), F.col("id").cast("string")).alias("doc_id")))
+    return df
+
+
 def test_dataframe_delete_path_matches_driver_path(spark, tokens_df,
                                                    tmp_path, monkeypatch):
-    """Twin stores delete the same ids, one through the driver fast path
-    and one through the DataFrame path (driver cap 0): same resolved
-    rows, same lineage totals and checksums, same result, both audits
-    green.  Three deletes run in turn on each store:
+    """Every delete, whatever its id count, leaves the store's model:
+    the input documents minus the victims, each row as ``run`` stored
+    it, lineage totals equal to the sums over ``read_encoded``, the
+    victims' stats as the result, and a green audit.  Four deletes run
+    in turn on one store:
 
-    - 9 victims and a ghost id: ghosts are a no-op on both;
+    - 9 victims and a ghost id: the ghost is a no-op;
     - one victim and a ghost that salts into a bucket with no victim:
-      both paths report the victim's bucket alone as done, since only
-      buckets that got a marker are committed;
-    - 9 victims and 1100 ghosts, over the 1024-id ``IN`` crossover:
-      the driver path locates them through the broadcast semi-join and
-      builds no ``IN`` of more than 1024 literals."""
+      the victim's bucket alone is done, since only buckets that got a
+      marker are committed (each delete reports its victims' buckets);
+    - 9 victims and 1100 ghosts, over the ``IN`` crossover: the ids are
+      located through the broadcast semi-join, and no ``IN`` of more
+      than 1024 literals is built;
+    - 9 victims and 100 000 ghosts built by ``spark.range``, more ids
+      than a delete once collected to the driver."""
     from invariantbitpacking_spark.functions.hashing import bucket_of
 
     in_sizes = []
@@ -1020,44 +1031,67 @@ def test_dataframe_delete_path_matches_driver_path(spark, tokens_df,
     lone = docs[9]
     ghost = next(g for g in (f"ghost-{i}" for i in range(100))
                  if bucket_of(g, 4) != bucket_of(lone, 4))
-    cases = [(docs[:9] + ["ghost-id"], 9, None),
-             ([lone, ghost], 1, 1),
-             (docs[10:19] + [f"ghost-{i}" for i in range(1100)], 9, None)]
-    outcomes = {}
-    for name, cap in (("driver", None), ("dataframe", 0)):
-        pipe = CompressionPipeline(spark, str(tmp_path / name),
-                                   num_buckets=4, wave_buckets=4,
-                                   sample_fraction=None)
-        if cap is not None:
-            pipe.MAX_DRIVER_DELETE_IDS = cap
-        pipe.run(sub, "snapDD")
-        for ids, _, _ in cases:
-            id_df = spark.createDataFrame([(i,) for i in ids],
-                                          "doc_id string")
-            in_sizes.clear()
-            res = pipe.delete(id_df, "snapDD")
-            assert max(in_sizes, default=0) <= 1024, (name, len(ids))
-            rows = sorted(
-                (r["doc_id"], r["source"], r["codec"], r["n_tok"],
-                 bytes(r["payload"]))
-                for r in pipe.read_encoded("snapDD").collect())
-            lin = sorted(
-                (r["bucket"], r["docs"], r["tokens"], r["comp_bytes"],
-                 r["payload_xxh"])
-                for r in pipe.latest_lineage("snapDD").collect())
-            totals = tuple(pipe.latest_lineage("snapDD").agg(
-                F.sum("docs"), F.sum("tokens"), F.sum("comp_bytes")).first())
-            assert pipe.verify_checksums("snapDD") == 0
-            outcomes.setdefault(name, []).append((res, rows, lin, totals))
-    left = 120
-    for i, (_, n_del, n_buckets) in enumerate(cases):
-        driver, frame = outcomes["driver"][i], outcomes["dataframe"][i]
-        left -= n_del
-        assert driver[0].docs == n_del
-        assert len(driver[1]) == left
-        if n_buckets is not None:
-            assert driver[0].buckets_done == n_buckets
-        assert driver == frame, i
+    cases = [(docs[:9] + ["ghost-id"], 0),
+             ([lone, ghost], 0),
+             (docs[10:19] + [f"ghost-{i}" for i in range(1100)], 0),
+             (docs[19:28], 100_000)]
+    pipe = CompressionPipeline(spark, str(tmp_path / "store"),
+                               num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    pipe.run(sub, "snapDD")
+
+    def stored():
+        return {r["doc_id"]: (r["source"], r["codec"], r["n_tok"],
+                              r["raw_bytes"], r["comp_bytes"],
+                              bytes(r["payload"]))
+                for r in pipe.read_encoded("snapDD").collect()}
+
+    model = stored()
+    assert sorted(model) == docs
+    for ids, ghosts in cases:
+        gone = [i for i in ids if i in model]
+        want = (len(gone), *(sum(model[i][k] for i in gone)
+                             for k in (2, 3, 4)))
+        in_sizes.clear()
+        res = pipe.delete(_ids_df(spark, ids, ghosts), "snapDD")
+        assert max(in_sizes, default=0) <= 1024, len(ids)
+        assert (res.docs, res.tokens, res.raw_bytes, res.comp_bytes) == want
+        assert res.buckets_done == len({bucket_of(i, 4) for i in gone})
+        for i in gone:
+            del model[i]
+        assert stored() == model
+        totals = tuple(pipe.latest_lineage("snapDD").agg(
+            F.sum("docs"), F.sum("tokens"), F.sum("raw_bytes"),
+            F.sum("comp_bytes")).first())
+        assert totals == (len(model), *(sum(v[k] for v in model.values())
+                                        for k in (2, 3, 4)))
+        assert pipe.verify_checksums("snapDD") == 0
+    assert len(model) == 120 - 9 - 1 - 9 - 9
+
+
+def test_delete_ignores_null_ids(spark, tokens_df, outdir):
+    """A null ``doc_id`` in ``delete``'s id frame matches no stored row,
+    as under SQL equality: one victim plus a null deletes the victim
+    alone, and a null alone is a no-op; the audit stays green."""
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    pipe.run(tokens_df.limit(40), "snapNL")
+
+    def stored():
+        return {r["doc_id"]: (r["codec"], r["n_tok"], bytes(r["payload"]))
+                for r in pipe.read_encoded("snapNL").collect()}
+
+    model = stored()
+    victim = min(model)
+    res = pipe.delete(_ids_df(spark, [victim, None]), "snapNL")
+    assert (res.docs, res.buckets_done) == (1, 1)
+    del model[victim]
+    assert stored() == model
+    assert pipe.verify_checksums("snapNL") == 0
+    res = pipe.delete(_ids_df(spark, [None]), "snapNL")
+    assert (res.docs, res.buckets_done) == (0, 0)
+    assert stored() == model
+    assert pipe.verify_checksums("snapNL") == 0
 
 
 def _jobs_run_by(spark, fn) -> int:
@@ -1100,22 +1134,26 @@ def _fs_calls_by(pipe, fn) -> dict:
 
 
 def _collect_plans(spark, fn) -> list:
-    """The final executed plan of every ``DataFrame.collect`` that
-    ``fn()`` makes, as a string."""
+    """The final executed plan of every ``DataFrame.collect`` and
+    ``DataFrame.toArrow`` that ``fn()`` makes, as a string."""
     cls = type(spark.range(0))
-    real = cls.collect
+    real = {name: getattr(cls, name) for name in ("collect", "toArrow")}
     plans = []
 
-    def spy(df):
-        rows = real(df)
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return rows
+    def spying(name):
+        def spy(df):
+            rows = real[name](df)
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return rows
+        return spy
 
-    cls.collect = spy
+    for name in real:
+        setattr(cls, name, spying(name))
     try:
         fn()
     finally:
-        cls.collect = real
+        for name, method in real.items():
+            setattr(cls, name, method)
     return plans
 
 
@@ -1128,16 +1166,17 @@ def test_mutation_job_budget(spark, tokens_df, outdir):
       collect of the written files and one of the keys' candidates
       feed the lineage commit, which resolves latest-wins on the
       driver (6 before, with a window, a broadcast and a groupBy);
-    - a 10-id driver delete in at most 2: the id collect and one thin
+    - a 10-id delete in at most 2: the id collect and one thin
       collect of the ids' candidates (4 before);
     - a 10-id fetch in at most 2: the window's shuffle and the result,
       with no broadcast anti-join (3 before);
-    - a DataFrame-path delete in at most 6 (8 before): the marker
-      write keeps the key frame's broadcast, and its commit is the
-      append's;
+    - a delete of 100 009 ids (9 victims, 100 000 ghosts) in at most
+      3: the id collect, the key frame's broadcast and the thin
+      collect (6 before, when more than 100 000 ids took a DataFrame
+      path that wrote its markers through Spark);
     - the compact that folds the deltas in at most 6.
 
-    The commit's and the driver delete's collects plan no Exchange."""
+    The commit's and the 10-id delete's collects plan no Exchange."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
                                sample_fraction=None)
     sub = tokens_df.limit(120)
@@ -1152,10 +1191,9 @@ def test_mutation_job_budget(spark, tokens_df, outdir):
     plans = []
     assert _jobs_run_by(spark, lambda: plans.extend(_collect_plans(
         spark, lambda: pipe.append(upserts, "snapJB")))) <= 4
-    driver_ids = spark.createDataFrame([(i,) for i in ids[20:30]],
-                                       "doc_id string")
+    few = _ids_df(spark, ids[20:30])
     assert _jobs_run_by(spark, lambda: plans.extend(_collect_plans(
-        spark, lambda: pipe.delete(driver_ids, "snapJB")))) <= 2
+        spark, lambda: pipe.delete(few, "snapJB")))) <= 2
     assert len(plans) == 4
     assert not [p for p in plans if "Exchange" in p]
 
@@ -1164,14 +1202,12 @@ def test_mutation_job_budget(spark, tokens_df, outdir):
     assert "BroadcastExchange" not in (
         fetched._jdf.queryExecution().executedPlan().toString())
 
-    pipe.MAX_DRIVER_DELETE_IDS = 0
-    victims = spark.createDataFrame([(i,) for i in ids[5:15]],
-                                    "doc_id string")
-    assert _jobs_run_by(spark, lambda: pipe.delete(victims, "snapJB")) <= 6
+    victims = _ids_df(spark, ids[5:14], 100_000)
+    assert _jobs_run_by(spark, lambda: pipe.delete(victims, "snapJB")) <= 3
     assert _jobs_run_by(spark, lambda: pipe.compact("snapJB")) <= 6
     assert not pipe._delta_buckets("snapJB")
 
-    assert pipe.read_encoded("snapJB").count() == 120 + 5 + 10 - 10 - 10
+    assert pipe.read_encoded("snapJB").count() == 120 + 5 + 10 - 10 - 9
     assert pipe.verify_checksums("snapJB") == 0
 
 
@@ -1180,22 +1216,22 @@ def test_mutation_metadata_budget(spark, tokens_df, outdir):
     ``self.fs`` listdir / exists / read_bytes calls, footer reads
     (``parquet_schema``) and lineage reads, on a 4-bucket store of 120
     documents with a pending 5-doc delta, for a 5-doc append, a 10-id
-    driver delete, a 10-id DataFrame delete, a 10-id fetch, a compact,
-    and a run of a second snapshot in two waves, in that order.  The
-    bounds are the counts once every read supplies the stored schema
-    and every verb reads lineage once; before, they were (listdir,
-    exists, read_bytes, footer, lineage):
+    delete, a delete of 1110 ids (10 victims, 1100 ghosts in every
+    bucket), a 10-id fetch, a compact, and a run of a second snapshot
+    in two waves, in that order.  The bounds are the counts once every
+    read supplies the stored schema and every verb reads lineage once;
+    before, they were (listdir, exists, read_bytes, footer, lineage):
 
-    ================  ==================  ==================
-    verb              before              after (bound)
-    ================  ==================  ==================
-    append            17, 8, 10, 3, 4     10, 5, 4, 0, 1
-    driver delete     12, 9, 13, 2, 4     6, 6, 4, 0, 1
-    dataframe delete  23, 9, 17, 5, 4     12, 6, 5, 0, 1
-    fetch             8, 6, 2, 2, 0       5, 6, 2, 0, 0
-    compact           11, 15, 10, 3, 2    6, 14, 5, 0, 1
-    run, 2 waves      6, 10, 19, 2, 3     2, 8, 6, 0, 1
-    ================  ==================  ==================
+    =================  ==================  ==================
+    verb               before              after (bound)
+    =================  ==================  ==================
+    append             17, 8, 10, 3, 4     10, 5, 4, 0, 1
+    delete             12, 9, 13, 2, 4     6, 6, 4, 0, 1
+    delete, 1110 ids   (new row)           6, 6, 5, 0, 1
+    fetch              8, 6, 2, 2, 0       5, 6, 2, 0, 0
+    compact            11, 15, 10, 3, 2    6, 14, 5, 0, 1
+    run, 2 waves       6, 10, 19, 2, 3     2, 8, 6, 0, 1
+    =================  ==================  ==================
 
     A listing that walks every bucket where the verb needs only the
     affected ones, a footer read, or a second lineage read breaks the
@@ -1207,17 +1243,8 @@ def test_mutation_metadata_budget(spark, tokens_df, outdir):
     pipe.append(_delta_df(spark, 5, prefix="pending"), "snapMB")
     ids = sorted(r["doc_id"] for r in sub.select("doc_id").collect())
     upserts = _delta_df(spark, 5, prefix="more")
-    driver_ids = spark.createDataFrame([(i,) for i in ids[:10]],
-                                       "doc_id string")
-    frame_ids = spark.createDataFrame([(i,) for i in ids[10:20]],
-                                      "doc_id string")
-
-    def frame_delete():
-        pipe.MAX_DRIVER_DELETE_IDS = 0
-        try:
-            pipe.delete(frame_ids, "snapMB")
-        finally:
-            del pipe.MAX_DRIVER_DELETE_IDS
+    few_ids = _ids_df(spark, ids[:10])
+    many_ids = _ids_df(spark, ids[10:20], 1100)
 
     def two_wave_run():
         pipe.wave_buckets = 2
@@ -1228,16 +1255,16 @@ def test_mutation_metadata_budget(spark, tokens_df, outdir):
 
     budget = {  # listdir, exists, read_bytes, footer reads, lineage reads
         "append": (10, 5, 4, 0, 1),
-        "driver delete": (6, 6, 4, 0, 1),
-        "dataframe delete": (12, 6, 5, 0, 1),
+        "delete": (6, 6, 4, 0, 1),
+        "delete, 1110 ids": (6, 6, 5, 0, 1),
         "fetch": (5, 6, 2, 0, 0),
         "compact": (6, 14, 5, 0, 1),
         "run, 2 waves": (2, 8, 6, 0, 1),
     }
     verbs = {
         "append": lambda: pipe.append(upserts, "snapMB"),
-        "driver delete": lambda: pipe.delete(driver_ids, "snapMB"),
-        "dataframe delete": frame_delete,
+        "delete": lambda: pipe.delete(few_ids, "snapMB"),
+        "delete, 1110 ids": lambda: pipe.delete(many_ids, "snapMB"),
         "fetch": lambda: pipe.fetch(ids[20:30], "snapMB"),
         "compact": lambda: pipe.compact("snapMB"),
         "run, 2 waves": two_wave_run,
