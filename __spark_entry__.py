@@ -355,7 +355,7 @@ def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("n_tok").cast("long").alias("tokens")))
 
 
-_SNAP_TAG = "v1"  # bump when the encoded on-disk layout changes
+_SNAP_TAG = "v2"  # bump when the encoded on-disk layout changes
 
 
 def q_gather_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,12 +8,17 @@ North-rule scale machinery:
   long-document tail (``source`` alone would skew; a single mega-doc
   bounds residual skew to its own size since documents are atomic).
 - **Wave commits + lineage**: buckets are processed in waves; each wave
-  appends its encoded output (parquet, partitioned by ``bucket``) and
-  then appends one lineage row per bucket to ``<out>/lineage`` with
+  writes its encoded output into fresh ``base_seq`` dirs and then
+  appends one lineage row per bucket to ``<out>/lineage`` with
   (snapshot_id, bucket, codec mix, doc/token/byte counts, payload
-  checksum, wall seconds).  The lineage append is the commit point.
-- **Resume**: a rerun anti-joins pending buckets against committed
-  lineage rows for the same snapshot and only processes the remainder.
+  checksum, wall seconds, live files).  The lineage append is the
+  commit point.
+- **One record of live files**: each bucket's latest lineage row names
+  its base and delta dirs (``files``), and every read picks those dirs,
+  so the lineage commit is the only switch from old files to new.  No
+  dir is overwritten; one garbage step deletes the dirs no row names.
+- **Resume**: a rerun skips the buckets with committed lineage rows
+  for the same snapshot and processes only the remainder.
 - **One mutation protocol**: every mutation lands as a delta.
   :meth:`CompressionPipeline.append` upserts O(delta) merge-on-read
   delta files, :meth:`delete` writes O(delta) tombstone markers, and
@@ -95,7 +100,10 @@ def _float_bits_view(df: DataFrame, itemsize: int) -> DataFrame:
 
 
 # one row per (snapshot, bucket) commit; the arrow schema of every
-# lineage parquet file and of the lineage() / latest_lineage() views
+# lineage parquet file and of the lineage() / latest_lineage() views.
+# ``files`` names the bucket's live dirs: its base dir (``base_seq``,
+# null when the bucket stores no base) and its delta dirs
+# (``delta_seqs``, ascending) — see CompressionPipeline._files.
 LINEAGE_SCHEMA = pa.schema([
     ("snapshot_id", pa.string()), ("bucket", pa.int32()),
     ("status", pa.string()), ("docs", pa.int64()),
@@ -103,6 +111,8 @@ LINEAGE_SCHEMA = pa.schema([
     ("comp_bytes", pa.int64()), ("codec_mix", pa.string()),
     ("payload_xxh", pa.int64()), ("wall_sec", pa.float64()),
     ("committed_at", pa.float64()), ("commit_seq", pa.int64()),
+    ("files", pa.struct([("base_seq", pa.int64()),
+                         ("delta_seqs", pa.list_(pa.int64()))])),
 ])
 
 # Arrow schema of every stored row file (base, delta, tombstone
@@ -131,13 +141,18 @@ _TOMBSTONE_MARKER = {
     "codec": TOMBSTONE_CODEC, "row_xxh": 0,
 }
 
-# Partition columns (name, DDL type) of the base and delta trees.
-BASE_PARTS = (("snapshot_id", "string"), ("bucket", "int"))
-DELTA_PARTS = BASE_PARTS + (("delta_seq", "long"),)
+# Partition columns (name, DDL type) of the base and delta trees,
+#   encoded/snapshot_id=S/bucket=B/base_seq=N/part-*.parquet
+#   delta/snapshot_id=S/bucket=B/delta_seq=N/part-*.parquet
+# where N is the seq of the commit that wrote the dir: no dir is ever
+# written twice.
+BASE_PARTS = (("snapshot_id", "string"), ("bucket", "int"),
+              ("base_seq", "long"))
+DELTA_PARTS = BASE_PARTS[:2] + (("delta_seq", "long"),)
 
-# Column order of every resolved view: the stored row, then the base
-# partition columns, which is what a read of the base alone yields.
-_VIEW = tuple(STORED_SCHEMA.names) + tuple(n for n, _ in BASE_PARTS)
+# Column order of every resolved view: the stored row, then snapshot_id
+# and bucket.
+_VIEW = tuple(STORED_SCHEMA.names) + ("snapshot_id", "bucket")
 
 # Up to this many keys, a key-restricted read filters on a literal IN
 # pushed into the parquet scan; above it, on an Arrow-built key frame.
@@ -157,6 +172,17 @@ _IN_KEYS = 256
 
 # (count, sum) columns of the thin stats a commit folds into lineage
 _COUNTS = ("docs", "tokens", "raw_bytes", "comp_bytes")
+
+
+@functools.lru_cache(maxsize=None)
+def _row_schema(partition_fields: tuple):
+    """``STORED_SCHEMA`` as a Spark schema, then each ``(name, DDL
+    type)`` of ``partition_fields``.  Built once per field tuple: each
+    DDL parse is a JVM round trip, and every read plan needs one."""
+    sch = from_arrow_schema(STORED_SCHEMA)
+    for name, t in partition_fields:
+        sch = sch.add(StructField(name, _parse_datatype_string(t)))
+    return sch
 
 
 @dataclass
@@ -222,6 +248,21 @@ class CompressionPipeline:
                  .option("parquet.bloom.filter.expected.ndv#doc_id",
                          str(int(self.bloom_ndv))))
         return w
+
+    def _write_base(self, rows: DataFrame, snapshot_id: str,
+                    seq: int) -> None:
+        """Write ``rows`` (stored columns and ``bucket``) through
+        :meth:`_base_writer` into fresh ``base_seq=seq`` dirs, in append
+        mode: no base dir is ever overwritten.  The sort is the write's
+        partition columns plus doc_id, the order the write requires, so
+        Spark adds no sort of its own and each file keeps doc_id-sorted
+        row groups for fetch()'s pushed IN filter to skip by min/max."""
+        (self._base_writer(rows.select(*STORED_SCHEMA.names, "bucket")
+                           .withColumn("base_seq", F.lit(seq).cast("long"))
+                           .sortWithinPartitions("bucket", "base_seq",
+                                                 "doc_id"))
+         .mode("append").partitionBy("bucket", "base_seq")
+         .parquet(_join(self.data_dir, f"snapshot_id={snapshot_id}")))
 
     # -- lineage -----------------------------------------------------------
 
@@ -340,6 +381,28 @@ class CompressionPipeline:
         return {r["bucket"]: r for r in self._committed(snapshot_id, recs)
                 if keep is None or r["bucket"] in keep}
 
+    def _files(self, snapshot_id: str, recs=None) -> dict[int, dict]:
+        """THE record of live files: ``{bucket: files}`` of the
+        snapshot's latest lineage rows (of ``recs`` when given), naming
+        the bucket's base dir (``base_seq``, None for no base) and delta
+        dirs (``delta_seqs``): the dirs every read picks."""
+        return {b: r["files"] for b, r in
+                self._latest_lineage_map(snapshot_id, recs=recs).items()}
+
+    def _parts(self, root: str) -> tuple:
+        """The partition columns of the tree at ``root``, its seq last."""
+        return BASE_PARTS if root == self.data_dir else DELTA_PARTS
+
+    def _named(self, files: dict, root: str) -> dict[int, list[int]]:
+        """``{bucket: seqs}`` of the dirs that ``files`` (see
+        :meth:`_files`) names in the tree at ``root`` (``base_seq`` or
+        ``delta_seq`` dirs); buckets naming none are left out."""
+        if root == self.data_dir:
+            return {b: [f["base_seq"]] for b, f in files.items()
+                    if f["base_seq"] is not None}
+        return {b: list(f["delta_seqs"]) for b, f in files.items()
+                if f["delta_seqs"]}
+
     # -- params ------------------------------------------------------------
 
     def load_or_learn_params(self, toks: DataFrame,
@@ -405,16 +468,6 @@ class CompressionPipeline:
          .write.mode("overwrite").partitionBy("bucket").parquet(staging))
         return staging
 
-    def _bucket_dirs(self, root: str, snapshot_id: str,
-                     buckets) -> dict[int, str]:
-        """``{bucket: dir}`` of the ``root/snapshot_id=S/bucket=B`` dirs
-        of ``buckets`` that exist (an empty bucket writes nothing) —
-        existence probes through the Hadoop FileSystem, so the same
-        code lists hdfs:/s3a: output."""
-        dirs = {b: _join(root, f"snapshot_id={snapshot_id}", f"bucket={b}")
-                for b in buckets}
-        return {b: p for b, p in dirs.items() if self.fs.exists(p)}
-
     def _load_params(self, snapshot_id: str) -> IbpParams:
         """The snapshot's PERSISTED codec params — read-side twin of
         load_or_learn_params for operations (fetch) that must never
@@ -452,101 +505,55 @@ class CompressionPipeline:
     # every delta commit) instead reads the keys' CANDIDATES, base rows
     # as delta_seq 0 unioned with delta rows, and resolves latest-wins
     # over them: in one window (fetch) or on the driver over a thin
-    # collect (delete, the commit), so no anti-join is planned.
+    # collect (delete, the commit), so no anti-join is planned.  Every
+    # read takes its dirs from the file set of the verb's one lineage
+    # read (:meth:`_files`), never from a listing.
 
     def _snapshot_max_seq(self, snapshot_id: str, recs=None) -> int:
         """Max commit_seq over THIS snapshot's committed lineage rows
-        (of ``recs`` when given).  Every committed delta dir satisfies
-        delta_seq <= this value (the delta commit appends lineage rows
-        carrying the delta's own seq), so any delta dir above it is an
-        orphan from a crashed append."""
+        (of ``recs`` when given): a read ``as_of_seq`` this value sees
+        the snapshot's current state."""
         recs = self._committed(snapshot_id, recs)
         return recs[-1]["commit_seq"] if recs else 0
 
-    def _delta_tree(self, snapshot_id: str,
-                    buckets=None) -> dict[int, list[int]]:
-        """THE delta-tree listing: ``{bucket: [delta_seq, ...]}`` (seqs
-        ascending) of the snapshot's
-        ``delta/snapshot_id=S/bucket=*/delta_seq=*`` dirs.  ``buckets``
-        limits it to those bucket dirs: the snapshot dir is listed once,
-        then only the given bucket dirs that exist.  A childless bucket
-        dir (an orphan-purge leftover) maps to ``[]``."""
-        snap = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
-        want = None if buckets is None else {int(b) for b in buckets}
-        tree = {}
-        for name in self.fs.listdir(snap):
-            if not name.startswith("bucket="):
-                continue
-            b = int(name.split("=", 1)[1])
-            if want is None or b in want:
-                tree[b] = sorted(
-                    int(c.split("=", 1)[1])
-                    for c in self.fs.listdir(_join(snap, name))
-                    if c.startswith("delta_seq="))
-        return tree
+    def _gc(self, snapshot_id: str, files: dict, root: str,
+            dirs=None) -> None:
+        """THE garbage step: delete the snapshot's dirs in the tree at
+        ``root`` that ``files`` (see :meth:`_files`) does not name:
+        those of ``dirs`` (``{bucket: seqs}``, None seqs meaning the
+        whole bucket dir), or of a listing of the tree without it.  A
+        bucket dir in which ``files`` names nothing goes whole.
 
-    def _purge_orphan_deltas(self, snapshot_id: str,
-                             recs: list[dict]) -> dict[int, list[int]]:
-        """Delete every delta_seq dir STRICTLY greater than the
-        snapshot's lineage max commit_seq in ``recs``, the calling
-        verb's one lineage read.  A crashed append leaves its
-        delta files with no lineage commit; if other snapshots advance
-        the GLOBAL sequence before the retry, the retry's fresh seq no
-        longer matches the orphan's, so matching only the next seq
-        (the old scheme) left the orphan behind as fake committed data
-        — the incremental stats then drift permanently.  The
-        per-snapshot max is crash-ordering-proof.  Bucket dirs (and
-        the snapshot dir) left without deltas go too.  Returns the
-        delta tree that remains (see :meth:`_delta_tree`), which the
-        calling mutation reads instead of listing again."""
-        tree = self._delta_tree(snapshot_id)
-        if not tree:
-            return tree
-        max_seq = self._snapshot_max_seq(snapshot_id, recs)
-        snap = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
-        for b, seqs in list(tree.items()):
+        A verb runs it over the tree it writes BEFORE writing, so a
+        retry never writes next to a crashed attempt's files at the
+        same seq; :meth:`compact` runs it after its commit on the dirs
+        the commit superseded.  No read sees garbage in between."""
+        named = self._named(files, root)
+        col = self._parts(root)[-1][0]
+        snap = _join(root, f"snapshot_id={snapshot_id}")
+        if dirs is None:
+            dirs = {int(n.split("=", 1)[1]): [
+                int(c.split("=", 1)[1])
+                for c in self.fs.listdir(_join(snap, n))
+                if c.startswith(col + "=")]
+                for n in self.fs.listdir(snap) if n.startswith("bucket=")}
+        for b, seqs in sorted(dirs.items()):
             bdir = _join(snap, f"bucket={b}")
-            for s in seqs:
-                if s > max_seq:
-                    self.fs.delete(_join(bdir, f"delta_seq={s}"),
-                                   recursive=True)
-            tree[b] = [s for s in seqs if s <= max_seq]
-            if not tree[b]:
-                self.fs.delete(bdir, recursive=True)
-                del tree[b]
-        if not tree:
-            self.fs.delete(snap, recursive=True)
-        return tree
+            if b not in named:
+                if seqs is None or seqs:
+                    self.fs.delete(bdir, recursive=True)
+                continue
+            for s in seqs or ():
+                if s not in named[b]:
+                    self.fs.delete(_join(bdir, f"{col}={s}"), recursive=True)
 
     def _delta_buckets(self, snapshot_id: str, buckets=None,
-                       tree=None) -> list[int]:
-        """Buckets of a snapshot (of ``buckets``, if given) that
-        currently carry delta files, read from ``tree`` or a fresh
-        :meth:`_delta_tree` listing — childless bucket dirs don't
-        count: they hold no delta to read."""
-        if tree is None:
-            tree = self._delta_tree(snapshot_id, buckets)
-        want = None if buckets is None else set(buckets)
-        return sorted(b for b, seqs in tree.items()
-                      if seqs and (want is None or b in want))
-
-    def _maybe_compact_deltas(self, snapshot_id: str, tree) -> list[int]:
-        """Fold any bucket of ``tree`` (``{bucket: delta seqs}`` of the
-        buckets a mutation just committed) whose delta_seq count has
-        reached ``delta_compact_threshold`` back into the base.  Called
-        by the delta append and tombstone-delete paths after their
-        lineage commit, so N small mutations cost O(delta) each plus
-        ONE amortized O(bucket) rewrite every threshold-th mutation —
-        the read path then resolves at most ``threshold`` delta files
-        per bucket, a bound that holds at any corpus size.  Returns the
-        buckets that were compacted.  The fold is a :meth:`compact`, so
-        it reads lineage again, the mutation's own commit included."""
-        thr = self.delta_compact_threshold
-        pressured = [b for b, seqs in sorted(tree.items())
-                     if thr and len(seqs) >= thr]
-        if pressured:
-            self.compact(snapshot_id, buckets=pressured)
-        return pressured
+                       recs=None) -> list[int]:
+        """Buckets of a snapshot (of ``buckets``, if given) whose file
+        set names delta dirs, from ``recs`` (read when not given)."""
+        return sorted(b for b in self._named(self._files(snapshot_id, recs),
+                                             self.delta_dir)
+                      if buckets is None or b in buckets)
 
     def _read_dirs(self, root: str, paths: list[str],
                    partition_fields) -> DataFrame:
@@ -556,10 +563,7 @@ class CompressionPipeline:
         ``partition_fields``, the column order of Spark's discovery.
         No dir is walked and no footer opened (:meth:`verify_checksums`
         checks the footers).  Zero paths read as zero rows of it."""
-        sch = from_arrow_schema(STORED_SCHEMA)
-        for name, t in partition_fields:
-            sch = sch.add(StructField(name, _parse_datatype_string(t)))
-        reader = self.spark.read.schema(sch)
+        reader = self.spark.read.schema(_row_schema(partition_fields))
         if paths:  # basePath must exist; zero paths need none
             reader = reader.option("basePath", root)
         return reader.parquet(*paths)
@@ -617,55 +621,76 @@ class CompressionPipeline:
             F.col("n_tok").alias("tokens"), "raw_bytes", "comp_bytes",
             F.col("row_xxh").alias("xxh")).collect()
 
-    def _sides(self, snapshot_id: str, buckets=None,
-               as_of_seq: int | None = None, tree=None):
-        """``(base, deltas)``: the snapshot's base rows and delta rows,
-        read with the stored schema (:meth:`_read_dirs`).  ``buckets``
-        prunes both listings to those bucket dirs; without it the base
-        is ONE path, the ``snapshot_id=S`` dir, not one path per
-        bucket.  ``deltas`` is None when no delta dir is listed.
-        ``tree``, the snapshot's :meth:`_delta_tree` when the caller has
-        just listed it, spares the delta listing.
+    def _read_live(self, root: str, snapshot_id: str, named: dict,
+                   whole: bool) -> DataFrame:
+        """The rows of the ``{bucket: seqs}`` dirs ``named`` in the tree
+        at ``root`` (:meth:`_named`), read by :meth:`_read_dirs` from
+        ONE path, the snapshot dir, when ``whole``, else from the named
+        buckets' dirs.  A partition filter on (bucket, seq) picks the
+        named dirs, so Spark prunes every other dir (superseded or
+        garbage) before it reads a byte; buckets sharing one seq list
+        share one term."""
+        parts = self._parts(root)
+        snap = _join(root, f"snapshot_id={snapshot_id}")
+        paths = ([] if not named else [snap] if whole else
+                 [_join(snap, f"bucket={b}") for b in sorted(named)])
+        df = self._read_dirs(root, paths, parts)
+        if not named:
+            return df
+        by_seqs: dict[tuple, list] = {}
+        for b, seqs in sorted(named.items()):
+            by_seqs.setdefault(tuple(seqs), []).append(str(b))
+        # one SQL string: each Column call would be a JVM round trip
+        return df.filter(" OR ".join(
+            f"(bucket IN ({', '.join(bs)}) AND {parts[-1][0]} IN "
+            f"({', '.join(map(str, seqs))}))" for seqs, bs in by_seqs.items()))
 
-        ``as_of_seq`` is TIME TRAVEL: only delta files with
-        ``delta_seq <= as_of_seq`` participate (delta_seq is a
-        partition directory, so the filter prunes at listing level) —
-        an upsert or tombstone committed after that sequence is
-        invisible and the superseded/deleted row resurfaces.  History
-        reaches back to the last :meth:`compact` of the affected
-        buckets: compaction folds deltas into the base and deletes the
-        delta files, garbage-collecting everything older."""
-        if buckets is None:
-            snap = _join(self.data_dir, f"snapshot_id={snapshot_id}")
-            base_paths = [snap] if any(c.startswith("bucket=")
-                                       for c in self.fs.listdir(snap)) else []
-        else:
-            base_paths = list(self._bucket_dirs(
-                self.data_dir, snapshot_id, buckets).values())
-        base = self._read_dirs(self.data_dir, base_paths, BASE_PARTS)
-        delta_paths = [
-            _join(self.delta_dir, f"snapshot_id={snapshot_id}", f"bucket={b}")
-            for b in self._delta_buckets(snapshot_id, buckets, tree)]
-        if not delta_paths:
+    def _sides(self, snapshot_id: str, buckets=None,
+               as_of_seq: int | None = None, recs=None):
+        """``(base, deltas)``: the snapshot's live base rows and delta
+        rows (:meth:`_read_live`), the dirs that the file set of
+        ``recs`` (read when not given) names.  ``buckets`` limits both
+        to those bucket dirs; without it the base is ONE path, the
+        ``snapshot_id=S`` dir, not one path per bucket.  ``deltas`` is
+        None when no delta dir is named.
+
+        ``as_of_seq`` is TIME TRAVEL: only delta rows with ``delta_seq
+        <= as_of_seq`` participate (a partition column, so the filter
+        prunes dirs) — an upsert or tombstone committed after that
+        sequence is invisible and the superseded/deleted row
+        resurfaces.  History reaches back to the last :meth:`compact`
+        of the affected buckets: compaction folds deltas into the base
+        and deletes the delta dirs, garbage-collecting everything
+        older."""
+        files = self._files(snapshot_id, recs)
+        if buckets is not None:
+            files = {b: files[b] for b in buckets if b in files}
+        base = self._read_live(self.data_dir, snapshot_id,
+                               self._named(files, self.data_dir),
+                               buckets is None).drop("base_seq")
+        named = self._named(files, self.delta_dir)
+        if not named:
             return base, None
-        deltas = self._read_dirs(self.delta_dir, delta_paths, DELTA_PARTS)
+        deltas = self._read_live(self.delta_dir, snapshot_id, named, False)
         if as_of_seq is not None:
             deltas = deltas.filter(F.col("delta_seq") <= int(as_of_seq))
         return base, deltas
 
-    def _resolved(self, snapshot_id: str,
-                  as_of_seq: int | None = None) -> DataFrame:
+    def _resolved(self, snapshot_id: str, as_of_seq: int | None = None,
+                  recs=None) -> DataFrame:
         """The snapshot's CURRENT logical rows, the full read: base
         minus doc_ids superseded by deltas, plus the latest delta rows
         (:meth:`_latest_delta`, so a document whose latest delta is a
         tombstone is gone).  It never shuffles the big side (base):
         superseded rows fall to a broadcast anti-join on the small
-        delta key set.  ``as_of_seq`` time-travels it (see
-        :meth:`_sides`).  Every shape ends in ``_VIEW`` column order,
-        and a snapshot with nothing stored reads as zero rows of it.
+        delta key set.  ``as_of_seq`` time-travels it and ``recs`` is
+        the lineage read (see :meth:`_sides`).  Every shape ends in
+        ``_VIEW`` column order, and a snapshot with nothing stored reads
+        as zero rows of it.
 
         Key-restricted verbs read :meth:`_candidates` instead."""
-        base, deltas = self._sides(snapshot_id, as_of_seq=as_of_seq)
+        base, deltas = self._sides(snapshot_id, as_of_seq=as_of_seq,
+                                   recs=recs)
         if deltas is None:
             return base
         # every delta row's doc_id shadows its base row, whichever
@@ -676,10 +701,10 @@ class CompressionPipeline:
                 .select(*_VIEW))
 
     def _candidates(self, snapshot_id: str, keys, buckets,
-                    as_of_seq: int | None = None, tree=None) -> DataFrame:
+                    as_of_seq: int | None = None, recs=None) -> DataFrame:
         """The key-restricted view, UNRESOLVED: the base rows of
         ``buckets`` (every bucket when None) as ``delta_seq`` 0, unioned
-        with their delta rows (``as_of_seq`` and ``tree`` pass to
+        with their delta rows (``as_of_seq`` and ``recs`` pass to
         :meth:`_sides`), each side filtered by ``keys`` and never joined
         against the other.  ``keys``, a list of stored (FSST-encoded)
         doc_ids, restricts both sides:
@@ -697,7 +722,7 @@ class CompressionPipeline:
         :meth:`_latest_rows` over :meth:`_thin`.  A driver resolve of a
         key list collects at most keys × (1 + the keys' delta depth)
         rows, and ``delta_compact_threshold`` bounds the depth."""
-        base, deltas = self._sides(snapshot_id, buckets, as_of_seq, tree)
+        base, deltas = self._sides(snapshot_id, buckets, as_of_seq, recs)
         if keys is not None and len(keys) > _IN_KEYS:
             frame = F.broadcast(self.spark.createDataFrame(pa.table({
                 "snapshot_id": [snapshot_id] * len(keys),
@@ -730,31 +755,36 @@ class CompressionPipeline:
           ``repartition(num_buckets, "bucket")`` — the shuffle staging
           runs, with the same task count — and encoded in those
           ``num_buckets`` tasks straight into the store write.  Nothing
-          is staged; a retry re-encodes from ``toks`` and the dynamic
-          partition overwrite replaces any partial output.
+          is staged; a retry re-encodes from ``toks``.
         - Multi-wave: the salted input is staged once, and each wave
           reads only its own bucket dirs of the staged copy.
 
-        Lineage is read once; wave ``i`` commits at that read's next
-        seq plus ``i``."""
+        Lineage is read once; wave ``i`` writes fresh ``base_seq`` dirs
+        (:meth:`_write_base`) and commits them at that read's next seq
+        plus ``i``.  Before the first wave, :meth:`_gc` drops the dirs
+        of the buckets it is about to write, the files of a crashed
+        attempt: no committed row names them."""
         nb = self.num_buckets
         params = self.load_or_learn_params(toks, snapshot_id)
         fsst_table = self.load_or_learn_fsst(toks, snapshot_id)
         staging = self.stage_input(toks, snapshot_id)
         src = (self._salted(toks) if staging is None
                else self.spark.read.parquet(staging))
-        src = src.withColumn("snapshot_id", F.lit(snapshot_id))
 
         recs = self._lineage_records()
-        done = {r["bucket"] for r in self._committed(snapshot_id, recs)}
+        files = self._files(snapshot_id, recs)
         seq = self._next_commit_seq(recs)
-        pending = [b for b in range(nb) if b not in done]
+        pending = [b for b in range(nb) if b not in files]
         committed = []
 
         waves = [pending[i:i + self.wave_buckets]
                  for i in range(0, len(pending), self.wave_buckets)]
         if max_waves is not None:
             waves = waves[:max_waves]
+        # no file of a pending bucket is committed: a dir of one is a
+        # crashed attempt's garbage, dropped here without a listing
+        self._gc(snapshot_id, files, self.data_dir,
+                 dict.fromkeys(b for wave in waves for b in wave))
         buckets_run = sum(len(w) for w in waves)
         for wi, wave in enumerate(waves):
             t0 = time.perf_counter()
@@ -763,26 +793,13 @@ class CompressionPipeline:
                 F.expr(f"bucket IN ({', '.join(map(str, wave))})"))
             if staging is None:
                 part = part.repartition(nb, "bucket")
-            enc = self._stored_rows(part, params, fsst_table)
-            # doc_id-clustered row groups: a local sort (no shuffle)
-            # gives each parquet row group a tight doc_id min/max, so
-            # fetch()'s pushed IN filter can SKIP row groups, not just
-            # bucket dirs
-            enc = enc.sortWithinPartitions("bucket", "doc_id")
-            # Idempotent wave commit: dynamic partition overwrite replaces
-            # exactly the (snapshot_id, bucket) dirs present in this wave's
-            # output, so a wave retried after a crash between the data
-            # write and the lineage append REPLACES its partitions instead
-            # of appending duplicate documents.
-            (self._base_writer(enc).mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("snapshot_id", "bucket")
-             .parquet(self.data_dir))
+            self._write_base(self._stored_rows(part, params, fsst_table),
+                             snapshot_id, seq + wi)
             committed += self._commit_wave(
                 snapshot_id, wave, time.perf_counter() - t0, seq + wi)
 
         self._maybe_compact_lineage()
-        return PipelineResult(snapshot_id, buckets_run, len(done), *(
+        return PipelineResult(snapshot_id, buckets_run, len(files), *(
             sum(int(r[k]) for r in committed) for k in _COUNTS))
 
     def _stored_rows(self, toks: DataFrame, params: IbpParams,
@@ -796,7 +813,7 @@ class CompressionPipeline:
         enc = stages.apply(
             toks,
             selector.encode_auto_stage(params, allowed=self.allowed,
-                                       passthrough=("bucket", "snapshot_id")),
+                                       passthrough=("bucket",)),
             fstr.encode_stage(fsst_table, ("doc_id", "source")))
         return enc.withColumn("row_xxh", F.xxhash64("payload"))
 
@@ -822,23 +839,20 @@ class CompressionPipeline:
 
     def _commit_wave(self, snapshot_id: str, wave, wall: float,
                      seq: int) -> list:
-        """Wave commit point of run() and compact(), at ``seq``: read
-        back ONLY the wave's just-written partition directories through
-        :meth:`_read_dirs` (a filter over data_dir would re-list every
-        snapshot/bucket ever written, a listing that grows with
-        pipeline history), take their :meth:`_thin_stats`, and commit
-        them through the one fold, :meth:`_commit_delta_wave`, onto an
-        EMPTY base: the buckets were rewritten, so no old stats carry
-        over, and an empty bucket commits a zero row so resume skips
-        it.  ``row_xxh`` is ``xxhash64(payload)`` by construction
+        """Wave commit point of run() and compact(), at ``seq``: the
+        :meth:`_thin_stats` of the wave's ``base_seq=seq`` dirs just
+        written (:meth:`_read_live` of the snapshot dir, which the write
+        created, so no dir is probed), committed through the one fold,
+        :meth:`_commit_delta_wave`, onto an EMPTY base: the buckets were
+        rewritten, so no old stats carry over, and an empty bucket
+        commits a zero row naming no base, so resume skips it.
+        ``row_xxh`` is ``xxhash64(payload)`` by construction
         (:meth:`_stored_rows`), so the payload stays unread;
         :meth:`verify_checksums` remains the deep check that rehashes
-        it.  Returns the per-bucket stat dicts."""
-        paths = list(self._bucket_dirs(self.data_dir, snapshot_id,
-                                       wave).values())
-        stats = (self._thin_stats(self._read_dirs(
-            self.data_dir, paths, BASE_PARTS), "bucket", "codec")
-            if paths else [])
+        it.  Returns the fold's per-bucket dicts."""
+        stats = self._thin_stats(self._read_live(
+            self.data_dir, snapshot_id, dict.fromkeys(wave, [seq]), True),
+            "bucket", "codec")
         return self._commit_delta_wave(snapshot_id, wave, [], stats, wall,
                                        seq, rebase=True)
 
@@ -878,9 +892,10 @@ class CompressionPipeline:
         have; re-running the same delta converges to identical resolved
         rows and checksums.
 
-        The delta is WRITTEN FIRST: dedupe it on doc_id, purge orphan
-        deltas, take the commit ``seq``, encode and write it in one
-        Python eval.  :meth:`_commit_written_delta` then derives the
+        The delta is WRITTEN FIRST: dedupe it on doc_id, drop delta
+        garbage (:meth:`_gc`), take the commit ``seq``, encode and
+        write it into fresh ``delta_seq=seq`` dirs in one Python eval.
+        :meth:`_commit_written_delta` then derives the
         affected buckets and the added and replaced stats from the
         written files in two thin collects.  No existing row is re-read
         in bulk or rewritten: the lineage commit supersedes each
@@ -888,15 +903,15 @@ class CompressionPipeline:
         ``new_xxh = old_xxh ^ xor(replaced row hashes) ^ xor(added row
         hashes)`` — from thin columns (doc_id, codec, counts, row_xxh),
         so a 20-doc upsert stays out of the O(bucket) cost class.  A
-        crash between the write and the lineage commit leaves a delta
-        above the snapshot's lineage max, which the next mutation's
-        orphan purge removes.
+        crash between the write and the lineage commit leaves delta
+        dirs that no file set names: no read sees them, and the retry's
+        garbage step deletes them before it writes at the same seq.
 
         Delta pressure is self-bounding: once an affected bucket holds
         ``delta_compact_threshold`` delta_seq dirs, this call folds it
-        into the base before returning (see
-        :meth:`_maybe_compact_deltas`).  A bulk delta comparable to the
-        bucket size is best followed by :meth:`compact`."""
+        into the base before returning (see :meth:`_finish_delta`).  A
+        bulk delta comparable to the bucket size is best followed by
+        :meth:`compact`."""
         # Dedupe the delta ITSELF on doc_id: latest-wins resolution
         # only orders rows across delta_seq dirs, so a doc_id appearing
         # twice within one delta (two inbox files carrying the same
@@ -918,76 +933,72 @@ class CompressionPipeline:
         recs = self._mutation_lineage(snapshot_id, "append")
         params = self.load_or_learn_params(toks_delta, snapshot_id)
         fsst_table = self._fsst_table(snapshot_id)
-        salted = (self._salted(toks_delta)
-                  .withColumn("snapshot_id", F.lit(snapshot_id)))
-        # Crash-retry hygiene: an attempt that died between the delta
-        # write and the lineage commit left orphan delta dirs whose seq
-        # never made it into lineage.  They must go before this write,
-        # or the retry's commit would count them as committed rows.
-        # The purge keys on the SNAPSHOT's lineage max (every committed
-        # delta_seq <= it), so it catches orphans even when other
-        # snapshots advanced the global sequence since the crash.
-        self._purge_orphan_deltas(snapshot_id, recs)
+        self._gc(snapshot_id, self._files(snapshot_id, recs), self.delta_dir)
         t0 = time.perf_counter()
         seq = self._next_commit_seq(recs)
-        (self._stored_rows(salted, params, fsst_table)
+        (self._stored_rows(self._salted(toks_delta), params, fsst_table)
          .withColumn("delta_seq", F.lit(seq).cast("long"))
-         .write.mode("append")
-         .partitionBy("snapshot_id", "bucket", "delta_seq")
-         .parquet(self.delta_dir))
+         .write.mode("append").partitionBy("bucket", "delta_seq")
+         .parquet(_join(self.delta_dir, f"snapshot_id={snapshot_id}")))
         return self._commit_written_delta(snapshot_id, seq, t0, recs)
 
     def _commit_written_delta(self, snapshot_id: str, seq: int, t0: float,
                               recs: list[dict]) -> PipelineResult:
         """Commit the upsert delta just written at ``delta_seq=seq``,
-        with every input derived from what landed.  The affected
-        buckets are those whose :meth:`_delta_tree` holds ``seq``.  One
-        :meth:`_thin` collect of the written files gives ``added`` and
-        the keys; a second one, of the keys' :meth:`_candidates` in the
-        pre-delta view (``as_of_seq = seq - 1``), resolved on the driver
+        with every input derived from what landed.  One :meth:`_thin`
+        collect of the ``delta_seq=seq`` dirs (under the snapshot's
+        delta dir, which the write created) gives ``added``, the keys
+        and the affected buckets; a second one, of the keys'
+        :meth:`_candidates` in the file set of ``recs``, the verb's
+        pre-write lineage read, resolved on the driver
         (:meth:`_latest_rows`), gives ``replaced``.  Neither plans a
-        window, broadcast or exchange.  The fold
-        (:meth:`_commit_delta_wave`) commits them onto the latest rows
-        of ``recs``, the verb's lineage read.  The written doc_ids are
+        window, broadcast or exchange.  The written doc_ids are
         FSST-encoded with the snapshot's table already, and the encoding
         is deterministic, so byte equality IS id equality and no key
         encoding is needed.
 
         Both collects are O(delta): the written rows, and at most
         their keys × (1 + delta depth) candidates."""
-        tree = self._delta_tree(snapshot_id)
-        affected = sorted(b for b, seqs in tree.items() if seq in seqs)
-        if not affected:  # empty delta: a no-op
+        written = self._thin(self._read_live(
+            self.delta_dir, snapshot_id,
+            dict.fromkeys(range(self.num_buckets), [seq]), True))
+        if not written:  # empty delta: a no-op
             return PipelineResult(snapshot_id, 0, self.num_buckets,
                                   0, 0, 0, 0)
-        written = self._thin(self._read_dirs(self.delta_dir, [
-            _join(self.delta_dir, f"snapshot_id={snapshot_id}",
-                  f"bucket={b}", f"delta_seq={seq}") for b in affected],
-            DELTA_PARTS))
         replaced = self._latest_rows(self._thin(self._candidates(
-            snapshot_id, [bytes(r["doc_id"]) for r in written], affected,
-            seq - 1, tree)))
-        return self._finish_delta(
-            snapshot_id, {b: tree[b] for b in affected}, replaced, written,
-            t0, seq, recs)
+            snapshot_id, [bytes(r["doc_id"]) for r in written],
+            sorted({int(r["bucket"]) for r in written}), recs=recs)))
+        return self._finish_delta(snapshot_id, replaced, written, t0, seq,
+                                  recs)
 
-    def _finish_delta(self, snapshot_id: str, tree, repl, added, t0: float,
+    def _finish_delta(self, snapshot_id: str, repl, added, t0: float,
                       seq: int, recs: list[dict],
                       sign: int = 1) -> PipelineResult:
-        """Commit a written delta wave (upsert or tombstones) whose
-        buckets and their delta seqs, ``seq`` included, are ``tree``,
-        onto the latest rows of ``recs``, the verb's lineage read;
-        fold buckets whose delta stack got deep, and report the
-        committed amounts; a delete (``sign=-1``) reports removed
-        amounts as positives."""
-        affected = sorted(tree)
-        rows = self._commit_delta_wave(snapshot_id, affected, repl, added,
+        """Commit a written delta wave (upsert or tombstones) at ``seq``
+        onto the latest rows of ``recs``, the verb's lineage read, in
+        the buckets of ``repl`` and ``added``, and report the committed
+        amounts; a delete (``sign=-1``) reports removed amounts as
+        positives.
+
+        Then fold every committed bucket whose file set now names
+        ``delta_compact_threshold`` delta dirs back into the base
+        (:meth:`compact`, which reads lineage again): N small mutations
+        cost O(delta) each plus ONE amortized O(bucket) rewrite every
+        threshold-th mutation, and a read resolves at most ``threshold``
+        delta dirs per bucket, at any corpus size."""
+        wave = sorted({int(r["bucket"]) for rows in (repl, added)
+                       for r in rows})
+        rows = self._commit_delta_wave(snapshot_id, wave, repl, added,
                                        time.perf_counter() - t0, seq,
                                        recs=recs)
         totals = [sign * sum(int(r[k]) for r in rows) for k in _COUNTS]
-        self._maybe_compact_deltas(snapshot_id, tree)
-        return PipelineResult(snapshot_id, len(affected),
-                              self.num_buckets - len(affected), *totals)
+        thr = self.delta_compact_threshold
+        pressured = [r["bucket"] for r in rows
+                     if thr and len(r["files"]["delta_seqs"]) >= thr]
+        if pressured:
+            self.compact(snapshot_id, buckets=pressured)
+        return PipelineResult(snapshot_id, len(wave),
+                              self.num_buckets - len(wave), *totals)
 
     def _commit_delta_wave(self, snapshot_id: str, wave, repl, added,
                            wall: float, seq: int, recs=None,
@@ -999,14 +1010,16 @@ class CompressionPipeline:
         lineage read) minus ``repl`` plus
         ``added`` (counts subtract/add, the XOR-fold composes exactly:
         x ^ x cancels a replaced row's hash); a bucket no row names
-        keeps its lineage row.  ``rebase`` folds onto an EMPTY base and
-        commits every bucket of the wave, a zero row for one without
-        stats (see :meth:`_commit_wave`).  ``seq`` is the SAME sequence
-        number the delta files were written under — committing lineage
-        at the delta's own seq is what makes 'committed delta_seq <=
-        snapshot lineage max' a structural invariant (the orphan purge
-        depends on it).  Returns the per-bucket ADDED-minus-REPLACED
-        dicts so the caller's running totals stay meaningful."""
+        keeps its lineage row.  ``seq`` is the SAME sequence number the
+        files were written under, so each row's file set (``files``)
+        names them: a delta commit adds ``seq`` to the bucket's delta
+        dirs.  ``rebase`` folds onto an EMPTY base and commits every
+        bucket of the wave, a zero row for one without stats (see
+        :meth:`_commit_wave`), whose file set is the ``base_seq=seq``
+        dir alone, or nothing for a bucket that wrote no row.  Returns
+        the per-bucket ADDED-minus-REPLACED dicts with the bucket and its
+        committed file set, so the caller's running totals stay
+        meaningful."""
         def zero(**extra):
             return {**dict.fromkeys(_COUNTS, 0), **extra}
 
@@ -1027,7 +1040,12 @@ class CompressionPipeline:
             d = agg.get(b)
             if d is None:  # untouched by this delta
                 continue
-            o = old.get(b) or zero(codec_mix="{}", payload_xxh=0)
+            o = old.get(b) or zero(codec_mix="{}", payload_xxh=0, files={
+                "base_seq": None, "delta_seqs": []})
+            files = ({"base_seq": seq if d["docs"] else None,
+                      "delta_seqs": []} if rebase else
+                     {**o["files"],
+                      "delta_seqs": [*o["files"]["delta_seqs"], seq]})
             mix = json.loads(o["codec_mix"])
             for c, n in d["mix"].items():
                 mix[c] = mix.get(c, 0) + n
@@ -1037,8 +1055,9 @@ class CompressionPipeline:
                 json.dumps({c: n for c, n in mix.items() if n > 0},
                            sort_keys=True),
                 int(o["payload_xxh"]) ^ d["xxh"],
-                wall / max(len(wave), 1), now, seq))
-            out.append({k: d[k] for k in _COUNTS})
+                wall / max(len(wave), 1), now, seq, files))
+            out.append({**{k: d[k] for k in _COUNTS}, "bucket": b,
+                        "files": files})
         if rows:
             self._append_lineage_rows(rows)
         return out
@@ -1076,75 +1095,49 @@ class CompressionPipeline:
     def compact(self, snapshot_id: str, buckets=None) -> PipelineResult:
         """Fold delta files back into the base: rewrite each affected
         bucket from its RESOLVED view (the one-time O(bucket) cost
-        delta appends deferred; one shuffle by bucket, so each bucket
-        is rewritten as one file), drop the bucket's delta dirs, and
-        re-commit lineage from a full read-back — which also resets any
-        accumulated incremental-stat drift to ground truth.  This is
-        the ONLY code that rewrites a base bucket: the resolved rows
-        are staged to their own directory (Spark refuses to overwrite a
-        path it is reading), then dynamic-partition-overwritten into
-        the data dir.  Crash-safe at every step because base ⊕ deltas
-        resolve to the same logical rows before AND after each
-        transition.  Orphan delta dirs from a crashed append are purged
-        first — folding them into the base would promote uncommitted
-        rows to committed state.  Lineage is read once; wave ``i``
-        commits at that read's next seq plus ``i``."""
+        delta appends deferred) into a fresh ``base_seq`` dir, and
+        commit it from a read-back of its thin stats — which also
+        resets any accumulated incremental-stat drift to ground truth.
+        This is the ONLY code that rewrites a base bucket.  One shuffle
+        by bucket resolves each wave, so each bucket is written once,
+        as one file, in the same job that rehashes ``row_xxh`` (a
+        resolved row's hash is read back from a file and nullable; the
+        hash's non-null type keeps the base at ``STORED_SCHEMA``).
+
+        The wave's lineage commit is the switch: its file sets name the
+        new base dir (none for a fully tombstoned bucket) and no delta
+        dir; only then do the superseded dirs go (:meth:`_gc`).  A crash
+        before the commit leaves the old file set live, one after it the
+        new one, so no window loses a row.  Lineage is read once; wave
+        ``i`` commits at that read's next seq plus ``i``."""
         recs = self._lineage_records()
-        tree = self._purge_orphan_deltas(snapshot_id, recs)
-        have = self._delta_buckets(snapshot_id, buckets, tree)
+        files = self._files(snapshot_id, recs)
+        have = self._delta_buckets(snapshot_id, buckets, recs)
         nb = self.num_buckets
         if not have:
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
+        self._gc(snapshot_id, files, self.data_dir)
         seq = self._next_commit_seq(recs)
         committed = []
         waves = [have[i:i + self.wave_buckets]
                  for i in range(0, len(have), self.wave_buckets)]
-        stage_root = _join(self.output_dir, "compact_staging", snapshot_id)
-        snap_dir = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
         for wi, wave in enumerate(waves):
             t0 = time.perf_counter()
             # base and delta rows hash on bucket in ONE shuffle and
             # resolve in that same window, so each bucket lands whole in
             # one task and is written as one file, as run() writes it
-            resolved = (self._latest_delta(self._candidates(
-                snapshot_id, None, wave, tree=tree)
+            self._write_base(self._latest_delta(self._candidates(
+                snapshot_id, None, wave, recs=recs)
                 .repartition(nb, "bucket"))
-                .sortWithinPartitions("bucket", "doc_id"))
-            stage = _join(stage_root, f"wave{wi}")
-            (resolved.write.mode("overwrite")
-             .partitionBy("snapshot_id", "bucket").parquet(stage))
-            staged = self._bucket_dirs(stage, snapshot_id, wave)
-            if staged:
-                # row_xxh is rehashed from the payload on the way back:
-                # a file read declares every column nullable, and the
-                # hash's non-null type keeps the base at STORED_SCHEMA
-                (self._base_writer(self._read_dirs(
-                    stage, list(staged.values()), BASE_PARTS)
-                    .withColumn("row_xxh", F.xxhash64("payload")))
-                 .mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("snapshot_id", "bucket")
-                 .parquet(self.data_dir))
-            # a bucket whose every document was tombstoned resolves to
-            # ZERO rows — no staged dir, so dynamic overwrite leaves the
-            # old base files untouched; dropping the delta dirs below
-            # would then resurrect the deleted documents.  Drop the data
-            # dir outright — even when the same wave also carries
-            # partially-emptied buckets.
-            for ddir in self._bucket_dirs(
-                    self.data_dir, snapshot_id,
-                    [b for b in wave if b not in staged]).values():
-                self.fs.delete(ddir, recursive=True)
-            for b in wave:
-                self.fs.delete(_join(snap_dir, f"bucket={b}"), recursive=True)
-                del tree[b]
-            # fully-drained snapshot: drop the now-empty delta dir
-            if not tree:
-                self.fs.delete(snap_dir, recursive=True)
-            committed += self._commit_wave(
+                .withColumn("row_xxh", F.xxhash64("payload")),
+                snapshot_id, seq + wi)
+            done = self._commit_wave(
                 snapshot_id, wave, time.perf_counter() - t0, seq + wi)
-        if self.fs.exists(stage_root):
-            self.fs.delete(stage_root, recursive=True)
+            new = {r["bucket"]: r["files"] for r in done}
+            old = {b: files[b] for b in wave}
+            for root in (self.data_dir, self.delta_dir):
+                self._gc(snapshot_id, new, root, self._named(old, root))
+            committed += done
         return PipelineResult(snapshot_id, len(have), nb - len(have), *(
             sum(int(r[k]) for r in committed) for k in _COUNTS))
 
@@ -1166,8 +1159,11 @@ class CompressionPipeline:
         the driver by :meth:`_latest_rows`.  The markers and the lineage
         rows of the fold (:meth:`_commit_delta_wave`, the victims as
         replaced rows) ride the pyarrow metadata transport, and only
-        the victims' buckets are committed.  Deleting ids that don't
-        exist is a no-op (no marker is written for them) — idempotent.
+        the victims' buckets are committed.  The markers land in fresh
+        ``delta_seq`` dirs, after the garbage step (:meth:`_gc`) has
+        dropped any a crashed attempt left at that seq.  Deleting ids
+        that don't exist is a no-op (no marker is written for them) —
+        idempotent.
         The verb runs 2 Spark jobs, and 3 above ``_IN_KEYS`` ids (the
         key frame's broadcast).
 
@@ -1185,20 +1181,18 @@ class CompressionPipeline:
         col = (ids.select(F.col("doc_id").cast("string"))
                .toArrow().column(0).drop_null())
         id_list = sorted(set(col.to_pylist()))
-        tree = self._purge_orphan_deltas(snapshot_id, recs)
         t0 = time.perf_counter()
         victims = self._latest_rows(self._thin(self._locate(
-            snapshot_id, id_list, fsst_table, tree=tree)[0]))
+            snapshot_id, id_list, fsst_table, recs=recs)[0]))
         if not victims:
             # nothing matched: pure ghost delete, a no-op
             return PipelineResult(snapshot_id, 0, self.num_buckets,
                                   0, 0, 0, 0)
+        self._gc(snapshot_id, self._files(snapshot_id, recs), self.delta_dir)
         seq = self._next_commit_seq(recs)
         self._write_tombstones(snapshot_id, seq, victims)
-        return self._finish_delta(
-            snapshot_id, {b: tree.get(b, []) + [seq]
-                          for b in {int(r["bucket"]) for r in victims}},
-            victims, [], t0, seq, recs, sign=-1)
+        return self._finish_delta(snapshot_id, victims, [], t0, seq, recs,
+                                  sign=-1)
 
     def _write_tombstones(self, snapshot_id: str, seq: int,
                           victims) -> None:
@@ -1231,26 +1225,25 @@ class CompressionPipeline:
                 self.fs.delete(staging, recursive=True)
 
     def _locate(self, snapshot_id: str, ids: list, table,
-                as_of_seq: int | None = None, tree=None):
+                as_of_seq: int | None = None, recs=None):
         """THE key lookup of fetch and delete: ``(candidates,
         pending)``, the :meth:`_candidates` of ``ids``, a list of
-        doc_id strings (``as_of_seq`` and ``tree`` pass
-        through), and whether any delta dir of theirs is listed.  Their
+        doc_id strings (``as_of_seq`` and ``recs`` pass through), and
+        whether the file set names any delta dir of theirs.  Their
         buckets are computed driver-side, so only those bucket dirs are
-        listed, and the ids are FSST-encoded with the snapshot's
+        read, and the ids are FSST-encoded with the snapshot's
         ``table`` — the encoding is deterministic, so byte equality IS
         id equality.  Without a pending delta the candidates are base
         rows, one per doc_id, and need no resolve."""
+        recs = self._lineage_records() if recs is None else recs
         buckets = sorted({bucket_of(i, self.num_buckets) for i in ids})
-        if tree is None:
-            tree = self._delta_tree(snapshot_id, buckets)
         rows = self._candidates(snapshot_id,
                                 fstr.encode_id_literals(ids, table), buckets,
-                                as_of_seq, tree)
-        return rows, bool(self._delta_buckets(snapshot_id, buckets, tree))
+                                as_of_seq, recs)
+        return rows, bool(self._delta_buckets(snapshot_id, buckets, recs))
 
     def _read(self, snapshot_id: str | None, ids=None, decode: bool = False,
-              as_of_seq: int | None = None) -> DataFrame:
+              as_of_seq: int | None = None, recs=None) -> DataFrame:
         """THE store read, gather then decode like the reference's
         ``decompress_fetch`` (src/decompress.cu:56-98): the resolved
         view (see :meth:`_resolved`; ``as_of_seq`` time-travels it)
@@ -1261,28 +1254,31 @@ class CompressionPipeline:
 
         ``ids``, a bounded list of doc_id strings, makes it a point
         lookup through the key lookup, :meth:`_locate`: only the ids'
-        bucket dirs are listed, the hits are found on their FSST-encoded
+        bucket dirs are read, the hits are found on their FSST-encoded
         keys, and one window (:meth:`_latest_delta`) resolves them when
         a delta is pending — it shuffles only the rows that match the
         keys, and no anti-join is planned.
 
-        ``snapshot_id=None`` unions the reads of every snapshot with
-        committed lineage; ``ids`` and ``as_of_seq`` need a snapshot."""
+        The dirs come from the file sets of ONE lineage read (``recs``,
+        read here when not given).  ``snapshot_id=None`` unions the
+        reads of every committed snapshot; ``ids`` and ``as_of_seq``
+        need a snapshot."""
+        recs = self._lineage_records() if recs is None else recs
         if snapshot_id is None:
             if ids is not None or as_of_seq is not None:
                 raise ValueError("ids and as_of_seq need a snapshot_id")
-            snaps = sorted({r["snapshot_id"] for r in self._lineage_records()
+            snaps = sorted({r["snapshot_id"] for r in recs
                             if r["status"] == "committed"})
             if not snaps:
                 raise ValueError(f"no committed snapshot at {self.output_dir}")
             return functools.reduce(DataFrame.unionByName, [
-                self._read(s, decode=decode) for s in snaps])
+                self._read(s, decode=decode, recs=recs) for s in snaps])
         table = self._fsst_table(snapshot_id)
         if ids is None:
-            view = self._resolved(snapshot_id, as_of_seq)
+            view = self._resolved(snapshot_id, as_of_seq, recs)
         else:
             rows, pending = self._locate(snapshot_id, [str(i) for i in ids],
-                                         table, as_of_seq)
+                                         table, as_of_seq, recs)
             view = self._latest_delta(rows) if pending else rows.select(*_VIEW)
         chain = [fstr.decode_stage(table, ("doc_id", "source"))]
         if decode:
@@ -1317,7 +1313,7 @@ class CompressionPipeline:
         durable twin of ``decompress_fetch(index_arr)`` (reference
         src/decompress.cu:56-98): :meth:`_read` of ``ids``, a bounded
         list of doc_id strings.  A 10-doc fetch from a 100 TB snapshot
-        lists <= 10 bucket dirs, and only the hits are decoded.
+        reads <= 10 bucket dirs, and only the hits are decoded.
 
         ``decode=False`` returns the matching ENCODED rows (payload,
         block_sizes, flags...) with string columns decoded — the
@@ -1340,33 +1336,35 @@ class CompressionPipeline:
 
         It is also the one schema check of the store: every read
         supplies ``STORED_SCHEMA`` (:meth:`_read_dirs`), so one footer
-        per written dir — each base ``bucket=B`` dir and each delta
-        ``delta_seq=N`` dir — is compared with it, and each bucket with
-        a differing footer counts as one more bad bucket."""
-        got = self._resolved(snapshot_id).groupBy("bucket").agg(
+        per live dir — each base ``base_seq=N`` dir and each delta
+        ``delta_seq=N`` dir that the file set names — is compared with
+        it, and each bucket with a differing footer counts as one more
+        bad bucket."""
+        recs = self._lineage_records()
+        got = self._resolved(snapshot_id, recs=recs).groupBy("bucket").agg(
             F.expr("bit_xor(xxhash64(payload))").alias("xxh"))
         # latest commit per bucket: appends supersede earlier rows
-        lin = (self.latest_lineage(snapshot_id)
+        lin = (self._lineage_df(list(self._latest_lineage_map(
+            snapshot_id, recs=recs).values()))
                .filter(F.col("docs") > 0)
                .select("bucket", "payload_xxh"))
         bad = (got.join(lin, "bucket")
                .filter(F.col("xxh") != F.col("payload_xxh")).count())
         missing = lin.join(got, "bucket", "left_anti").count()
-        base = _join(self.data_dir, f"snapshot_id={snapshot_id}")
-        dirs = [(int(n.split("=", 1)[1]), _join(base, n))
-                for n in self.fs.listdir(base) if n.startswith("bucket=")]
-        delta = _join(self.delta_dir, f"snapshot_id={snapshot_id}")
-        dirs += [(b, _join(delta, f"bucket={b}", f"delta_seq={q}"))
-                 for b, seqs in self._delta_tree(snapshot_id).items()
-                 for q in seqs]
+        files = self._files(snapshot_id, recs)
         drift = set()
-        for b, d in dirs:
-            f = next((n for n in sorted(self.fs.listdir(d))
-                      if n.endswith(".parquet")
-                      and not n.startswith((".", "_"))), None)
-            if f is not None and not self.fs.parquet_schema(
-                    _join(d, f)).equals(STORED_SCHEMA):
-                drift.add(b)
+        for root in (self.data_dir, self.delta_dir):
+            col = self._parts(root)[-1][0]
+            for b, seqs in self._named(files, root).items():
+                for q in seqs:
+                    d = _join(root, f"snapshot_id={snapshot_id}",
+                              f"bucket={b}", f"{col}={q}")
+                    f = next((n for n in sorted(self.fs.listdir(d))
+                              if n.endswith(".parquet")
+                              and not n.startswith((".", "_"))), None)
+                    if f is not None and not self.fs.parquet_schema(
+                            _join(d, f)).equals(STORED_SCHEMA):
+                        drift.add(b)
         return bad + missing + len(drift)
 
     def verify_roundtrip(self, toks: DataFrame, params: IbpParams,

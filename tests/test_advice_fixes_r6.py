@@ -1,17 +1,20 @@
 """Regression tests for the round-5 ADVICE findings.
 
-1. pipeline._purge_orphan_deltas: an orphan delta (crashed append)
-   must be purged on retry even when OTHER snapshots advanced the
-   global commit_seq in between — the old scheme matched only the next
-   seq and left the orphan behind as fake committed data.
+1. An orphan delta (crashed append) must never count as committed
+   data, even when OTHER snapshots advanced the global commit_seq in
+   between: no file set names it, so no read sees it, and the retry's
+   garbage step (pipeline._gc) deletes it.
 2. compact_lineage's two-rename swap: a crash between the renames
    leaves no lineage dir; the next lineage read must heal from the
    fully-written .compact dir (or .old) instead of forgetting every
    committed bucket.
 3. The store's one mutation protocol survives a crash at every step
    boundary: delta data write, tombstone marker write, lineage append,
-   compact's data overwrite and delta drop, and each compact_lineage
-   rename.  Retrying the verb converges to the expected rows.
+   the garbage step's delete before a write, compact's base write and
+   its post-commit drop of superseded base and delta dirs, and each
+   compact_lineage rename.  Retrying the verb converges to the
+   expected rows.  A crash INSIDE compact's base write, modelled on
+   Spark's commit, loses no document either.
 4. The float32 matvec in _pred_saved/_gated_savings is exact only
    while sum(popcount(mask)) < 2^24; above that the int64 path must
    be taken (and agree with a direct int64 computation).
@@ -19,6 +22,9 @@
    make -> decode round trip is identity (the gray-only tests used to
    mask a channel swap).
 """
+
+import glob
+import os
 
 import numpy as np
 import pytest
@@ -62,18 +68,28 @@ def test_orphan_delta_purged_after_foreign_commit(spark, tokens_df, outdir):
     pipe._commit_delta_wave = failing_commit
     with pytest.raises(RuntimeError, match="simulated crash"):
         pipe.append(delta, "snapA")
-    orphan_buckets = pipe._delta_buckets("snapA")
-    assert orphan_buckets  # the orphan exists
+    # the orphan exists on disk, and no file set names it
+    assert _delta_seq_dirs(pipe, "snapA")
+    assert pipe._delta_buckets("snapA") == []
+    assert pipe.read_encoded("snapA").count() == n0
     # a FOREIGN commit takes the orphan's seq in lineage
     pipe.run(tokens_df.limit(20), "snapB")
     assert pipe._snapshot_max_seq("snapB") > pipe._snapshot_max_seq("snapA")
-    # retry: purge must key on snapA's OWN lineage max, not the global
+    # retry: the garbage step drops the orphan, whatever its seq
     pipe.append(delta, "snapA")
     assert pipe.verify_checksums("snapA") == 0
     enc = pipe.read_encoded("snapA")
     assert enc.count() == n0 + 2
     lin = pipe.latest_lineage("snapA")
     assert lin.agg(F.sum("docs")).collect()[0][0] == n0 + 2
+    assert len(_delta_seq_dirs(pipe, "snapA")) == len(
+        pipe._delta_buckets("snapA"))
+
+
+def _delta_seq_dirs(pipe, snapshot_id):
+    """The ``delta_seq=N`` dirs of a snapshot on disk."""
+    return glob.glob(os.path.join(pipe.delta_dir, f"snapshot_id={snapshot_id}",
+                                  "bucket=*", "delta_seq=*"))
 
 
 def test_compact_lineage_crash_window_heals(spark, tokens_df, outdir):
@@ -121,19 +137,31 @@ def test_lineage_heals_from_old_when_compact_missing(
     assert pipe.verify_checksums("snapO") == 0
 
 
-# fault point -> (verb it fires in, patched call, pipeline dir the
-# call's path starts with, which matching call raises)
+# fault point -> (verb it fires in, then one fault per failing attempt
+# of that verb: (patched call, pipeline dir the call's path starts
+# with, which matching call of the attempt raises))
 FAULT_POINTS = {
-    "run_write": ("run", "writer", "data_dir", 1),
-    "run_lineage": ("run", "write_bytes_atomic", "lineage_dir", 1),
-    "delta_write": ("append", "writer", "delta_dir", 1),
-    "append_lineage": ("append", "write_bytes_atomic", "lineage_dir", 1),
-    "marker_write": ("delete", "write_bytes_atomic", "delta_dir", 2),
-    "lineage_append": ("delete", "write_bytes_atomic", "lineage_dir", 1),
-    "compact_overwrite": ("compact", "writer", "data_dir", 1),
-    "compact_drop_delta": ("compact", "delete", "delta_dir", 1),
-    "lineage_rename_old": ("compact_lineage", "rename", "lineage_dir", 1),
-    "lineage_rename_swap": ("compact_lineage", "rename", "lineage_dir", 2),
+    "run_write": ("run", ("writer", "data_dir", 1)),
+    "run_lineage": ("run", ("write_bytes_atomic", "lineage_dir", 1)),
+    # the retry of a run that crashed at its commit meets the crashed
+    # attempt's base dirs, and its garbage step crashes deleting them
+    "run_gc": ("run", ("write_bytes_atomic", "lineage_dir", 1),
+               ("delete", "data_dir", 1)),
+    "delta_write": ("append", ("writer", "delta_dir", 1)),
+    "append_lineage": ("append", ("write_bytes_atomic", "lineage_dir", 1)),
+    "append_gc": ("append", ("write_bytes_atomic", "lineage_dir", 1),
+                  ("delete", "delta_dir", 1)),
+    "marker_write": ("delete", ("write_bytes_atomic", "delta_dir", 2)),
+    "lineage_append": ("delete", ("write_bytes_atomic", "lineage_dir", 1)),
+    # compact's base write (a write into a fresh base_seq dir)
+    "compact_overwrite": ("compact", ("writer", "data_dir", 1)),
+    # compact's drops of the superseded dirs, after its commit
+    "compact_drop_base": ("compact", ("delete", "data_dir", 1)),
+    "compact_drop_delta": ("compact", ("delete", "delta_dir", 1)),
+    "lineage_rename_old": ("compact_lineage",
+                           ("rename", "lineage_dir", 1)),
+    "lineage_rename_swap": ("compact_lineage",
+                            ("rename", "lineage_dir", 2)),
 }
 
 
@@ -143,8 +171,10 @@ def test_fault_point_then_retry_converges(spark, tokens_df, outdir,
     """Crash at one step boundary of run -> append -> delete -> compact
     -> compact_lineage (the step raises once instead of running), retry
     the verb, and finish the sequence: the resolved rows equal the
-    expected rows and every checksum holds.  The store is single-wave,
-    so run() stages nothing and its retry re-encodes from the input."""
+    expected rows and every checksum holds.  A point with two faults
+    crashes two attempts in turn before the retry that succeeds.  The
+    store is single-wave, so run() stages nothing and its retry
+    re-encodes from the input."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from invariantbitpacking_spark.operators import selector
@@ -175,33 +205,37 @@ def test_fault_point_then_retry_converges(spark, tokens_df, outdir,
         assert len(lin) == 4
         assert sum(r["docs"] for r in lin) == len(want)
 
-    verb, call, target, nth = FAULT_POINTS[point]
-    prefix = getattr(pipe, target)
-    state = {"armed": False, "seen": 0, "fired": False}
+    verb, *faults = FAULT_POINTS[point]
+    state = {"fault": None, "seen": 0, "fired": 0}
 
-    def hit(path) -> bool:
-        if not state["armed"] or state["fired"]:
+    def hit(call, path) -> bool:
+        fault = state["fault"]
+        if fault is None or fault[0] != call:
             return False
-        path = str(path)
-        if not (path == prefix if call == "writer"
-                else path.startswith(prefix)):
+        if not str(path).startswith(getattr(pipe, fault[1])):
             return False
         state["seen"] += 1
-        state["fired"] = state["seen"] == nth
-        return state["fired"]
+        if state["seen"] != fault[2]:
+            return False
+        state["fault"] = None
+        state["fired"] += 1
+        return True
+
+    def patch(owner, attr, call, path_of):
+        real = getattr(owner, attr)
+
+        def step(*a, **k):
+            if hit(call, path_of(a)):
+                raise RuntimeError(f"injected fault: {point}")
+            return real(*a, **k)
+
+        monkeypatch.setattr(owner, attr, step)
 
     # DataFrameWriter.parquet is patched on the class (path is the
     # second argument), an fs call on the instance (path comes first)
-    owner, attr = ((DataFrameWriter, "parquet") if call == "writer"
-                   else (pipe.fs, call))
-    real = getattr(owner, attr)
-
-    def step(*a, **k):
-        if hit(a[1] if call == "writer" else a[0]):
-            raise RuntimeError(f"injected fault: {point}")
-        return real(*a, **k)
-
-    monkeypatch.setattr(owner, attr, step)
+    patch(DataFrameWriter, "parquet", "writer", lambda a: a[1])
+    for call in {f[0] for f in faults} - {"writer"}:
+        patch(pipe.fs, call, call, lambda a: a[0])
 
     verbs = [("run", lambda: pipe.run(sub, "snapF"), base),
              ("append", lambda: pipe.append(delta, "snapF"), appended),
@@ -209,17 +243,79 @@ def test_fault_point_then_retry_converges(spark, tokens_df, outdir,
              ("compact", lambda: pipe.compact("snapF"), deleted),
              ("compact_lineage", pipe.compact_lineage, deleted)]
     for name, run, want in verbs:
-        state["armed"] = name == verb
-        try:
-            run()
-        except RuntimeError as e:
-            assert "injected fault" in str(e)
-            state["armed"] = False
+        if name == verb:
+            for fault in faults:
+                state.update(fault=fault, seen=0)
+                with pytest.raises(RuntimeError, match="injected fault"):
+                    run()
             run()  # the retry
             check(want)
-    assert state["fired"], f"fault {point} never fired"
+        else:
+            run()
+    assert state["fired"] == len(faults), f"fault {point} never fired"
     check(deleted)
     assert pipe._delta_buckets("snapF") == []
+
+
+def test_compact_crash_inside_base_write_keeps_every_document(
+        spark, tokens_df, outdir, monkeypatch):
+    """A crash INSIDE compact()'s base write.  Spark's commit of an
+    overwrite deletes each target partition's old files, then renames
+    the new ones in (``HadoopMapReduceCommitProtocol.commitJob``); a
+    driver death in between leaves a bucket with no base at all.  The
+    patched writer models that for the write into ``encoded/``: in
+    overwrite mode it deletes the first target bucket's existing files
+    and raises, in any other mode it writes and raises.  The retried
+    compact must keep every document, with a clean audit."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from invariantbitpacking_spark.functions.hashing import bucket_of
+    from invariantbitpacking_spark.operators import selector
+
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    sub = tokens_df.limit(300)
+    pipe.run(sub, "snapK")
+    want = {r["doc_id"]: list(r["tokens"]) for r in sub.collect()}
+    upd = sorted(want)[:20]
+    pipe.append(spark.createDataFrame(
+        [(i, [3, 1, 4], 3, "web") for i in upd], DELTA_DDL), "snapK")
+    want.update({i: [3, 1, 4] for i in upd})
+    first = min(bucket_of(i, 4) for i in upd)
+    real_mode, real_parquet = DataFrameWriter.mode, DataFrameWriter.parquet
+    state = {"armed": True}
+
+    def mode(self, save_mode):
+        self._test_mode = save_mode
+        return real_mode(self, save_mode)
+
+    def parquet(self, path, *a, **k):
+        if not (state["armed"] and str(path).startswith(pipe.data_dir)):
+            return real_parquet(self, path, *a, **k)
+        state["armed"] = False
+        if getattr(self, "_test_mode", None) == "overwrite":
+            for f in glob.glob(os.path.join(
+                    pipe.data_dir, "snapshot_id=snapK", f"bucket={first}",
+                    "**", "*.parquet"), recursive=True):
+                os.remove(f)
+        else:
+            real_parquet(self, path, *a, **k)
+        raise RuntimeError("driver died inside the base write")
+
+    monkeypatch.setattr(DataFrameWriter, "mode", mode)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(RuntimeError, match="driver died"):
+        pipe.compact("snapK")
+    pipe.compact("snapK")  # the retry
+    assert not state["armed"]
+    params = pipe._load_params("snapK")
+    got = {r["doc_id"]: list(r["tokens"]) for r in
+           selector.decode_auto(pipe.read_encoded("snapK"), params)
+           .collect()}
+    assert len(got) == len(want)
+    assert got == want
+    assert pipe.verify_checksums("snapK") == 0
+    assert pipe._delta_buckets("snapK") == []
 
 
 def test_pred_saved_wide_vec_int64_fallback():

@@ -55,6 +55,7 @@ def test_append_pressure_triggers_fold(spark, tokens_df, outdir):
     assert _delta_seq_count(pipe, "snapP", buckets[0]) == 2
     _upsert_one(spark, pipe, "snapP", victim, [7, 8, 9])  # crosses 3
     assert pipe._delta_buckets("snapP") == []
+    assert _delta_seq_count(pipe, "snapP", buckets[0]) == 0
     got = (pipe.fetch([victim], "snapP")
            .select("tokens").first()["tokens"])
     assert list(got) == [7, 8, 9]
@@ -77,6 +78,7 @@ def test_delete_pressure_triggers_fold(spark, tokens_df, outdir):
     ids = spark.createDataFrame([(victim,)], "doc_id string")
     pipe.delete(ids, "snapD")  # second delta_seq in the bucket -> fold
     assert pipe._delta_buckets("snapD") == []
+    assert sum(_delta_seq_count(pipe, "snapD", b) for b in (0, 1)) == 0
     assert pipe.read_encoded("snapD").count() == n0 - 1
     assert pipe.fetch([victim], "snapD").count() == 0
     assert pipe.verify_checksums("snapD") == 0

@@ -121,5 +121,5 @@ def test_store_lifecycle_over_hadoop_streams(spark, tokens_df, tmp_path):
                    for n in os.listdir(tmp_path / "os" / "lineage"))
     # the footer-only schema read agrees across routes
     f = sorted(glob.glob(str(tmp_path / "os" / "encoded" / "*" / "*" /
-                             "*.parquet")))[0]
+                             "*" / "*.parquet")))[0]
     assert hadoop.fs.parquet_schema(f) == local.fs.parquet_schema(f)

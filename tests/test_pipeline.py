@@ -1,5 +1,6 @@
 """Resumable pipeline: wave commits, lineage, resume, round-trip."""
 
+import glob
 import json
 import os
 
@@ -124,8 +125,9 @@ def test_single_wave_run_skips_staging(spark, tokens_df, tmp_path):
 
 def test_wave_retry_is_idempotent(spark, tokens_df, outdir):
     """Crash between the wave's parquet write and its lineage append:
-    the retried wave must REPLACE its (snapshot, bucket) partitions
-    (dynamic partition overwrite), not append duplicate documents."""
+    the retried wave must REPLACE its (snapshot, bucket) partitions,
+    not append duplicate documents — its garbage step deletes the base
+    dirs that no committed row names before it writes."""
     import shutil
 
     pipe = CompressionPipeline(spark, outdir, num_buckets=8, wave_buckets=3,
@@ -168,6 +170,25 @@ def test_global_fsst_table_persists_and_decodes(spark, tokens_df, outdir):
                     tokens_df.select("source").distinct().collect()}
 
 
+def test_run_base_files_are_doc_id_sorted(spark, tokens_df, outdir):
+    """run() writes each base file in doc_id order (the stored,
+    FSST-encoded bytes), so its row groups carry tight doc_id min/max
+    for fetch's pushed IN filter: the write sorts on its partition
+    columns plus doc_id, the order the partitioned write requires, so
+    Spark adds no sort of its own that would drop doc_id."""
+    import pyarrow.parquet as pq
+
+    pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
+                               sample_fraction=None)
+    pipe.run(tokens_df.limit(300), "snapSO")
+    files = glob.glob(os.path.join(pipe.data_dir, "**", "*.parquet"),
+                      recursive=True)
+    assert len(files) == 4
+    for f in files:
+        ids = pq.read_table(f, columns=["doc_id"]).column(0).to_pylist()
+        assert len(ids) > 1 and ids == sorted(ids), f
+
+
 def test_verify_checksums_detects_tamper(spark, tokens_df, outdir):
     """Read-side integrity audit: recomputed per-bucket payload
     XOR-folds must match lineage after a clean run and flag a tampered
@@ -176,15 +197,15 @@ def test_verify_checksums_detects_tamper(spark, tokens_df, outdir):
                                sample_fraction=None)
     pipe.run(tokens_df.limit(200), "snapC")
     assert pipe.verify_checksums("snapC") == 0
-    # tamper: append one altered row into an existing bucket partition
+    # tamper: append one altered row into a bucket's live base dir
     enc = spark.read.parquet(pipe.data_dir)
     one = enc.limit(1).withColumn(
         "payload", F.expr("cast('corrupted' as binary)"))
-    bucket = one.select("bucket").collect()[0][0]
+    bucket, base_seq = one.select("bucket", "base_seq").collect()[0]
     import os
     part_dir = os.path.join(pipe.data_dir, "snapshot_id=snapC",
-                            f"bucket={bucket}")
-    (one.drop("snapshot_id", "bucket").write.mode("append")
+                            f"bucket={bucket}", f"base_seq={base_seq}")
+    (one.drop("snapshot_id", "bucket", "base_seq").write.mode("append")
      .parquet(part_dir))
     assert pipe.verify_checksums("snapC") >= 1
 
@@ -316,8 +337,7 @@ def test_delete_empties_bucket_in_mixed_wave(spark, tokens_df, outdir):
     """Round-4 ADVICE (high): physical erasure (delete, then compact)
     of a wave containing BOTH a fully-emptied bucket and a
     partially-emptied bucket must drop the emptied bucket's partition
-    dir — dynamic partition overwrite alone only rewrites the staged
-    (partially-emptied) partitions."""
+    dir: its compacted file set names no base."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=8, wave_buckets=8,
                                sample_fraction=None)
     pipe.run(tokens_df, "snapDEL")
@@ -520,18 +540,20 @@ def test_compact_folds_deltas_into_base(spark, tokens_df, outdir):
     stats_before = stats()
     res = pipe.compact("snapCP")
     assert res.buckets_done >= 1
-    # deltas folded away; logical rows and lineage stats identical;
-    # audits green
+    # deltas folded away, from the file set and from disk; logical
+    # rows and lineage stats identical; audits green
     assert pipe._delta_buckets("snapCP") == []
+    assert not glob.glob(os.path.join(outdir, "delta", "snapshot_id=snapCP",
+                                      "*", "delta_seq=*"))
     assert rows() == rows_before
     assert stats() == stats_before
     assert pipe.verify_checksums("snapCP") == 0
-    # each rewritten bucket is one file, as run() writes it
+    # each rewritten bucket is one file, as run() writes it, and its
+    # superseded base dir is gone
     for b in touched:
         bdir = os.path.join(outdir, "encoded", "snapshot_id=snapCP",
                             f"bucket={b}")
-        assert len([f for f in os.listdir(bdir)
-                    if f.endswith(".parquet")]) == 1, b
+        assert len(glob.glob(os.path.join(bdir, "*", "*.parquet"))) == 1, b
     params = pipe.load_or_learn_params(sub, "snapCP")
     both = sub.unionByName(delta)
     assert pipe.verify_roundtrip(both, params, "snapCP") == 0
@@ -719,10 +741,11 @@ def test_append_and_delete_require_fully_committed_snapshot(
 
 def test_delta_append_crash_retry_converges(spark, tokens_df, outdir):
     """A delta append that dies AFTER the delta write but BEFORE the
-    lineage commit leaves orphan rows at the computed seq; replaying
-    the same append must clean them and converge to exact stats
-    (docs, checksums) — the exactly-once table-state claim under the
-    streaming ingest's at-least-once batches."""
+    lineage commit leaves orphan rows at the computed seq, which no
+    file set names; replaying the same append must clean them and
+    converge to exact stats (docs, checksums) — the exactly-once
+    table-state claim under the streaming ingest's at-least-once
+    batches."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
                                sample_fraction=None)
     sub = tokens_df.limit(100)
@@ -745,9 +768,15 @@ def test_delta_append_crash_retry_converges(spark, tokens_df, outdir):
     pipe._commit_delta_wave = failing_commit
     with pytest.raises(RuntimeError, match="simulated crash"):
         pipe.append(delta, "snapCR")
-    # orphan delta rows exist, lineage does not reflect them
-    assert pipe._delta_buckets("snapCR")
-    assert pipe.verify_checksums("snapCR") != 0  # detectable window
+    # orphan delta rows exist on disk; no file set names them, so
+    # reads and lineage both still show the pre-append state
+    snap_delta = os.path.join(pipe.delta_dir, "snapshot_id=snapCR")
+    assert any(d.startswith("delta_seq=")
+               for b in os.listdir(snap_delta)
+               for d in os.listdir(os.path.join(snap_delta, b)))
+    assert pipe._delta_buckets("snapCR") == []
+    assert pipe.read_encoded("snapCR").count() == n0
+    assert pipe.verify_checksums("snapCR") == 0
     # replay the SAME delta: must clean the orphans and commit exactly
     pipe.append(delta, "snapCR")
     enc = pipe.read_encoded("snapCR")
@@ -975,12 +1004,13 @@ def test_verify_checksums_counts_schema_drift(spark, tokens_df, outdir):
     pipe.run(tokens_df.limit(80), "snapSD")
     assert pipe.verify_checksums("snapSD") == 0
     bucket = os.path.join(pipe.data_dir, "snapshot_id=snapSD", "bucket=0")
-    files = glob.glob(os.path.join(bucket, "*.parquet"))
+    files = glob.glob(os.path.join(bucket, "base_seq=*", "*.parquet"))
     assert files
     for f in files:
         table = pq.ParquetFile(f).read().drop_columns(["row_xxh"])
         pq.write_table(table, f)
-        crc = os.path.join(bucket, f".{os.path.basename(f)}.crc")
+        crc = os.path.join(os.path.dirname(f),
+                           f".{os.path.basename(f)}.crc")
         if os.path.exists(crc):  # the local FS checksum of the old bytes
             os.remove(crc)
     assert pipe.verify_checksums("snapSD") == 1
@@ -1174,7 +1204,10 @@ def test_mutation_job_budget(spark, tokens_df, outdir):
       3: the id collect, the key frame's broadcast and the thin
       collect (6 before, when more than 100 000 ids took a DataFrame
       path that wrote its markers through Spark);
-    - the compact that folds the deltas in at most 6.
+    - the compact that folds the deltas in at most 4: the by-bucket
+      window's shuffle and the one write of each bucket, then the
+      thin-stats read-back of what it wrote (5 before, when each bucket
+      was written twice, through a staging dir).
 
     The commit's and the 10-id delete's collects plan no Exchange."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
@@ -1204,7 +1237,7 @@ def test_mutation_job_budget(spark, tokens_df, outdir):
 
     victims = _ids_df(spark, ids[5:14], 100_000)
     assert _jobs_run_by(spark, lambda: pipe.delete(victims, "snapJB")) <= 3
-    assert _jobs_run_by(spark, lambda: pipe.compact("snapJB")) <= 6
+    assert _jobs_run_by(spark, lambda: pipe.compact("snapJB")) <= 4
     assert not pipe._delta_buckets("snapJB")
 
     assert pipe.read_encoded("snapJB").count() == 120 + 5 + 10 - 10 - 9
@@ -1217,23 +1250,30 @@ def test_mutation_metadata_budget(spark, tokens_df, outdir):
     (``parquet_schema``) and lineage reads, on a 4-bucket store of 120
     documents with a pending 5-doc delta, for a 5-doc append, a 10-id
     delete, a delete of 1110 ids (10 victims, 1100 ghosts in every
-    bucket), a 10-id fetch, a compact, and a run of a second snapshot
-    in two waves, in that order.  The bounds are the counts once every
-    read supplies the stored schema and every verb reads lineage once;
-    before, they were (listdir, exists, read_bytes, footer, lineage):
+    bucket), a 10-id fetch, building a full read (scan), a compact, and
+    a run of a second snapshot in two waves, in that order.  The bounds
+    are the counts once every read takes its dirs from the lineage
+    file sets; before, when reads listed ``encoded/`` and ``delta/``
+    and probed bucket dirs for existence, they were (listdir, exists,
+    read_bytes, footer, lineage):
 
     =================  ==================  ==================
     verb               before              after (bound)
     =================  ==================  ==================
-    append             17, 8, 10, 3, 4     10, 5, 4, 0, 1
-    delete             12, 9, 13, 2, 4     6, 6, 4, 0, 1
-    delete, 1110 ids   (new row)           6, 6, 5, 0, 1
-    fetch              8, 6, 2, 2, 0       5, 6, 2, 0, 0
-    compact            11, 15, 10, 3, 2    6, 14, 5, 0, 1
-    run, 2 waves       6, 10, 19, 2, 3     2, 8, 6, 0, 1
+    append             10, 5, 4, 0, 1      5, 3, 4, 0, 1
+    delete             6, 6, 4, 0, 1       6, 2, 4, 0, 1
+    delete, 1110 ids   6, 6, 5, 0, 1       6, 2, 5, 0, 1
+    fetch              5, 6, 2, 0, 0       1, 3, 7, 0, 1
+    scan               6, 1, 1, 0, 0       1, 2, 6, 0, 1
+    compact            6, 14, 5, 0, 1      6, 1, 5, 0, 1
+    run, 2 waves       2, 8, 6, 0, 1       2, 4, 6, 0, 1
     =================  ==================  ==================
 
-    A listing that walks every bucket where the verb needs only the
+    fetch and scan list neither tree now; they read lineage once, one
+    listdir of ``lineage/`` and one read_bytes per lineage file, for
+    the file sets.  The listdirs left in append, delete and compact
+    are the garbage step's listing of the tree the verb writes.  A
+    listing that walks every bucket where the verb needs only the
     affected ones, a footer read, or a second lineage read breaks the
     bound."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
@@ -1254,18 +1294,20 @@ def test_mutation_metadata_budget(spark, tokens_df, outdir):
             pipe.wave_buckets = 4
 
     budget = {  # listdir, exists, read_bytes, footer reads, lineage reads
-        "append": (10, 5, 4, 0, 1),
-        "delete": (6, 6, 4, 0, 1),
-        "delete, 1110 ids": (6, 6, 5, 0, 1),
-        "fetch": (5, 6, 2, 0, 0),
-        "compact": (6, 14, 5, 0, 1),
-        "run, 2 waves": (2, 8, 6, 0, 1),
+        "append": (5, 3, 4, 0, 1),
+        "delete": (6, 2, 4, 0, 1),
+        "delete, 1110 ids": (6, 2, 5, 0, 1),
+        "fetch": (1, 3, 7, 0, 1),
+        "scan": (1, 2, 6, 0, 1),
+        "compact": (6, 1, 5, 0, 1),
+        "run, 2 waves": (2, 4, 6, 0, 1),
     }
     verbs = {
         "append": lambda: pipe.append(upserts, "snapMB"),
         "delete": lambda: pipe.delete(few_ids, "snapMB"),
         "delete, 1110 ids": lambda: pipe.delete(many_ids, "snapMB"),
         "fetch": lambda: pipe.fetch(ids[20:30], "snapMB"),
+        "scan": lambda: pipe.read_encoded("snapMB"),
         "compact": lambda: pipe.compact("snapMB"),
         "run, 2 waves": two_wave_run,
     }
@@ -1287,7 +1329,9 @@ def test_read_path_budget(spark, tokens_df, outdir):
     a point fetch each plan ONE MapInArrow, and the fetch keeps its IN
     literal pushed into the parquet scan.  The public decoded scan,
     ``decode_auto(read_encoded(s), params)``, composes into that same
-    one eval and gives its schema and rows."""
+    one eval and gives its schema and rows.  Neither a full read nor a
+    fetch lists ``encoded/`` or ``delta/`` through ``self.fs``: their
+    dirs come from the lineage file sets."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
                                sample_fraction=None)
     sub = tokens_df.limit(100)
@@ -1313,6 +1357,16 @@ def test_read_path_budget(spark, tokens_df, outdir):
         got = plan(pipe.fetch(ids, "snapRB"))
         assert got.count("MapInArrow") == 1
         assert "PushedFilters: [In(doc_id" in got
+        listed = []
+        real_listdir = pipe.fs.listdir
+        pipe.fs.listdir = lambda p: listed.append(p) or real_listdir(p)
+        try:
+            pipe.read_encoded("snapRB")
+            pipe.fetch(ids, "snapRB")
+        finally:
+            del pipe.fs.listdir
+        assert listed and not [p for p in listed if p.startswith(
+            (pipe.data_dir, pipe.delta_dir))], listed
 
 
 def test_read_encoded_column_order_is_fixed(spark, tokens_df, outdir):

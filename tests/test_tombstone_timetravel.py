@@ -105,8 +105,8 @@ def test_tombstone_delete_of_delta_only_doc(spark, tokens_df, outdir):
 def test_tombstone_full_bucket_then_compact_drops_dir(
         spark, tokens_df, outdir):
     """Tombstoning EVERY document of a bucket and compacting must drop
-    the bucket's base dir (the dynamic-overwrite hole the erasure path
-    already guards against)."""
+    the bucket's base dir: the compacted file set names no base for
+    it, and the superseded dir goes with the whole bucket dir."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=8, wave_buckets=8,
                                sample_fraction=None)
     pipe.run(tokens_df, "snapFB")
@@ -195,10 +195,11 @@ def test_delete_everything_then_compact_empty_snapshot(
 
 def test_tombstone_delete_crash_retry_converges(spark, tokens_df, outdir):
     """A tombstone delete that dies AFTER the marker write but BEFORE
-    the lineage commit leaves orphan markers; replaying the same
-    delete must purge them (snapshot-scoped seq rule) and converge to
-    exact stats — the exactly-once claim behind the streaming erasure
-    queue's at-least-once batches."""
+    the lineage commit leaves orphan markers that no file set names:
+    the crash window reads the pre-delete state with a clean audit,
+    and replaying the same delete drops them (the garbage step) and
+    converges to exact stats — the exactly-once claim behind the
+    streaming erasure queue's at-least-once batches."""
     pipe = CompressionPipeline(spark, outdir, num_buckets=4, wave_buckets=4,
                                sample_fraction=None)
     sub = tokens_df.limit(80)
@@ -219,9 +220,15 @@ def test_tombstone_delete_crash_retry_converges(spark, tokens_df, outdir):
     pipe._commit_delta_wave = failing_commit
     with pytest.raises(RuntimeError, match="simulated crash"):
         pipe.delete(ids, "snapDC")
-    # orphan markers exist; lineage still counts the victims
-    assert pipe._delta_buckets("snapDC")
-    assert pipe.verify_checksums("snapDC") != 0  # detectable window
+    # orphan markers exist on disk; no file set names them, so every
+    # read still holds the victims and lineage still counts them
+    snap_delta = os.path.join(pipe.delta_dir, "snapshot_id=snapDC")
+    assert any(d.startswith("delta_seq=")
+               for b in os.listdir(snap_delta)
+               for d in os.listdir(os.path.join(snap_delta, b)))
+    assert pipe._delta_buckets("snapDC") == []
+    assert pipe.read_encoded("snapDC").count() == n0
+    assert pipe.verify_checksums("snapDC") == 0
     # a FOREIGN commit takes the orphan's seq (the ADVICE crash shape)
     pipe.run(tokens_df.limit(10), "other")
     # replay the SAME delete: purge + re-apply, exact convergence
