@@ -99,6 +99,14 @@ def _align(x, m):
     return (x + m - 1) // m * m
 
 
+def _general_rows(v: int, w: int) -> int:
+    """Rows per pass of the bit-level (general) encode/decode path.  Its
+    temporaries take tens of bytes per bit of a row (the int64 stream
+    positions alone take 8), so passes of 2^22 bits bound them however
+    many rows a batch sends down the path."""
+    return max(1, (1 << 22) // (v * w))
+
+
 _LAYOUT_CACHE: dict = {}
 
 
@@ -135,9 +143,19 @@ def comp_size(vec_size: int, saved_bits: int, itemsize: int) -> int:
     return int(min(metadata + data, vec_bytes))
 
 
-def _pred_saved(block_u: np.ndarray, mask: np.ndarray, bitval: np.ndarray):
-    """Invariance predicate per element + saved bits per vector."""
+def _valid_cols(v: int, widths) -> np.ndarray:
+    """[n, v] mask of each row's columns below its width."""
+    return np.arange(v)[None, :] < np.asarray(widths, np.int64)[:, None]
+
+
+def _pred_saved(block_u: np.ndarray, mask: np.ndarray, bitval: np.ndarray,
+                widths=None):
+    """Invariance predicate per element + saved bits per vector.  With
+    ``widths``, row i uses only its columns below ``widths[i]``: the
+    predicate is False past them, so they save nothing."""
     pred = (block_u & mask[None, :]) == bitval[None, :]
+    if widths is not None:
+        pred &= _valid_cols(block_u.shape[1], widths)
     mask_popc = _popcount(mask)
     # exact float32 matvec (sums of <= v terms each <= W stay far under
     # 2^24) — skips the int64 [n, v] broadcast-product temp; this is
@@ -154,17 +172,27 @@ def _pred_saved(block_u: np.ndarray, mask: np.ndarray, bitval: np.ndarray):
     return pred, saved
 
 
-def comp_sizes_matrix(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray) -> np.ndarray:
-    """Per-vector compressed sizes for a [n x v] matrix (get_compress_size,
-    src/compress.cu:25-174 -> check_compress_size_blk)."""
-    block_u = _as_unsigned(np.ascontiguousarray(block))
-    itemsize = block_u.dtype.itemsize
-    v = block_u.shape[1]
-    _, saved = _pred_saved(block_u, _as_unsigned(mask), _as_unsigned(bitval))
-    vec_bytes = v * itemsize
-    metadata = _align((v + 7) // 8, itemsize)
+def _row_sizes(saved: np.ndarray, widths, itemsize: int):
+    """``(sizes, metadata)`` per row from its saved bits (the
+    ibp_misc_dev.cuh:33-42 formula at each row's width): metadata and
+    data sections aligned to the element size, clamped to raw."""
+    vec_bytes = widths * itemsize
+    metadata = _align((widths + 7) // 8, itemsize)
     data = _align(vec_bytes - saved // 8, itemsize)
-    return np.minimum(metadata + data, vec_bytes).astype(np.int64)
+    return np.minimum(metadata + data, vec_bytes).astype(np.int64), metadata
+
+
+def comp_sizes_matrix(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray,
+                      widths=None) -> np.ndarray:
+    """Per-vector compressed sizes for a [n x v] matrix (get_compress_size,
+    src/compress.cu:25-174 -> check_compress_size_blk).  ``widths``
+    (int[n], default all ``v``): row i is sized as the width-``widths[i]``
+    vector ``block[i, :widths[i]]`` under ``mask[:widths[i]]``."""
+    block_u = _as_unsigned(np.ascontiguousarray(block))
+    _, saved = _pred_saved(block_u, _as_unsigned(mask), _as_unsigned(bitval),
+                           widths)
+    w = block_u.shape[1] if widths is None else np.asarray(widths, np.int64)
+    return _row_sizes(saved, w, block_u.dtype.itemsize)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -235,16 +263,17 @@ def create_mask(bit_count: np.ndarray, num_vecs, threshold: float):
     return mask, bitval
 
 
-def check_feats(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray) -> int:
+def check_feats(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray,
+                widths=None) -> int:
     """Total real saved bits (check_feats, ibp_preproc_kernels.cuh:54-77):
-    per vector, savings count only when strictly more than vec_size bits
-    (the 1-bit-per-element header cost), and the header cost is then
-    subtracted."""
+    per vector, savings count only when strictly more than its width in
+    bits (the 1-bit-per-element header cost), and the header cost is
+    then subtracted.  ``widths`` as in :func:`comp_sizes_matrix`."""
     block_u = _as_unsigned(np.ascontiguousarray(block))
-    v = block_u.shape[1]
-    _, saved = _pred_saved(block_u, _as_unsigned(mask), _as_unsigned(bitval))
-    gated = np.where(saved > v, saved - v, 0)
-    return int(gated.sum())
+    _, saved = _pred_saved(block_u, _as_unsigned(mask), _as_unsigned(bitval),
+                           widths)
+    w = block_u.shape[1] if widths is None else np.asarray(widths, np.int64)
+    return int(np.where(saved > w, saved - w, 0).sum())
 
 
 def sweep_thresholds() -> list[float]:
@@ -293,7 +322,8 @@ def preprocess(block: np.ndarray, threshold: float | None = None):
 # Encode (compress_and_write, ibp_compress_dev.cuh:8-97)
 # ---------------------------------------------------------------------------
 
-def encode_concat(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray):
+def encode_concat(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray,
+                  widths=None):
     """Encode a [n x v] matrix into one concatenated byte buffer.
 
     Returns ``(flat, sizes, is_comp)``: ``flat`` is a uint8 array of
@@ -305,6 +335,12 @@ def encode_concat(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray):
     (ibp_compress_kernel.cuh:40-42).  Verbatim vectors are raw
     little-endian words (memcpy_warp path, ibp_compress_kernel.cuh:47-50).
     Whole-batch vectorized; no per-bit Python.
+
+    ``widths`` (int[n], default all ``v``): row i is encoded exactly as
+    the width-``widths[i]`` vector ``block[i, :widths[i]]`` under
+    ``mask[:widths[i]]``/``bitval[:widths[i]]`` — a header of
+    ``ceil(widths[i]/8)`` bytes aligned to the element size, and no
+    column past the width read — so a ragged batch encodes in one call.
     """
     block_u = _as_unsigned(np.ascontiguousarray(block))
     mask_u = _as_unsigned(np.ascontiguousarray(mask))
@@ -312,12 +348,12 @@ def encode_concat(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray):
     n, v = block_u.shape
     itemsize = block_u.dtype.itemsize
     w = itemsize * 8
-    vec_bytes = v * itemsize
-    metadata = _align((v + 7) // 8, itemsize)
+    wid = (np.full(n, v, np.int64) if widths is None
+           else np.asarray(widths, np.int64))
+    vec_bytes = wid * itemsize
 
-    pred, saved = _pred_saved(block_u, mask_u, bitval_u)
-    data = _align(vec_bytes - saved // 8, itemsize)
-    sizes = np.minimum(metadata + data, vec_bytes).astype(np.int64)
+    pred, saved = _pred_saved(block_u, mask_u, bitval_u, widths)
+    sizes, metadata = _row_sizes(saved, wid, itemsize)
     is_comp = sizes < vec_bytes
     offsets = np.concatenate([[0], np.cumsum(sizes)])
     flat = np.zeros(int(offsets[-1]), np.uint8)
@@ -325,15 +361,19 @@ def encode_concat(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray):
     vidx = np.flatnonzero(~is_comp)
     if vidx.size:
         le = block_u.astype(block_u.dtype.newbyteorder("<"), copy=False)
-        raw = np.ascontiguousarray(le).view(np.uint8).reshape(n, vec_bytes)
+        raw = np.ascontiguousarray(le).view(np.uint8).reshape(n, v * itemsize)
         # per-row slice copies: the old offsets[:,None]+arange index
         # matrix moved ~16 bytes of int64 index traffic per payload
         # byte (measured 52 -> 12 ms on a 17k-row batch); each slice
-        # assignment is one C memcpy of vec_bytes
-        for i, o in zip(vidx.tolist(), offsets[vidx].tolist()):
-            flat[o:o + vec_bytes] = raw[i]
+        # assignment is one C memcpy of the row's bytes
+        for i, o, nb in zip(vidx.tolist(), offsets[vidx].tolist(),
+                            vec_bytes[vidx].tolist()):
+            flat[o:o + nb] = raw[i, :nb]
 
-    # all-pass fast path: fixed layout, word-level shifts (fastpath.py)
+    # all-pass fast path: fixed layout, word-level shifts (fastpath.py).
+    # A row narrower than v fails the predicate past its width, so only
+    # full-width rows take it.
+    is_comp_general = is_comp
     lay = _fast_layout(mask_u, bitval_u)
     if lay is not None and lay.is_smaller:
         fsel = np.flatnonzero(pred.all(axis=1) & is_comp)
@@ -344,44 +384,45 @@ def encode_concat(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray):
             K = lay.comp_size  # per-row slice copies (see verbatim note)
             for i, o in enumerate(offsets[fsel].tolist()):
                 flat[o:o + K] = rows8[i]
-            is_general = np.ones(n, bool)
-            is_general[fsel] = False
-            is_comp_general = is_comp & is_general
-        else:
-            is_comp_general = is_comp
-    else:
-        is_comp_general = is_comp
+            is_comp_general = is_comp.copy()
+            is_comp_general[fsel] = False
 
-    cidx = np.flatnonzero(is_comp_general)
-    if cidx.size:
+    mask_bits = _bits_msb(mask_u)  # [v, w]
+    gidx = np.flatnonzero(is_comp_general)
+    step = _general_rows(v, w)
+    for c0 in range(0, gidx.size, step):
+        cidx = gidx[c0:c0 + step]
         cblock = block_u[cidx]
         cpred = pred[cidx]
         m = cidx.size
-        csizes = sizes[cidx]
         # --- header: bit j (byte j//8, bit j%8 LSB-first) = pred[j] ---
         hdr = np.packbits(cpred.astype(np.uint8), axis=1, bitorder="little")
         # --- payload: keep bits where (verbatim elem) or (mask bit == 0),
-        # in (element asc, MSB->LSB) order == the CLZ run extraction ---
+        # in (element asc, MSB->LSB) order == the CLZ run extraction;
+        # no bit of a column past the row's width ---
         bits = _bits_msb(cblock).reshape(m, v * w)
-        mask_bits = _bits_msb(mask_u)  # [v, w]
-        keep = (~cpred[:, :, None] | (mask_bits == 0)[None, :, :]).reshape(m, v * w)
+        keep = ((~cpred[:, :, None] | (mask_bits == 0)[None, :, :])
+                & _valid_cols(v, wid[cidx])[:, :, None]).reshape(m, v * w)
         # payload section is zero-padded out to the aligned data size
-        data_bytes_max = int(csizes.max()) - metadata
+        cmeta = metadata[cidx][:, None]
+        data_bytes = sizes[cidx][:, None] - cmeta
         pos = keep.cumsum(axis=1) - 1  # in-row stream position of kept bits
-        stream = np.zeros((m, data_bytes_max * 8), np.uint8)
+        stream = np.zeros((m, int(data_bytes.max()) * 8), np.uint8)
         rows = np.broadcast_to(np.arange(m)[:, None], keep.shape)
         stream[rows[keep], pos[keep]] = bits[keep]
         # pack MSB-first, then reverse bytes within each word (words are
         # little-endian but fill from the MSB: ibp_compress_dev.cuh:77-85)
         packed = np.packbits(stream, axis=1)
         payload = packed.reshape(m, -1, itemsize)[:, :, ::-1].reshape(m, -1)
-        full = np.zeros((m, metadata + data_bytes_max), np.uint8)
-        full[:, : hdr.shape[1]] = hdr
-        full[:, metadata : metadata + payload.shape[1]] = payload
-        col = np.arange(full.shape[1])[None, :]
-        valid = col < csizes[:, None]
-        tgt = offsets[cidx][:, None] + col
-        flat[tgt[valid]] = full[valid]
+        # each blob: the header, zero-padded to its aligned metadata
+        # size, then its payload
+        base = offsets[cidx][:, None]
+        hcol = np.arange(hdr.shape[1])[None, :]
+        hval = np.broadcast_to(hcol < cmeta, hdr.shape)
+        flat[(base + hcol)[hval]] = hdr[hval]
+        pcol = np.arange(payload.shape[1])[None, :]
+        pval = pcol < data_bytes
+        flat[(base + cmeta + pcol)[pval]] = payload[pval]
     return flat, sizes, is_comp
 
 
@@ -390,13 +431,18 @@ def encode_concat(block: np.ndarray, mask: np.ndarray, bitval: np.ndarray):
 # ---------------------------------------------------------------------------
 
 def decode_concat(flat: np.ndarray, sizes, is_comp, vec_size: int,
-                  mask: np.ndarray, bitval: np.ndarray) -> np.ndarray:
+                  mask: np.ndarray, bitval: np.ndarray,
+                  widths=None) -> np.ndarray:
     """Decode n back-to-back blobs (condensed layout) from one uint8
     buffer back to a [n x vec_size] unsigned matrix.
 
     Batch-vectorized: all compressed rows are decoded with flat fancy
     indexing, no per-bit Python.  (Spark analog of the reference's five
     kernel variants is a single numpy path; see SURVEY.md §2.4.)
+
+    ``widths`` (int[n], default all ``vec_size``): blob i holds the
+    width-``widths[i]`` vector :func:`encode_concat` wrote for it; its
+    row comes back zero past that width.
     """
     mask_u = _as_unsigned(np.ascontiguousarray(mask))
     bitval_u = _as_unsigned(np.ascontiguousarray(bitval))
@@ -404,12 +450,14 @@ def decode_concat(flat: np.ndarray, sizes, is_comp, vec_size: int,
     itemsize = mask_u.dtype.itemsize
     w = itemsize * 8
     dt = mask_u.dtype
-    vec_bytes = v * itemsize
-    metadata = _align((v + 7) // 8, itemsize)
     flat = np.asarray(flat, np.uint8)
     sizes = np.asarray(sizes, np.int64)
     is_comp = np.asarray(is_comp, bool)
     n = len(sizes)
+    wid = (np.full(n, v, np.int64) if widths is None
+           else np.asarray(widths, np.int64))
+    vec_bytes = wid * itemsize
+    metadata = _align((wid + 7) // 8, itemsize)
     offsets = np.concatenate([[0], np.cumsum(sizes)])
 
     out = np.zeros((n, v), dt)
@@ -417,20 +465,21 @@ def decode_concat(flat: np.ndarray, sizes, is_comp, vec_size: int,
     if vidx.size:
         # per-row slice copies (see encode_concat's verbatim note:
         # 37 -> 9 ms vs the index-matrix gather on a 17k-row batch)
-        raw = np.empty((vidx.size, vec_bytes), np.uint8)
-        for i, o in enumerate(offsets[vidx].tolist()):
-            raw[i] = flat[o:o + vec_bytes]
+        raw = np.zeros((vidx.size, v * itemsize), np.uint8)
+        for i, o, nb in zip(range(vidx.size), offsets[vidx].tolist(),
+                            vec_bytes[vidx].tolist()):
+            raw[i, :nb] = flat[o:o + nb]
         out[vidx] = raw.view(dt.newbyteorder("<")).astype(dt)
 
     cidx = np.flatnonzero(is_comp)
     if cidx.size == 0:
         return out
 
-    # all-pass fast path: compressed rows whose header is the all-ones
-    # pattern decode via fixed-layout word shifts (fastpath.py)
+    # all-pass fast path: full-width compressed rows whose header is the
+    # all-ones pattern decode via fixed-layout word shifts (fastpath.py)
     lay = _fast_layout(mask_u, bitval_u)
     if lay is not None and lay.is_smaller:
-        cand = cidx[sizes[cidx] == lay.comp_size]
+        cand = cidx[(sizes[cidx] == lay.comp_size) & (wid[cidx] == v)]
         if cand.size:
             hidx = offsets[cand][:, None] + np.arange(lay.metadata)[None, :]
             hdrs = flat[hidx]
@@ -449,40 +498,49 @@ def decode_concat(flat: np.ndarray, sizes, is_comp, vec_size: int,
                 if cidx.size == 0:
                     return out
 
-    m = cidx.size
-    maxlen = int(sizes[cidx].max())
-    col = np.arange(maxlen)[None, :]
-    valid = col < sizes[cidx][:, None]
-    src = offsets[cidx][:, None] + col
-    buf = np.zeros((m, maxlen), np.uint8)
-    buf[valid] = flat[src[valid]]
-
-    hdr = buf[:, : (v + 7) // 8]
-    pred = np.unpackbits(hdr, axis=1, bitorder="little")[:, :v].astype(bool)
-
-    payload = buf[:, metadata:]
-    pay_words = payload.shape[1] // itemsize
-    # un-reverse bytes within words, then unpack MSB-first -> stream bits
-    stream = np.unpackbits(
-        payload[:, : pay_words * itemsize]
-        .reshape(m, pay_words, itemsize)[:, :, ::-1]
-        .reshape(m, pay_words * itemsize),
-        axis=1,
-    )
-
     mask_bits = _bits_msb(mask_u)          # [v, w] MSB-first
     bitval_bits = _bits_msb(bitval_u)      # [v, w]
-    keep = (~pred[:, :, None] | (mask_bits == 0)[None, :, :]).reshape(m, v * w)
+    gidx, step = cidx, _general_rows(v, w)
+    for c0 in range(0, gidx.size, step):
+        cidx = gidx[c0:c0 + step]
+        m = cidx.size
+        base = offsets[cidx][:, None]
+        cmeta = metadata[cidx][:, None]
+        # header bytes (a row's own, below its aligned metadata size)
+        hcol = np.arange((v + 7) // 8)[None, :]
+        hval = np.broadcast_to(hcol < cmeta, (m, hcol.shape[1]))
+        hdr = np.zeros(hval.shape, np.uint8)
+        hdr[hval] = flat[(base + hcol)[hval]]
+        pred = np.unpackbits(hdr, axis=1, bitorder="little")[:, :v].astype(bool)
+        # payload bytes, from each row's metadata offset
+        data_bytes = sizes[cidx][:, None] - cmeta
+        pcol = np.arange(int(data_bytes.max()))[None, :]
+        pval = pcol < data_bytes
+        payload = np.zeros(pval.shape, np.uint8)
+        payload[pval] = flat[(base + cmeta + pcol)[pval]]
 
-    # seed with bitval (ibp_decompress_dev.cuh:292-299); verbatim elements
-    # take every bit from the stream so their seed is irrelevant
-    out_bits = np.broadcast_to(bitval_bits.reshape(1, v * w), (m, v * w)).copy()
-    pos = keep.cumsum(axis=1) - 1
-    rows = np.broadcast_to(np.arange(m)[:, None], keep.shape)
-    sel = keep & (pos < stream.shape[1])
-    out_bits[sel] = stream[rows[sel], pos[sel]]
+        pay_words = payload.shape[1] // itemsize
+        # un-reverse bytes within words, then unpack MSB-first -> stream bits
+        stream = np.unpackbits(
+            payload[:, : pay_words * itemsize]
+            .reshape(m, pay_words, itemsize)[:, :, ::-1]
+            .reshape(m, pay_words * itemsize),
+            axis=1,
+        )
 
-    words = np.packbits(out_bits.reshape(m, v, w), axis=-1)
-    dec = words.reshape(m, v, itemsize).copy().view(dt.newbyteorder(">")).reshape(m, v)
-    out[cidx] = dec.astype(dt)
+        valid = _valid_cols(v, wid[cidx])
+        keep = ((~pred[:, :, None] | (mask_bits == 0)[None, :, :])
+                & valid[:, :, None]).reshape(m, v * w)
+
+        # seed with bitval (ibp_decompress_dev.cuh:292-299); verbatim elements
+        # take every bit from the stream so their seed is irrelevant
+        out_bits = np.broadcast_to(bitval_bits.reshape(1, v * w), (m, v * w)).copy()
+        pos = keep.cumsum(axis=1) - 1
+        rows = np.broadcast_to(np.arange(m)[:, None], keep.shape)
+        sel = keep & (pos < stream.shape[1])
+        out_bits[sel] = stream[rows[sel], pos[sel]]
+
+        words = np.packbits(out_bits.reshape(m, v, w), axis=-1)
+        dec = words.reshape(m, v, itemsize).copy().view(dt.newbyteorder(">")).reshape(m, v)
+        out[cidx] = np.where(valid, dec, 0)  # zero past each row's width
     return out

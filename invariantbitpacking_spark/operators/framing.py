@@ -5,14 +5,23 @@ matrices (src/preprocess.cu:23).  Our input rows are variable-length
 ``tokens array<int32>``, so each document is split into
 ``n_tok // vec_size`` FULL blocks of ``vec_size`` tokens plus (when
 ``n_tok % vec_size != 0``) one ragged TAIL block of width
-``L = n_tok % vec_size`` encoded against ``mask[:L]``/``bitval[:L]``.
+``L = n_tok % vec_size``, stored exactly as the reference would encode
+the width-L vector under ``mask[:L]``/``bitval[:L]``.
 
-Ragged tails instead of zero-padding: padding a 60-token document out
-to 128 would *grow* its compressed size past its raw size (the pad
-zeros still cost their residual bits), which at corpus scale wastes
-10-50% on short documents.  On rectangular inputs (every reference
-test vector) framing is the identity and the byte streams stay
-bit-identical to the reference.
+Ragged tails instead of zero-padding in the STORED format: padding a
+60-token document out to 128 would *grow* its compressed size past its
+raw size (the pad zeros still cost their residual bits), which at
+corpus scale wastes 10-50% on short documents.  On rectangular inputs
+(every reference test vector) framing is the identity and the byte
+streams stay bit-identical to the reference.
+
+Padding is a COMPUTE layout only: a framed batch is one doc-major
+``[blocks, vec_size]`` matrix whose tails are zero-padded, plus each
+block's width.  Every kernel takes the widths (``numpy_ref``'s
+``widths=``) and reads no column past a block's width, so one call
+covers the whole batch whatever its mix of tail widths, and the bytes
+are those of the width-L encode.  The padding costs at most
+``vec_size - 1`` elements per document of a batch.
 
 All framing is whole-batch vectorized numpy.
 """
@@ -79,13 +88,28 @@ class FramedBatch:
     """Blocks of one Arrow batch of documents, doc-major order."""
 
     lens: np.ndarray       # int64[ndocs] token counts
-    nfull: np.ndarray      # int64[ndocs] full-block counts
-    tail_len: np.ndarray   # int64[ndocs] tail width (0 = no tail)
-    nblocks: np.ndarray    # int64[ndocs] = nfull + (tail_len > 0)
-    full_mat: np.ndarray   # uint32 [sum(nfull), vec_size]
-    # tail groups: width L -> (matrix uint32 [nL, L], doc index int64[nL])
-    tails: dict[int, tuple[np.ndarray, np.ndarray]]
+    nblocks: np.ndarray    # int64[ndocs] blocks per doc
+    blocks: np.ndarray     # uint [sum(nblocks), vec_size], tails zero-padded
+    widths: np.ndarray     # int64[sum(nblocks)]: vec_size, or L for a tail
     vec_size: int
+
+    def full_blocks(self) -> np.ndarray:
+        """The full-width blocks, in doc order."""
+        return self.blocks[self.widths == self.vec_size]
+
+
+def block_layout(lens: np.ndarray, vec_size: int):
+    """``(nblocks, blk_start, widths)`` of documents of ``lens`` tokens:
+    per-doc block counts and first-block ids, and every block's width
+    (``vec_size``, or ``L`` for a doc's ragged last block)."""
+    lens = np.asarray(lens, np.int64)
+    nblocks = -(-lens // vec_size)
+    blk_start = np.cumsum(nblocks) - nblocks
+    widths = np.full(int(nblocks.sum()), vec_size, np.int64)
+    tail = lens % vec_size
+    tdocs = np.flatnonzero(tail)
+    widths[blk_start[tdocs] + nblocks[tdocs] - 1] = tail[tdocs]
+    return nblocks, blk_start, widths
 
 
 SIGNED_DT = {1: np.int8, 2: np.int16, 4: np.int32, 8: np.int64}
@@ -104,37 +128,21 @@ def frame_batch_flat(tok_flat: np.ndarray, starts: np.ndarray,
     The element width follows ``tok_flat.dtype`` — 1/2/4/8 bytes, the
     full reference preprocess dtype dispatch (src/preprocess.cu:25-26,
     56-72; compress adds the 4/8-byte pair, src/compress.cu:192).
-    Matrices come out as the same-width unsigned dtype; the numpy codec
-    layer is dtype-generic."""
+    The block matrix comes out as the same-width unsigned dtype; the
+    numpy codec layer is dtype-generic.  Doc d's tokens land at flat
+    position ``blk_start[d] * vec_size`` of it."""
+    from ..codecs.lightweight import _scatter_rows
+
     sdt = SIGNED_DT[tok_flat.dtype.itemsize]
-    udt = UNSIGNED_DT[tok_flat.dtype.itemsize]
     tok_flat = tok_flat.view(sdt)
     lens = np.asarray(lens, np.int64)
-    starts = np.asarray(starts, np.int64)
-    nfull = lens // vec_size
-    tail_len = lens % vec_size
-    nblocks = nfull + (tail_len > 0)
-
-    full_mat = gather_ranges(tok_flat, starts, nfull * vec_size)
-    full_mat = full_mat.reshape(-1, vec_size).view(udt)
-
-    tails: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    tdocs = np.flatnonzero(tail_len)
-    if tdocs.size:
-        tstarts = starts[tdocs] + nfull[tdocs] * vec_size
-        twidth = tail_len[tdocs]
-        order = np.argsort(twidth, kind="stable")
-        tdocs, tstarts, twidth = tdocs[order], tstarts[order], twidth[order]
-        uniq, grp_start = np.unique(twidth, return_index=True)
-        grp_end = np.append(grp_start[1:], twidth.size)
-        for L, s, e in zip(uniq, grp_start, grp_end):
-            L = int(L)
-            docs = tdocs[s:e]
-            mat = gather_ranges(tok_flat, tstarts[s:e], twidth[s:e])
-            tails[L] = (mat.reshape(-1, L).view(udt), docs)
-
-    return FramedBatch(lens, nfull, tail_len, nblocks, full_mat, tails,
-                       vec_size)
+    nblocks, blk_start, widths = block_layout(lens, vec_size)
+    blocks = np.zeros(widths.size * vec_size, sdt)
+    _scatter_rows(blocks, blk_start * vec_size,
+                  gather_ranges(tok_flat, starts, lens), lens)
+    blocks = blocks.reshape(-1, vec_size).view(
+        UNSIGNED_DT[tok_flat.dtype.itemsize])
+    return FramedBatch(lens, nblocks, blocks, widths, vec_size)
 
 
 def list_array_flat(col, itemsize: int = 4):
@@ -210,24 +218,12 @@ def binary_array_flat(arr):
     return data, starts, lens
 
 
-def unframe_flat(fb: FramedBatch, full_dec: np.ndarray,
-                 tail_dec: dict[int, np.ndarray]):
-    """Rebuild the batch's decoded tokens as ONE flat array plus
-    per-doc start offsets (the Arrow ListArray layout) — no per-doc
-    Python at all."""
-    v = fb.vec_size
-    total = int(fb.lens.sum())
-    sdt = SIGNED_DT[full_dec.dtype.itemsize]
-    flat = np.zeros(total, sdt)
-    doc_tok_start = np.cumsum(fb.lens) - fb.lens
-    from ..codecs.lightweight import _scatter_rows
-
-    full_flat = full_dec.view(sdt).reshape(-1)
-    _scatter_rows(flat, doc_tok_start, full_flat, fb.nfull * v)
-    # scatter tails: same width within a group, so targets broadcast
-    # directly (no O(total) index build per group)
-    for L, (mat, docs) in fb.tails.items():
-        dec = tail_dec[L].view(sdt).reshape(-1, L)
-        tstarts = doc_tok_start[docs] + fb.nfull[docs] * v
-        flat[tstarts[:, None] + np.arange(L)[None, :]] = dec
-    return flat, doc_tok_start
+def unframe_flat(lens: np.ndarray, dec: np.ndarray):
+    """Rebuild a batch's decoded ``[blocks, vec_size]`` matrix (the
+    framed layout) as ONE flat array plus per-doc start offsets (the
+    Arrow ListArray layout) — one gather, no per-doc Python."""
+    lens = np.asarray(lens, np.int64)
+    v = dec.shape[1]
+    flat = gather_ranges(dec.view(SIGNED_DT[dec.dtype.itemsize]).reshape(-1),
+                         block_layout(lens, v)[1] * v, lens)
+    return flat, np.cumsum(lens) - lens

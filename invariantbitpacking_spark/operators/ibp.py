@@ -20,7 +20,11 @@ Spark-first re-expression of the reference's three hot entry points
 Documents are framed into full ``vec_size`` blocks plus one ragged
 tail block (see operators/framing.py); tail blocks of width L use
 ``mask[:L]``/``bitval[:L]``, so rectangular inputs remain bit-identical
-to the reference while short documents pay no padding tax.
+to the reference while short documents pay no padding tax.  A batch is
+framed as ONE zero-padded ``[blocks, vec_size]`` matrix with per-block
+widths, so each kernel (bit counts, the threshold evaluator, sizes,
+encode, decode) is one ``numpy_ref`` call per batch, whatever its mix
+of tail widths; the padding never reaches the stored bytes.
 
 Codec parameters ride to executors inside the UDF closure (they are
 ``vec_size`` words — broadcast-variable semantics without the
@@ -40,9 +44,9 @@ from pyspark.sql.types import StructType
 
 from ..codecs import numpy_ref as nr
 from . import framing, stages
-from .framing import (SIGNED_DT, UNSIGNED_DT, VEC_SIZE, FramedBatch,
-                      binary_array_flat, frame_batch_flat, gather_ranges,
-                      list_array_flat, unframe_flat)
+from .framing import (UNSIGNED_DT, VEC_SIZE, FramedBatch,
+                      binary_array_flat, block_layout, frame_batch_flat,
+                      gather_ranges, list_array_flat, unframe_flat)
 
 
 @dataclass
@@ -159,16 +163,14 @@ def framed_stage(fn, schema: str, tokens_col: str, item_bytes: int,
 # ---------------------------------------------------------------------------
 
 def _batch_counts(fb: FramedBatch, vec_size: int, word_bits: int = 32):
-    """Set-bit counts [v, W] + per-column block coverage [v]."""
-    counts = np.zeros((vec_size, word_bits), np.int64)
-    cov = np.zeros(vec_size, np.int64)
-    if fb.full_mat.shape[0]:
-        counts += nr.count_bits(fb.full_mat)
-        cov += fb.full_mat.shape[0]
-    for L, (mat, _) in fb.tails.items():
-        counts[:L] += nr.count_bits(mat)
-        cov[:L] += mat.shape[0]
-    return counts, cov
+    """Set-bit counts [v, W] + per-column block coverage [v].  Zero
+    padding sets no bit, and a column's coverage is the number of
+    blocks wider than it."""
+    if not fb.widths.size:
+        return (np.zeros((vec_size, word_bits), np.int64),
+                np.zeros(vec_size, np.int64))
+    narrower = np.cumsum(np.bincount(fb.widths, minlength=vec_size + 1))
+    return nr.count_bits(fb.blocks), fb.widths.size - narrower[:vec_size]
 
 
 def bit_count_df(df: DataFrame, tokens_col: str = "tokens",
@@ -201,29 +203,6 @@ def bit_count_df(df: DataFrame, tokens_col: str = "tokens",
     partial = stages.apply(df, framed_stage(
         counter, "pos int, cnt long", tokens_col, ib, vec_size))
     return partial.groupBy("pos").agg(F.sum("cnt").alias("cnt"))
-
-
-def _gated_savings(mat: np.ndarray, mask: np.ndarray, bitval: np.ndarray,
-                   mask_popc: np.ndarray) -> int:
-    """check_feats semantics (ibp_preproc_kernels.cuh:54-77): per-block
-    savings count only when strictly above the block's header bits.
-
-    The weighted row-sum rides a float32 BLAS matvec: per-block sums of
-    <= v terms each <= W fit far inside float32's exact-integer range
-    (2^24), so the result is EXACT while skipping the int64 [n, v]
-    product the broadcast multiply used to materialize — the evaluator
-    runs this once per grid threshold, so its traffic dominates the
-    learn pass."""
-    L = mat.shape[1]
-    pred = (mat & mask[None, :L]) == bitval[None, :L]
-    if int(mask_popc[:L].sum()) < (1 << 24):
-        per_vec = (pred.astype(np.float32) @
-                   mask_popc[:L].astype(np.float32)).astype(np.int64)
-    else:
-        # sum(popcount) can exceed float32's exact-integer range only
-        # for an enormous configured vec_size — take the exact path
-        per_vec = pred @ mask_popc[:L].astype(np.int64)
-    return int(np.where(per_vec > L, per_vec - L, 0).sum())
 
 
 def learn_params(df: DataFrame, tokens_col: str = "tokens",
@@ -268,21 +247,13 @@ def learn_params(df: DataFrame, tokens_col: str = "tokens",
 
     grid = [threshold] if threshold is not None else nr.sweep_thresholds()
     cands = [nr.create_mask(counts, cov, t) for t in grid]
-    masks = np.stack([m for m, _ in cands])        # [G, v]
-    bitvals = np.stack([b for _, b in cands])      # [G, v]
-    mask_popc = np.stack([nr._popcount(m) for m in masks])  # [G, v]
 
     # Single evaluation pass for ALL thresholds: per batch, per-block
-    # gated savings (ibp_preproc_kernels.cuh:69-72) summed per candidate.
+    # gated savings (ibp_preproc_kernels.cuh:69-72) summed per candidate,
+    # each block gated at its own width.
     def evaluator(rb, fb):
-        saveds = np.zeros(len(grid), np.int64)
-        for g in range(len(grid)):
-            if fb.full_mat.shape[0]:
-                saveds[g] += _gated_savings(
-                    fb.full_mat, masks[g], bitvals[g], mask_popc[g])
-            for L, (mat, _) in fb.tails.items():
-                saveds[g] += _gated_savings(
-                    mat, masks[g], bitvals[g], mask_popc[g])
+        saveds = [nr.check_feats(fb.blocks, m, b, fb.widths)
+                  for m, b in cands]
         return pa.RecordBatch.from_arrays(
             [pa.array(np.arange(len(grid), dtype=np.int32)),
              pa.array(saveds, pa.int64())],
@@ -313,9 +284,9 @@ def learn_params(df: DataFrame, tokens_col: str = "tokens",
         # saved_bits is lineage provenance; scale the sampled sum back
         # to a corpus-level estimate
         best_saved = int(best_saved / eval_sample_fraction)
-    return IbpParams(masks[best_g].copy(), bitvals[best_g].copy(), vec_size,
-                     float(grid[best_g]), best_saved, num_vecs,
-                     value_kind=vk)
+    mask, bitval = cands[best_g]
+    return IbpParams(mask, bitval, vec_size, float(grid[best_g]), best_saved,
+                     num_vecs, value_kind=vk)
 
 
 # ---------------------------------------------------------------------------
@@ -329,49 +300,30 @@ ENCODED_SCHEMA = (
 )
 
 
-def _full_block_ids(fb: FramedBatch, blk_start: np.ndarray) -> np.ndarray:
-    """Doc-major global block id of each row of ``fb.full_mat``."""
-    doc_of_full = np.repeat(np.arange(len(fb.lens)), fb.nfull)
-    within = (np.arange(fb.full_mat.shape[0])
-              - np.repeat(np.cumsum(fb.nfull) - fb.nfull, fb.nfull))
-    return blk_start[doc_of_full] + within
+def _doc_sums(x: np.ndarray, nblocks: np.ndarray) -> np.ndarray:
+    """Per-doc sums of the doc-major per-block values ``x``."""
+    if not len(nblocks):
+        return np.zeros(0, np.int64)
+    blk_start = np.cumsum(nblocks) - nblocks
+    # zero-block docs sit at blk_start == len(x): pad, then zero them
+    return (np.add.reduceat(np.append(x, 0), np.minimum(blk_start, x.size))
+            * (nblocks > 0)).astype(np.int64)
 
 
-def _assemble_blocks(fb: FramedBatch, blk_start: np.ndarray, groups):
-    """Lay encoded block groups ``(block ids, blob, sizes, is_comp)``
-    into ONE doc-major buffer (one scatter per group) and pack every
-    doc's byte-padded LSB-first flag bitmap in ONE packbits call.
-    Returns ``(buf, doc_bytes, sizes, flags_packed, flag_nbytes)``."""
-    from ..codecs.lightweight import _scatter_rows
-
-    nb_tot = int(fb.nblocks.sum())
-    sizes = np.zeros(nb_tot, np.int64)
-    is_comp = np.zeros(nb_tot, bool)
-    for gidx, _, sz, comp in groups:
-        sizes[gidx] = sz
-        is_comp[gidx] = comp
-    offsets = np.cumsum(sizes) - sizes
-    buf = np.zeros(int(sizes.sum()), np.uint8)
-    for gidx, flat, sz, _ in groups:
-        _scatter_rows(buf, offsets[gidx], flat, sz)
-    # blocks are doc-major, so each doc's payload is one contiguous span
-    doc_bytes = np.add.reduceat(
-        np.append(sizes, 0), np.minimum(blk_start, nb_tot)
-    ) * (fb.nblocks > 0) if len(fb.lens) else np.zeros(0, np.int64)
-    flag_bits = ((fb.nblocks + 7) // 8) * 8
-    fbit_start = np.cumsum(flag_bits) - flag_bits
+def _flag_bitmaps(nblocks: np.ndarray, is_comp: np.ndarray):
+    """Every doc's byte-padded LSB-first compressed-flag bitmap, packed
+    back-to-back in ONE packbits call: ``(flags_packed, flag_nbytes)``."""
+    flag_bits = ((nblocks + 7) // 8) * 8
+    shift = np.cumsum(flag_bits) - flag_bits - (np.cumsum(nblocks) - nblocks)
     bigbits = np.zeros(int(flag_bits.sum()), np.uint8)
-    if nb_tot:
-        within_all = np.arange(nb_tot) - np.repeat(blk_start, fb.nblocks)
-        bigbits[np.repeat(fbit_start, fb.nblocks) + within_all] = is_comp
-    flags_packed = np.packbits(bigbits, bitorder="little")
-    return (buf, doc_bytes.astype(np.int64), sizes, flags_packed,
-            flag_bits // 8)
+    bigbits[np.repeat(shift, nblocks) + np.arange(is_comp.size)] = is_comp
+    return np.packbits(bigbits, bitorder="little"), flag_bits // 8
 
 
 def encode_batch_flat(fb: FramedBatch, mask: np.ndarray, bitval: np.ndarray):
-    """Encode one framed batch into ONE doc-major buffer (no per-doc
-    Python in the byte assembly — every phase is a vectorized scatter).
+    """Encode one framed batch into ONE doc-major buffer: one
+    ``encode_concat`` call over the block matrix, whose blobs already
+    sit doc-major, so no per-doc Python and no byte scatter.
 
     Returns ``(buf, doc_bytes, sizes, flags_packed, flag_nbytes)``:
     ``buf`` uint8 holds every doc's blocks back-to-back doc-major,
@@ -380,15 +332,10 @@ def encode_batch_flat(fb: FramedBatch, mask: np.ndarray, bitval: np.ndarray):
     sizes, ``flags_packed`` uint8 the per-doc byte-padded LSB-first
     compressed bitmaps back-to-back, ``flag_nbytes`` int64[ndocs] each
     doc's bitmap width in ``flags_packed``."""
-    blk_start = np.cumsum(fb.nblocks) - fb.nblocks
-    groups = []
-    if fb.full_mat.shape[0]:
-        groups.append((_full_block_ids(fb, blk_start),
-                       *nr.encode_concat(fb.full_mat, mask, bitval)))
-    for L, (mat, docs) in fb.tails.items():
-        groups.append((blk_start[docs] + fb.nblocks[docs] - 1,
-                       *nr.encode_concat(mat, mask[:L], bitval[:L])))
-    return _assemble_blocks(fb, blk_start, groups)
+    buf, sizes, is_comp = nr.encode_concat(fb.blocks, mask, bitval,
+                                           fb.widths)
+    return (buf, _doc_sums(sizes, fb.nblocks), sizes,
+            *_flag_bitmaps(fb.nblocks, is_comp))
 
 
 def encoded_batch(rb, lens, nblocks, sizes, flags, flag_nbytes, payload,
@@ -477,64 +424,34 @@ def sizes_ibp(df: DataFrame, params: IbpParams,
 
 class _BlockTable(NamedTuple):
     """Doc-major block layout of a batch of encoded documents: every
-    block's payload offset, byte size and compressed flag, its doc and
-    whether it is that doc's ragged tail."""
+    block's payload offset, byte size, compressed flag and width."""
 
     lens: np.ndarray
-    nfull: np.ndarray
-    tail_len: np.ndarray
     nblocks: np.ndarray
     within: np.ndarray        # block ordinal inside its doc
     offsets: np.ndarray       # payload byte offset
     sizes: np.ndarray
     is_comp: np.ndarray
-    doc_of_block: np.ndarray
-    is_tail: np.ndarray
+    widths: np.ndarray
     vec_size: int
 
-    def decode(self, pay_flat, sel, width, mask, bitval):
-        """Decode blocks ``sel`` (all ``width`` wide) with one
-        (mask, bitval)."""
+    def decode(self, pay_flat, mask, bitval, sel=slice(None)):
+        """Decode blocks ``sel`` (default: all) with one (mask, bitval)
+        into rows of the framed ``[blocks, vec_size]`` layout."""
         return nr.decode_concat(
             gather_ranges(pay_flat, self.offsets[sel], self.sizes[sel]),
-            self.sizes[sel], self.is_comp[sel], width, mask[:width],
-            bitval[:width])
-
-    def tail_groups(self):
-        """``[(width, block ids), ...]`` of the tail blocks, one entry
-        per width in ascending order."""
-        tsel = np.flatnonzero(self.is_tail)
-        if not tsel.size:
-            return []
-        widths = self.tail_len[self.doc_of_block[tsel]]
-        order = np.argsort(widths, kind="stable")
-        tsel, widths = tsel[order], widths[order]
-        uniq, gs = np.unique(widths, return_index=True)
-        ge = np.append(gs[1:], widths.size)
-        return [(int(L), tsel[s:e]) for L, s, e in zip(uniq, gs, ge)]
-
-    def unframe(self, full_dec, groups, tail_dec):
-        """Decoded blocks back to ``(tok_flat, tok_starts)``."""
-        tails = {L: (None, self.doc_of_block[sel]) for L, sel in groups}
-        fb = FramedBatch(self.lens, self.nfull, self.tail_len, self.nblocks,
-                         full_dec, tails, self.vec_size)
-        return unframe_flat(fb, full_dec, tail_dec)
+            self.sizes[sel], self.is_comp[sel], self.vec_size, mask, bitval,
+            self.widths[sel])
 
 
 def _block_table(lens, sizes, flags_flat, flags_starts, pay_starts,
-                 v: int) -> _BlockTable | None:
-    """The block layout of encoded docs, or None when they hold no
-    block.  Per-doc payload/flag spans are addressed through explicit
-    start offsets into shared buffers."""
+                 v: int) -> _BlockTable:
+    """The block layout of encoded docs.  Per-doc payload/flag spans are
+    addressed through explicit start offsets into shared buffers."""
     lens = np.asarray(lens, np.int64)
-    nfull = lens // v
-    tail_len = lens % v
-    nblocks = nfull + (tail_len > 0)
-    nb_tot = int(nblocks.sum())
-    if nb_tot == 0:
-        return None
+    nblocks, blk_start, widths = block_layout(lens, v)
+    nb_tot = widths.size
     sizes = np.asarray(sizes, np.int64)
-    blk_start = np.cumsum(nblocks) - nblocks
     # byte offset of each block = its doc's payload base + the local
     # exclusive cumsum of its doc's block sizes
     # zero-block docs have blk_start == nb_tot; pad so indexing stays
@@ -546,11 +463,8 @@ def _block_table(lens, sizes, flags_flat, flags_starts, pay_starts,
     fbyte = np.repeat(flags_starts, nblocks) + (within >> 3)
     is_comp = ((flags_flat[fbyte].astype(np.int64) >> (within & 7)) & 1
                ).astype(bool)
-    doc_of_block = np.repeat(np.arange(len(lens)), nblocks)
-    is_tail = (tail_len[doc_of_block] > 0) & (
-        within == (nblocks[doc_of_block] - 1))
-    return _BlockTable(lens, nfull, tail_len, nblocks, within, offsets,
-                       sizes, is_comp, doc_of_block, is_tail, v)
+    return _BlockTable(lens, nblocks, within, offsets, sizes, is_comp,
+                       widths, v)
 
 
 def decode_docs_flat(lens: np.ndarray, sizes: np.ndarray,
@@ -558,19 +472,13 @@ def decode_docs_flat(lens: np.ndarray, sizes: np.ndarray,
                      pay_flat: np.ndarray, pay_starts: np.ndarray,
                      mask: np.ndarray, bitval: np.ndarray, v: int):
     """Decode a batch of encoded documents — the vectorized inverse of
-    :func:`encode_batch_flat`.  Per-doc payload/flag spans are
-    addressed through explicit start offsets into shared buffers — no
-    joins, no per-doc bytes objects.  Returns ``(tok_flat,
-    tok_starts)`` in the ListArray layout."""
+    :func:`encode_batch_flat`, one ``decode_concat`` call over every
+    block.  Per-doc payload/flag spans are addressed through explicit
+    start offsets into shared buffers — no joins, no per-doc bytes
+    objects.  Returns ``(tok_flat, tok_starts)`` in the ListArray
+    layout."""
     bt = _block_table(lens, sizes, flags_flat, flags_starts, pay_starts, v)
-    if bt is None:
-        return (np.zeros(0, SIGNED_DT[mask.dtype.itemsize]),
-                np.zeros(len(lens), np.int64))
-    full_dec = bt.decode(pay_flat, ~bt.is_tail, v, mask, bitval)
-    groups = bt.tail_groups()
-    tail_dec = {L: bt.decode(pay_flat, sel, L, mask, bitval)
-                for L, sel in groups}
-    return bt.unframe(full_dec, groups, tail_dec)
+    return unframe_flat(bt.lens, bt.decode(pay_flat, mask, bitval))
 
 
 def predict_sizes_ibp(fb: FramedBatch, mask: np.ndarray,
@@ -578,16 +486,8 @@ def predict_sizes_ibp(fb: FramedBatch, mask: np.ndarray,
     """Per-document IBP compressed size WITHOUT encoding (the
     get_compress_size operator, src/compress.cu:25-174) — one predicate
     pass over the framed batch."""
-    ndocs = len(fb.lens)
-    out = np.zeros(ndocs, np.int64)
-    if fb.full_mat.shape[0]:
-        s = nr.comp_sizes_matrix(fb.full_mat, mask, bitval)
-        doc_of_full = np.repeat(np.arange(ndocs), fb.nfull)
-        out += np.bincount(doc_of_full, weights=s,
-                           minlength=ndocs).astype(np.int64)
-    for L, (mat, docs) in fb.tails.items():
-        out[docs] += nr.comp_sizes_matrix(mat, mask[:L], bitval[:L])
-    return out
+    return _doc_sums(nr.comp_sizes_matrix(fb.blocks, mask, bitval,
+                                          fb.widths), fb.nblocks)
 
 
 class EncodedRows(NamedTuple):

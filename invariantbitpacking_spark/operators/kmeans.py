@@ -22,7 +22,10 @@ XOR+popcount distance, which MLlib does not offer:
 
 Clustering is learned on full blocks (the reference clusters whole
 rectangular vectors); ragged tails are assigned at encode time by
-prefix Hamming distance.
+prefix Hamming distance.  Encode and decode run over the batch's one
+zero-padded block matrix (operators/framing.py): one assignment for
+every block, then one ``numpy_ref`` call per cluster, whatever the mix
+of tail widths; the padding never reaches the stored bytes.
 """
 
 from __future__ import annotations
@@ -37,11 +40,12 @@ from pyspark.sql import DataFrame, functions as F
 from ..codecs import numpy_ref as nr
 from ..codecs.numpy_ref import popcount32
 from . import stages
+from ..codecs.lightweight import _scatter_rows
 from .framing import (FramedBatch, VEC_SIZE, frame_batch_flat,
-                      list_array_flat)
-from .ibp import (_assemble_blocks, _block_table, _elem_bytes,
-                  _full_block_ids, _value_kind, binary_array_flat,
-                  decoded_batch, decoding_stage, encoded_batch, framed_stage,
+                      list_array_flat, unframe_flat)
+from .ibp import (_block_table, _doc_sums, _elem_bytes, _flag_bitmaps,
+                  _value_kind, binary_array_flat, decoded_batch,
+                  decoding_stage, encoded_batch, framed_stage,
                   read_encoded_rows)
 
 
@@ -54,10 +58,11 @@ def _cluster_counts(df: DataFrame, centroids, tokens_col: str,
     k = centroids.shape[0]
 
     def counts_of(rb, fb):
-        if fb.full_mat.shape[0] == 0:
+        full = fb.full_blocks()
+        if full.shape[0] == 0:
             return None
-        cl = hamming_assign(fb.full_mat, centroids)
-        bits = nr._bits_msb(fb.full_mat)[..., ::-1]  # LSB-first
+        cl = hamming_assign(full, centroids)
+        bits = nr._bits_msb(full)[..., ::-1]  # LSB-first
         outs_c, outs_p, outs_n = [], [], []
         for c in range(k):
             sel = cl == c
@@ -144,15 +149,23 @@ class KmeansParams:
                    int(d.get("saved_bits", 0)))
 
 
-def hamming_assign(mat: np.ndarray, centroids: np.ndarray) -> np.ndarray:
+def hamming_assign(mat: np.ndarray, centroids: np.ndarray,
+                   widths=None) -> np.ndarray:
     """argmin_c popcount(row ^ centroid_c) — cluster_vecs
     (ibp_preproc_kmeans.cuh:106-150).  Loops over k (small), whole-batch
-    per centroid."""
-    n, L = mat.shape
+    per centroid.  With ``widths``, row i is zero past ``widths[i]`` (a
+    framed tail) and is compared on its first ``widths[i]`` columns:
+    there ``row ^ c`` is ``c``, so the centroid's own popcount past the
+    width comes off the full-row distance."""
+    n = mat.shape[0]
     best = np.full(n, np.iinfo(np.int64).max, np.int64)
     out = np.zeros(n, np.int32)
     for c in range(centroids.shape[0]):
-        d = popcount32(mat ^ centroids[c, :L][None, :]).sum(axis=1)
+        d = popcount32(mat ^ centroids[c][None, :]).sum(axis=1)
+        if widths is not None:
+            past = np.append(np.cumsum(popcount32(centroids[c])[::-1])[::-1],
+                             0)
+            d -= past[widths]
         better = d < best
         best[better] = d[better]
         out[better] = c
@@ -218,22 +231,21 @@ def learn_kmeans(df: DataFrame, k: int = 8, iters: int = 10,
             seed_src = seed_src.sample(fraction=frac, seed=seed)
         if "doc_id" in df.columns:
             seed_src = seed_src.orderBy("doc_id")
-        fb0 = _frame_sample(seed_src.limit(3 * n_seed_rows), tokens_col,
-                            vec_size)
-        if fb0.full_mat.shape[0] < k and frac < 1.0:
+        full0 = _frame_sample(seed_src.limit(3 * n_seed_rows), tokens_col,
+                              vec_size).full_blocks()
+        if full0.shape[0] < k and frac < 1.0:
             # sampling undershot (short docs / binomial variance): retry
             # over the full table before giving up
             retry = (df.select("doc_id", tokens_col).orderBy("doc_id")
                      if "doc_id" in df.columns else df.select(tokens_col))
-            fb0 = _frame_sample(retry.limit(3 * n_seed_rows), tokens_col,
-                                vec_size)
-        if fb0.full_mat.shape[0] < k:
+            full0 = _frame_sample(retry.limit(3 * n_seed_rows), tokens_col,
+                                  vec_size).full_blocks()
+        if full0.shape[0] < k:
             toks.unpersist()
             raise ValueError(
                 f"need >= {k} full blocks to seed {k} centroids")
         rng = np.random.default_rng(seed)
-        centroids = fb0.full_mat[
-            rng.choice(fb0.full_mat.shape[0], k, replace=False)].copy()
+        centroids = full0[rng.choice(full0.shape[0], k, replace=False)]
 
     # ---- Lloyd iterations (distributed assign + majority re-center) -----
     for _ in range(iters):
@@ -266,27 +278,13 @@ def learn_kmeans(df: DataFrame, k: int = 8, iters: int = 10,
 
     # one distributed pass evaluates savings for every theta
     def evaluator(rb, fb):
-        if fb.full_mat.shape[0] == 0:
+        full = fb.full_blocks()
+        if full.shape[0] == 0:
             return None
-        cl = hamming_assign(fb.full_mat, centroids)
-        saveds = np.zeros(len(grid), np.int64)
-        for g, (ms, bs) in enumerate(cand):
-            popc = popcount32(ms)
-            for c in range(k):
-                sel = cl == c
-                if not sel.any():
-                    continue
-                sub = fb.full_mat[sel]
-                pred = (sub & ms[c][None, :]) == bs[c][None, :]
-                # exact float32 matvec (see ibp._gated_savings); same
-                # 2^24 exactness guard as there
-                if int(popc[c].sum()) < (1 << 24):
-                    per_vec = (pred.astype(np.float32)
-                               @ popc[c].astype(np.float32)).astype(np.int64)
-                else:
-                    per_vec = pred @ popc[c].astype(np.int64)
-                saveds[g] += np.where(per_vec > vec_size,
-                                      per_vec - vec_size, 0).sum()
+        cl = hamming_assign(full, centroids)
+        subs = [(c, full[cl == c]) for c in np.unique(cl)]
+        saveds = [sum(nr.check_feats(sub, ms[c], bs[c]) for c, sub in subs)
+                  for ms, bs in cand]
         return pa.RecordBatch.from_arrays(
             [pa.array(np.arange(len(grid), dtype=np.int32)),
              pa.array(saveds, pa.int64())],
@@ -321,29 +319,26 @@ ENCODED_KMEANS_SCHEMA = (
 
 def _encode_kmeans_flat(fb: FramedBatch, cents, masks, bitvals):
     """Clustered encode of one framed batch into flat buffers (the
-    kmeans twin of ibp.encode_batch_flat): global doc-major block
-    table, per-(cluster, width) group encodes, ONE scatter per group,
-    ONE packbits for all flag bitmaps.  Returns ``(buf, doc_bytes,
-    sizes, clusters, flags_packed, flag_nbytes)``."""
-    blk_start = np.cumsum(fb.nblocks) - fb.nblocks
-    clusters = np.zeros(int(fb.nblocks.sum()), np.uint8)
-    groups = []
-    # full blocks by cluster; tails by (cluster, width), assigned by
-    # prefix distance
-    blocks = [(fb.full_mat, _full_block_ids(fb, blk_start), fb.vec_size)
-              ] if fb.full_mat.shape[0] else []
-    blocks += [(mat, blk_start[docs] + fb.nblocks[docs] - 1, L)
-               for L, (mat, docs) in fb.tails.items()]
-    for mat, gidx, L in blocks:
-        cl = hamming_assign(mat, cents[:, :L])
-        clusters[gidx] = cl.astype(np.uint8)
-        for c in np.unique(cl):
-            sel = cl == c
-            groups.append((gidx[sel], *nr.encode_concat(
-                mat[sel], masks[c][:L], bitvals[c][:L])))
-    buf, doc_bytes, sizes, flags_packed, flag_nbytes = _assemble_blocks(
-        fb, blk_start, groups)
-    return buf, doc_bytes, sizes, clusters, flags_packed, flag_nbytes
+    kmeans twin of ibp.encode_batch_flat): one Hamming assignment of
+    every block, one ``encode_concat`` call per cluster, ONE scatter
+    per cluster into the doc-major buffer, ONE packbits for all flag
+    bitmaps.  Returns ``(buf, doc_bytes, sizes, clusters, flags_packed,
+    flag_nbytes)``."""
+    cl = hamming_assign(fb.blocks, cents, fb.widths)
+    sizes = np.zeros(cl.size, np.int64)
+    is_comp = np.zeros(cl.size, bool)
+    parts = []
+    for c in np.unique(cl):
+        sel = np.flatnonzero(cl == c)
+        flat, sizes[sel], is_comp[sel] = nr.encode_concat(
+            fb.blocks[sel], masks[c], bitvals[c], fb.widths[sel])
+        parts.append((sel, flat))
+    offsets = np.cumsum(sizes) - sizes
+    buf = np.zeros(int(sizes.sum()), np.uint8)
+    for sel, flat in parts:
+        _scatter_rows(buf, offsets[sel], flat, sizes[sel])
+    return (buf, _doc_sums(sizes, fb.nblocks), sizes, cl.astype(np.uint8),
+            *_flag_bitmaps(fb.nblocks, is_comp))
 
 
 def encode_ibp_kmeans(df: DataFrame, kp: KmeansParams,
@@ -371,29 +366,16 @@ def _decode_kmeans_flat(lens, sizes, flags_flat, flags_starts,
                         clus_flat, clus_starts, pay_flat, pay_starts,
                         masks, bitvals, v):
     """Flat-native clustered decode (the kmeans twin of
-    ibp.decode_docs_flat) — per-doc spans addressed through explicit
-    start offsets into shared Arrow buffers."""
+    ibp.decode_docs_flat), one ``decode_concat`` call per cluster —
+    per-doc spans addressed through explicit start offsets into shared
+    buffers."""
     bt = _block_table(lens, sizes, flags_flat, flags_starts, pay_starts, v)
-    if bt is None:
-        return np.zeros(0, np.int32), np.zeros(len(lens), np.int64)
     clusters = clus_flat[np.repeat(clus_starts, bt.nblocks) + bt.within]
-    full = ~bt.is_tail
-    full_dec = np.zeros((int(full.sum()), v), np.uint32)
-    fpos = np.cumsum(full) - 1  # full-block ordinal per block
-    for c in np.unique(clusters[full]):
-        sel = full & (clusters == c)
-        full_dec[fpos[sel]] = bt.decode(pay_flat, sel, v, masks[c],
-                                        bitvals[c])
-    groups = bt.tail_groups()
-    tail_dec: dict[int, np.ndarray] = {}
-    for L, sel in groups:
-        dec = np.zeros((sel.size, L), np.uint32)
-        for c in np.unique(clusters[sel]):
-            in_c = clusters[sel] == c
-            dec[in_c] = bt.decode(pay_flat, sel[in_c], L, masks[c],
-                                  bitvals[c])
-        tail_dec[L] = dec
-    return bt.unframe(full_dec, groups, tail_dec)
+    dec = np.zeros((clusters.size, v), np.uint32)
+    for c in np.unique(clusters):
+        sel = np.flatnonzero(clusters == c)
+        dec[sel] = bt.decode(pay_flat, masks[c], bitvals[c], sel)
+    return unframe_flat(bt.lens, dec)
 
 
 def decode_ibp_kmeans(df: DataFrame, kp: KmeansParams) -> DataFrame:

@@ -1108,13 +1108,18 @@ class CompressionPipeline:
         new base dir (none for a fully tombstoned bucket) and no delta
         dir; only then do the superseded dirs go (:meth:`_gc`).  A crash
         before the commit leaves the old file set live, one after it the
-        new one, so no window loses a row.  Lineage is read once; wave
+        new one, so no window loses a row; the retry, which finds no
+        delta left to fold, drops what the crashed drop left.  Lineage is read once; wave
         ``i`` commits at that read's next seq plus ``i``."""
         recs = self._lineage_records()
         files = self._files(snapshot_id, recs)
         have = self._delta_buckets(snapshot_id, buckets, recs)
         nb = self.num_buckets
         if not have:
+            # nothing to fold, but a crash in an earlier attempt's drop
+            # of the superseded dirs (after its commit) left them behind
+            for root in (self.data_dir, self.delta_dir):
+                self._gc(snapshot_id, files, root)
             return PipelineResult(snapshot_id, 0, nb, 0, 0, 0, 0)
         self._gc(snapshot_id, files, self.data_dir)
         seq = self._next_commit_seq(recs)

@@ -15,7 +15,7 @@
    compact_lineage rename.  Retrying the verb converges to the
    expected rows.  A crash INSIDE compact's base write, modelled on
    Spark's commit, loses no document either.
-4. The float32 matvec in _pred_saved/_gated_savings is exact only
+4. The float32 matvec in _pred_saved is exact only
    while sum(popcount(mask)) < 2^24; above that the int64 path must
    be taken (and agree with a direct int64 computation).
 5. make_bmp24 accepts RGB and writes the file's BGR order, so a color
@@ -204,6 +204,17 @@ def test_fault_point_then_retry_converges(spark, tokens_df, outdir,
         lin = pipe.latest_lineage("snapF").collect()
         assert len(lin) == 4
         assert sum(r["docs"] for r in lin) == len(want)
+        # no dir on disk that the file sets do not name
+        files = pipe._files("snapF")
+        for root, col in ((pipe.data_dir, "base_seq"),
+                          (pipe.delta_dir, "delta_seq")):
+            on_disk = {(int(b.split("=")[-1]), int(s.split("=")[-1]))
+                       for b, s in (os.path.split(p) for p in glob.glob(
+                           os.path.join(root, "snapshot_id=snapF",
+                                        "bucket=*", f"{col}=*")))}
+            named = {(b, s) for b, seqs in pipe._named(files, root).items()
+                     for s in seqs}
+            assert on_disk == named, (root, on_disk - named)
 
     verb, *faults = FAULT_POINTS[point]
     state = {"fault": None, "seen": 0, "fired": 0}

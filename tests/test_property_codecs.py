@@ -58,6 +58,43 @@ def test_ibp_roundtrip(v, n, mask_seed, data_seed):
         sizes, nr.comp_sizes_matrix(data, mask, bitval))
 
 
+@settings(max_examples=40, deadline=None)
+@given(
+    st.sampled_from([1, 2, 4, 8]),                  # itemsize
+    st.integers(min_value=1, max_value=80),         # vec_size
+    st.integers(min_value=1, max_value=30),         # rows
+    st.integers(min_value=0, max_value=2**31),      # seed
+)
+def test_ibp_widths_rows_equal_rectangular_prefix_calls(itemsize, v, n,
+                                                        seed):
+    """A row of width L in a ``widths`` call (zero-padded past L) encodes
+    to the bytes, sizes and flag of the rectangular call on ``row[:L]``
+    under ``mask[:L]``/``bitval[:L]``, and decodes back to that row."""
+    rng = np.random.default_rng(seed)
+    dt = {1: np.uint8, 2: np.uint16, 4: np.uint32, 8: np.uint64}[itemsize]
+    rand = lambda shape: np.frombuffer(  # noqa: E731
+        rng.bytes(itemsize * int(np.prod(shape))), dt).reshape(shape).copy()
+    mask = rand(v)
+    bitval = rand(v) & mask
+    data = rand((n, v))
+    half = slice(0, n // 2)  # bias rows toward the predicate
+    data[half] = (data[half] & ~mask[None, :]) | bitval[None, :]
+    data[: n // 4] = bitval  # all-pass rows
+    widths = rng.integers(1, v + 1, n)
+    widths[::3] = v
+    data[np.arange(v)[None, :] >= widths[:, None]] = 0
+    flat, sizes, is_comp = nr.encode_concat(data, mask, bitval, widths)
+    np.testing.assert_array_equal(
+        sizes, nr.comp_sizes_matrix(data, mask, bitval, widths))
+    offs = np.concatenate([[0], np.cumsum(sizes)])
+    for i, L in enumerate(widths):
+        f1, s1, c1 = nr.encode_concat(data[i:i + 1, :L], mask[:L], bitval[:L])
+        assert (s1[0], c1[0]) == (sizes[i], is_comp[i])
+        np.testing.assert_array_equal(f1, flat[offs[i]:offs[i + 1]])
+    np.testing.assert_array_equal(
+        nr.decode_concat(flat, sizes, is_comp, v, mask, bitval, widths), data)
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.lists(st.text(max_size=60), min_size=1, max_size=20))
 def test_fsst_roundtrip(strings):

@@ -27,8 +27,7 @@ def params(tokens_df):
 
 def test_learn_params_matches_local_ragged(spark, tokens_df, params):
     """Distributed learn == single-process learn over ragged frames."""
-    from invariantbitpacking_spark.operators.ibp import (
-        _batch_counts, _gated_savings)
+    from invariantbitpacking_spark.operators.ibp import _batch_counts
 
     local = tokens_df.orderBy("doc_id").select("tokens").toArrow()
     fb = _frame_arrow(local["tokens"])
@@ -36,9 +35,7 @@ def test_learn_params_matches_local_ragged(spark, tokens_df, params):
     best, best_saved = None, 0
     for t in nr.sweep_thresholds():
         m, b = nr.create_mask(counts, cov, t)
-        popc = nr._popcount(m)
-        saved = _gated_savings(fb.full_mat, m, b, popc) + sum(
-            _gated_savings(mat, m, b, popc) for mat, _ in fb.tails.values())
+        saved = nr.check_feats(fb.blocks, m, b, fb.widths)
         if saved > best_saved:
             best, best_saved = (m, b, t), saved
     mask, bitval, theta = best
@@ -66,8 +63,8 @@ def test_learn_params_rectangular_matches_reference(spark):
     fb = frame_batch_flat(
         np.concatenate([np.array(r[1], np.int32) for r in rows]),
         np.cumsum(lens) - lens, lens)
-    assert not fb.tails  # rectangular: full blocks only
-    mask, bitval, theta, saved = nr.preprocess(fb.full_mat)
+    assert (fb.widths == 128).all()  # rectangular: full blocks only
+    mask, bitval, theta, saved = nr.preprocess(fb.blocks)
     np.testing.assert_array_equal(p.mask, mask)
     np.testing.assert_array_equal(p.bitval, bitval)
     assert p.saved_bits == saved and p.threshold == pytest.approx(theta)
